@@ -107,7 +107,7 @@ def parse_results_tsv(lines: DataFrame, variables: list[str],
     parts = F.split(F.col(line_col), "\t", -1)
     cols = []
     for i, v in enumerate(variables):
-        raw = F.element_at(parts, i + 1)
+        raw = F.try_element_at(parts, F.lit(i + 1))
         g = lambda j: F.regexp_extract(raw, TSV_FIELD_RE, j)  # noqa: E731
         iri, bn, lit, lang, dt = g(1), g(2), g(3), g(4), g(5)
         is_iri = raw.startswith("<")
@@ -162,7 +162,8 @@ def parse_results_tsv_sql(line_expr: str, variables: list[str]) -> str:
 def _binding_struct(sol: DataFrame, var: str) -> Column:
     """One W3C JSON term object for ``var`` (§3.2.2): type/value plus
     optional xml:lang / datatype; NULL (→ omitted by ``to_json``) when
-    unbound."""
+    unbound.  A literal carrying both keeps only xml:lang, as the TSV
+    and XML legs do."""
     v = F.col(var)
     kind = _meta(sol, var, "__kind")
     lang, dt = _meta(sol, var, "__lang"), _meta(sol, var, "__dt")
@@ -177,7 +178,7 @@ def _binding_struct(sol: DataFrame, var: str) -> Column:
         F.when(is_bn, F.substring(v, 3, 2 ** 30)).otherwise(v)
         .alias("value"),
         F.when(typ == "literal", lang).alias("xml:lang"),
-        F.when(typ == "literal", dt).alias("datatype")))
+        F.when((typ == "literal") & lang.isNull(), dt).alias("datatype")))
 
 
 def results_json_bindings(sol: DataFrame,
@@ -197,7 +198,8 @@ def results_json_document(sol: DataFrame,
     """Full §3 results document as ONE row (``document`` column):
     ``{"head":{"vars":[...]},"results":{"bindings":[...]}}``.  A JSON
     document is a single value, so this necessarily coalesces — use
-    only for bounded results (the NDJSON form is the scale path)."""
+    only for bounded results (the NDJSON form is the scale path).
+    Bindings are sorted, so an ORDER BY order is not kept."""
     lines = results_json_bindings(sol, variables)
     head = ('{"head":{"vars":['
             + ",".join(f'"{v}"' for v in variables)
@@ -320,7 +322,8 @@ def results_xml(sol: DataFrame, variables: list[str]) -> DataFrame:
 def results_xml_document(sol: DataFrame,
                          variables: list[str]) -> DataFrame:
     """Full results document as ONE row (``document`` column) —
-    bounded results only, like :func:`results_json_document`."""
+    bounded results only, like :func:`results_json_document`.  Results
+    are sorted, so an ORDER BY order is not kept."""
     head = ('<?xml version="1.0"?>'
             f'<sparql xmlns="{SPARQL_XMLNS}"><head>'
             + "".join(f'<variable name="{v}"/>' for v in variables)

@@ -1,47 +1,69 @@
-"""Vectorized RDFa triple extraction over a pages DataFrame.
+"""Vectorized RDFa extraction over a pages DataFrame: triples, per-page
+stats and per-page text, all from one kernel pass.
 
-The reference is a per-document Node Transform stream
-(/root/reference/lib/RdfaParser.ts:19,77-85).  Here the distributed scan
-IS the source: we run the pure-Python kernel once per row inside
-``mapInArrow`` — Arrow batches in/out, no per-row Python UDF round-trips
-(BASELINE.json input_hint mandate).  One input page row fans out to N
-triple rows, emitted directly as Arrow arrays.
+The reference is a per-document Node Transform stream (RdfaParser.ts in
+the reference parser).  Here the distributed scan IS the source.
+:func:`_kernel_pass` is the only ``mapInArrow`` stage: per Arrow batch
+it decodes (url, html, lang, content type), runs the pure-Python kernel
+once per page, and hands each page's extractor to a small per-page
+emitter that appends the caller's computed columns (the triple terms,
+the page stats or the page text).  Page-level columns — ``url`` and any
+``passthrough`` columns — are not re-emitted through Python: the pass
+records each output row's page index and gathers them with ``take``, so
+one page row fans out to N output rows as whole Arrow columns.
 
 Scale notes (100 TB / 10^12 pages):
 - the stage is map-only: no shuffle, linear in input, embarrassingly
   parallel across pages; Spark schedules one task per input split.
-- only (url, html, lang) are shipped to Python — callers keep the scan
-  column-pruned so parquet never materializes unused columns.
+- only the page columns and the passthrough columns are shipped to
+  Python — callers keep the scan column-pruned so parquet never
+  materializes unused columns.
 - blank-node labels are minted by a deterministic per-document counter
   (kernel) then skolemized as ``_:sha256(url || '|' || label)`` so output
-  is identical at any parallelism / retry — a global counter like the
-  reference's (/root/reference/lib/Util.ts:219-224) would not be.
+  is identical at any parallelism / retry — a process-global counter like
+  the reference's would not be.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..kernel import parse_rdfa
+from ..kernel.extractor import RdfaExtractor
 from ..kernel.terms import BlankNode, Literal, NamedNode
 
-TRIPLES_SCHEMA = (
-    "url string, subj string, subj_kind string, pred string, "
-    "obj_value string, obj_kind string, obj_datatype string, "
-    "obj_lang string"
-)
+# Computed columns of each public operator; ``url`` leads every output.
+_TRIPLE_FIELDS = pa.schema([(n, pa.string()) for n in (
+    "subj", "subj_kind", "pred", "obj_value", "obj_kind", "obj_datatype",
+    "obj_lang")])
+_STATS_FIELDS = pa.schema([("n_triples", pa.int64()),
+                           ("text_chars", pa.int64()),
+                           ("parse_error", pa.string())])
+_TEXT_FIELDS = pa.schema([("text", pa.string())])
 
-_TEXT_SCHEMA = "url string, text string"
+_DDL = {pa.string(): "string", pa.int64(): "long"}
 
-_OUT_FIELDS = ("url", "subj", "subj_kind", "pred", "obj_value", "obj_kind",
-               "obj_datatype", "obj_lang")
 
-# Emit output batches around this many triple rows to bound memory.
+def _ddl(fields: pa.Schema) -> str:
+    return ", ".join(["url string"]
+                     + [f"{f.name} {_DDL[f.type]}" for f in fields])
+
+
+TRIPLES_SCHEMA = _ddl(_TRIPLE_FIELDS)
+
+# Emit output batches around this many rows to bound memory.
 _OUT_BATCH_ROWS = 8192
+
+# emitter(cols, url, extractor, error) appends one page's computed
+# columns and returns how many rows it appended.  ``extractor`` is None
+# (and ``error`` set) for a quarantined page.
+_Emitter = Callable[[list, str | None, RdfaExtractor | None, str | None],
+                    int]
 
 
 def _skolem(url: str, label: str) -> str:
@@ -58,6 +80,71 @@ def _term_cols(term, url: str, skolemize: bool):
     lit: Literal = term
     return (lit.value, "literal",
             lit.datatype.value if lit.datatype else None, lit.language)
+
+
+def _kernel_pass(pages: DataFrame, fields: pa.Schema, emit: _Emitter, *,
+                 profile: str, url_col: str, html_col: str,
+                 lang_col: str | None, content_type_col: str | None = None,
+                 passthrough: tuple[str, ...] = (),
+                 vocab: str | None = None) -> DataFrame:
+    """pages → (url, *fields, *passthrough), one ``parse_rdfa`` per page.
+
+    Row indices point into the current input batch, so an output batch
+    is flushed at the latest when that input batch ends."""
+    page_cols = (url_col, html_col, lang_col, content_type_col)
+    # mapInArrow resolves its input columns by name, so each absent page
+    # column needs a name of its own.
+    pruned = pages.select(
+        *(F.col(c) if c else F.lit(None).cast("string").alias(f"_absent{k}")
+          for k, c in enumerate(page_cols)),
+        *passthrough)
+    n_page = len(page_cols)
+    schema = _ddl(fields) + "".join(
+        f", {c} {t}" for c, (_, t) in zip(passthrough,
+                                          pruned.dtypes[n_page:]))
+    names = ["url", *fields.names, *passthrough]
+
+    def gather(batch: pa.RecordBatch, rows: list[int],
+               cols: list[list]) -> pa.RecordBatch:
+        idx = pa.array(rows, type=pa.int64())
+        return pa.RecordBatch.from_arrays(
+            [batch.column(0).take(idx)]
+            + [pa.array(c, type=f.type) for c, f in zip(cols, fields)]
+            + [batch.column(k).take(idx)
+               for k in range(n_page, batch.num_columns)],
+            names=names)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            urls, htmls, langs, ctypes = (
+                batch.column(k).to_pylist() for k in range(n_page))
+            rows: list[int] = []  # input page index of each output row
+            cols: list[list] = [[] for _ in fields]
+            for i, (url, html, lang, ctype) in enumerate(
+                    zip(urls, htmls, langs, ctypes)):
+                try:
+                    ex = parse_rdfa(html or b"", base_iri=url or "",
+                                    profile=profile, content_type=ctype,
+                                    language=lang or None, vocab=vocab)
+                    error = None
+                except Exception as e:
+                    # Quarantine: a hard kernel failure on an adversarial
+                    # page (e.g. mutually-cyclic rdfa:copy patterns
+                    # exhaust the replay stack, as the reference's JS
+                    # does) reaches the emitter as a page with no
+                    # extractor, never as a task failure.  Soft errors
+                    # (malformed markup) never land here: the drivers
+                    # record them on ``parse_error`` and keep partial
+                    # triples.
+                    ex, error = None, f"{type(e).__name__}: {e}"[:500]
+                rows += [i] * emit(cols, url, ex, error)
+                if len(rows) >= _OUT_BATCH_ROWS:
+                    yield gather(batch, rows, cols)
+                    rows, cols = [], [[] for _ in fields]
+            if rows:
+                yield gather(batch, rows, cols)
+
+    return pruned.mapInArrow(run, schema)
 
 
 def extract_triples(pages: DataFrame, profile: str = "html",
@@ -90,82 +177,30 @@ def extract_triples(pages: DataFrame, profile: str = "html",
     a constant ``graph`` column appended to the output (omitted — the
     triple default — when None, leaving existing consumers unchanged).
     """
-    cols = [url_col, html_col] + ([lang_col] if lang_col else [])
-    if content_type_col:
-        cols.append(content_type_col)
-    n_base = len(cols)
-    pruned = pages.select(*cols, *passthrough)
-    dtypes = dict(pruned.dtypes)
-    schema = TRIPLES_SCHEMA + "".join(
-        f", {c} {dtypes[c]}" for c in passthrough)
-    out_names = list(_OUT_FIELDS) + list(passthrough)
+    def emit(cols, url, ex, error):
+        if ex is None:
+            return 0
+        subj, subj_kind, pred, obj_value, obj_kind, obj_dt, obj_lang = (
+            c.append for c in cols)
+        for s, p, o in ex.triples:
+            sv, sk, _, _ = _term_cols(s, url, skolemize)
+            ov, ok, odt, olang = _term_cols(o, url, skolemize)
+            subj(sv)
+            subj_kind(sk)
+            pred(p.value)
+            obj_value(ov)
+            obj_kind(ok)
+            obj_dt(odt)
+            obj_lang(olang)
+        return len(ex.triples)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf: list[list] = [[] for _ in out_names]
-        pass_types: list[pa.DataType] = []
-
-        def flush():
-            arrays = [pa.array(col, type=pa.string())
-                      for col in buf[:len(_OUT_FIELDS)]]
-            arrays += [pa.array(col, type=t) for col, t in
-                       zip(buf[len(_OUT_FIELDS):], pass_types)]
-            for col in buf:
-                col.clear()
-            return pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-        for batch in batches:
-            if not pass_types:
-                pass_types.extend(
-                    batch.schema.field(n_base + i).type
-                    for i in range(len(passthrough)))
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            langs = (batch.column(2).to_pylist() if lang_col
-                     else [None] * len(urls))
-            ctypes = (batch.column(n_base - 1).to_pylist()
-                      if content_type_col else [None] * len(urls))
-            extra = [batch.column(n_base + i).to_pylist()
-                     for i in range(len(passthrough))]
-            for i, (url, html, lang) in enumerate(zip(urls, htmls, langs)):
-                try:
-                    extractor = parse_rdfa(html or b"", base_iri=url or "",
-                                           profile=profile,
-                                           content_type=ctypes[i],
-                                           language=lang or None,
-                                           vocab=vocab)
-                except Exception:
-                    # Hard kernel failure on an adversarial page (e.g.
-                    # mutually-cyclic rdfa:copy patterns exhaust the
-                    # replay stack — the reference's JS throws the same
-                    # way): quarantine the page (zero triples) instead
-                    # of failing the task; per-page error visibility is
-                    # extract_page_stats' job.  Soft errors (malformed
-                    # markup) never reach here — the drivers record
-                    # them on parse_error and keep partial triples.
-                    continue
-                for s, p, o in extractor.triples:
-                    sv, sk, _, _ = _term_cols(s, url, skolemize)
-                    ov, ok, odt, olang = _term_cols(o, url, skolemize)
-                    row = (url, sv, sk, p.value, ov, ok, odt, olang,
-                           *(col[i] for col in extra))
-                    for col, v in zip(buf, row):
-                        col.append(v)
-                if len(buf[0]) >= _OUT_BATCH_ROWS:
-                    yield flush()
-        if buf[0]:
-            if not pass_types:
-                pass_types.extend(pa.string() for _ in passthrough)
-            yield flush()
-
-    out = pruned.mapInArrow(run, schema)
+    out = _kernel_pass(pages, _TRIPLE_FIELDS, emit, profile=profile,
+                       url_col=url_col, html_col=html_col,
+                       lang_col=lang_col, content_type_col=content_type_col,
+                       passthrough=passthrough, vocab=vocab)
     if default_graph is not None:
-        from pyspark.sql import functions as F
         out = out.withColumn("graph", F.lit(default_graph))
     return out
-
-
-_STATS_SCHEMA = ("url string, n_triples long, text_chars long, "
-                 "parse_error string")
 
 
 def extract_page_stats(pages: DataFrame, profile: str = "html",
@@ -176,36 +211,16 @@ def extract_page_stats(pages: DataFrame, profile: str = "html",
     per-document analogue of the reference's stream 'error' event).  At
     corpus scale this is the quarantine/monitoring table — broken pages
     are rows here, never task failures."""
-    cols = [url_col, html_col] + ([lang_col] if lang_col else [])
-    pruned = pages.select(*cols)
+    def emit(cols, url, ex, error):
+        row = ((0, 0, error) if ex is None else
+               (len(ex.triples), len(ex.extracted_text()), ex.parse_error))
+        for col, v in zip(cols, row):
+            col.append(v)
+        return 1
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            langs = (batch.column(2).to_pylist() if lang_col
-                     else [None] * len(urls))
-            n_triples, text_chars, errors = [], [], []
-            for url, html, lang in zip(urls, htmls, langs):
-                try:
-                    ex = parse_rdfa(html or b"", base_iri=url or "",
-                                    profile=profile, language=lang or None)
-                except Exception as e:  # hard kernel failure: a row,
-                    n_triples.append(0)  # never a task failure
-                    text_chars.append(0)
-                    errors.append(f"{type(e).__name__}: {e}"[:500])
-                    continue
-                n_triples.append(len(ex.triples))
-                text_chars.append(len(ex.extracted_text()))
-                errors.append(ex.parse_error)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, type=pa.string()),
-                 pa.array(n_triples, type=pa.int64()),
-                 pa.array(text_chars, type=pa.int64()),
-                 pa.array(errors, type=pa.string())],
-                names=["url", "n_triples", "text_chars", "parse_error"])
-
-    return pruned.mapInArrow(run, _STATS_SCHEMA)
+    return _kernel_pass(pages, _STATS_FIELDS, emit, profile=profile,
+                        url_col=url_col, html_col=html_col,
+                        lang_col=lang_col)
 
 
 def extract_page_text(pages: DataFrame, profile: str = "html",
@@ -214,28 +229,10 @@ def extract_page_text(pages: DataFrame, profile: str = "html",
     """pages → (url, text) where text is the reference-semantics extracted
     text (the byte-identical-text invariant;
     /root/reference/lib/RdfaParser.ts:592-610,657)."""
-    cols = [url_col, html_col] + ([lang_col] if lang_col else [])
-    pruned = pages.select(*cols)
+    def emit(cols, url, ex, error):
+        cols[0].append("" if ex is None else ex.extracted_text())
+        return 1
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            langs = (batch.column(2).to_pylist() if batch.num_columns > 2
-                     else [None] * len(urls))
-            texts = []
-            for url, html, lang in zip(urls, htmls, langs):
-                try:
-                    extractor = parse_rdfa(html or b"", base_iri=url or "",
-                                           profile=profile,
-                                           language=lang or None)
-                    texts.append(extractor.extracted_text())
-                except Exception:  # hard kernel failure: empty text,
-                    texts.append("")  # never a task failure
-
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(urls, type=pa.string()),
-                 pa.array(texts, type=pa.string())],
-                names=["url", "text"])
-
-    return pruned.mapInArrow(run, _TEXT_SCHEMA)
+    return _kernel_pass(pages, _TEXT_FIELDS, emit, profile=profile,
+                        url_col=url_col, html_col=html_col,
+                        lang_col=lang_col)

@@ -67,6 +67,18 @@ def test_tsv_reader_skips_header(spark):
     assert len(got) == 1 and got[0].s == "http://x"
 
 
+def test_tsv_reader_blank_and_short_lines_are_null_not_errors(spark):
+    """Under ANSI mode a blank or short line must not abort the job:
+    its missing fields read as NULL bindings."""
+    lines = spark.createDataFrame(
+        [("",), ("<http://x>",), ('<http://a>\t"v"@en',)], "line string")
+    got = {r.s: r for r in parse_results_tsv(lines, VS).collect()}
+    assert set(got) == {None, "http://x", "http://a"}
+    assert all(v is None for v in got[None])
+    assert got["http://x"].s__kind == "iri"
+    assert got["http://x"].o is None and got["http://x"].o__kind is None
+    assert (got["http://a"].o, got["http://a"].o__lang) == ("v", "en")
+
 def test_json_bindings(spark):
     lines = [json.loads(r.line) for r in
              results_json_bindings(_sol(spark), VS).collect()]
@@ -107,6 +119,23 @@ def test_duckdb_mirrors(spark):
             f"SELECT {parse_sql('line', VS)} FROM t{extra}").fetchall())
         assert got == _key(sol), fn.__name__
 
+
+def test_lang_wins_over_datatype_in_every_format(spark):
+    """An out-of-contract literal carrying both xml:lang and a datatype
+    serializes the same way in TSV, JSON and XML: the language wins."""
+    from rdfa_streaming_parser_js_spark.functions.results import (
+        parse_results_xml, results_xml)
+    sol = _sol(spark, [("http://ex.org/a", "iri", None, None,
+                        "chat", "literal", "fr", XSD_INT)])
+    line = json.loads(results_json_bindings(sol, VS).collect()[0].line)
+    assert line["o"] == {"type": "literal", "value": "chat",
+                         "xml:lang": "fr"}
+    legs = [_key(parse_results_tsv(results_tsv(sol, VS), VS)),
+            _key(parse_results_json(results_json_bindings(sol, VS), VS)),
+            _key(parse_results_xml(results_xml(sol, VS), VS))]
+    assert legs[0] == legs[1] == legs[2] == [
+        ("http://ex.org/a", "iri", None, None,
+         "chat", "literal", "fr", None)]
 
 def test_csv_lossy(spark):
     lines = {r.line for r in results_csv(_sol(spark), VS).collect()}

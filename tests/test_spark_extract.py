@@ -195,3 +195,61 @@ def test_hard_kernel_failure_is_quarantined_not_task_failure(spark):
     texts = {r.url: r.text for r in extract_page_text(df).collect()}
     assert texts["http://e.org/cyclic"] == ""
     assert texts["http://e.org/ok"] == "fine"
+
+
+def test_shared_pass_gathers_page_columns_across_flushes(spark):
+    """One input batch whose middle page yields more than _OUT_BATCH_ROWS
+    triples, so an output batch is flushed mid-batch: every triple row
+    still carries its own page's url and passthrough values, the rows
+    equal direct parse_rdfa output in page order, and
+    extract_page_stats (run with no lang and no content-type column)
+    counts the same rows per url."""
+    import datetime
+    import hashlib
+    from collections import Counter
+
+    from rdfa_streaming_parser_js_spark.kernel.terms import (BlankNode,
+                                                             Literal)
+    from rdfa_streaming_parser_js_spark.operators.extract import (
+        _OUT_BATCH_ROWS, extract_page_stats)
+
+    head = b'<div prefix="s: http://schema.org/" about="#a">'
+    big = head + b"".join(b'<span property="s:n">v%d</span>' % k
+                          for k in range(_OUT_BATCH_ROWS + 500)) + b"</div>"
+    small = (head + b'<span property="s:n" lang="fr">chat</span>'
+             b'<span property="s:d" datatype="s:Date">2020</span>'
+             b'<div rel="s:x"><span property="s:n">b</span></div></div>')
+    docs = [small, big, small, b"<p>no rdfa</p>", small]
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = [(f"http://e.org/p{i}", bytearray(h), None, 10 * i,
+             t0 + datetime.timedelta(hours=i)) for i, h in enumerate(docs)]
+    df = spark.createDataFrame(
+        rows, "url string, html binary, lang string, bucket long, "
+              "warc_ts timestamp").coalesce(1)
+    page = {r[0]: (r[3], r[4]) for r in rows}
+
+    got = extract_triples(df, passthrough=("bucket", "warc_ts")).collect()
+    assert len(got) > _OUT_BATCH_ROWS
+    assert all((r.bucket, r.warc_ts) == page[r.url] for r in got)
+
+    def flat(term, url):
+        if isinstance(term, BlankNode):
+            label = hashlib.sha256(f"{url}|{term.value}".encode())
+            return "_:" + label.hexdigest(), "bnode", None, None
+        if isinstance(term, Literal):
+            dt = term.datatype.value if term.datatype else None
+            return term.value, "literal", dt, term.language
+        return term.value, "iri", None, None
+
+    direct = []
+    for url, html, *_ in rows:
+        for s, p, o in parse_rdfa(bytes(html), base_iri=url).triples:
+            direct.append((url, *flat(s, url)[:2], p.value, *flat(o, url)))
+    assert [tuple(r)[:8] for r in got] == direct
+    assert {r.obj_kind for r in got} == {"literal", "bnode"}
+
+    per_url = Counter(r.url for r in got)
+    stats = {r.url: r.n_triples
+             for r in extract_page_stats(df, lang_col=None).collect()}
+    assert stats == {url: per_url.get(url, 0) for url in page}
+    assert stats["http://e.org/p3"] == 0
