@@ -7,16 +7,23 @@ of the extraction kernel:
 
 - the corpus is split into ``n_buckets`` url-hash buckets
   (``pmod(xxhash64(url), n_buckets)``) — the unit of checkpointing,
-  deterministic at any parallelism;
-- each commit extracts a chunk of buckets in ONE distributed job and
-  writes ``triples/bucket=K/`` via **dynamic partition overwrite**, so a
-  re-run of a bucket whose job died mid-write replaces partial output
-  instead of duplicating it (idempotent restart);
+  deterministic at any parallelism (``sources/warc.WarcIngestion`` uses
+  the crawl's shard files instead);
+- each commit (:meth:`_Checkpoint._commit`, shared by both) is ONE
+  distributed job over its chunk of buckets, the write that extracts
+  them into ``triples/bucket=K/`` via **dynamic partition overwrite**,
+  so a re-run of a bucket whose job died mid-write replaces partial
+  output instead of duplicating it (idempotent restart).  The
+  per-bucket page and triple counts are observed on that write
+  (``DataFrame.observe``), not counted by jobs of their own — Delta
+  Lake's statistics-on-write (under AQE the write's shuffle map stage
+  runs as a Spark job of its own, and the manifest append is one more
+  small job);
 - only after a chunk's data is fully written is its lineage recorded in
   the ``_manifest`` table ``(run_id, bucket, n_pages, n_triples,
-  wall_sec)`` — write-ahead data, commit-behind metadata, exactly the
-  Iceberg snapshot-commit ordering (data files first, metadata pointer
-  last);
+  commit_wall_sec, committed_at)`` — write-ahead data, commit-behind
+  metadata, exactly the Iceberg snapshot-commit ordering (data files
+  first, metadata pointer last);
 - ``run()`` anti-joins the manifest, so a restarted job processes only
   buckets without a committed manifest row.
 
@@ -28,12 +35,12 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType, DoubleType)
 
-from ..operators.extract import extract_triples
+from ..operators.extract import TRIPLES_SCHEMA, extract_triples
 
 MANIFEST_SCHEMA = StructType([
     StructField("run_id", StringType()),
@@ -51,27 +58,103 @@ def url_bucket(n_buckets: int, url_col: str = "url") -> F.Column:
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("long")
 
 
-class CheckpointedExtraction:
-    """Resumable bucket-at-a-time extraction with a lineage manifest."""
+def _chunks(keys: list, per_commit: int,
+            stop_after_commits: int | None) -> list[list]:
+    """``keys`` in commit-sized chunks — only the first
+    ``stop_after_commits`` of them when that is set."""
+    return [keys[i:i + per_commit]
+            for i in range(0, len(keys), per_commit)][:stop_after_commits]
 
-    def __init__(self, out_dir: str, n_buckets: int = 64):
+
+class _Checkpoint:
+    """Triples partitioned by the checkpoint key column ``key`` under
+    ``triples/``, and one ``schema`` manifest row per committed key under
+    ``_manifest/``."""
+
+    key: str
+    schema: StructType
+
+    def __init__(self, out_dir: str):
         self.out_dir = out_dir.rstrip("/")
-        self.n_buckets = n_buckets
         self.triples_dir = f"{self.out_dir}/triples"
         self.manifest_dir = f"{self.out_dir}/_manifest"
 
+    def manifest(self, spark: SparkSession) -> DataFrame:
+        # Test for the directory rather than catch the failed read: once a
+        # session has run an Observation, Spark's observation listener
+        # logs a stack trace for every failed query.
+        path = spark._jvm.org.apache.hadoop.fs.Path(self.manifest_dir)
+        if not path.getFileSystem(
+                spark._jsc.hadoopConfiguration()).exists(path):
+            return spark.createDataFrame([], self.schema)
+        return spark.read.schema(self.schema).parquet(self.manifest_dir)
+
+    def _completed(self, spark: SparkSession) -> set:
+        return {r[0] for r in
+                self.manifest(spark).select(self.key).distinct().collect()}
+
+    def triples(self, spark: SparkSession) -> DataFrame:
+        try:
+            return spark.read.parquet(self.triples_dir)
+        except Exception:  # empty corpus: no data files written yet
+            key_type = self.schema[self.key].dataType.simpleString()
+            return spark.createDataFrame(
+                [], f"{TRIPLES_SCHEMA}, {self.key} {key_type}")
+
+    def _commit(self, pages: DataFrame, keys: list, run_id: str,
+                **extract_kw) -> None:
+        """Commit ``keys``: extract and write the triples of ``pages``
+        (which hold rows of those keys only) in ONE job, then append one
+        manifest row per key with the page and triple counts that job
+        observed.  ``extract_kw`` goes to ``extract_triples``."""
+        t0 = time.time()
+
+        def observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+            obs = Observation()
+            return df.observe(obs, *[
+                F.count_if(F.col(self.key) == F.lit(k)).alias(f"k{i}")
+                for i, k in enumerate(keys)]), obs
+
+        # Page counts come from the INPUT chunk, not the extracted
+        # triples: a page that parses to zero triples was still
+        # processed and must be counted (quarantine/monitoring reads
+        # n_pages as "work done", not "pages with output").  Both
+        # observations run in the write's result stage (``pages`` comes
+        # straight from a scan or a shuffle read): Spark applies each
+        # result task's metrics once, whereas a map-stage task that is
+        # retried or recomputed (a lost shuffle file) would count again.
+        pages, page_obs = observed(pages)
+        triples, triple_obs = observed(extract_triples(
+            pages, passthrough=(self.key,), **extract_kw))
+        # Data first: dynamic overwrite replaces any partial output of a
+        # previously-failed attempt at these keys.  A failed write raises
+        # here, before any manifest row exists.
+        (triples.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(self.key)
+         .parquet(self.triples_dir))
+        # Metadata last: the manifest row IS the commit point.
+        n_pages, n_triples = page_obs.get, triple_obs.get
+        wall = round(time.time() - t0, 3)
+        rows = [(run_id, k, n_pages[f"k{i}"], n_triples[f"k{i}"], wall,
+                 time.time()) for i, k in enumerate(keys)]
+        (pages.sparkSession.createDataFrame(rows, self.schema)
+         .coalesce(1).write.mode("append").parquet(self.manifest_dir))
+
+
+class CheckpointedExtraction(_Checkpoint):
+    """Resumable bucket-at-a-time extraction with a lineage manifest."""
+
+    key, schema = "bucket", MANIFEST_SCHEMA
+
+    def __init__(self, out_dir: str, n_buckets: int = 64):
+        super().__init__(out_dir)
+        self.n_buckets = n_buckets
+
     # -- lineage ----------------------------------------------------------
 
-    def manifest(self, spark: SparkSession) -> DataFrame:
-        try:
-            return spark.read.schema(MANIFEST_SCHEMA).parquet(
-                self.manifest_dir)
-        except Exception:
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
-
     def completed_buckets(self, spark: SparkSession) -> set[int]:
-        return {r.bucket for r in
-                self.manifest(spark).select("bucket").distinct().collect()}
+        return self._completed(spark)
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """Triple-count metrics per bucket — latest commit wins (by
@@ -86,16 +169,6 @@ class CheckpointedExtraction:
                 .select("bucket", "n_pages", "n_triples")
                 .join(counts, "bucket"))
 
-    # -- data -------------------------------------------------------------
-
-    def triples(self, spark: SparkSession) -> DataFrame:
-        from ..operators.extract import TRIPLES_SCHEMA
-        try:
-            return spark.read.parquet(self.triples_dir)
-        except Exception:  # empty corpus: no data files written yet
-            return spark.createDataFrame(
-                [], TRIPLES_SCHEMA + ", bucket int")
-
     # -- execution --------------------------------------------------------
 
     def run(self, pages: DataFrame, buckets_per_commit: int = 16,
@@ -106,66 +179,24 @@ class CheckpointedExtraction:
         ``stop_after_commits`` simulates a mid-job failure for restart
         tests.  Returns counters for the work done by THIS invocation.
         """
-        spark = pages.sparkSession
         run_id = run_id or f"run-{int(time.time() * 1000):x}"
-        done = self.completed_buckets(spark)
+        done = self.completed_buckets(pages.sparkSession)
         remaining = [b for b in range(self.n_buckets) if b not in done]
+        chunks = _chunks(remaining, buckets_per_commit, stop_after_commits)
         bucketed = pages.withColumn(
             "bucket", url_bucket(self.n_buckets))
-
-        commits = 0
-        processed: list[int] = []
-        for i in range(0, len(remaining), buckets_per_commit):
-            if stop_after_commits is not None and commits >= stop_after_commits:
-                break
-            chunk = remaining[i:i + buckets_per_commit]
-            t0 = time.time()
+        for chunk in chunks:
             # Repartition BEFORE extraction, hashed on bucket: extraction
             # parallelism must not be hostage to the input's file-split
             # count, and bucket-aligned tasks write exactly one file per
-            # bucket=K/ dir.  Parallelism == buckets per chunk; size
-            # n_buckets ≥ cluster cores (at 10^12 pages it is ≫).
-            chunk_pages = (bucketed.filter(F.col("bucket").isin(chunk))
-                           .repartition(len(chunk), "bucket"))
-            triples = extract_triples(
-                chunk_pages, passthrough=("bucket",)).cache()
-            # Page counts come from the INPUT chunk, not the extracted
-            # triples: a page that parses to zero triples was still
-            # processed and must be counted (quarantine/monitoring
-            # reads n_pages as "work done", not "pages with output").
-            page_counts = {r.bucket: r.n_pages for r in
-                           (chunk_pages.groupBy("bucket")
-                            .agg(F.count(F.lit(1)).alias("n_pages"))
-                            .collect())}
-            # Triple stats from the cached chunk itself — a read-back of
-            # the output dir would fail on an all-empty first commit (no
-            # parquet files yet to infer a schema from).
-            stats = {r.bucket: (page_counts.get(r.bucket, 0), r.n_triples)
-                     for r in (triples.groupBy("bucket")
-                               .agg(F.count(F.lit(1)).alias("n_triples"))
-                               .collect())}
-            for b, np_ in page_counts.items():
-                stats.setdefault(b, (np_, 0))
-            # Data first: dynamic overwrite replaces any partial output of
-            # a previously-failed attempt at these buckets.  No second
-            # shuffle: tasks already hold (bucket, url) co-partitioned
-            # triples; partitionBy groups them into bucket=K/ dirs.
-            (triples.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket")
-             .parquet(self.triples_dir))
-            triples.unpersist()
-            # Metadata last: the manifest row IS the commit point.
-            wall = time.time() - t0
-            rows = [(run_id, int(b), int(stats.get(b, (0, 0))[0]),
-                     int(stats.get(b, (0, 0))[1]), round(wall, 3),
-                     time.time())
-                    for b in chunk]
-            (spark.createDataFrame(rows, MANIFEST_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(self.manifest_dir))
-            commits += 1
-            processed.extend(chunk)
+            # bucket=K/ dir with no second shuffle.  Parallelism ==
+            # buckets per chunk; size n_buckets ≥ cluster cores (at
+            # 10^12 pages it is ≫).  The page counts are observed after
+            # this shuffle, in the write's result stage, so a retried
+            # shuffle task cannot count its pages twice.
+            self._commit(bucketed.filter(F.col("bucket").isin(chunk))
+                         .repartition(len(chunk), "bucket"), chunk, run_id)
 
-        return {"run_id": run_id, "commits": commits,
-                "buckets_processed": processed,
+        return {"run_id": run_id, "commits": len(chunks),
+                "buckets_processed": [b for c in chunks for b in c],
                 "buckets_skipped": sorted(done)}

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
+from ..plans.lineage import _Checkpoint, _chunks
+
 WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
 _WARC_DATE_SPARK_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 _CRLF2 = b"\r\n\r\n"
@@ -246,41 +248,30 @@ def read_warc_pages(spark: SparkSession, path: str | list[str],
 # resumable shard-level ingestion
 # --------------------------------------------------------------------------
 
-class WarcIngestion:
+class WarcIngestion(_Checkpoint):
     """Idempotent, resumable WARC → triples ingestion with shard-level
     lineage — the Common-Crawl flavor of plans/lineage.
 
     The checkpoint unit is the WARC shard file (the crawl's own atomic
-    unit: a shard either fully parses or is retried whole).  Commit
-    ordering mirrors ``plans/lineage.CheckpointedExtraction``: triples
-    are written FIRST via dynamic partition overwrite into
-    ``triples/shard=<file>/`` (a retried shard replaces its partial
-    output instead of duplicating it), and only then is the shard's
-    manifest row appended — the manifest row IS the commit point.  A
-    restarted run anti-joins the manifest and processes exactly the
-    shards without a committed row; newly-arrived shards are picked up
-    the same way, so repeated invocations ARE the incremental crawl
-    ingestion loop.
+    unit: a shard either fully parses or is retried whole).  Each commit
+    is ``plans/lineage._Checkpoint._commit``, the same routine as
+    ``CheckpointedExtraction``'s, writing ``triples/shard=<file>/``
+    with one manifest row per shard.  A restarted run anti-joins the
+    manifest and processes exactly the shards without a committed row;
+    newly-arrived shards are picked up the same way, so repeated
+    invocations ARE the incremental crawl ingestion loop.
     """
 
+    key, schema = "shard", WARC_MANIFEST_SCHEMA
+
     def __init__(self, warc_dir: str, out_dir: str):
+        super().__init__(out_dir)
         self.warc_dir = warc_dir.rstrip("/")
-        self.out_dir = out_dir.rstrip("/")
-        self.triples_dir = f"{self.out_dir}/triples"
-        self.manifest_dir = f"{self.out_dir}/_manifest"
 
     # -- lineage ----------------------------------------------------------
 
-    def manifest(self, spark: SparkSession) -> DataFrame:
-        try:
-            return spark.read.schema(WARC_MANIFEST_SCHEMA).parquet(
-                self.manifest_dir)
-        except Exception:
-            return spark.createDataFrame([], WARC_MANIFEST_SCHEMA)
-
     def completed_shards(self, spark: SparkSession) -> set[str]:
-        return {r.shard for r in
-                self.manifest(spark).select("shard").distinct().collect()}
+        return self._completed(spark)
 
     def list_shards(self, spark: SparkSession) -> list[str]:
         """All shard paths currently in the crawl directory (listing
@@ -293,16 +284,6 @@ class WarcIngestion:
             return []
         return sorted(r.path for r in rows)
 
-    # -- data -------------------------------------------------------------
-
-    def triples(self, spark: SparkSession) -> DataFrame:
-        from ..operators.extract import TRIPLES_SCHEMA
-        try:
-            return spark.read.parquet(self.triples_dir)
-        except Exception:
-            return spark.createDataFrame(
-                [], TRIPLES_SCHEMA + ", shard string")
-
     # -- execution --------------------------------------------------------
 
     def run(self, spark: SparkSession, shards_per_commit: int = 8,
@@ -311,53 +292,17 @@ class WarcIngestion:
         """Ingest every shard not yet in the manifest; returns counters
         for this invocation.  ``stop_after_commits`` simulates a
         mid-job crash for restart tests."""
-        from ..operators.extract import extract_triples
         run_id = run_id or f"warc-{int(time.time() * 1000):x}"
         done = self.completed_shards(spark)
         remaining = [p for p in self.list_shards(spark)
                      if os.path.basename(p) not in done]
+        chunks = _chunks(remaining, shards_per_commit, stop_after_commits)
+        for chunk in chunks:
+            self._commit(read_warc_pages(spark, chunk, with_shard=True),
+                         [os.path.basename(p) for p in chunk], run_id,
+                         lang_col=None)
 
-        commits, processed = 0, []
-        for i in range(0, len(remaining), shards_per_commit):
-            if stop_after_commits is not None \
-                    and commits >= stop_after_commits:
-                break
-            chunk = remaining[i:i + shards_per_commit]
-            t0 = time.time()
-            # Cache pages for the chunk: page_counts and the triples
-            # materialization below would otherwise each re-read and
-            # re-parse every WARC shard (decompress + record framing
-            # twice per commit).  Chunk-sized, released before the next
-            # chunk.
-            pages = read_warc_pages(spark, chunk, with_shard=True).cache()
-            triples = extract_triples(pages, lang_col=None,
-                                      passthrough=("shard",)).cache()
-            page_counts = {r.shard: r.n_pages for r in
-                           (pages.groupBy("shard")
-                            .agg(F.count(F.lit(1)).alias("n_pages"))
-                            .collect())}
-            stats = {r.shard: r.n_triples for r in
-                     (triples.groupBy("shard")
-                      .agg(F.count(F.lit(1)).alias("n_triples"))
-                      .collect())}
-            # data first (idempotent via dynamic partition overwrite) ...
-            (triples.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("shard")
-             .parquet(self.triples_dir))
-            triples.unpersist()
-            pages.unpersist()
-            # ... manifest last: the commit point
-            wall = time.time() - t0
-            names = [os.path.basename(p) for p in chunk]
-            rows = [(run_id, s, int(page_counts.get(s, 0)),
-                     int(stats.get(s, 0)), round(wall, 3), time.time())
-                    for s in names]
-            (spark.createDataFrame(rows, WARC_MANIFEST_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(self.manifest_dir))
-            commits += 1
-            processed.extend(names)
-
-        return {"run_id": run_id, "commits": commits,
-                "shards_processed": processed,
+        return {"run_id": run_id, "commits": len(chunks),
+                "shards_processed": [os.path.basename(p)
+                                     for c in chunks for p in c],
                 "shards_skipped": sorted(done)}

@@ -74,6 +74,52 @@ def test_rerun_is_noop_and_reprocess_is_idempotent(spark, pages, tmp_path):
     assert ck2.triples(spark).count() == total
 
 
+def test_manifest_counts_each_bucket(spark, tmp_path):
+    """Every bucket's manifest row counts that bucket's input pages —
+    a quarantined page (mutual rdfa:copy cycle) and a page without RDFa
+    included — and exactly the rows under its triples/bucket=K dir."""
+    from rdfa_streaming_parser_js_spark.plans.lineage import url_bucket
+    cyclic = (b'<html><body prefix="schema: http://schema.org/">'
+              b'<div resource="#a" typeof="rdfa:Pattern">'
+              b'<link property="rdfa:copy" href="#b"/></div>'
+              b'<div resource="#b" typeof="rdfa:Pattern">'
+              b'<link property="rdfa:copy" href="#a"/></div>'
+              b'<div typeof="schema:Person">'
+              b'<link property="rdfa:copy" href="#a"/></div>'
+              b'</body></html>')
+    plain = b"<html><body><p>no RDFa here</p></body></html>"
+
+    def normal(n):  # a page with n schema:name triples
+        return (b'<html><body prefix="schema: http://schema.org/">'
+                + b"".join(b'<span about="#it" property="schema:name">'
+                           b'n%d</span>' % i for i in range(n))
+                + b"</body></html>")
+
+    rows = [("http://e.org/cyclic", bytearray(cyclic), None),
+            ("http://e.org/plain", bytearray(plain), None)]
+    rows += [(f"http://e.org/p{i}", bytearray(normal(i % 3 + 1)), None)
+             for i in range(10)]
+    df = spark.createDataFrame(rows, "url string, html binary, lang string")
+    want_pages = dict(df.groupBy(url_bucket(4).alias("b")).count().collect())
+    assert len(want_pages) >= 3  # the pages really spread across buckets
+
+    ck = CheckpointedExtraction(str(tmp_path / "kg"), n_buckets=4)
+    ck.run(df, buckets_per_commit=2, run_id="m")
+    manifest = {r.bucket: r for r in ck.manifest(spark).collect()}
+    assert sorted(manifest) == [0, 1, 2, 3]
+    for b, r in manifest.items():
+        assert r.n_pages == want_pages.get(b, 0), b
+        try:
+            on_disk = spark.read.parquet(
+                f"{ck.triples_dir}/bucket={b}").count()
+        except Exception:  # no triples at all: no bucket=K dir
+            on_disk = 0
+        assert r.n_triples == on_disk, b
+    assert sum(r.n_pages for r in manifest.values()) == len(rows)
+    assert sum(r.n_triples for r in manifest.values()) == sum(
+        i % 3 + 1 for i in range(10))
+
+
 def test_extraction_plan_is_map_only(spark, pages):
     assert_map_only(extract_triples(pages))
     assert count_exchanges(extract_triples(pages)) == 0

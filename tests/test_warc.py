@@ -113,7 +113,9 @@ def test_warc_ingestion_resume(spark, sf_dir, tmp_path):
     """Crash-and-resume: a run stopped after one commit leaves a
     manifest covering only its shards; the restart processes exactly
     the rest; a third run is a no-op; a newly-arrived shard is picked
-    up incrementally."""
+    up incrementally.  A shard holding only a warcinfo record commits
+    with zero pages and triples, and every shard's manifest counts
+    match its own pages and its own triples."""
     from rdfa_streaming_parser_js_spark.operators.extract import (
         extract_triples)
     from rdfa_streaming_parser_js_spark.sources.warc import (
@@ -121,6 +123,8 @@ def test_warc_ingestion_resume(spark, sf_dir, tmp_path):
     warc_dir, out_dir = str(tmp_path / "warc"), str(tmp_path / "out")
     pages = pages_from_documents(spark, sf_dir)
     write_warc_shards(pages, warc_dir, shard_size=130, compress=True)
+    with open(f"{warc_dir}/info-only.warc", "wb") as f:
+        f.write(warcinfo_record_bytes("info-only.warc"))
 
     ing = WarcIngestion(warc_dir, out_dir)
     r1 = ing.run(spark, shards_per_commit=2, stop_after_commits=1)
@@ -139,6 +143,7 @@ def test_warc_ingestion_resume(spark, sf_dir, tmp_path):
     # converged: nothing left to do
     r3 = ing.run(spark, shards_per_commit=2)
     assert r3["commits"] == 0 and not r3["shards_processed"]
+    assert "info-only.warc" in r3["shards_skipped"]
     # incremental arrival: one new shard → exactly one shard processed
     import os
     new_pages = pages.filter("page_id < 5")
@@ -152,6 +157,15 @@ def test_warc_ingestion_resume(spark, sf_dir, tmp_path):
     # and the late shard, by construction of this test corpus)
     m = ing.manifest(spark)
     assert m.agg(F.sum("n_pages")).head()[0] == pages.count() + 5
+    per_shard = {r.shard: (r.n_pages, r.n_triples) for r in m.collect()}
+    assert len(per_shard) == m.count()
+    assert per_shard["info-only.warc"] == (0, 0)
+    shard_pages = dict(read_warc_pages(spark, warc_dir, with_shard=True)
+                       .groupBy("shard").count().collect())
+    shard_triples = dict(ing.triples(spark).groupBy("shard").count()
+                         .collect())
+    assert per_shard == {s: (shard_pages.get(s, 0), shard_triples.get(s, 0))
+                         for s in per_shard}
 
 
 # --- property-based fuzz ---------------------------------------------------
