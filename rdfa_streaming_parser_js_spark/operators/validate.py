@@ -8,35 +8,30 @@ properties, carry the wrong datatype, or point at the wrong node kind.
 This module implements the workhorse SHACL core constraint components
 (sh:minCount / sh:maxCount / sh:datatype / sh:nodeKind / sh:in /
 sh:pattern / sh:minLength / sh:maxLength / sh:languageIn /
-sh:uniqueLang / sh:class / sh:hasValue) as ONE Catalyst plan for the
-whole shapes graph.
+sh:uniqueLang / sh:class / sh:hasValue) as ONE lazy Catalyst plan for
+the whole shapes graph.
 
 Scale shape — the shapes graph is data, not plan:
 - Shapes become a broadcast DataFrame (a real shapes graph is a few
-  hundred rows — ontology-sized).  A naive per-shape loop would union
-  one subplan per shape (plan size O(shapes)) and re-run the upstream
-  pipeline once per branch; here the instance table is scanned a fixed
-  number of times however many shapes there are.
+  hundred rows — ontology-sized), so the plan has the same size however
+  many shapes there are.
 - Focus selection: the rdf:type slice joined (broadcast) to the shapes'
   target classes.
-- Value rows: the property slice joined (broadcast) on the shape path,
-  then an equi-join on the focus subject — keyed on the graph's natural
-  subject key, co-located on bucketed graph tables.
-- The value-row set is materialized once (``localCheckpoint``) and
-  feeds every row-local constraint check plus the three aggregates
-  (cardinality, uniqueLang, hasValue) — without it, each report
-  branch would re-run extraction.
-- minCount and hasValue additionally need the zero-count foci — a
-  left-anti join from the (focus × shape) set against the
-  value-bearing pairs (counting can't see absent groups).
-- sh:class is the one constraint that joins back into the instance
-  table (the rdf:type slice) — instance-sized on both sides, keyed on
-  the subject column the bucketed graph tables are laid out by.
+- Value nodes are a SET (SHACL §2.3.2): the property slice joined
+  (broadcast) on the shape path and deduplicated on (focus, shape,
+  term), so a triple that several pages assert counts once.
+- The (focus, shape) pairs left-join their value rows: a focus with no
+  value arrives as one row of NULL terms and counts 0, so minCount and
+  hasValue see absent foci without a second pass.  sh:class left-joins
+  the rdf:type slice on (value, class).
+- One aggregate per (focus, shape) computes the value count
+  (min/maxCount), the hasValue hit, the language tags (uniqueLang) and
+  the row-local violations (datatype, nodeKind, in, pattern,
+  min/maxLength, languageIn, class); one ``explode`` emits them all.
 
-Violations of all components are unioned into one report with a
-deterministic schema, ready to gate a publish step or route entities to
-quarantine (the same pattern as operators/extract's parse_error
-column).
+Nothing runs until the report is consumed; it has a deterministic
+schema, ready to gate a publish step or route entities to quarantine
+(the same pattern as operators/extract's parse_error column).
 """
 
 from __future__ import annotations
@@ -94,11 +89,9 @@ def _shapes_df(spark, shapes: Sequence[PropertyShape]) -> DataFrame:
     return spark.createDataFrame(rows, _SHAPE_SCHEMA)
 
 
-def _report(df, constraint: str, value, detail):
-    return df.select(
-        F.col("focus"), F.col("shape_id"),
-        F.lit(constraint).alias("constraint"),
-        F.col("path"), value.alias("value"), detail.alias("detail"))
+def _violation(constraint: str, value, detail):
+    return F.struct(F.lit(constraint).alias("constraint"),
+                    value.alias("value"), detail.alias("detail"))
 
 
 def shacl_report(triples: DataFrame,
@@ -114,150 +107,93 @@ def shacl_report(triples: DataFrame,
             [], "focus string, shape_id string, constraint string, "
                 "path string, value string, detail string")
     sh = F.broadcast(_shapes_df(spark, shapes))
-
-    # (focus, shape) pairs: every instance of every targeted class
-    focus = (triples.filter(F.col("pred") == RDF_TYPE)
-             .select(F.col("subj").alias("focus"),
-                     F.col("obj_value").alias("target_class"))
-             .distinct()
-             .join(sh, "target_class")
-             .select("focus", "shape_id", "path", "min_count",
-                     "max_count", "has_value"))
-
-    # value rows of every constrained property, restricted to typed
-    # foci; materialized ONCE — five report branches read it
-    values = (triples
-              .join(sh, triples.pred == sh.path)
+    typed = (triples.filter(F.col("pred") == RDF_TYPE)
+             .select(F.col("subj").alias("node"),
+                     F.col("obj_value").alias("type"))
+             .distinct())
+    values = (triples.join(sh.select("shape_id", "path"),
+                           triples["pred"] == sh["path"])
               .select(F.col("subj").alias("focus"), "shape_id",
-                      "target_class", "path", "min_count", "max_count",
-                      "datatype", "node_kind", "in_values", "pattern",
-                      "class", "has_value", "min_length", "max_length",
-                      "language_in", "unique_lang",
                       "obj_value", "obj_kind", "obj_datatype",
                       "obj_lang")
-              .join(focus.select("focus", "shape_id").distinct(),
-                    ["focus", "shape_id"])
-              .localCheckpoint(eager=True))
-    # the lazily-returned report references this pinned checkpoint, so
-    # it cannot be freed here — register it for storage.release_tracked
-    from rdfa_streaming_parser_js_spark.operators.storage import track
-    track(values)
+              .distinct())
+    rows = (typed.join(sh, typed["type"] == sh["target_class"])
+            .withColumnRenamed("node", "focus")
+            .join(values, ["focus", "shape_id"], "left")
+            .join(typed.select(F.col("node").alias("obj_value"),
+                               F.col("type").alias("class"),
+                               F.lit(True).alias("is_instance")),
+                  ["obj_value", "class"], "left"))
 
-    parts: list[DataFrame] = []
+    v, lang = F.col("obj_value"), F.col("obj_lang")
+    # a NULL constraint parameter makes its condition NULL, which
+    # ``when`` reads as "not violated"; the absent-focus row (NULL
+    # value) has no value to check
+    row_local = F.when(v.isNotNull(), F.array(
+        F.when(F.col("datatype").isNotNull()
+               & ~F.col("obj_datatype").eqNullSafe(F.col("datatype")),
+               _violation("datatype", v, F.coalesce(
+                   "obj_datatype", F.lit("(plain)")))),
+        F.when(F.col("obj_kind") != F.col("node_kind"),
+               _violation("nodeKind", v, F.col("obj_kind"))),
+        F.when(~F.array_contains("in_values", v),
+               _violation("in", v, F.array_join("in_values", ","))),
+        F.when(~F.regexp_like(v, F.col("pattern")),
+               _violation("pattern", v, F.col("pattern"))),
+        F.when(F.length(v) < F.col("min_length"),
+               _violation("minLength", v, F.concat(
+                   F.lit("minLength "), F.col("min_length")))),
+        F.when(F.length(v) > F.col("max_length"),
+               _violation("maxLength", v, F.concat(
+                   F.lit("maxLength "), F.col("max_length")))),
+        # language ranges match case-insensitively (the shapes frame
+        # stores the list lowercased); no tag is in no list
+        F.when(~F.array_contains("language_in",
+                                 F.lower(F.coalesce(lang, F.lit("")))),
+               _violation("languageIn", F.coalesce(lang, F.lit("(none)")),
+                          F.array_join("language_in", ","))),
+        # the value must be an rdf:type instance of the class; a
+        # literal never is
+        F.when(F.col("class").isNotNull()
+               & ((F.col("obj_kind") == "literal")
+                  | F.col("is_instance").isNull()),
+               _violation("class", v, F.concat(F.lit("class "),
+                                               F.col("class"))))))
+    agg = (rows.groupBy("focus", "shape_id", "path", "min_count",
+                        "max_count", "has_value")
+           .agg(F.count(v).alias("n"),
+                F.count_if(v == F.col("has_value")).alias("hits"),
+                F.collect_list(F.when(F.col("unique_lang"),
+                                      F.lower(lang))).alias("tags"),
+                F.flatten(F.collect_list(row_local)).alias("local")))
 
-    # cardinality -----------------------------------------------------
-    counts = (values.groupBy("focus", "shape_id", "path", "min_count",
-                             "max_count")
-              .agg(F.count(F.lit(1)).alias("n")))
-    absent = (focus.select("focus", "shape_id", "path", "min_count",
-                           "max_count")
-              .join(values.select("focus", "shape_id").distinct(),
-                    ["focus", "shape_id"], "left_anti")
-              .withColumn("n", F.lit(0).cast("long")))
-    low = counts.filter(F.col("n") < F.col("min_count")).unionByName(
-        absent.filter(F.col("min_count") > 0))
-    parts.append(_report(
-        low, "minCount", F.col("n").cast("string"),
-        F.concat(F.lit("minCount "), F.col("min_count"))))
-    parts.append(_report(
-        counts.filter(F.col("n") > F.col("max_count")), "maxCount",
-        F.col("n").cast("string"),
-        F.concat(F.lit("maxCount "), F.col("max_count"))))
-
-    # row-local value constraints ------------------------------------
-    parts.append(_report(
-        values.filter(F.col("datatype").isNotNull()
-                      & (F.col("obj_datatype").isNull()
-                         | (F.col("obj_datatype") != F.col("datatype")))),
-        "datatype", F.col("obj_value"),
-        F.coalesce(F.col("obj_datatype"), F.lit("(plain)"))))
-    parts.append(_report(
-        values.filter(F.col("node_kind").isNotNull()
-                      & (F.col("obj_kind") != F.col("node_kind"))),
-        "nodeKind", F.col("obj_value"), F.col("obj_kind")))
-    parts.append(_report(
-        values.filter(F.col("in_values").isNotNull()
-                      & ~F.array_contains(F.col("in_values"),
-                                          F.col("obj_value"))),
-        "in", F.col("obj_value"),
-        F.array_join(F.col("in_values"), ",")))
-    parts.append(_report(
-        values.filter(F.col("pattern").isNotNull()
-                      & ~F.regexp_like(F.col("obj_value"),
-                                       F.col("pattern"))),
-        "pattern", F.col("obj_value"), F.col("pattern")))
-    parts.append(_report(
-        values.filter(F.col("min_length").isNotNull()
-                      & (F.length("obj_value") < F.col("min_length"))),
-        "minLength", F.col("obj_value"),
-        F.concat(F.lit("minLength "), F.col("min_length"))))
-    parts.append(_report(
-        values.filter(F.col("max_length").isNotNull()
-                      & (F.length("obj_value") > F.col("max_length"))),
-        "maxLength", F.col("obj_value"),
-        F.concat(F.lit("maxLength "), F.col("max_length"))))
-    # sh:languageIn — language-range match is case-insensitive (the
-    # shapes frame stores the list pre-lowercased); a missing tag
-    # violates (no language is in no list)
-    parts.append(_report(
-        values.filter(F.col("language_in").isNotNull()
-                      & ~F.array_contains(
-                          F.col("language_in"),
-                          F.lower(F.coalesce("obj_lang", F.lit(""))))),
-        "languageIn", F.coalesce("obj_lang", F.lit("(none)")),
-        F.array_join(F.col("language_in"), ",")))
-
-    # sh:uniqueLang — no two values of the path may share a language
-    # tag; one report row per duplicated tag (focus-local aggregate)
-    dup_lang = (values.filter(F.col("unique_lang")
-                              & F.col("obj_lang").isNotNull())
-                .groupBy("focus", "shape_id", "path",
-                         F.lower("obj_lang").alias("tag"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1))
-    parts.append(_report(
-        dup_lang, "uniqueLang", F.col("tag"),
-        F.concat(F.lit("uniqueLang ("), F.col("n"),
-                 F.lit(" values))"))))
-
-    # sh:class — the value node must be an rdf:type instance of the
-    # class; literals can never be.  One keyed anti-join against the
-    # type slice (both sides instance-sized — equi-join on the
-    # graph's natural subject key, co-located on bucketed tables).
-    classed = values.filter(F.col("class").isNotNull())
-    typed = (triples.filter(F.col("pred") == RDF_TYPE)
-             .select(F.col("subj").alias("obj_value"),
-                     F.col("obj_value").alias("class"))
-             .distinct())
-    bad_class = (classed.filter(F.col("obj_kind") == "literal")
-                 .unionByName(
-                     classed.filter(F.col("obj_kind") != "literal")
-                     .join(typed, ["obj_value", "class"], "left_anti")))
-    parts.append(_report(
-        bad_class, "class", F.col("obj_value"),
-        F.concat(F.lit("class "), F.col("class"))))
-
-    # sh:hasValue — SOME value of the path must equal the constant;
-    # rides the same aggregate shape as cardinality (absent foci
-    # violate too)
-    has = (values.filter(F.col("has_value").isNotNull())
-           .groupBy("focus", "shape_id", "path", "has_value")
-           .agg(F.max(F.when(F.col("obj_value") == F.col("has_value"),
-                             1).otherwise(0)).alias("hit"))
-           .filter(F.col("hit") == 0))
-    has_absent = (focus.filter(F.col("has_value").isNotNull())
-                  .join(values.select("focus", "shape_id").distinct(),
-                        ["focus", "shape_id"], "left_anti"))
-    parts.append(_report(
-        has.unionByName(has_absent, allowMissingColumns=True)
-        .select("focus", "shape_id", "path", "has_value"),
-        "hasValue", F.lit("(absent)"),
-        F.concat(F.lit("hasValue "), F.col("has_value"))))
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    n, tags = F.col("n"), F.col("tags")
+    # sh:uniqueLang — one row per language tag that two values share
+    shared = F.filter(
+        F.transform(F.array_distinct(tags), lambda t: F.struct(
+            t.alias("tag"),
+            F.size(F.filter(tags, lambda x: x == t)).alias("k"))),
+        lambda c: c["k"] > 1)
+    violations = F.concat(
+        F.array(
+            F.when(n < F.col("min_count"), _violation(
+                "minCount", n.cast("string"),
+                F.concat(F.lit("minCount "), F.col("min_count")))),
+            F.when(n > F.col("max_count"), _violation(
+                "maxCount", n.cast("string"),
+                F.concat(F.lit("maxCount "), F.col("max_count")))),
+            F.when(F.col("has_value").isNotNull()
+                   & (F.col("hits") == 0), _violation(
+                       "hasValue", F.lit("(absent)"),
+                       F.concat(F.lit("hasValue "), F.col("has_value"))))),
+        F.transform(shared, lambda c: _violation(
+            "uniqueLang", c["tag"], F.concat(
+                F.lit("uniqueLang ("), c["k"], F.lit(" values)")))),
+        F.col("local"))
+    return (agg.select("focus", "shape_id", "path", F.explode(
+                F.filter(violations, lambda x: x.isNotNull())).alias("x"))
+            .select("focus", "shape_id", "x.constraint", "path",
+                    "x.value", "x.detail"))
 
 
 def conforms(triples: DataFrame,

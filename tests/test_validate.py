@@ -62,15 +62,54 @@ def test_conforms_and_clean_subset(spark):
 
 
 def test_min_count_zero_is_vacuous_and_in_values(spark):
+    # sh:opt's path exists on no focus: an absent focus has no value
+    # for the row-local components to reject
     shapes = [
         PropertyShape("sh:opt", f"{S}Article", f"{S}missing",
-                      min_count=0),
+                      min_count=0, datatype=f"{XSD}integer",
+                      node_kind="iri", in_values=("x",), pattern="^x$",
+                      min_length=3, max_length=5, language_in=("en",),
+                      class_=f"{S}WebSite"),
         PropertyShape("sh:lang", f"{S}Article", f"{S}name",
                       in_values=("beta", "gamma")),
     ]
     rep = shacl_report(_kg(spark), shapes).collect()
     assert {(r.shape_id, r.focus, r.value) for r in rep} == {
         ("sh:lang", "d1", "alpha")}
+
+
+def test_value_nodes_are_a_set(spark):
+    """A triple that several pages (url rows) assert is ONE value node:
+    it neither inflates the count nor repeats a row-local violation."""
+    rows = [(url, *t) for url in ("u1", "u2") for t in (
+        ("d1", RDF_TYPE, f"{S}Article", "iri", None, None),
+        ("d1", f"{S}name", "alpha", "literal", None, "en"),
+        ("d2", RDF_TYPE, f"{S}Article", "iri", None, None),
+        ("d2", f"{S}wordCount", "seven", "literal", None, None))]
+    kg = spark.createDataFrame(rows, "url string, " + COLS)
+    shapes = [
+        PropertyShape("sh:name", f"{S}Article", f"{S}name", max_count=1,
+                      unique_lang=True),
+        PropertyShape("sh:wc", f"{S}Article", f"{S}wordCount",
+                      max_count=1, datatype=f"{XSD}integer"),
+    ]
+    got = [(r.focus, r.shape_id, r.constraint, r.value)
+           for r in shacl_report(kg, shapes).collect()]
+    assert got == [("d2", "sh:wc", "datatype", "seven")]
+
+
+def test_report_is_lazy(spark):
+    """Building the report runs no Spark job; consuming it does."""
+    sc = spark.sparkContext
+    sc.setJobGroup("shacl-lazy", "build the SHACL report")
+    try:
+        rep = shacl_report(_kg2(spark), SHAPES2)
+        assert list(sc.statusTracker().getJobIdsForGroup("shacl-lazy")) == []
+        rep.collect()
+        assert list(sc.statusTracker().getJobIdsForGroup("shacl-lazy"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_empty_shapes_empty_report(spark):
@@ -123,9 +162,10 @@ SHAPES2 = [
 
 
 def test_shacl_extended_components(spark):
-    rep = shacl_report(_kg2(spark), SHAPES2)
-    got = {(r.focus, r.shape_id, r.constraint, r.value)
-           for r in rep.collect()}
+    rep = shacl_report(_kg2(spark), SHAPES2).collect()
+    got = {(r.focus, r.shape_id, r.constraint, r.value) for r in rep}
+    assert [r.detail for r in rep if r.constraint == "uniqueLang"] == [
+        "uniqueLang (2 values)"]
     assert got == {
         # d2 name "x" too short; fr not in languageIn; two en-tagged
         # names (case-insensitive) break uniqueLang

@@ -54,9 +54,9 @@ NOTES = {
     "kg_shacl_report": (
         "Shapes are DATA, not plan: one broadcast shapes table joined "
         "against the type slice (focus set) and the property slice "
-        "(value rows, materialized once) — plan size is constant in the "
-        "number of shapes, and the five report branches share the "
-        "checkpointed value rows instead of re-running extraction."),
+        "(distinct value rows) — plan size is constant in the number of "
+        "shapes; the (focus, shape) pairs left-join their values, then "
+        "one aggregate per pair and one explode emit every violation."),
     "kg_void_stats": (
         "Dataset statistics in three aggregates: one single-row global "
         "agg (Expand ×5 for the exact count-distincts), one groupBy "
