@@ -3397,7 +3397,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # VoID over the distinct graph-set: md5-derived partition nodes
         # make the description engine-independent; counts are exact
-        # xsd:integer lexical forms.
+        # xsd:integer lexical forms; distinct objects are RDF terms
+        # (value, kind, datatype, language), not lexical forms.
         "kg_void_stats": f"""
             WITH exp AS ({expected_triples_sql()}),
             g AS (SELECT DISTINCT subj, pred, obj_value, obj_kind,
@@ -3405,7 +3406,8 @@ def oracle_sql() -> dict[str, str]:
             gstats AS (
               SELECT CAST(count(*) AS VARCHAR) AS n_triples,
                      CAST(count(DISTINCT subj) AS VARCHAR) AS n_subj,
-                     CAST(count(DISTINCT obj_value) AS VARCHAR) AS n_obj,
+                     CAST(count(DISTINCT (obj_value, obj_kind,
+                          obj_datatype, obj_lang)) AS VARCHAR) AS n_obj,
                      CAST(count(DISTINCT pred) AS VARCHAR) AS n_pred,
                      CAST(count(DISTINCT CASE WHEN pred = '{RDF_TYPE}'
                           THEN obj_value END) AS VARCHAR) AS n_class

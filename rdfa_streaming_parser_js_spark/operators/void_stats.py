@@ -11,15 +11,19 @@ Output is triples-shaped (same columns as the extractor minus ``url``),
 so the description can be unioned into the graph, serialized by the
 N-Triples sink, or validated by the SHACL operator like any other data.
 
-Scale shape:
-- Global stats: one single-row aggregate.  The four exact
-  count-distincts expand the input ×4 (Spark's Expand) — still one
-  shuffle keyed on nothing, partial aggregation applies; swap in
-  approx_count_distinct at 10^13 if exactness is not contractual.
-- Class partition: the rdf:type slice (predicate filter pushed to the
-  scan) grouped by class — classes are few, counts are exact.
-- Property partition: groupBy(pred).  Predicate skew is bounded by the
-  vocabulary size, not the data.
+Scale shape: one aggregate and one fan-out.
+- One ``groupingSets([[], ["pred"], ["cls"]])`` aggregate, ``cls`` being
+  the object of an rdf:type triple (NULL otherwise): one scan, one Expand
+  (x3) and one shuffle for the dataset, property and class statistics.
+  The exact count-distincts ride the same aggregate (swap in
+  approx_count_distinct at 10^13 if exactness is not contractual); keys
+  are vocabulary-sized, not data-sized.
+- One explode over an array of triple structs chosen by grouping_id: 6
+  rows for the dataset, 4 per property, 3 per class.
+- Grouping sets emit no ``()`` row on an empty input, so the statistics
+  are broadcast and left-joined onto one row: an empty graph is still a
+  void:Dataset with five "0" counts.
+- Distinct objects are RDF terms: "x"@de, "x"@en and <x> are three.
 - Partition node IRIs are md5-derived from the partitioned term, so the
   description is deterministic on any engine and any parallelism.
 
@@ -28,8 +32,6 @@ exact and byte-stable.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,25 +44,20 @@ TRIPLE_SHAPE = ["subj", "pred", "obj_value", "obj_kind", "obj_datatype",
                 "obj_lang"]
 
 
-def _iri(subj, pred: str, obj) -> list:
-    return [subj, F.lit(pred), obj, F.lit("iri"),
-            F.lit(None).cast("string"), F.lit(None).cast("string")]
+# grouping_id() of the () and ["pred"] sets (a set bit marks an aggregated
+# column: bit 1 pred, bit 0 cls); only the ["cls"] set has a non-NULL cls.
+_DATASET, _PROP = 3, 1
 
 
-def _int(subj, pred: str, n) -> list:
-    return [subj, F.lit(pred), n.cast("string"), F.lit("literal"),
-            F.lit(XSD_INTEGER), F.lit(None).cast("string")]
+def _triple(subj, pred: str, obj, kind: str = "iri",
+            datatype: str | None = None) -> F.Column:
+    cols = [subj, F.lit(pred), obj, F.lit(kind), F.lit(datatype), F.lit(None)]
+    return F.struct(*[c.cast("string").alias(n)
+                      for c, n in zip(cols, TRIPLE_SHAPE)])
 
 
-def _rows(df: DataFrame, *specs) -> DataFrame:
-    """Fan one aggregate row out into len(specs) triples."""
-    parts = [df.select(*[c.alias(n) for c, n in zip(spec, TRIPLE_SHAPE)])
-             for spec in specs]
-    return reduce(lambda a, b: a.unionByName(b), parts)
-
-
-def _part_iri(dataset_iri: str, kind: str, term) -> F.Column:
-    return F.concat(F.lit(f"{dataset_iri}#{kind}-"), F.md5(term))
+def _int(subj, pred: str, n: str) -> F.Column:
+    return _triple(subj, pred, F.col(n), "literal", XSD_INTEGER)
 
 
 def void_description(triples: DataFrame, dataset_iri: str) -> DataFrame:
@@ -69,42 +66,38 @@ def void_description(triples: DataFrame, dataset_iri: str) -> DataFrame:
     inflate every count).  Emits the void:Dataset node, its global
     statistics, and one partition node per class / per predicate."""
     d = F.lit(dataset_iri)
+    gid, pred, cls = F.col("gid"), F.col("pred"), F.col("cls")
+    term = F.struct("obj_value", "obj_kind", "obj_datatype", "obj_lang")
+    stats = (triples
+             .withColumn("cls", F.when(pred == RDF_TYPE, F.col("obj_value")))
+             .groupingSets([[], ["pred"], ["cls"]], "pred", "cls")
+             .agg(F.grouping_id().alias("gid"),
+                  F.count(F.lit(1)).alias("n_triples"),
+                  F.countDistinct("subj").alias("n_subj"),
+                  F.countDistinct(term).alias("n_obj"),
+                  F.countDistinct("pred").alias("n_pred"),
+                  F.countDistinct("cls").alias("n_class")))
+    # one row that stands for the () set when an empty input has none
+    stats = (triples.sparkSession.range(1)
+             .join(F.broadcast(stats), how="left")
+             .na.fill(_DATASET, ["gid"]).na.fill(0))
 
-    glob = triples.agg(
-        F.count(F.lit(1)).alias("n_triples"),
-        F.countDistinct("subj").alias("n_subj"),
-        F.countDistinct("obj_value").alias("n_obj"),
-        F.countDistinct("pred").alias("n_pred"),
-        F.countDistinct(F.when(F.col("pred") == RDF_TYPE,
-                               F.col("obj_value"))).alias("n_class"))
-    global_rows = _rows(
-        glob,
-        _iri(d, RDF_TYPE, F.lit(f"{VOID_NS}Dataset")),
-        _int(d, f"{VOID_NS}triples", F.col("n_triples")),
-        _int(d, f"{VOID_NS}distinctSubjects", F.col("n_subj")),
-        _int(d, f"{VOID_NS}distinctObjects", F.col("n_obj")),
-        _int(d, f"{VOID_NS}properties", F.col("n_pred")),
-        _int(d, f"{VOID_NS}classes", F.col("n_class")))
-
-    classes = (triples.filter(F.col("pred") == RDF_TYPE)
-               .groupBy(F.col("obj_value").alias("cls"))
-               .agg(F.countDistinct("subj").alias("n_entities")))
-    cp = _part_iri(dataset_iri, "class", F.col("cls"))
-    class_rows = _rows(
-        classes,
-        _iri(d, f"{VOID_NS}classPartition", cp),
-        _iri(cp, f"{VOID_NS}class", F.col("cls")),
-        _int(cp, f"{VOID_NS}entities", F.col("n_entities")))
-
-    props = (triples.groupBy("pred")
-             .agg(F.count(F.lit(1)).alias("n_triples"),
-                  F.countDistinct("subj").alias("n_subj")))
-    pp = _part_iri(dataset_iri, "prop", F.col("pred"))
-    prop_rows = _rows(
-        props,
-        _iri(d, f"{VOID_NS}propertyPartition", pp),
-        _iri(pp, f"{VOID_NS}property", F.col("pred")),
-        _int(pp, f"{VOID_NS}triples", F.col("n_triples")),
-        _int(pp, f"{VOID_NS}distinctSubjects", F.col("n_subj")))
-
-    return global_rows.unionByName(class_rows).unionByName(prop_rows)
+    cp = F.concat(F.lit(f"{dataset_iri}#class-"), F.md5(cls))
+    pp = F.concat(F.lit(f"{dataset_iri}#prop-"), F.md5(pred))
+    rows = (F.when(gid == _DATASET, F.array(
+                _triple(d, RDF_TYPE, F.lit(f"{VOID_NS}Dataset")),
+                _int(d, f"{VOID_NS}triples", "n_triples"),
+                _int(d, f"{VOID_NS}distinctSubjects", "n_subj"),
+                _int(d, f"{VOID_NS}distinctObjects", "n_obj"),
+                _int(d, f"{VOID_NS}properties", "n_pred"),
+                _int(d, f"{VOID_NS}classes", "n_class")))
+            .when(gid == _PROP, F.array(
+                _triple(d, f"{VOID_NS}propertyPartition", pp),
+                _triple(pp, f"{VOID_NS}property", pred),
+                _int(pp, f"{VOID_NS}triples", "n_triples"),
+                _int(pp, f"{VOID_NS}distinctSubjects", "n_subj")))
+            .when(cls.isNotNull(), F.array(
+                _triple(d, f"{VOID_NS}classPartition", cp),
+                _triple(cp, f"{VOID_NS}class", cls),
+                _int(cp, f"{VOID_NS}entities", "n_subj"))))
+    return stats.select(F.explode(rows).alias("t")).select("t.*")

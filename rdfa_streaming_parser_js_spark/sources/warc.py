@@ -26,6 +26,7 @@ from __future__ import annotations
 import gzip
 import io
 import os
+import zlib
 from collections.abc import Iterator
 
 import time
@@ -134,7 +135,8 @@ def parse_warc_records(data: bytes) -> Iterator[tuple[str, str, bytes]]:
     if data[:2] == b"\x1f\x8b":
         try:
             data = gzip.decompress(data)
-        except OSError:
+        except (OSError, EOFError, zlib.error):
+            # bad header, truncated member, corrupt deflate stream
             return
     pos, n = 0, len(data)
     while pos < n:

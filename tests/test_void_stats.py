@@ -40,14 +40,17 @@ def test_global_statistics(spark):
     assert got[(D, f"{VOID_NS}distinctObjects")][0] == "5"
 
 
-def test_class_and_property_partitions(spark):
-    desc = void_description(_kg(spark), D)
+def _entities_by_class(desc):
     cls = {r.subj: r.obj_value for r in desc.filter(
         F.col("pred") == f"{VOID_NS}class").collect()}
     ents = {r.subj: r.obj_value for r in desc.filter(
         F.col("pred") == f"{VOID_NS}entities").collect()}
-    by_class = {cls[k]: ents[k] for k in cls}
-    assert by_class == {f"{S}Article": "2", f"{S}Person": "1"}
+    return {cls[k]: ents[k] for k in cls}
+
+
+def test_class_and_property_partitions(spark):
+    desc = void_description(_kg(spark), D)
+    assert _entities_by_class(desc) == {f"{S}Article": "2", f"{S}Person": "1"}
 
     prop = {r.subj: r.obj_value for r in desc.filter(
         F.col("pred") == f"{VOID_NS}property").collect()}
@@ -56,6 +59,42 @@ def test_class_and_property_partitions(spark):
         & (F.col("subj") != D)).collect()}
     assert {prop[k]: ptriples[k] for k in prop} == {
         RDF_TYPE: "3", f"{S}name": "3"}
+
+
+def test_two_type_subject_counts_in_both_classes(spark):
+    kg = spark.createDataFrame([
+        ("e1", RDF_TYPE, f"{S}Article", "iri", None, None),
+        ("e1", RDF_TYPE, f"{S}CreativeWork", "iri", None, None),
+        ("e2", RDF_TYPE, f"{S}Article", "iri", None, None),
+    ], COLS)
+    desc = void_description(kg, D)
+    got = _by_pred(desc)
+    assert got[(D, f"{VOID_NS}distinctSubjects")][0] == "2"
+    assert got[(D, f"{VOID_NS}classes")][0] == "2"
+    assert _entities_by_class(desc) == {
+        f"{S}Article": "2", f"{S}CreativeWork": "1"}
+
+
+def test_distinct_objects_are_terms(spark):
+    """void:distinctObjects counts RDF terms: one lexical form as two
+    language-tagged literals, a plain literal and an IRI is four objects."""
+    kg = spark.createDataFrame([
+        ("d1", f"{S}name", "x", "literal", None, "de"),
+        ("d1", f"{S}name", "x", "literal", None, "en"),
+        ("d2", f"{S}name", "x", "literal", None, "en"),
+        ("d2", f"{S}name", "x", "literal", None, None),
+        ("d2", f"{S}sameAs", "x", "iri", None, None),
+    ], COLS)
+    got = _by_pred(void_description(kg, D))
+    assert got[(D, f"{VOID_NS}distinctObjects")][0] == "4"
+
+
+def test_empty_graph_is_a_dataset_with_zero_counts(spark):
+    desc = void_description(spark.createDataFrame([], COLS), D)
+    assert sorted((r.subj, r.pred, r.obj_value) for r in desc.collect()) == [
+        (D, f"{VOID_NS}{p}", "0") for p in (
+            "classes", "distinctObjects", "distinctSubjects", "properties",
+            "triples")] + [(D, RDF_TYPE, f"{VOID_NS}Dataset")]
 
 
 def test_partition_iris_deterministic_and_linked(spark):
@@ -70,3 +109,11 @@ def test_partition_iris_deterministic_and_linked(spark):
     described = {r.subj for r in desc1.filter(
         F.col("subj") != D).collect()}
     assert linked == described and len(linked) == 4
+
+
+def test_plan_has_no_union(spark):
+    """One grouping-sets aggregate and one explode emit every row."""
+    desc = void_description(_kg(spark), D)
+    assert desc.columns == ["subj", "pred", "obj_value", "obj_kind",
+                            "obj_datatype", "obj_lang"]
+    assert "Union" not in desc._jdf.queryExecution().optimizedPlan().toString()

@@ -58,10 +58,14 @@ NOTES = {
         "shapes; the (focus, shape) pairs left-join their values, then "
         "one aggregate per pair and one explode emit every violation."),
     "kg_void_stats": (
-        "Dataset statistics in three aggregates: one single-row global "
-        "agg (Expand ×5 for the exact count-distincts), one groupBy "
-        "over the vocabulary-sized class slice, one over predicates; "
-        "md5-derived partition IRIs keep the description byte-stable."),
+        "Dataset statistics in ONE aggregate: an Expand over the three "
+        "grouping sets ((), pred, rdf:type class) feeds the distinct-"
+        "aggregate Expand (×5, exact count-distincts) and one keyed "
+        "HashAggregate; the vocabulary-sized result is broadcast into a "
+        "left join onto one Range row (an empty input still yields the "
+        "void:Dataset node) and ONE Generate explodes every triple. No "
+        "Union; md5-derived partition IRIs keep the description "
+        "byte-stable."),
     "kg_rdfs_entail": (
         "Instance table is NEVER shuffled: ontology closures are "
         "computed once (semi-naive, eager-cut) and every rule joins "
