@@ -258,8 +258,6 @@ def main() -> None:
         "sparql_results_roundtrip", "decontaminate_ngrams",
         "text_pii_redaction",
     ]
-    from rdfa_streaming_parser_js_spark.operators.dedup import (
-        release_persisted)
     from rdfa_streaming_parser_js_spark.operators.storage import (
         release_tracked)
     for name in bench_queries:
@@ -270,10 +268,10 @@ def main() -> None:
             t0 = time.time()
             force(qs[name](spark, sf_dir))
             trials.append(time.time() - t0)
-            # release DISK_ONLY shingle blocks so repeated trials don't
-            # accumulate executor storage (and each trial is honest:
-            # no cross-trial cache reuse inside an operator)
-            release_persisted()
+            # release pinned frames (checkpoints, DISK_ONLY shingle
+            # blocks) so repeated trials don't accumulate executor
+            # storage (and each trial is honest: no cross-trial cache
+            # reuse inside an operator)
             release_tracked()
         timings[name] = round(statistics.median(trials), 3)
         ranges[name] = [round(min(trials), 3), round(max(trials), 3)]
@@ -299,7 +297,6 @@ def main() -> None:
                 t0 = time.time()
                 force(qs[name](spark, scale_dir))
                 trials.append(time.time() - t0)
-                release_persisted()
                 release_tracked()
             small = statistics.median(trials)
             small_timings[name] = round(small, 3)

@@ -703,10 +703,9 @@ def _subst_exists(solution: DataFrame, group: DataFrame,
     O(2^k) times and the group per-mask (tracked; release_tracked()
     frees the blocks)."""
     from rdfa_streaming_parser_js_spark.operators.storage import (
-        constraints_disabled, track)
-    with constraints_disabled(solution.sparkSession):
-        solution = track(solution.localCheckpoint(eager=True))
-        group = track(group.localCheckpoint(eager=True))
+        checkpoint, track)
+    solution = track(checkpoint(solution))
+    group = track(checkpoint(group))
     parts = []
     for s_nulls, sol_s in _masks(solution, unc_s):
         keys = [v for v in shared if v not in s_nulls]
@@ -952,13 +951,12 @@ def _compat_left_join(solution: DataFrame, group: DataFrame,
     Both inputs are eagerly materialized first: the mask pairs
     consume each side O(2^k) times, and re-evaluating a deep
     enclosing-solution DAG per consumer costs far more than one
-    localCheckpoint (tracked — the lazy result still references the
+    checkpoint (tracked — the lazy result still references the
     blocks; release_tracked() frees them)."""
     from rdfa_streaming_parser_js_spark.operators.storage import (
-        constraints_disabled, track)
-    with constraints_disabled(solution.sparkSession):
-        solution = track(solution.localCheckpoint(eager=True))
-        group = track(group.localCheckpoint(eager=True))
+        checkpoint, track)
+    solution = track(checkpoint(solution))
+    group = track(checkpoint(group))
     group_only = [c for c in group.columns if c not in solution.columns]
     out_cols = solution.columns + group_only
     parts = []
@@ -1008,9 +1006,8 @@ def _compat_minus(solution: DataFrame, group: DataFrame,
     row-level domains, the §8.3.3 rule) removes nothing and every
     other pair is one anti-join.  ``group`` is materialized once."""
     from rdfa_streaming_parser_js_spark.operators.storage import (
-        constraints_disabled, track)
-    with constraints_disabled(group.sparkSession):
-        group = track(group.localCheckpoint(eager=True))
+        checkpoint, track)
+    group = track(checkpoint(group))
     kept = []
     for s_nulls, sol_s in _masks(solution, unc_sol):
         for g_nulls, grp_g in _masks(group, unc_grp):
@@ -1040,10 +1037,9 @@ def _compat_inner_join(solution: DataFrame, group: DataFrame,
     §18.3 — a variable unbound on one side takes the other side's
     value, one unbound on both stays NULL."""
     from rdfa_streaming_parser_js_spark.operators.storage import (
-        constraints_disabled, track)
-    with constraints_disabled(solution.sparkSession):
-        solution = track(solution.localCheckpoint(eager=True))
-        group = track(group.localCheckpoint(eager=True))
+        checkpoint, track)
+    solution = track(checkpoint(solution))
+    group = track(checkpoint(group))
     group_only = [c for c in group.columns if c not in solution.columns]
     out_cols = solution.columns + group_only
     parts = []

@@ -66,8 +66,9 @@ def kmeans_assignments(emb: DataFrame, k: int = DEFAULT_K,
     # tracked: the returned assignments reference this pinned
     # checkpoint, so it is freed by storage.release_tracked() between
     # queries, not here
-    from rdfa_streaming_parser_js_spark.operators.storage import track
-    vecs = track(int_vectors(emb, scale).localCheckpoint(eager=True))
+    from rdfa_streaming_parser_js_spark.operators.storage import (
+        checkpoint, track)
+    vecs = track(checkpoint(int_vectors(emb, scale)))
     seed = {r.vec_id: list(r.v)
             for r in vecs.filter(F.col("vec_id") < k).collect()}
     missing = [i for i in range(k) if i not in seed]

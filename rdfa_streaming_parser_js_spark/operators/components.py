@@ -7,8 +7,9 @@ node adopts the min label among itself and its neighbors; fixpoint =
 components labeled by their min member id.  Converges in O(diameter)
 rounds — near-dup clusters are shallow (duplicates of duplicates), so
 a handful of rounds in practice.  Per round: one shuffle (groupBy id).
-``localCheckpoint`` every few rounds cuts the growing lineage — the
-standard guard for iterative DataFrame algorithms.
+Storage follows ``operators/storage``'s one rule: every generation is a
+checkpoint, the superseded one is released as soon as its successor
+exists, and what the returned frame reads is tracked.
 
 The driver-side loop is control flow only (a convergence counter); all
 data movement is distributed.  GraphFrames does the same under the
@@ -20,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdfa_streaming_parser_js_spark.operators.storage import release
+from rdfa_streaming_parser_js_spark.operators.storage import (
+    checkpoint, release, track)
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -41,63 +43,34 @@ def connected_components(edges: DataFrame, src: str = "id_a",
             f"connected_components needs numeric node ids, got "
             f"{id_type.simpleString()} — use connected_components_star "
             "for string ids (IRIs, bnode labels, urls)")
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .union(edges.select(F.col(dst).alias("a"),
-                               F.col(src).alias("b")))
-           .distinct().cache())
+    # materialized once: every round joins against it, and the pair
+    # generator upstream must not re-run per round
+    sym = checkpoint(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .distinct())
     labels = (sym.select(F.col("a").alias("id")).distinct()
-              .withColumn("comp", F.col("id"))
-              .cache())
+              .withColumn("comp", F.col("id")))
 
-    prev_sum = object()  # sentinel: never equals a real sum
-    # superseded generations awaiting a SELF-CONTAINED successor: a
-    # cached generation's blocks can be evicted and recomputed from its
-    # predecessors, so predecessors are only truly dead (releasable —
-    # Dataset.unpersist is a no-op on checkpointed frames, see
-    # operators/storage.release) once an eager checkpoint cuts them out
-    # of every live lineage.  Entries are (frame, is_checkpointed).
-    pending: list[tuple[DataFrame, bool]] = []
-    last_cut = False
-    for i in range(max_iterations):
+    prev_sum = None
+    for _ in range(max_iterations):
         msgs = (sym.join(labels, sym.a == labels.id)
                 .select(F.col("b").alias("id"), "comp"))
-        new_labels = (labels.union(msgs)
-                      .groupBy("id").agg(F.min("comp").alias("comp")))
-        # Materialize each round: without this, round N's action would
-        # recompute the entire label chain from round 0 (and the pair
-        # generator feeding it) — iteration cost would grow linearly.
-        cut = i % 3 == 2
-        if cut:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.cache()
-        # ONE action per round: materializes the cache AND yields the
-        # convergence signal.  Labels are monotone non-increasing
-        # (new = min(old, neighbors)), so the label sum strictly
-        # decreases until the fixpoint — equal sums ⟺ zero changed
-        # labels, with no old-vs-new join and no second job.
-        cur_sum = new_labels.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).collect()[0].s
-        pending.append((labels, last_cut))
-        if cut:  # new_labels self-contained: all priors are dead
-            for f, _ in pending:
-                release(f)
-            pending = []
+        # Labels are monotone non-increasing (new = min(old, neighbors)),
+        # so the label sum strictly decreases until the fixpoint — equal
+        # sums ⟺ zero changed labels, observed on the generation's own
+        # checkpoint with no old-vs-new join and no second job.
+        new_labels, seen = checkpoint(
+            labels.union(msgs).groupBy("id")
+            .agg(F.min("comp").alias("comp")),
+            F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"))
+        release(labels)  # a no-op on round 0's lazy labels
         labels = new_labels
-        last_cut = cut
-        if cur_sum is None or cur_sum == prev_sum:
+        if seen["s"] is None or seen["s"] == prev_sum:
             break  # empty graph, or fixpoint reached
-        prev_sum = cur_sum
-    # Leftovers since the last checkpoint: release CACHED ones only
-    # (their data recomputes from the still-live checkpoint below
-    # them); the ≤1 checkpointed leftover must stay — the returned
-    # cached generation's lineage may need it if blocks are evicted.
-    for f, was_ckpt in pending:
-        if not was_ckpt:
-            release(f)
-    sym.unpersist()
-    return labels
+        prev_sum = seen["s"]
+    release(sym)
+    return track(labels)
 
 
 def dedup_clusters(pairs: DataFrame, src: str = "id_a",
@@ -161,58 +134,33 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
     # Materialize the input ONCE: each star round references the edge
     # set several times (symmetrize, min-agg, join), and the upstream
     # pair generator (e.g. the full PPJoin pipeline) must not re-run
-    # per reference per round.
-    raw = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-           .localCheckpoint(eager=True))
+    # per reference per round.  It stays pinned (tracked): the returned
+    # labels read their node set from it.
+    raw = track(checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))))
     # self-loops carry no connectivity but their nodes are still
     # component members (matching connected_components' contract)
     e = raw.filter(F.col("u") != F.col("v")).distinct()
-    # nodes needs no cache: it is referenced exactly once (the final
-    # labels join) and recomputes from the eager `raw` checkpoint —
-    # the old cache()/unpersist() pair was dead (never materialized
-    # before the lazy labels were returned)
     nodes = (raw.select(F.col("u").alias("id"))
              .union(raw.select(F.col("v").alias("id"))).distinct())
 
     prev_sig = None
-    # superseded generations pending a self-contained successor —
-    # same release discipline as connected_components above
-    pending: list[tuple[DataFrame, bool]] = []
-    last_cut = False
-    for i in range(max_iterations):
-        new_e = _small_star(_large_star(e))
-        cut = i % 3 == 2
-        if cut:
-            new_e = new_e.localCheckpoint(eager=True)
-        else:
-            new_e = new_e.cache()
-        # one action per round: materializes new_e AND yields the
-        # edge-set signature (count + hash sum); the edge set is a
-        # function of the iteration state, so equal signatures ⟺
+    for _ in range(max_iterations):
+        # the edge set is a function of the iteration state, so equal
+        # signatures (count + hash sum, observed on the checkpoint) ⟺
         # fixpoint (hash-sum collision odds ~2^-64)
-        row = new_e.agg(
+        new_e, seen = checkpoint(
+            _small_star(_large_star(e)),
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h")
-        ).collect()[0]
-        if i > 0:  # round 0's `e` is the unpersisted lazy input view
-            pending.append((e, last_cut))
-        if cut:  # new_e self-contained: every prior generation is dead
-            for f, _ in pending:
-                release(f)
-            pending = []
+            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"))
+        release(e)  # a no-op on round 0's lazy edge set
         e = new_e
-        last_cut = cut
-        sig = (row.n, row.h)
-        if sig == prev_sig or row.n == 0:
+        sig = (seen["n"], seen["h"])
+        if sig == prev_sig or seen["n"] == 0:
             break
         prev_sig = sig
-    # cached leftovers recompute from the still-live checkpoint below
-    # them; a checkpointed leftover stays (the returned labels' lineage
-    # may need it on cache eviction)
-    for f, was_ckpt in pending:
-        if not was_ckpt:
-            release(f)
 
+    track(e)  # the returned labels read it
     return (nodes.join(e.select(F.col("u").alias("id"),
                                 F.col("v").alias("comp")), "id", "left")
             .select("id", F.coalesce("comp", F.col("id")).alias("comp")))

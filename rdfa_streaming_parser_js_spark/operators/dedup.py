@@ -15,26 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import doc_fingerprint
-
-# DataFrames persisted by operators in this module, so callers (bench
-# loops, tests, multi-query pipelines) can release executor storage
-# between queries instead of accumulating blocks for the session's
-# lifetime.  Lazy DataFrames returned to callers make an in-function
-# unpersist impossible — the blocks are still needed at materialization.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every DataFrame persisted by dedup operators; returns
-    how many were released."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        try:
-            df.unpersist(blocking)
-        except Exception:
-            pass  # session already stopped
-    _PERSISTED.clear()
-    return n
+from .storage import track
 
 # Deterministic MinHash parameters: h_i(x) = (a_i*x + b_i) mod P, over
 # md5-prefix shingle values. P = 2^31-1 keeps a*h < 2^62 so the modular
@@ -198,12 +179,11 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     Storage envelope at 100 TB: the exploded shingle table is
     ≈ tokens × docs rows — far beyond executor RAM, so it is persisted
     DISK_ONLY (local spill, streamed back per use), never MEMORY.
-    Callers running many queries in one session should call
-    ``release_persisted()`` after materializing results.
+    It is tracked: callers running many queries in one session call
+    ``storage.release_tracked()`` after materializing results.
     """
-    sh = shingles(docs, id_col, text_col, n).persist(
-        StorageLevel.DISK_ONLY)
-    _PERSISTED.append(sh)
+    sh = track(shingles(docs, id_col, text_col, n).persist(
+        StorageLevel.DISK_ONLY))
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
 

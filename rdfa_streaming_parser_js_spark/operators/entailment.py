@@ -55,11 +55,9 @@ def _closed(ontology: DataFrame, pred: str) -> DataFrame:
     edges = (ontology.filter(F.col("pred") == pred)
              .select(F.col("subj").alias("a"),
                      F.col("obj_value").alias("b")))
-    # eager cut: the closure is ontology-sized (tiny); materializing it
-    # once makes every downstream rule join a clean broadcast leaf
-    # instead of inlining the closure's loop plan four times
-    return (transitive_closure(edges).filter(F.col("a") != F.col("b"))
-            .localCheckpoint(eager=True))
+    # the closure is a tracked checkpoint (ontology-sized, tiny), so
+    # every downstream rule join reads it as a clean broadcast leaf
+    return transitive_closure(edges).filter(F.col("a") != F.col("b"))
 
 
 def rdfs_entail(triples: DataFrame, ontology: DataFrame) -> DataFrame:

@@ -69,7 +69,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfa_streaming_parser_js_spark.operators.storage import (
-    constraints_disabled, release, track)
+    checkpoint, release, track)
 
 DEFAULT_ROUNDS = 3
 
@@ -103,12 +103,10 @@ def _wl_labels(terms: DataFrame, rounds: int) -> DataFrame:
     Each round's label frame feeds THREE consumers (the out-signature
     join, the in-signature join, next round / the final substitution),
     so without materialization the lineage re-evaluates ~3^rounds
-    times.  Every generation is therefore eagerly localCheckpointed and
-    the superseded one released immediately (≤2 generations live —
-    the VERDICT r03 storage discipline); the FINAL generation stays
-    pinned (the lazy result still references it) and is ``track()``ed
-    for session-level ``release_tracked()``."""
-    spark = terms.sparkSession
+    times.  Storage therefore follows ``operators/storage``'s one rule:
+    every generation is a checkpoint, the superseded one is released as
+    soon as its successor exists, and the final one (which the lazy
+    result still reads) is tracked."""
     labels = (terms.filter(F.col("subj_kind") == "bnode")
               .select("url", F.col("subj").alias("node"))
               .unionByName(
@@ -116,8 +114,7 @@ def _wl_labels(terms: DataFrame, rounds: int) -> DataFrame:
                   .select("url", F.col("obj_value").alias("node")))
               .distinct()
               .withColumn("label", F.lit("b")))
-    with constraints_disabled(spark):
-        labels = labels.localCheckpoint(eager=True)
+    labels = checkpoint(labels)
 
     for _ in range(rounds):
         lab = labels  # previous generation
@@ -155,8 +152,7 @@ def _wl_labels(terms: DataFrame, rounds: int) -> DataFrame:
                                    F.coalesce("in_sig", F.lit(""))))
                     .alias("label")))
         try:
-            with constraints_disabled(spark):
-                nxt = nxt.localCheckpoint(eager=True)
+            nxt = checkpoint(nxt)
         finally:
             release(lab)
         labels = nxt
@@ -183,8 +179,7 @@ def graph_fingerprint(triples: DataFrame,
     # 2·rounds+1 consumers scan ``terms``; materialize it once rather
     # than re-running the upstream extraction per scan (tracked — the
     # lazy result still references it).
-    with constraints_disabled(triples.sparkSession):
-        terms = track(terms.localCheckpoint(eager=True))
+    terms = track(checkpoint(terms))
 
     labels = _wl_labels(terms, rounds)
     s_lab = labels.select(F.col("url").alias("su"),

@@ -30,8 +30,8 @@ For graphs with hotter hubs lower SCALE (ranks are relative).
 Physical shape per iteration: one shuffle (groupBy dst), map-side
 partial sums.  ``ranks`` and ``edges`` are both keyed by node id, so on
 a real cluster pre-bucketing both by id makes the per-round join
-co-located; ``localCheckpoint`` every third round cuts the growing
-lineage exactly as in operators/components.py.
+co-located; a checkpoint every other round (``operators/storage``)
+cuts the growing lineage.
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfa_streaming_parser_js_spark.operators.storage import (
-    release, track)
+    checkpoint, release, track)
 
 PAGERANK_SCALE = 1_000_000_000_000  # 10^12
 DEFAULT_ITERATIONS = 6
@@ -81,14 +81,13 @@ def pagerank(edges: DataFrame, iterations: int = DEFAULT_ITERATIONS,
     # for storage.release_tracked(): the lazy returned ranks still
     # reference them, so they cannot be released here — a long-lived
     # session releases them between queries once results materialize
-    nodes = track(edges.select(F.col("src").alias("id"))
-                  .union(edges.select(F.col("dst").alias("id")))
-                  .distinct().localCheckpoint(eager=True))
+    nodes = track(checkpoint(
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id"))).distinct()))
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # contribution edges carry outdeg so the per-round join is edges-only
-    contrib_edges = track(edges.join(outdeg, "src")
-                          .select("src", "dst", "outdeg")
-                          .localCheckpoint(eager=True))
+    contrib_edges = track(checkpoint(
+        edges.join(outdeg, "src").select("src", "dst", "outdeg")))
 
     base = (15 * scale) // 100
     ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
@@ -106,7 +105,7 @@ def pagerank(edges: DataFrame, iterations: int = DEFAULT_ITERATIONS,
         # eager cut every other round: keeps the unrolled plan shallow
         # (two rounds deep max) without paying a materialization per round
         if i % 2 == 1 and i != iterations - 1:
-            new_ranks = ranks.localCheckpoint(eager=True)
+            new_ranks = checkpoint(ranks)
             # the cut two rounds back is now superseded and unreferenced
             # (the new checkpoint is self-contained) — release it
             if prev_cut is not None:

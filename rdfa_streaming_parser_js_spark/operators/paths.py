@@ -26,17 +26,11 @@ Compilation strategy (scale-first):
   (``pred = <iri>``), so Catalyst prunes columns and pushes the
   predicate to parquet.
 - ``plus`` runs semi-naive transitive closure (the Datalog TC loop):
-  the base edge set is computed once and checkpointed, each round joins
-  only the *delta* against it, anti-joins out already-seen pairs, and
-  issues one materializing action (the frontier's eager checkpoint; the
-  empty-frontier probe then reads one materialized partition).  Rounds
-  = graph depth; lineage is cut with ``localCheckpoint`` so round N
-  never recomputes rounds 0..N-1, and superseded generations are
-  RELEASED as they fall out of the live union (≤2 total-generations
-  persisted at any moment).  At cluster scale the base stays
-  hash-partitioned on its join key for the duration of the loop — the
-  same shape as the connected-components loop in
-  ``operators/components.py``.
+  the base edge set is computed once, each round joins only the *delta*
+  against it and anti-joins out already-seen pairs.  Storage follows
+  ``operators/storage``'s one rule: every generation is a checkpoint,
+  the superseded one is released as soon as its successor exists, and
+  the returned closure is tracked.
 """
 
 from __future__ import annotations
@@ -46,7 +40,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdfa_streaming_parser_js_spark.operators.storage import release
+from rdfa_streaming_parser_js_spark.operators.storage import (
+    checkpoint, release, track)
 
 
 # --------------------------------------------------------------------
@@ -251,14 +246,17 @@ def _graph_terms(triples: DataFrame) -> DataFrame:
 
 
 def transitive_closure(pairs: DataFrame, max_rounds: int = 30,
-                       checkpoint_every: int = 3,
                        seeds: DataFrame | None = None) -> DataFrame:
     """Semi-naive transitive closure of an ``(a, b)`` edge set.
 
-    One shuffle join + one anti-join + ONE action per round; the
-    frontier (delta) shrinks to empty in depth(graph) rounds.  Raises
-    if ``max_rounds`` is hit with a non-empty frontier — silent
-    truncation would be an incorrect closure.
+    Each round joins the pairs found in the previous round against the
+    base edges, anti-joins them against the total so far, and
+    checkpoints the next generation: the total with the new pairs
+    marked.  That checkpoint is the round's one action, and the count
+    of new pairs observed on it ends the loop at zero, after
+    depth(graph) rounds.  Raises if ``max_rounds`` is hit with new
+    pairs still arriving — silent truncation would be an incorrect
+    closure.
 
     ``seeds`` (a one-column ``a`` DataFrame) restricts the closure to
     pairs whose start is a seed: the frontier begins at the seeds' own
@@ -266,90 +264,39 @@ def transitive_closure(pairs: DataFrame, max_rounds: int = 30,
     endpoint this is the difference between BFS-from-one-node and
     materializing the full quadratic closure — mandatory at
     10^13-triple scale.
-
-    Storage discipline: every intermediate generation is released as
-    soon as a newer eager checkpoint supersedes it (superseded totals
-    on every ``checkpoint_every``-th round, every frontier once folded
-    in), and a ``finally`` sweep releases the rest — including on the
-    non-convergence RuntimeError path — so a long-lived session can
-    evaluate arbitrarily many property paths without accumulating
-    executor storage.  The returned frame is eagerly checkpointed, so
-    it is self-contained (no lineage into released intermediates).
     """
-    held: list[DataFrame] = []  # every frame this call persisted
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # Eager checkpoint under storage.constraints_disabled (see its
-        # docstring for the UnionBase.rewriteConstraints exprId bug the
-        # toggle works around; the lock serializes concurrent loops so
-        # the session conf is always restored correctly).
-        from rdfa_streaming_parser_js_spark.operators.storage import (
-            constraints_disabled)
-        with constraints_disabled(df.sparkSession):
-            out = df.localCheckpoint(eager=True)
-        held.append(out)
-        return out
-
-    result: DataFrame | None = None
-    try:
-        base = _ckpt(pairs.select("a", "b").distinct())
-        if seeds is not None:
-            first = _ckpt(base.join(seeds.select("a").distinct(), "a"))
-            total = first
-            delta = first
-        else:
-            total = base
-            delta = base
-        # persisted frames the current lazy `total` union still
-        # references (base is tracked separately: the grow-join needs
-        # it every round regardless)
-        chain = [total]
-        for rnd in range(max_rounds):
-            grown = (delta.alias("d")
-                     .join(base.alias("e"), F.col("d.b") == F.col("e.a"))
-                     .select(F.col("d.a").alias("a"),
-                             F.col("e.b").alias("b"))
-                     .distinct())
-            # eager checkpoint = the round's one materializing action;
-            # every generation is self-contained, so releasing a dead
-            # one can never invalidate a live frame's lineage
-            new_delta = _ckpt(grown.join(total, on=["a", "b"],
-                                         how="left_anti"))
-            # the previous frontier is superseded; it stays persisted
-            # only while the lazy total still unions over it
-            if delta is not base and not any(delta is f for f in chain):
-                release(delta)
-            delta = new_delta
-            if not delta.take(1):  # frontier empty: fixpoint
-                result = _ckpt(total)  # self-contained result
-                return result
-            # delta is anti-joined against total, so the union stays
-            # distinct by construction — no extra shuffle needed here.
-            total = total.union(delta)
-            chain.append(delta)
-            if rnd % checkpoint_every == checkpoint_every - 1:
-                total = _ckpt(total)
-                # the previous total generation and the frontiers
-                # folded into it are now unreferenced — release them
-                # (≤2 total-generations live; the live frontier is
-                # still the grow-join's input, so it survives)
-                for f in chain:
-                    if f is not base and f is not delta:
-                        release(f)
-                chain = [total]
-        raise RuntimeError(
-            f"transitive closure did not converge in {max_rounds} "
-            "rounds; raise max_rounds for deeper graphs")
-    finally:
-        for f in held:
-            if f is not result:
-                release(f)
-        if result is not None:
-            # the returned checkpoint stays pinned for the caller; a
-            # long-lived session reclaims it via release_tracked()
-            from rdfa_streaming_parser_js_spark.operators.storage import (
-                track)
-            track(result)
+    base = checkpoint(pairs.select("a", "b").distinct()
+                      .withColumn("new", F.lit(True)))
+    gen = base if seeds is None else checkpoint(
+        base.join(seeds.select("a").distinct(), "a"))
+    for _ in range(max_rounds):
+        grown = (gen.filter(F.col("new")).alias("d")
+                 .join(base.alias("e"), F.col("d.b") == F.col("e.a"))
+                 .select(F.col("d.a").alias("a"), F.col("e.b").alias("b"))
+                 .distinct())
+        # anti-joined against the total, so the union stays distinct
+        fresh = grown.join(gen, ["a", "b"], "left_anti")
+        nxt, seen = checkpoint(
+            gen.withColumn("new", F.lit(False))
+            .unionByName(fresh.withColumn("new", F.lit(True))),
+            F.count_if("new").alias("n"))
+        if seen["n"] == 0:
+            # gen already holds every pair.  Returning it, not nxt, keeps
+            # the optimizer's size estimate of the last growing round:
+            # nxt's carries one more join product, enough to make a
+            # later query plan a runtime bloom filter (two more jobs).
+            release(nxt)
+            if gen is not base:
+                release(base)
+            return track(gen.drop("new"))
+        if gen is not base:
+            release(gen)
+        gen = nxt
+    release(gen)
+    release(base)
+    raise RuntimeError(
+        f"transitive closure did not converge in {max_rounds} "
+        "rounds; raise max_rounds for deeper graphs")
 
 
 def path_pairs(triples: DataFrame, path: PathExpr,

@@ -1,12 +1,20 @@
-"""Storage discipline helpers for iterative DataFrame algorithms.
+"""Storage discipline for iterative DataFrame algorithms.
 
-Every loop in this engine (transitive closure, connected components,
-PageRank, DESCRIBE's bnode frontier, RDFS strata) materializes per-round
-generations with ``cache()`` or ``localCheckpoint(eager=True)``.  A
-long-lived session evaluating many queries must RELEASE superseded
-generations or executor storage grows until LRU eviction thrashes —
-``localCheckpoint`` cuts lineage, it does not free storage
-(VERDICT r03, "What's wrong" #3).
+Every local checkpoint in the engine is taken by :func:`checkpoint`:
+the fixpoint loops (transitive closure, both connected-components
+loops, PageRank, WL refinement) and the one-off cuts of operators whose
+plans read an input many times.  The loops follow one rule:
+
+- every generation is a checkpoint (PageRank cuts every other round),
+  and a convergence signal is observed on that same job, not computed
+  by a second action;
+- the superseded generation is released (:func:`release`) as soon as
+  its successor exists: a local checkpoint cuts lineage but does not
+  free storage, so a long-lived session would otherwise grow executor
+  storage until LRU eviction thrashes;
+- the frame returned to the caller is registered with :func:`track`,
+  and the session frees it with :func:`release_tracked` once results
+  are materialized.
 """
 
 from __future__ import annotations
@@ -14,7 +22,7 @@ from __future__ import annotations
 import contextlib
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 # serializes the session-global constraint-propagation toggle below:
 # without it two concurrent checkpointing loops interleave their
@@ -27,7 +35,7 @@ _CONSTRAINT_PREV: str | None = None
 @contextlib.contextmanager
 def constraints_disabled(spark):
     """Disable ``spark.sql.constraintPropagation.enabled`` for the
-    duration of a ``localCheckpoint`` capture (re-entrant, process-wide
+    duration of a checkpoint capture (re-entrant, process-wide
     serialized).  Spark's ``Dataset.checkpoint`` otherwise snapshots the
     origin plan's constraints into the LogicalRDD; for plans with
     filters those can reference pre-checkpoint exprIds, and optimizing
@@ -54,11 +62,26 @@ def constraints_disabled(spark):
                     spark.conf.set(key, _CONSTRAINT_PREV)
 
 
+def checkpoint(df: DataFrame, *signals: Column):
+    """Eager local checkpoint of ``df`` under :func:`constraints_disabled`.
+
+    With ``signals`` (aggregate columns, each aliased) it returns
+    ``(checkpoint, values)``: ``values`` maps each alias to its
+    aggregate over ``df``, observed on the checkpoint's own job
+    (``DataFrame.observe``) rather than computed by a second action."""
+    obs = Observation() if signals else None
+    if obs is not None:
+        df = df.observe(obs, *signals)
+    with constraints_disabled(df.sparkSession):
+        out = df.localCheckpoint(eager=True)
+    return out if obs is None else (out, obs.get)
+
+
 # Frames an operator must leave pinned for its caller (a returned
-# self-contained checkpoint, a loop invariant the lazy result still
-# references).  A long-lived session (bench loop, notebook) calls
-# release_tracked() between queries once results are materialized —
-# the in-function release is impossible, the blocks are still needed.
+# checkpoint, a loop invariant the lazy result still references).  A
+# long-lived session (bench loop, notebook) calls release_tracked()
+# between queries once results are materialized — the in-function
+# release is impossible, the blocks are still needed.
 _TRACKED: list[DataFrame] = []
 
 
@@ -70,7 +93,7 @@ def track(df: DataFrame) -> DataFrame:
 
 def release_tracked() -> int:
     """Release every tracked frame (storage-level release, works for
-    localCheckpoints too); returns how many were released.  Only call
+    local checkpoints too); returns how many were released.  Only call
     once prior results are materialized — released checkpoints cannot
     be recomputed."""
     n = len(_TRACKED)
@@ -81,17 +104,18 @@ def release_tracked() -> int:
 
 
 def release(df: DataFrame) -> None:
-    """Free the storage behind a ``.cache()``d or ``.localCheckpoint``ed
-    frame.  ``Dataset.unpersist`` only clears CacheManager entries, so
-    for checkpointed frames (plan = ``LogicalRDD``) the backing RDD is
-    unpersisted directly — otherwise every localCheckpoint in an
-    iterative loop leaks executor storage for the session's lifetime.
-    Only call on frames whose data is no longer referenced: a local
-    checkpoint truncates lineage, so released blocks cannot be
-    recomputed."""
+    """Free the storage behind a persisted or checkpointed frame, or a
+    column projection of a checkpoint; a no-op on any other lazy frame.
+    ``Dataset.unpersist`` only clears CacheManager entries, so for
+    checkpointed frames (plan = ``LogicalRDD``) the backing RDD is
+    unpersisted directly.  Only call on frames whose data is no longer
+    referenced: a local checkpoint truncates lineage, so released blocks
+    cannot be recomputed."""
     try:
         df.unpersist()
         plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "Project":
+            plan = plan.child()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
     except Exception:  # pragma: no cover - py4j internals moved

@@ -28,7 +28,7 @@ from pyspark.sql.types import (BinaryType, LongType, StringType,
                                StructField, StructType, TimestampType)
 
 from ..operators.extract import extract_triples
-from ..operators.storage import release
+from ..operators.storage import checkpoint, release
 
 PAGES_SCHEMA = StructType([
     StructField("page_id", LongType()),
@@ -150,7 +150,7 @@ def run_kg_maintenance_stream(spark: SparkSession, pages_dir: str,
         new_triples = extract_triples(pages_latest)
         old = None
         try:
-            old = spark.read.parquet(graph_dir).localCheckpoint(eager=True)
+            old = checkpoint(spark.read.parquet(graph_dir))
         except AnalysisException:  # first batch: no table yet
             merged = new_triples
         else:

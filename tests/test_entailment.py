@@ -211,3 +211,28 @@ def test_owl_requires_full_schema(spark):
     thin = _g(spark, [_t("a", f"{EX}p", "b")]).select("subj", "pred")
     with pytest.raises(ValueError, match="term schema"):
         owl_entail(thin, _owl_ont(spark))
+
+
+def test_rdfs_entail_leaves_nothing_persisted(spark):
+    """Every checkpoint ``rdfs_entail`` takes (the ontology closures) is
+    released by the loop or tracked: after ``release_tracked()`` no RDD
+    persisted by the call remains."""
+    from rdfa_streaming_parser_js_spark.operators.storage import (
+        release_tracked)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return frozenset(int(k) for k in
+                         jsc.getPersistentRDDs().keySet().toArray())
+
+    onto = spark.createDataFrame([
+        _row(f"{EX}Article", RDFS_SUBCLASS, f"{EX}CreativeWork"),
+        _row(f"{EX}CreativeWork", RDFS_SUBCLASS, f"{EX}Thing"),
+    ], SCHEMA)
+    inst = spark.createDataFrame(
+        [_row(f"{EX}d", RDF_TYPE, f"{EX}Article")], SCHEMA)
+    before = persisted()
+    got = _spo(rdfs_entail(inst, onto))
+    release_tracked()
+    assert (f"{EX}d", RDF_TYPE, f"{EX}Thing") in got
+    assert persisted() - before == frozenset()

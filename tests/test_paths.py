@@ -239,33 +239,36 @@ def _persisted_ids(spark):
 
 
 def test_transitive_closure_releases_intermediates(spark):
-    """Storage discipline: a deep closure (many checkpoint cycles) holds
-    only a bounded number of persisted generations while running, and
-    leaves exactly ONE persisted frame behind — the self-contained
-    result (VERDICT r03 'What's wrong #3')."""
+    """Storage discipline: a deep closure (many rounds) holds only a
+    bounded number of persisted generations while running, and leaves
+    exactly ONE persisted frame behind — the returned closure
+    (VERDICT r03 'What's wrong #3')."""
     import rdfa_streaming_parser_js_spark.operators.paths as paths_mod
     spark.catalog.clearCache()
     before = _persisted_ids(spark)
-    peak = {"n": 0}
+    peak = {"n": 0, "releases": 0}
     orig_release = paths_mod.release
 
     def spying_release(df):
         peak["n"] = max(peak["n"], len(_persisted_ids(spark) - before))
+        peak["releases"] += 1
         orig_release(df)
 
     paths_mod.release = spying_release
     try:
         edges = spark.createDataFrame(
             [(f"n{i}", f"n{i+1}") for i in range(10)], ["a", "b"])
-        total = transitive_closure(edges, checkpoint_every=3)
+        total = transitive_closure(edges)
         n_pairs = total.count()
     finally:
         paths_mod.release = orig_release
     assert n_pairs == 10 * 11 // 2
-    # while looping: base + last ckpt total + ≤3 frontier deltas +
-    # the in-flight new total — never proportional to round count
-    assert peak["n"] <= 8
-    # after return: only the checkpointed result frame remains
+    # the bound below is only checked at release points
+    assert peak["releases"] >= 1
+    # while looping: base + the superseded generation + its successor —
+    # never proportional to round count
+    assert peak["n"] <= 3
+    # after return: only the returned closure remains
     assert len(_persisted_ids(spark) - before) == 1
     paths_mod.release(total)
     assert len(_persisted_ids(spark) - before) == 0

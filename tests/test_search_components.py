@@ -125,15 +125,17 @@ def _persisted_ids(spark):
 def _run_with_release_spy(spark, fn):
     """Run fn() while spying on components.release; return (result,
     peak count of NEWLY persisted RDDs observed at release points,
-    the set of RDD ids persisted by fn that remain afterwards)."""
+    the set of RDD ids persisted by fn that remain afterwards).  The
+    spy must see at least one release, or the peak checked nothing."""
     import rdfa_streaming_parser_js_spark.operators.components as cc_mod
     spark.catalog.clearCache()
     before = _persisted_ids(spark)
-    peak = {"n": 0}
+    peak = {"n": 0, "releases": 0}
     orig_release = cc_mod.release
 
     def spying_release(df):
         peak["n"] = max(peak["n"], len(_persisted_ids(spark) - before))
+        peak["releases"] += 1
         orig_release(df)
 
     cc_mod.release = spying_release
@@ -141,25 +143,24 @@ def _run_with_release_spy(spark, fn):
         result = fn()
     finally:
         cc_mod.release = orig_release
+    assert peak["releases"] >= 1
     return result, peak["n"], _persisted_ids(spark) - before
 
 
 def test_label_prop_releases_intermediates(spark):
     """Storage discipline (VERDICT r03 'What's wrong #3'): a multi-round
     label-propagation run holds a bounded number of persisted
-    generations — never proportional to round count — and leaves at
-    most the result + one checkpointed ancestor behind."""
+    generations — never proportional to round count — and leaves only
+    the result behind."""
     pairs = _cc_pairs(spark, [(i, i + 1) for i in range(12)])
     labels, peak, left_behind = _run_with_release_spy(
         spark, lambda: connected_components(pairs))
     assert _labels(labels) == {i: 0 for i in range(13)}
-    # while looping: sym + initial labels + ≤3 in-window generations +
-    # the in-flight new generation (12 rounds would leak ~14 without
-    # the release discipline)
-    assert peak <= 7
-    # after return: the result generation, plus at most one checkpointed
-    # ancestor its lineage may still need on block eviction
-    assert len(left_behind) <= 2
+    # while looping: sym + the superseded generation + its successor
+    # (12 rounds would leak ~14 without the release discipline)
+    assert peak <= 3
+    # after return: the result generation only
+    assert len(left_behind) == 1
 
 
 def test_star_releases_intermediates(spark):
@@ -168,9 +169,8 @@ def test_star_releases_intermediates(spark):
     labels, peak, left_behind = _run_with_release_spy(
         spark, lambda: connected_components_star(pairs))
     assert _labels(labels) == {i: 0 for i in range(41)}
-    # raw input checkpoint + nodes + ≤3 in-window edge generations +
-    # the in-flight new generation
-    assert peak <= 7
-    # after return: raw + final edge set (+ ≤1 checkpointed ancestor);
-    # nodes is unpersisted on exit
-    assert len(left_behind) <= 3
+    # raw input checkpoint + the superseded edge generation + its
+    # successor
+    assert peak <= 3
+    # after return: raw + final edge set, both read by the labels
+    assert len(left_behind) == 2

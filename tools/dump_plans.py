@@ -49,7 +49,7 @@ NOTES = {
     "kg_pagerank": (
         "Iterative: per round exactly one shuffle (groupBy dst with "
         "map-side partial sums) plus the ranks⋈edges join; lineage cut "
-        "by localCheckpoint every third round. Integer arithmetic keeps "
+        "by a checkpoint every other round. Integer arithmetic keeps "
         "results bit-identical at any partitioning."),
     "kg_shacl_report": (
         "Shapes are DATA, not plan: one broadcast shapes table joined "
@@ -68,7 +68,7 @@ NOTES = {
         "byte-stable."),
     "kg_rdfs_entail": (
         "Instance table is NEVER shuffled: ontology closures are "
-        "computed once (semi-naive, eager-cut) and every rule joins "
+        "computed once (semi-naive, checkpointed) and every rule joins "
         "them **BroadcastHashJoin**; stratified rule order reaches the "
         "ρdf fixpoint in one pass."),
     "kg_describe_entities": (
