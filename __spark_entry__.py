@@ -147,11 +147,11 @@ def q_rdfa_graph_canonical(spark, sf_dir):
 def q_graph_source_lang_matrix(spark, sf_dir):
     """Graph self-join on subject: pages per (source, language).
 
-    Here both sides come from a fresh extraction, so the subject join
-    shuffles; in production the same query reads the MATERIALIZED graph
-    (operators/canonicalize.materialize_graph / sources/catalog, bucketed
-    by subject hash), making this join co-located — see
-    tests/test_catalog.py for the bucket-layout guarantees.
+    Both sides come from a fresh extraction, so the subject join
+    shuffles.  It shuffles over the MATERIALIZED graph too
+    (operators/canonicalize.materialize_graph): its subject buckets are
+    parquet directories with no bucketing spec, which prune point reads
+    but do not co-locate joins.
     """
     t = _triples(spark, sf_dir)
     part_of = (t.filter(F.col("pred").endswith("isPartOf"))
@@ -1875,10 +1875,8 @@ def q_graph_table_roundtrip(spark, sf_dir):
         canonicalize_triples)
     from rdfa_streaming_parser_js_spark.sources.catalog import (
         GraphCatalog)
-    cat = GraphCatalog(
-        spark,
-        os.path.join(tempfile.gettempdir(), "rdfa_graft_graph_roundtrip"),
-        n_buckets=8)
+    cat = GraphCatalog(spark, tempfile.mkdtemp(prefix="graph_roundtrip_"),
+                       n_buckets=8)
     cols = ["subj", "pred", "obj_value", "obj_kind", "obj_datatype",
             "obj_lang", "first_url", "n_pages"]
     cat.write(canonicalize_triples(_triples(spark, sf_dir)).select(cols),

@@ -2,7 +2,7 @@
 
 from .extractor import RdfaExtractor
 from .html_driver import HtmlParseListener, parse_rdfa
-from .terms import BlankNode, Literal, NamedNode, term_kind
+from .terms import BlankNode, Literal, NamedNode
 
 __all__ = ["RdfaExtractor", "parse_rdfa", "HtmlParseListener",
-           "NamedNode", "BlankNode", "Literal", "term_kind"]
+           "NamedNode", "BlankNode", "Literal"]

@@ -52,10 +52,6 @@ _NAME_TRIGGERED_TAGS = frozenset(("base", "time", "head", "body"))
 FAST_TAG_PATH = True
 
 
-class RdfaError(Exception):
-    """Raised for states where the reference would emit a stream error."""
-
-
 _CLONE_SLOTS = ActiveTag.__slots__
 
 

@@ -82,11 +82,3 @@ class Literal:
             return f'"{self.value}"@{self.language}'
         return f'"{self.value}"'
 
-
-def term_kind(term) -> str:
-    """Flattened columnar kind for the triples DataFrame."""
-    if isinstance(term, NamedNode):
-        return "iri"
-    if isinstance(term, BlankNode):
-        return "bnode"
-    return "literal"

@@ -5,41 +5,41 @@ the consumer (/root/reference/lib/RdfaParser.ts:810).  At 10^12 pages
 these become first-class distributed stages:
 
 - ``canonicalize_triples``: language tags are already lowercased by the
-  kernel (/root/reference/lib/Util.ts:212); here we add the salted-hash
-  identity columns used for partitioning/bucketing and distinct-ify.
+  kernel (/root/reference/lib/Util.ts:212); here we distinct-ify, keeping
+  each triple's first url and page count.
 - ``hub_subjects``: top-k heavy-hitter subjects — the skew list.  AQE
   splits skewed *joins* at runtime but not skewed groupBys, so heavy
   keys get an explicit salt (SURVEY.md §4).
-- ``materialize_graph``: deduplicated triples written bucketed by
-  subject hash so downstream subject-joins are co-located (no shuffle).
+- ``materialize_graph``: deduplicated triples in subject-hash buckets
+  (an entity read scans one bucket; a subject join still shuffles).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.catalog import write_buckets
 
 TRIPLE_KEY = ["subj", "subj_kind", "pred", "obj_value", "obj_kind",
               "obj_datatype", "obj_lang"]
+GRAPH_BUCKETS = 64  # subject buckets of the materialized graph
 
 
-def canonicalize_triples(triples: DataFrame,
-                         with_provenance: bool = True) -> DataFrame:
-    """Distinct (s,p,o) with stable 64-bit identity hashes.
-
-    ``subj_hash`` is the partitioning key for all graph tables; xxhash64
-    is Spark's codegen'd non-cryptographic hash (cheap at 100 TB scale).
-    With provenance we keep the first url per triple (min — deterministic).
-    """
-    agg = (triples.groupBy(*TRIPLE_KEY)
-           .agg(F.min("url").alias("first_url"),
-                F.count(F.lit(1)).alias("n_pages"))
-           if with_provenance else triples.select(*TRIPLE_KEY).distinct())
-    return agg.withColumn("subj_hash", F.xxhash64("subj"))
+def canonicalize_triples(triples: DataFrame) -> DataFrame:
+    """Distinct triples with provenance: the first url per triple (min —
+    deterministic) and the number of pages (rows) that emit it."""
+    return (triples.groupBy(*TRIPLE_KEY)
+            .agg(F.min("url").alias("first_url"),
+                 F.count(F.lit(1)).alias("n_pages")))
 
 
 def hub_subjects(triples: DataFrame, k: int = 100) -> DataFrame:
-    """Top-k subjects by triple count — the explicit skew-salt list."""
+    """Top-k subjects by triple count — the explicit skew-salt list.
+
+    Counts provenance rows (a triple on k pages counts k times), not
+    distinct triples, on purpose: ``salted_object_counts`` salts a join
+    over the same rows, so the skew it must spread is the row count."""
     return (triples.groupBy("subj")
             .agg(F.count(F.lit(1)).alias("n_triples"))
             .orderBy(F.desc("n_triples"), F.asc("subj"))
@@ -68,15 +68,10 @@ def salted_object_counts(triples: DataFrame, hot: DataFrame,
             .agg(F.sum("c").alias("n_triples")))
 
 
-def materialize_graph(triples: DataFrame, out_dir: str,
-                      buckets: int = 64) -> None:
-    """Write the deduplicated graph partitioned by subject-hash bucket.
-
-    Parquet in the sandbox; on a cluster this is an Iceberg
-    ``writeTo(...).partitionedBy(bucket(N, 'subj'))`` — same layout:
-    subject-co-located files so entity-centric reads prune to one bucket.
-    """
-    canon = canonicalize_triples(triples)
-    (canon.withColumn("bucket", F.pmod(F.col("subj_hash"), F.lit(buckets)))
-     .repartition(buckets, "bucket")
-     .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
+def materialize_graph(triples: DataFrame, out_dir: str) -> None:
+    """The deduplicated graph in ``GRAPH_BUCKETS`` subject buckets
+    (``sources/catalog.write_buckets``), with ONE shuffle: the bucket
+    shuffle by ``subj``, inside which the dedup groups (its key holds
+    ``subj``).  Rows cross it undeduplicated (no map-side partial)."""
+    canon = canonicalize_triples(triples.repartition(GRAPH_BUCKETS, "subj"))
+    write_buckets(canon, out_dir, "subj", GRAPH_BUCKETS)

@@ -13,8 +13,8 @@ Plan shape at 10^12 triples:
 - instance set: the rdf:type slice (predicate filter pushed to the
   scan), distinct (subj, class);
 - property set: distinct (subj, pred) over the non-type slice;
-- coverage: equi-join on ``subj`` (the graph's natural key — bucketed
-  graph tables make it co-located) then count by (class, pred);
+- coverage: equi-join on ``subj`` (the graph's natural key) then count
+  by (class, pred);
 - class sizes are vocabulary-sized — joined broadcast at the end.
 
 Coverage is emitted as exact integer per-mille (n*1000 DIV total), so

@@ -18,9 +18,8 @@ Scale shape (10^13 triples):
 - The mapping (node → canonical, identity rows dropped) is joined to
   the graph twice: once on ``subj``, once on ``obj_value``.  Both are
   plain equi-joins AQE will broadcast when the alias population is
-  small; on a subject-bucketed graph table the subj-side join is
-  co-located.  No shuffle of the full graph is ever keyed on anything
-  but its own join columns.
+  small.  No shuffle of the full graph is ever keyed on anything but
+  its own join columns.
 - Output is a bag (one row per input triple, rewritten); callers that
   need graph-set semantics dedup downstream via
   ``canonicalize_triples`` — the same contract as extraction itself.

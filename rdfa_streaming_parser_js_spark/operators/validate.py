@@ -230,8 +230,8 @@ def induce_shapes(triples: DataFrame,
     (``conforms(triples, induced) == True`` — pytest-asserted).
 
     Scale shape: the type slice joins the property slice on the
-    subject key (instance-sized equi-join, co-located on a
-    subject-bucketed graph table), then two keyed aggregations —
+    subject key (instance-sized equi-join), then two keyed
+    aggregations —
     per-(class, path, focus) counts, then per-(class, path) stats —
     both map-side combinable.  Output is ontology-sized (classes ×
     properties), never instance-sized.

@@ -54,7 +54,9 @@ MANIFEST_SCHEMA = StructType([
 
 def url_bucket(n_buckets: int, url_col: str = "url") -> F.Column:
     """Deterministic corpus partition id — stable across restarts,
-    parallelism levels, and input ordering."""
+    parallelism levels, and input ordering.  It stays ``xxhash64``, not
+    the graph tables' ``sources/catalog.bucket_id``: re-bucketing pages
+    would invalidate the manifests of a resumed run."""
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("long")
 
 

@@ -8,19 +8,38 @@ adapter keeps ONE call site per table operation:
 
 - with Iceberg configured (`spark.sql.catalog.<name>` set and the
   runtime jar on the classpath): `writeTo(...).partitionedBy(bucket(N,
-  key))` / `spark.read.table(...)` — hidden-partitioning bucket joins;
-- otherwise: an explicit `bucket = pmod(xxhash64(key), N)` column with
-  `partitionBy("bucket")` parquet — the SAME physical layout (key-hash
-  co-location, partition pruning on bucket), minus snapshot metadata.
+  key))` / `spark.read.table(...)` — hidden-partitioning buckets;
+- otherwise: :func:`write_buckets`, the one parquet writer of graph
+  tables (``materialize_graph`` uses it too), bucket ``pmod(hash(key),
+  N)`` — Spark's murmur3 partition id, so after ``repartition(N, key)``
+  each task writes exactly one bucket's file.
 
-Either way, readers prune to one bucket for entity-centric access and
-subject-keyed joins are co-located.
+Readers prune an entity-centric read to one bucket.  Iceberg's bucket
+transform hashes differently, and parquet directories carry no
+bucketing spec: a join on the key still shuffles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def bucket_id(key: Column | str, n_buckets: int) -> Column:
+    """The bucket of ``key``: ``pmod(hash(key), n_buckets)`` (int)."""
+    return F.pmod(F.hash(key), F.lit(n_buckets))
+
+
+def write_buckets(df: DataFrame, path: str, key: str, n_buckets: int,
+                  mode: str = "overwrite") -> None:
+    """Parquet under ``path/bucket=K/``, one file per bucket; overwrite
+    replaces the whole table.  Input already hash-partitioned by ``key``
+    into ``n_buckets`` is written without a shuffle."""
+    (df.repartition(n_buckets, key)
+     .withColumn("bucket", bucket_id(key, n_buckets))
+     .write.mode(mode)
+     .option("partitionOverwriteMode", "static")
+     .partitionBy("bucket").parquet(path))
 
 
 def iceberg_available(spark: SparkSession, catalog: str) -> bool:
@@ -64,14 +83,8 @@ class GraphCatalog:
             else:
                 writer.append()
             return
-        out = (df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(bucket_key), F.lit(self.n_buckets))
-            .cast("int")))
-        (out.repartition(self.n_buckets, "bucket")
-         .write.mode(mode)
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(self._path(table)))
+        write_buckets(df, self._path(table), bucket_key, self.n_buckets,
+                      mode)
 
     def read(self, table: str) -> DataFrame:
         if self.iceberg:
@@ -85,6 +98,5 @@ class GraphCatalog:
         if self.iceberg:
             # Iceberg prunes via hidden partitioning on the key predicate
             return df
-        bucket = F.pmod(F.xxhash64(F.lit(key_value)),
-                        F.lit(self.n_buckets)).cast("int")
-        return df.filter(F.col("bucket") == bucket)
+        return df.filter(
+            F.col("bucket") == bucket_id(F.lit(key_value), self.n_buckets))

@@ -100,8 +100,8 @@ NOTES = {
         "construction, so no alignment join is ever needed."),
     "kg_shape_induction": (
         "Type slice ⋈ property slice on the subject key (instance-"
-        "sized equi-join, co-located on a subject-bucketed graph "
-        "table), then two keyed HashAggregates with map-side partials "
+        "sized equi-join), then two keyed HashAggregates with map-side "
+        "partials "
         "— per-(class,path,focus) counts, then per-(class,path) "
         "stats.  Output is ontology-sized; class sizes ride a "
         "broadcast join."),
