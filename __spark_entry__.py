@@ -15,7 +15,10 @@ bit-for-bit, so the oracle rebuilds the full signature pipelines in SQL.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import time
 from collections.abc import Callable
 
@@ -63,6 +66,15 @@ JACCARD_THRESHOLD = 0.5
 from fractions import Fraction as _Fraction  # noqa: E402
 _JT_FRAC = _Fraction(JACCARD_THRESHOLD).limit_denominator(1_000_000)
 COSINE_NEARDUP_THRESHOLD = 0.3
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory, removed when the process exits: the
+    frames a query returns read it lazily, so the query cannot remove
+    it itself."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 # --------------------------------------------------------------------------
@@ -671,11 +683,9 @@ def q_streaming_extract(spark, sf_dir):
     directory with Trigger.AvailableNow in bounded micro-batches through
     the SAME mapInArrow kernel, then read the committed sink — output
     must equal the batch extraction (and therefore the batch oracle)."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.streaming.pipeline import (
         run_extraction_stream)
-    workdir = tempfile.mkdtemp(prefix="stream_ex_")
+    workdir = _scratch_dir("stream_ex_")
     pages_dir = _staged_pages_dir(spark, sf_dir, workdir)
     q = run_extraction_stream(spark, pages_dir, f"{workdir}/triples",
                               f"{workdir}/ckpt", max_files_per_trigger=2)
@@ -694,11 +704,9 @@ def q_kg_maintenance_stream(spark, sf_dir):
     result must equal the batch extraction: the streaming, merge, and
     atomic-sink legs are all content-invisible (replace semantics
     themselves are gated separately by kg_recrawl_merge)."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.streaming.pipeline import (
         run_kg_maintenance_stream)
-    workdir = tempfile.mkdtemp(prefix="kg_maint_")
+    workdir = _scratch_dir("kg_maint_")
     pages_dir = _staged_pages_dir(spark, sf_dir, workdir)
     q = run_kg_maintenance_stream(spark, pages_dir, f"{workdir}/graph",
                                   f"{workdir}/ckpt",
@@ -713,11 +721,9 @@ def q_streaming_windowed_counts(spark, sf_dir):
     """Watermarked tumbling-window triple counts over the stream,
     append mode: only windows finalized by the event-time watermark are
     emitted — the oracle reproduces exactly that subset."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.streaming.pipeline import (
         extract_triples_stream, read_page_stream, windowed_pred_counts)
-    workdir = tempfile.mkdtemp(prefix="stream_win_")
+    workdir = _scratch_dir("stream_win_")
     pages_dir = _staged_pages_dir(spark, sf_dir, workdir,
                                   time_ordered=True)
     triples = extract_triples_stream(
@@ -740,13 +746,11 @@ def q_streaming_stateful_dedup(spark, sf_dir):
     later micro-batches; per-key state suppresses them, so the output
     is exactly the original sightings — whatever the batching, because
     within a mixed batch the operator keeps the earliest event time."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.streaming.pipeline import (
         read_page_stream)
     from rdfa_streaming_parser_js_spark.streaming.stateful import (
         stream_dedup_first_seen)
-    workdir = tempfile.mkdtemp(prefix="stream_dedup_")
+    workdir = _scratch_dir("stream_dedup_")
     pages_dir = f"{workdir}/pages"
     pages = pages_from_documents(spark, sf_dir)
     (pages.repartitionByRange(3, "page_id")
@@ -1036,11 +1040,9 @@ def q_warc_ingest_lineage(spark, sf_dir):
     first / manifest last) → the manifest rows themselves.  Shard
     membership and triple counts are fully deterministic, so the oracle
     reconstructs the manifest without parsing WARC."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.sources.warc import (
         WarcIngestion, write_warc_shards)
-    tmp = tempfile.mkdtemp(prefix="warc_lin_")
+    tmp = _scratch_dir("warc_lin_")
     write_warc_shards(pages_from_documents(spark, sf_dir), f"{tmp}/warc",
                       shard_size=WARC_LINEAGE_SHARD_SIZE, compress=True)
     ing = WarcIngestion(f"{tmp}/warc", f"{tmp}/out")
@@ -1079,11 +1081,9 @@ def q_warc_roundtrip(spark, sf_dir):
     (gzipped, warcinfo-headed) → distributed binaryFile + mapInArrow
     read-back.  Output hashes prove byte-exact record framing; the
     oracle reconstructs the expected pages in SQL without parsing WARC."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.sources.warc import (
         read_warc_pages, write_warc_shards)
-    tmp = tempfile.mkdtemp(prefix="warc_rt_")
+    tmp = _scratch_dir("warc_rt_")
     write_warc_shards(pages_from_documents(spark, sf_dir), tmp,
                       shard_size=200, compress=True)
     pages = read_warc_pages(spark, tmp)
@@ -1101,13 +1101,11 @@ def q_warc_to_graph(spark, sf_dir):
     the same oracle as ``rdfa_graph_canonical``: the WARC leg must be
     triple-for-triple invisible (lang arrives via @lang in the markup,
     so extraction needs no sidecar language column)."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.operators.canonicalize import (
         canonicalize_triples)
     from rdfa_streaming_parser_js_spark.sources.warc import (
         read_warc_pages, write_warc_shards)
-    tmp = tempfile.mkdtemp(prefix="warc_kg_")
+    tmp = _scratch_dir("warc_kg_")
     write_warc_shards(pages_from_documents(spark, sf_dir), tmp,
                       shard_size=200, compress=True)
     pages = read_warc_pages(spark, tmp)
@@ -1869,13 +1867,11 @@ def q_graph_table_roundtrip(spark, sf_dir):
     storage, and returned minus the layout column — gated against the
     same canonical-graph oracle as the in-memory pipeline, so the
     storage leg must be content-invisible."""
-    import tempfile
-
     from rdfa_streaming_parser_js_spark.operators.canonicalize import (
         canonicalize_triples)
     from rdfa_streaming_parser_js_spark.sources.catalog import (
         GraphCatalog)
-    cat = GraphCatalog(spark, tempfile.mkdtemp(prefix="graph_roundtrip_"),
+    cat = GraphCatalog(spark, _scratch_dir("graph_roundtrip_"),
                        n_buckets=8)
     cols = ["subj", "pred", "obj_value", "obj_kind", "obj_datatype",
             "obj_lang", "first_url", "n_pages"]

@@ -39,11 +39,11 @@ Pattern = tuple[str, str, str]
 # a named-graph-scoped pattern: (subject, predicate, object, graph) —
 # the 4th term matches the quad table's ``graph`` column (SPARQL §13)
 QuadPattern = tuple[str, str, str, str]
-# an OPTIONAL/MINUS/EXISTS group: (patterns, group-local filter
-# expressions or None[, binds or None[, values or None]]) — the two
-# optional tail elements carry SPARQL BIND assignments and VALUES rows
-# scoped to the group (2-tuples stay valid for existing callers)
-OptionalGroup = tuple[list[Pattern], "list[str] | None"]
+# Every OPTIONAL/MINUS/EXISTS group is a :class:`GroupSpec`.  bgp_match
+# also takes its own entries in the flat tuple form ``(patterns,
+# filters or None[, binds or None[, values or None]])`` and converts
+# each to a GroupSpec at its boundary (:func:`_as_specs`); below it a
+# group has that one shape and one evaluator (:func:`_eval_spec`).
 
 _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
@@ -51,15 +51,16 @@ _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 @dataclass
 class GroupSpec:
     """A recursive group graph pattern — the full bgp_match surface as
-    a value, usable wherever an :data:`OptionalGroup` tuple is (an
-    ``optionals`` / ``minus`` / ``exists`` / ``not_exists`` entry), so
-    groups NEST: ``OPTIONAL { P1 OPTIONAL { P2 } }``, ``OPTIONAL {
-    {A} UNION {B} } }``, ``MINUS { P FILTER NOT EXISTS {...} }``.
+    a value and the one shape of a group below the SPARQL parser: a
+    query's WHERE and every ``optionals`` / ``minus`` / ``exists`` /
+    ``not_exists`` entry is one, so groups NEST: ``OPTIONAL { P1
+    OPTIONAL { P2 } }``, ``OPTIONAL { {A} UNION {B} } }``, ``MINUS { P
+    FILTER NOT EXISTS {...} }``.
 
     Evaluation is SPARQL bottom-up (§18.5): the spec compiles to its
     own solution relation (patterns → VALUES → BIND → OPTIONAL → MINUS
-    → FILTER → EXISTS), which the enclosing group then left/anti/semi
-    joins exactly like a flat tuple group.  ``union`` makes the spec a
+    → FILTER → EXISTS → relations → graph ranges), which the enclosing
+    group then left/anti/semi joins.  ``union`` makes the spec a
     UNION node instead — the branch specs stack by variable name — and
     is exclusive with every other field except nothing (the SPARQL
     grammar makes UNION the entire group body).
@@ -84,12 +85,18 @@ class GroupSpec:
     yields the relation DataFrame lazily at evaluation time,
     ``certain`` the frozenset of its columns that are bound in every
     row, ``cols`` its full column tuple (used by composition guards
-    without evaluating).  Relations join LAST (after the spec's own
-    OPTIONAL/MINUS/FILTER/EXISTS — the same order the top-level
-    compiler uses; callers must guard that the orders commute), via
+    without evaluating).  Relations join after the spec's own
+    OPTIONAL/MINUS/FILTER/EXISTS (callers must guard that the orders
+    commute), via
     §18.3-exact :func:`_compat_inner_join` when a shared variable is
     maybe-unbound on either side.  A spec may consist of relations
-    only (``OPTIONAL { { SELECT ... } }``)."""
+    only (``OPTIONAL { { SELECT ... } }``).
+
+    ``graph_ranges`` names GRAPH variables that scoped no pattern
+    (every contained pattern re-scoped by a nested GRAPH block): §13.3
+    still ranges each over every graph name, so they join LAST with
+    the distinct named-graph dimension (a broadcast join); they are
+    certain (never NULL)."""
     patterns: "list[Pattern]" = None
     filters: "list[str] | None" = None
     binds: "list[tuple] | None" = None
@@ -100,19 +107,20 @@ class GroupSpec:
     #: syntax — and before MINUS / FILTER / EXISTS
     late_binds: "list[tuple] | None" = None
     values: "list[dict] | None" = None
-    optionals: "list | None" = None      # entries: tuple | GroupSpec
-    minus: "list | None" = None
-    exists: "list | None" = None
-    not_exists: "list | None" = None
+    optionals: "list[GroupSpec] | None" = None
+    minus: "list[GroupSpec] | None" = None
+    exists: "list[GroupSpec] | None" = None
+    not_exists: "list[GroupSpec] | None" = None
     union: "list[GroupSpec] | None" = None
     relations: "list | None" = None      # entries: (thunk, certain, cols)
+    graph_ranges: "list[str] | None" = None
 
     def __post_init__(self):
         if self.union and (self.patterns or self.filters or self.binds
                            or self.late_binds
                            or self.values or self.optionals or self.minus
                            or self.exists or self.not_exists
-                           or self.relations):
+                           or self.relations or self.graph_ranges):
             raise ValueError(
                 "a UNION GroupSpec holds only its branches — SPARQL "
                 "makes UNION the entire group body")
@@ -140,26 +148,23 @@ def _pattern_vars(patterns) -> set:
     return out
 
 
-def _certain_vars(grp) -> set:
-    """Variables of an optionals/minus/exists entry that are bound in
-    EVERY solution of the group (valid equi-join keys).  Conservative:
-    BIND / VALUES variables are excluded (NULL on expression error /
-    UNDEF row), nested-OPTIONAL variables are excluded, and a UNION is
-    the intersection of its branches."""
-    if isinstance(grp, GroupSpec):
-        if grp.union:
-            sets = [_certain_vars(b) for b in grp.union]
-            out = sets[0]
-            for s in sets[1:]:
-                out &= s
-            return out
-        out = _pattern_vars(grp.patterns)
-        # relations are inner-joined into the spec's solution, so
-        # their own certain columns are certain here too
-        for _thunk, cert, _cols in grp.relations or ():
-            out |= set(cert)
+def _certain_vars(spec: GroupSpec) -> set:
+    """Variables bound in EVERY solution of a group (valid equi-join
+    keys).  Conservative: BIND / VALUES variables are excluded (NULL on
+    expression error / UNDEF row), nested-OPTIONAL variables are
+    excluded, and a UNION is the intersection of its branches."""
+    if spec.union:
+        sets = [_certain_vars(b) for b in spec.union]
+        out = sets[0]
+        for s in sets[1:]:
+            out &= s
         return out
-    return _pattern_vars(grp[0])
+    # relations are inner-joined into the spec's solution and graph
+    # ranges inner-joined with non-NULL names, so both are certain too
+    out = _pattern_vars(spec.patterns) | set(spec.graph_ranges or ())
+    for _thunk, cert, _cols in spec.relations or ():
+        out |= set(cert)
+    return out
 
 
 @dataclass(frozen=True)
@@ -589,40 +594,9 @@ def _apply_bind(solution: DataFrame, var: str, expr) -> DataFrame:
     return solution
 
 
-def _subgroup(triples: DataFrame, grp, meta_vars: frozenset,
-              constant_only_ok: bool = False) -> DataFrame:
-    """Compile one OPTIONAL/MINUS/EXISTS group — a ``(patterns,
-    filters[, binds[, values]])`` tuple, or a :class:`GroupSpec` for a
-    group that itself nests OPTIONAL/MINUS/EXISTS/UNION (evaluated
-    bottom-up by recursion).  With binds/values present the
-    group's filters apply AFTER them (same member order as the
-    enclosing group: patterns → VALUES → BIND → FILTER), so a group
-    filter may reference the bound columns; Catalyst still pushes
-    pattern-variable conjuncts through the projections to the scans."""
-    if isinstance(grp, GroupSpec):
-        return _eval_spec(triples, grp, meta_vars,
-                          constant_only_ok=constant_only_ok)
-    pats, flts = grp[0], grp[1]
-    binds = grp[2] if len(grp) > 2 else None
-    vals = grp[3] if len(grp) > 3 else None
-    group = _compile_group(triples, pats,
-                           None if (binds or vals) else flts,
-                           constant_only_ok=constant_only_ok,
-                           meta_vars=meta_vars)
-    if binds or vals:
-        if vals:
-            group = _join_values(group, vals)
-        for var, expr in binds or ():
-            group = _apply_bind(group, var, expr)
-        for e in flts or ():
-            group = group.filter(F.expr(e))
-    return group
-
-
 def _apply_exists(triples: DataFrame, solution: DataFrame,
-                  groups: "list[OptionalGroup]", negate: bool,
-                  meta_vars: "frozenset[str]" = frozenset(),
-                  certain: "set | frozenset | None" = None) -> DataFrame:
+                  groups: "list[GroupSpec]", negate: bool,
+                  meta_vars: "frozenset[str]", certain: set) -> DataFrame:
     """FILTER [NOT] EXISTS: each group keeps (or removes) the solutions
     some group solution is compatible with on the shared variables —
     a semi (anti) join, so multiplicities never change.  A group sharing
@@ -638,10 +612,10 @@ def _apply_exists(triples: DataFrame, solution: DataFrame,
     substitution semantics for an unbound outer variable: EXISTS
     substitutes only the variables the row actually binds (§18.6
     ``substitute()``), so an unbound one stays a FREE variable of the
-    group and constrains nothing for that row.  ``certain=None``
-    means all shared variables are certain (trusted caller)."""
+    group and constrains nothing for that row."""
+    kind = "NOT EXISTS" if negate else "EXISTS"
     for grp in groups:
-        group = _subgroup(
+        group = _eval_spec(
             triples, grp, constant_only_ok=True,
             meta_vars=frozenset(v for v in meta_vars
                                 if v not in solution.columns))
@@ -649,19 +623,10 @@ def _apply_exists(triples: DataFrame, solution: DataFrame,
                   if v != "_gate" and v in solution.columns
                   and not v.endswith(META_SUFFIXES)]
         if shared:
-            _check_join_keys(grp, shared,
-                             "NOT EXISTS" if negate else "EXISTS")
-            unc_s = ([] if certain is None
-                     else [v for v in shared if v not in certain])
+            _check_join_keys(grp, shared, kind)
+            unc_s = [v for v in shared if v not in certain]
             if unc_s:
-                if len(unc_s) > _MASK_CAP:
-                    raise ValueError(
-                        f"{'NOT EXISTS' if negate else 'EXISTS'} group "
-                        f"correlates on {len(unc_s)} maybe-unbound "
-                        f"enclosing variables {sorted(unc_s)} — the "
-                        f"bound-mask decomposition fans out 2^k joins "
-                        f"and is capped at k={_MASK_CAP}; bind some in "
-                        "required patterns or rename")
+                _check_fan_out(kind, unc_s, [])
                 solution = _subst_exists(solution, group, shared,
                                          unc_s, negate)
             else:
@@ -729,13 +694,13 @@ def _subst_exists(solution: DataFrame, group: DataFrame,
 def bgp_match(triples: DataFrame, patterns: list[Pattern],
               select: list[str] | None = None,
               filters: list[str] | None = None,
-              optionals: list[OptionalGroup] | None = None,
-              minus: "list[OptionalGroup] | None" = None,
+              optionals: "list | None" = None,
+              minus: "list | None" = None,
               values: "list[dict[str, str | None]] | None" = None,
               binds: "list[tuple[str, str]] | None" = None,
               late_binds: "list[tuple[str, str]] | None" = None,
-              exists: "list[OptionalGroup] | None" = None,
-              not_exists: "list[OptionalGroup] | None" = None,
+              exists: "list | None" = None,
+              not_exists: "list | None" = None,
               meta_vars: "frozenset[str] | set[str]" = frozenset()
               ) -> DataFrame:
     """Compile a basic graph pattern into a DataFrame join plan.
@@ -831,13 +796,15 @@ def bgp_match(triples: DataFrame, patterns: list[Pattern],
     BIND(COALESCE(?x, d) AS ?y)`` idiom).  Same entry forms as
     ``binds``.
 
-    ``optionals`` / ``minus`` / ``exists`` / ``not_exists`` group
-    tuples may append two optional elements — ``(patterns, filters,
-    binds, values)`` — for BIND / VALUES scoped INSIDE the group; the
-    group's filters then apply after them, mirroring the enclosing
-    group's member order.  An entry may also be a :class:`GroupSpec`
-    — a group that itself nests OPTIONAL / MINUS / EXISTS / UNION —
-    evaluated bottom-up by recursion.  Shared variables bound in every
+    ``optionals`` / ``minus`` / ``exists`` / ``not_exists`` entries
+    are :class:`GroupSpec` values — groups that may themselves nest
+    OPTIONAL / MINUS / EXISTS / UNION, evaluated bottom-up by
+    recursion — or flat tuples ``(patterns, filters[, binds[,
+    values]])``, with BIND / VALUES scoped INSIDE the group.  Each
+    tuple is converted to a GroupSpec here, at the boundary, so a flat
+    group and a nested one are evaluated the same way (the group's
+    filters apply after its BIND / VALUES, mirroring the enclosing
+    group's member order).  Shared variables bound in every
     group solution (:func:`_certain_vars`) equi-join directly; shared
     variables that may be UNBOUND — in the group, in the enclosing
     solution, or both — decompose by bound-mask pairs into exact
@@ -883,11 +850,26 @@ def bgp_match(triples: DataFrame, patterns: list[Pattern],
     if not patterns:
         raise ValueError("bgp_match requires at least one pattern")
     spec = GroupSpec(patterns=patterns, filters=filters, binds=binds,
-                     late_binds=late_binds,
-                     values=values, optionals=optionals, minus=minus,
-                     exists=exists, not_exists=not_exists)
+                     late_binds=late_binds, values=values,
+                     optionals=_as_specs(optionals),
+                     minus=_as_specs(minus), exists=_as_specs(exists),
+                     not_exists=_as_specs(not_exists))
     solution = _eval_spec(triples, spec, frozenset(meta_vars))
     return solution.select(*select) if select else solution
+
+
+def _as_specs(entries) -> "list[GroupSpec]":
+    """bgp_match's boundary: each flat ``(patterns, filters[, binds[,
+    values]])`` entry becomes a :class:`GroupSpec`; a GroupSpec passes
+    through."""
+    out = []
+    for e in entries or ():
+        if not isinstance(e, GroupSpec):
+            patterns, filters, binds, values = (*e, None, None)[:4]
+            e = GroupSpec(patterns=patterns, filters=filters,
+                          binds=binds, values=values)
+        out.append(e)
+    return out
 
 
 def _check_join_keys(grp, shared: list, kind: str) -> None:
@@ -903,8 +885,6 @@ def _check_join_keys(grp, shared: list, kind: str) -> None:
     group), so masking the group side would pick one of two
     non-equivalent readings silently.  ENCLOSING-side unboundness is
     exact under substitution and handled by :func:`_subst_exists`."""
-    if not isinstance(grp, GroupSpec):
-        return  # flat tuple groups keep their documented semantics
     unsafe = sorted(v for v in shared if v not in _certain_vars(grp))
     if unsafe:
         raise ValueError(
@@ -918,6 +898,21 @@ def _check_join_keys(grp, shared: list, kind: str) -> None:
 
 _MASK_CAP = 4  # ≤ 2^4 mask-pair partitions; beyond this the plan
                # fans out too far — bind vars in required patterns
+
+
+def _check_fan_out(kind: str, unc_s: list, unc_g: list) -> None:
+    """Raise when the bound-mask decomposition over the maybe-unbound
+    shared variables of the enclosing solution (``unc_s``) and of the
+    group (``unc_g``) would fan out beyond 2^_MASK_CAP partitions —
+    the one cap every compatibility join and EXISTS substitution
+    shares."""
+    if len(unc_s) + len(unc_g) > _MASK_CAP:
+        raise ValueError(
+            f"{kind} group shares {len(unc_s) + len(unc_g)} "
+            f"maybe-unbound variable sides (enclosing {sorted(unc_s)}, "
+            f"group {sorted(unc_g)}) — the bound-mask decomposition "
+            f"fans out 2^k joins and is capped at k={_MASK_CAP}; bind "
+            "some in required patterns or rename")
 
 
 def _masks(df: DataFrame, uncertain: list):
@@ -1064,8 +1059,7 @@ def _compat_inner_join(solution: DataFrame, group: DataFrame,
 
 
 def join_relation(solution: DataFrame, rel: DataFrame,
-                  certain_sol, certain_rel,
-                  what: str = "sub-SELECT") -> DataFrame:
+                  certain_sol, certain_rel) -> DataFrame:
     """Join a pre-compiled solution relation (a §18.2 sub-SELECT
     multiset) into ``solution`` with exact SPARQL §18.3 semantics.
     ``certain_sol`` / ``certain_rel`` are the variables bound in every
@@ -1082,13 +1076,7 @@ def join_relation(solution: DataFrame, rel: DataFrame,
     unc_g = [v for v in shared if v not in certain_rel]
     if not unc_s and not unc_g:
         return solution.join(rel, on=shared, how="inner")
-    if len(unc_s) + len(unc_g) > _MASK_CAP:
-        raise ValueError(
-            f"{what} shares {len(unc_s) + len(unc_g)} maybe-unbound "
-            f"variable sides (enclosing {sorted(unc_s)}, relation "
-            f"{sorted(unc_g)}) — the bound-mask decomposition fans "
-            f"out 2^k joins and is capped at k={_MASK_CAP}; bind some "
-            "in required patterns or rename")
+    _check_fan_out("sub-SELECT", unc_s, unc_g)
     return _compat_inner_join(solution, rel, shared, unc_s, unc_g)
 
 
@@ -1097,77 +1085,64 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
                constant_only_ok: bool = False) -> DataFrame:
     """Evaluate one :class:`GroupSpec` bottom-up (SPARQL §18.5), in
     the member order patterns → VALUES → BIND → OPTIONAL → MINUS →
-    FILTER → EXISTS/NOT EXISTS.  Group FILTERs apply to the WHOLE
-    group solution (SPARQL §8.3) — after VALUES/BIND/OPTIONAL/MINUS —
-    so expressions may reference optionally-bound variables (the
-    OPTIONAL + !BOUND negation idiom) and VALUES/BIND columns.
-    Catalyst still pushes each conjunct down the join tree as far as
-    its null semantics allow, so a required-var filter lands on its
-    pattern's scan."""
+    FILTER → EXISTS/NOT EXISTS → relations → graph ranges.  This is
+    the one group evaluator: a query's WHERE and every nested group
+    run through it.  Group FILTERs apply to the WHOLE group solution
+    (SPARQL §8.3) — after VALUES/BIND/OPTIONAL/MINUS — so expressions
+    may reference optionally-bound variables (the OPTIONAL + !BOUND
+    negation idiom) and VALUES/BIND columns.  Catalyst still pushes
+    each conjunct down the join tree as far as its null semantics
+    allow, so a required-var filter lands on its pattern's scan."""
     if spec.union:
         return bgp_union(*[_eval_spec(triples, b, meta_vars)
                            for b in spec.union])
-    if not spec.patterns:
+    relations = list(spec.relations or ())
+    if spec.patterns:
+        solution = _compile_group(triples, spec.patterns, None,
+                                  constant_only_ok=constant_only_ok,
+                                  meta_vars=meta_vars)
+        # variables certainly bound (never NULL) in the ENCLOSING
+        # solution: required-pattern bindings only — VALUES (UNDEF),
+        # BIND (error → NULL), and OPTIONAL-introduced variables are
+        # all maybe-unbound
+        certain = _pattern_vars(spec.patterns)
+    else:
         # relations-only spec (``OPTIONAL { { SELECT ... } }``): the
         # first relation IS the solution; the rest join below.  The
         # constructor guarantees no BIND/VALUES/OPTIONAL/MINUS/EXISTS.
-        (thunk, cert, _cols), *rest = spec.relations
+        (thunk, cert, _cols), *relations = relations
         solution = thunk(triples)
         certain = set(cert)
-        for thunk, cert, _cols in rest:
-            solution = join_relation(solution, thunk(triples),
-                                     certain, cert)
-            certain |= set(cert)
-        for expr in spec.filters or ():
-            solution = solution.filter(F.expr(expr))
-        return solution
-    solution = _compile_group(triples, spec.patterns, None,
-                              constant_only_ok=constant_only_ok,
-                              meta_vars=meta_vars)
-    # variables certainly bound (never NULL) in the ENCLOSING solution:
-    # required-pattern bindings only — VALUES (UNDEF), BIND (error →
-    # NULL), and OPTIONAL-introduced variables are all maybe-unbound
-    certain = _pattern_vars(spec.patterns)
     if spec.values:
         solution = _join_values(solution, spec.values)
     for var, expr in spec.binds or ():
         solution = _apply_bind(solution, var, expr)
 
-    def _uncertain_shared(grp, shared, kind):
-        """For a GroupSpec entry: the (sol-side, group-side) shared
-        variables that may be unbound (→ bound-mask decomposition on
-        each side), or None for flat tuple groups (documented
-        equi-join semantics).  Raises only when the total mask fan-out
-        would exceed 2^_MASK_CAP partitions."""
-        if not isinstance(grp, GroupSpec):
-            return None
-        unc_g = [v for v in shared if v not in _certain_vars(grp)]
-        unc_s = [v for v in shared if v not in certain]
-        if len(unc_s) + len(unc_g) > _MASK_CAP:
-            raise ValueError(
-                f"{kind} group shares {len(unc_s) + len(unc_g)} "
-                f"maybe-unbound variable sides (enclosing "
-                f"{sorted(unc_s)}, group {sorted(unc_g)}) — the "
-                f"bound-mask decomposition fans out 2^k joins and is "
-                f"capped at k={_MASK_CAP}; bind some in required "
-                "patterns or rename")
-        return unc_s, unc_g
-
-    for grp in spec.optionals or ():
-        group = _subgroup(
+    def _join_side(grp, kind):
+        """Evaluate one OPTIONAL/MINUS group against the current
+        solution → (group relation, shared variables, maybe-unbound
+        shared variables on the solution side and on the group side,
+        which decompose by bound-mask)."""
+        group = _eval_spec(
             triples, grp,
             meta_vars=frozenset(v for v in meta_vars
                                 if v not in solution.columns))
         shared = [v for v in group.columns if v in solution.columns
                   and not v.endswith(META_SUFFIXES)]
+        unc_s = [v for v in shared if v not in certain]
+        unc_g = [v for v in shared if v not in _certain_vars(grp)]
+        _check_fan_out(kind, unc_s, unc_g)
+        return group, shared, unc_s, unc_g
+
+    for grp in spec.optionals or ():
+        group, shared, unc_s, unc_g = _join_side(grp, "OPTIONAL")
         if not shared:
             raise ValueError(
                 "OPTIONAL group shares no variable with the required "
-                f"group: {grp.patterns if isinstance(grp, GroupSpec) else grp[0]}")
-        unc = _uncertain_shared(grp, shared, "OPTIONAL")
-        if unc is not None and (unc[0] or unc[1]):
+                f"group: {grp.patterns}")
+        if unc_s or unc_g:
             solution = _compat_left_join(solution, group, shared,
-                                         *unc)
+                                         unc_s, unc_g)
         else:
             solution = solution.join(group, on=shared, how="left")
     # BINDs that reference OPTIONAL-introduced variables apply after
@@ -1177,20 +1152,14 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     for var, expr in spec.late_binds or ():
         solution = _apply_bind(solution, var, expr)
     for grp in spec.minus or ():
-        group = _subgroup(
-            triples, grp,
-            meta_vars=frozenset(v for v in meta_vars
-                                if v not in solution.columns))
-        shared = [v for v in group.columns if v in solution.columns
-                  and not v.endswith(META_SUFFIXES)]
-        if shared:  # disjoint-domain MINUS is a no-op (SPARQL §8.3.3)
-            unc = _uncertain_shared(grp, shared, "MINUS")
-            if unc is not None and (unc[0] or unc[1]):
-                solution = _compat_minus(solution, group, shared,
-                                         *unc)
-            else:
-                solution = solution.join(group.select(*shared),
-                                         on=shared, how="left_anti")
+        group, shared, unc_s, unc_g = _join_side(grp, "MINUS")
+        # disjoint-domain MINUS is a no-op (SPARQL §8.3.3)
+        if unc_s or unc_g:
+            solution = _compat_minus(solution, group, shared,
+                                     unc_s, unc_g)
+        elif shared:
+            solution = solution.join(group.select(*shared),
+                                     on=shared, how="left_anti")
     if not spec.relations:
         for expr in spec.filters or ():
             solution = solution.filter(F.expr(expr))
@@ -1202,20 +1171,33 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
         solution = _apply_exists(triples, solution, spec.not_exists,
                                  negate=True, meta_vars=meta_vars,
                                  certain=certain)
-    # §18.2 sub-SELECT relations join LAST — the same order the
-    # top-level compiler uses (callers guard that the join orders
-    # commute: every variable the spec's O-entries share with a
-    # relation's columns must be certain in the spec's own patterns).
-    # Group FILTERs may reference relation variables (§8.3 scopes them
-    # to the whole group), so with relations present they apply here;
-    # filters commute with the semi/anti EXISTS joins above.
+    # §18.2 sub-SELECT relations join after the group's own members
+    # (callers guard that the join orders commute: every variable the
+    # spec's O-entries share with a relation's columns must be certain
+    # in the spec's own patterns).  Group FILTERs may reference
+    # relation variables (§8.3 scopes them to the whole group), so
+    # with relations present they apply here; filters commute with
+    # the semi/anti EXISTS joins above.
+    for thunk, cert, _cols in relations:
+        solution = join_relation(solution, thunk(triples), certain, cert)
+        certain |= set(cert)
     if spec.relations:
-        for thunk, cert, _cols in spec.relations:
-            solution = join_relation(solution, thunk(triples),
-                                     certain, cert)
-            certain |= set(cert)
         for expr in spec.filters or ():
             solution = solution.filter(F.expr(expr))
+    for var in spec.graph_ranges or ():
+        # a GRAPH variable that scoped nothing (§13.3) ranges over
+        # every graph name — NAMED graphs only, so default-graph rows
+        # (NULL graph) mint no name.  The distinct-name dimension is
+        # tiny relative to the quads table: broadcast, never a shuffle.
+        if "graph" not in triples.columns:
+            raise ValueError(
+                f"GRAPH ?{var} ranges over graph names, but the input "
+                "has no 'graph' column — query a quads table")
+        names = (triples.filter(F.col("graph").isNotNull())
+                 .select(F.col("graph").alias(var)).distinct())
+        solution = (solution.join(F.broadcast(names), on=var, how="inner")
+                    if var in solution.columns
+                    else solution.crossJoin(F.broadcast(names)))
     return solution
 
 

@@ -19,7 +19,12 @@ reference stack can bring their SPARQL strings as-is:
 Everything compiles to the existing operators — the parser adds ZERO
 execution code, so every scale property of the algebra (predicate
 pushdown per pattern, equi-joins on shared variables, frontier-seeded
-closures, anti-join MINUS) carries over unchanged.
+closures, anti-join MINUS) carries over unchanged.  A group graph
+pattern has one shape below the parser: the parse tree's
+:class:`Group` becomes a :class:`bgp.GroupSpec` — a query's WHERE and
+every OPTIONAL / MINUS / EXISTS body alike, flat or nested — and one
+evaluator, ``bgp._eval_spec``, runs them all, so a group's answer
+never depends on how deeply it nests.
 
 Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
 
@@ -87,8 +92,8 @@ Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
   patterns to its graph term; an outer GRAPH variable left with
   NOTHING to scope — every contained pattern re-scoped by a nested
   block — ranges over every graph name per the algebra, compiled as a
-  broadcast join with the distinct graph-name dimension; top-level
-  WHERE only).  A path under a VARIABLE graph evaluates once over
+  broadcast join with the distinct graph-name dimension, in WHERE and
+  in nested groups alike).  A path under a VARIABLE graph evaluates once over
   graph-prefixed node ids (paths cannot cross graphs, so the prefix
   partitions the closure per graph) and binds the variable from the
   prefix.
@@ -180,10 +185,10 @@ Documented deviations (each raises or is noted, never silent):
   an explicit numeric context at the query site (e.g. ``ORDER BY``
   a ``BIND(... AS ?k)`` of a cast) — the deterministic distributed
   choice, matching the GROUP_CONCAT convention.
-- Nested groups (OPTIONAL / MINUS / EXISTS / UNION *inside* an
-  OPTIONAL / MINUS / EXISTS group, to any depth) evaluate bottom-up
-  via :class:`bgp.GroupSpec`.  A shared variable bound only under a
-  nested OPTIONAL, in some UNION branches, or by BIND/VALUES — i.e.
+- Groups, flat or nested (OPTIONAL / MINUS / EXISTS / UNION *inside*
+  an OPTIONAL / MINUS / EXISTS group, to any depth), evaluate
+  bottom-up via :class:`bgp.GroupSpec`.  A shared variable bound only
+  under an OPTIONAL, in some UNION branches, or by BIND/VALUES — i.e.
   maybe-UNBOUND, whether in the group, in the enclosing solution, or
   BOTH — gets exact SPARQL §18.3 compatibility (unbound matches
   anything; an unbound side takes the other side's value) via
@@ -225,8 +230,7 @@ from pyspark.sql import functions as F
 from rdfa_streaming_parser_js_spark.operators import paths as P
 from rdfa_streaming_parser_js_spark.operators.bgp import (
     BNODE_FRESH_SENTINEL, META_SUFFIXES, GroupSpec, Lit,
-    _certain_vars, bgp_construct, bgp_match, bgp_union, describe,
-    join_relation)
+    _certain_vars, _eval_spec, bgp_construct, describe)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -285,7 +289,10 @@ def _tokenize(text: str) -> list[_Tok]:
 
 @dataclass
 class Group:
-    """One ``{...}`` group graph pattern, flattened to bgp_match args."""
+    """One ``{...}`` group graph pattern as parsed: the parse tree that
+    :func:`_group_to_spec` turns into the :class:`bgp.GroupSpec` the
+    algebra evaluates.  OPTIONAL/MINUS/EXISTS bodies are GroupSpecs
+    already; UNION branches stay Groups."""
     patterns: list = field(default_factory=list)
     filters: list = field(default_factory=list)
     optionals: list = field(default_factory=list)
@@ -317,24 +324,17 @@ def _relation_entry(sq: "ParsedQuery"):
 
 
 def _group_to_spec(sub: Group) -> GroupSpec:
-    """A nested OPTIONAL/MINUS/EXISTS group that itself nests further
-    groups → the recursive :class:`bgp.GroupSpec` the algebra evaluates
-    bottom-up.  Entries in sub.optionals/minus/exists/not_exists were
-    already converted (tuple or GroupSpec) as they were parsed; UNION
-    branches are parser Groups and convert here; sub-SELECT blocks
-    become lazy relation entries, guarded by the same §18.2
-    commutation check as the top level."""
-    if sub.graph_ranges:
-        raise SparqlSyntaxError(
-            "a GRAPH variable with nothing to scope (every pattern "
-            "re-scoped by nested GRAPH blocks) is only supported at "
-            "the top level of WHERE")
+    """A parser Group → the :class:`bgp.GroupSpec` the algebra
+    evaluates bottom-up — the one group shape below the parser, for a
+    query's WHERE and for every OPTIONAL/MINUS/EXISTS body alike.
+    Entries in sub.optionals/minus/exists/not_exists were already
+    converted as they were parsed; UNION branches are parser Groups
+    and convert here; sub-SELECT blocks become lazy relation entries,
+    guarded by the §18.2 commutation check."""
     if sub.union:
         if sub.patterns or sub.filters or sub.subselects:
             raise SparqlSyntaxError("UNION must be the entire group body")
-        return GroupSpec(union=[
-            b if isinstance(b, GroupSpec) else _group_to_spec(b)
-            for b in sub.union])
+        return GroupSpec(union=[_group_to_spec(b) for b in sub.union])
     relations = None
     if sub.subselects:
         _check_subselect_commutes(
@@ -355,7 +355,7 @@ def _group_to_spec(sub: Group) -> GroupSpec:
         values=sub.values or None,
         optionals=sub.optionals or None, minus=sub.minus or None,
         exists=sub.exists or None, not_exists=sub.not_exists or None,
-        relations=relations)
+        relations=relations, graph_ranges=sub.graph_ranges or None)
 
 
 @dataclass
@@ -765,7 +765,7 @@ class _Parser:
         return P.alt(*parts)
 
     # -- group graph pattern ------------------------------------------
-    def parse_group(self, top: bool = True) -> Group:
+    def parse_group(self) -> Group:
         self.expect_op("{")
         g = Group()
         if self.at_op("{") and not (
@@ -773,9 +773,9 @@ class _Parser:
                 and self.peek(1).text.lower() == "select"):
             # {A} UNION {B} [UNION {C}...] — at the top level or
             # nested inside OPTIONAL/MINUS/EXISTS (GroupSpec recursion)
-            g.union.append(self.parse_group(top=False))
+            g.union.append(self.parse_group())
             while self.take_kw("union"):
-                g.union.append(self.parse_group(top=False))
+                g.union.append(self.parse_group())
             if not self.at_op("}"):
                 self.fail("UNION must be the entire group body — "
                           "join further patterns at the DataFrame "
@@ -786,7 +786,7 @@ class _Parser:
             if self.at_op("{"):
                 # mid-group braced block: a sub-SELECT (§18.2) — at
                 # the top level or inside an OPTIONAL/MINUS/EXISTS
-                # body (where it compiles to a GroupSpec relation)
+                # body; either way it compiles to a GroupSpec relation
                 self.next()
                 if not self.at_kw("select"):
                     self.fail("expected SELECT (only sub-SELECT blocks "
@@ -798,13 +798,11 @@ class _Parser:
                 self.all_subqueries.append(sq)
                 self.expect_op("}")
             elif self.take_kw("filter"):
-                self._parse_filter(g, top)
+                self._parse_filter(g)
             elif self.take_kw("optional"):
-                sub = self.parse_group(top=False)
-                g.optionals.append(self._subgroup_tuple(sub))
+                g.optionals.append(_group_to_spec(self.parse_group()))
             elif self.take_kw("minus"):
-                sub = self.parse_group(top=False)
-                g.minus.append(self._subgroup_tuple(sub))
+                g.minus.append(_group_to_spec(self.parse_group()))
             elif self.take_kw("graph"):
                 t = self.peek()
                 if t.kind == "VAR":
@@ -813,7 +811,7 @@ class _Parser:
                     gterm = self.expand_iri(self.next())
                 else:
                     self.fail("expected a variable or IRI after GRAPH")
-                sub = self.parse_group(top=False)
+                sub = self.parse_group()
                 if (sub.optionals or sub.minus or sub.values or sub.binds
                         or sub.late_binds
                         or sub.exists or sub.not_exists or sub.union
@@ -840,7 +838,7 @@ class _Parser:
                     # the variable scoped NOTHING (every pattern was
                     # re-scoped by a nested GRAPH block): §13.3 still
                     # ranges it over every graph name — record it for
-                    # the distinct-graph-name join in _compile_where
+                    # the distinct-graph-name join in bgp._eval_spec
                     g.graph_ranges.append(gterm[1:])
             elif self.take_kw("bind"):
                 self.expect_op("(")
@@ -896,7 +894,7 @@ class _Parser:
                       "level")
         return g
 
-    def _parse_filter(self, g: Group, top: bool) -> None:
+    def _parse_filter(self, g: Group) -> None:
         negate = False
         if self.take_kw("not"):
             self.expect_kw("exists")
@@ -906,9 +904,8 @@ class _Parser:
         else:
             g.filters.append(self.parse_expr_or_call())
             return
-        sub = self.parse_group(top=False)
         dest = g.not_exists if negate else g.exists
-        dest.append(self._subgroup_tuple(sub))
+        dest.append(_group_to_spec(self.parse_group()))
 
     def _parse_triples_block(self, g: Group) -> None:
         subj = self.parse_term()
@@ -1026,26 +1023,6 @@ class _Parser:
         self.expect_op(")")
         return (f"CAST({sql} AS STRING)", "literal", None,
                 _unquote(lt.text).lower())
-
-    @staticmethod
-    def _subgroup_tuple(sub: "Group"):
-        """OPTIONAL/MINUS/EXISTS group → the bgp OptionalGroup tuple,
-        or a recursive :class:`bgp.GroupSpec` when the group itself
-        nests OPTIONAL/MINUS/EXISTS/UNION; group-scoped BIND/VALUES
-        ride in the optional tail elements (they used to be silently
-        dropped)."""
-        if sub.graph_ranges:
-            raise SparqlSyntaxError(
-                "a GRAPH variable with nothing to scope (every pattern "
-                "re-scoped by nested GRAPH blocks) is only supported "
-                "at the top level of WHERE")
-        if (sub.optionals or sub.minus or sub.exists or sub.not_exists
-                or sub.union or sub.subselects or sub.late_binds):
-            return _group_to_spec(sub)
-        if sub.binds or sub.values:
-            return (sub.patterns, sub.filters or None,
-                    sub.binds or None, sub.values or None)
-        return (sub.patterns, sub.filters or None)
 
     # -- expressions → Spark SQL --------------------------------------
     def parse_expr_or_call(self) -> str:
@@ -1735,7 +1712,7 @@ def parse_sparql(text: str) -> ParsedQuery:
             _parse_modifiers(p, q)
             if p.peek().kind != "EOF":
                 p.fail("trailing input after query")
-            _stamp_meta(q, frozenset(p.meta_vars), p)
+            _stamp_meta(q, p)
             return q
         tmpl = Group()
         p.expect_op("{")
@@ -1760,29 +1737,20 @@ def parse_sparql(text: str) -> ParsedQuery:
         p.fail("expected SELECT, ASK or CONSTRUCT")
     if p.peek().kind != "EOF":
         p.fail("trailing input after query")
-    _stamp_meta(q, frozenset(p.meta_vars), p)
+    _stamp_meta(q, p)
     _check_template_collisions(p)
     q.template_literals = dict(p.template_literals)
     return q
 
 
-def _stamp_meta(q: ParsedQuery, mv: frozenset,
-                p: "_Parser | None" = None) -> None:
-    """Record the term-metadata variable set on the query and every
-    nested sub-SELECT (the set is parser-global; a variable only gains
-    companion columns in groups that actually bind it).  Sub-SELECTs
-    inside OPTIONAL/MINUS/EXISTS bodies are hidden behind GroupSpec
-    relation thunks by stamping time, so the parser's flat
-    ``all_subqueries`` registry covers them."""
-    q.meta_vars = mv
-    stack = [q.where]
-    while stack:
-        g = stack.pop()
-        stack.extend(b for b in g.union if isinstance(b, Group))
-        for sq in g.subselects:
-            _stamp_meta(sq, mv)
-    for sq in (p.all_subqueries if p is not None else ()):
-        _stamp_meta(sq, mv)
+def _stamp_meta(q: ParsedQuery, p: _Parser) -> None:
+    """Record the term-metadata variable set on the query and on every
+    sub-SELECT parsed anywhere in it — the parser's flat
+    ``all_subqueries`` registry lists them all, nested ones included
+    (the set is parser-global; a variable only gains companion columns
+    in groups that actually bind it)."""
+    for sq in (q, *p.all_subqueries):
+        sq.meta_vars = frozenset(p.meta_vars)
 
 
 def _parse_modifiers(p: _Parser, q: ParsedQuery) -> None:
@@ -1887,73 +1855,47 @@ def _attach_trailing_values(p: "_Parser", q: ParsedQuery) -> None:
 _SQL_IDENT = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 
 
-def _entry_vars(entry) -> set:
-    """Over-approximate every variable a compiled OPTIONAL/MINUS/
-    EXISTS entry can bind or reference: pattern variables, BIND names
-    + expression identifiers, VALUES keys, filter-SQL identifiers
-    (which over-count — function names match the identifier regex —
-    but an over-approximation can only RAISE more, never silently
-    mis-evaluate), recursing through nested :class:`bgp.GroupSpec`."""
-    out = set()
-    if isinstance(entry, GroupSpec):
-        parts = (entry.patterns, entry.filters,
-                 (entry.binds or []) + (entry.late_binds or []),
-                 entry.values)
-        for sub in ((entry.optionals or []) + (entry.minus or [])
-                    + (entry.exists or []) + (entry.not_exists or [])
-                    + (entry.union or [])):
-            out |= _entry_vars(sub)
-    else:  # OptionalGroup tuple: (patterns, filters[, binds, values])
-        parts = tuple(entry) + (None,) * (4 - len(entry))
-    patterns, filters, binds, values = parts[0], parts[1], parts[2], parts[3]
-    for pat in patterns or ():
+def _entry_vars(spec: GroupSpec, refs: bool = True) -> set:
+    """Over-approximate every variable a group can bind or reference:
+    pattern variables, BIND names + expression identifiers, VALUES
+    keys, graph-range names, sub-SELECT projections, filter-SQL
+    identifiers (which over-count — function names match the
+    identifier regex — but an over-approximation can only RAISE more,
+    never silently mis-evaluate), recursing through nested groups.
+    ``refs=False`` keeps only the variables the group's solution binds
+    (its columns): no expression identifiers, no MINUS/EXISTS
+    bodies."""
+    out = set(spec.graph_ranges or ())
+    for pat in spec.patterns or ():
         out |= {t[1:] for t in pat
                 if isinstance(t, str) and t.startswith("?")}
-    for f in filters or ():
-        out |= set(_SQL_IDENT.findall(f))
-    for name, expr in binds or ():
+    for name, expr in (spec.binds or []) + (spec.late_binds or []):
         out.add(name)
-        out |= set(_SQL_IDENT.findall(expr))
-    for row in values or ():
+        if refs:
+            out |= set(_SQL_IDENT.findall(
+                expr if isinstance(expr, str) else expr[0]))
+    for row in spec.values or ():
         out |= set(row)
-    if isinstance(entry, GroupSpec):
-        for _thunk, _cert, cols in entry.relations or ():
-            out |= set(cols)
+    for _thunk, _cert, cols in spec.relations or ():
+        out |= set(cols)
+    subs = (spec.optionals or []) + (spec.union or [])
+    if refs:
+        subs += ((spec.minus or []) + (spec.exists or [])
+                 + (spec.not_exists or []))
+        for f in spec.filters or ():
+            out |= set(_SQL_IDENT.findall(f))
+    for sub in subs:
+        out |= _entry_vars(sub, refs)
     return out
 
 
 def _projected_vars(q: "ParsedQuery") -> set:
     """The variables a sub-SELECT's solution relation binds, computed
-    at parse time (no DataFrame yet).  Explicit projections are exact;
-    ``SELECT *`` over-approximates via the group's variable walk —
-    over-counting only makes the composition guard raise MORE, never
-    silently mis-evaluate."""
+    at parse time (no DataFrame yet): the explicit projection, or for
+    ``SELECT *`` the columns its WHERE group binds."""
     if q.select is not None:
         return {it.var for it in q.select}
-    return _group_vars(q.where)
-
-
-def _group_vars(g: Group) -> set:
-    """Over-approximate the variables visible in a parser Group's own
-    solution (pattern vars, BIND/VALUES names, graph-range names,
-    OPTIONAL/MINUS-introduced vars, nested sub-SELECT projections).
-    FILTER/EXISTS identifiers ride along via :func:`_entry_vars` —
-    an over-approximation, harmless for guards."""
-    out = {t[1:] for pat in g.patterns for t in pat
-           if isinstance(t, str) and t.startswith("?")}
-    for name, _expr in g.binds + g.late_binds:
-        out.add(name)
-    for row in g.values:
-        out |= set(row)
-    out |= set(g.graph_ranges)
-    for b in g.union:
-        out |= (_entry_vars(b) if isinstance(b, GroupSpec)
-                else _group_vars(b))
-    for entry in g.optionals + g.minus:
-        out |= _entry_vars(entry)
-    for sq in g.subselects:
-        out |= _projected_vars(sq)
-    return out
+    return _entry_vars(_group_to_spec(q.where), refs=False)
 
 
 def _certain_out_vars(q: "ParsedQuery") -> frozenset:
@@ -1964,7 +1906,7 @@ def _certain_out_vars(q: "ParsedQuery") -> frozenset:
     variable is certain iff certain in the WHERE group; every
     expression/aggregate projection counts as maybe-unbound (COUNT
     never is, but conservatism is free here)."""
-    cert = _group_certain(q.where)
+    cert = _certain_vars(_group_to_spec(q.where))
     if q.select is None:
         return frozenset(cert)
     return frozenset(it.var for it in q.select
@@ -1972,31 +1914,10 @@ def _certain_out_vars(q: "ParsedQuery") -> frozenset:
                      and it.var in cert)
 
 
-def _group_certain(g: Group) -> set:
-    """Variables bound in every solution of a parser Group: its own
-    pattern vars, the certain projections of its sub-SELECTs (inner
-    joins), and graph-range names (non-NULL by construction); a UNION
-    is the intersection of its branches.  OPTIONAL/MINUS/BIND/VALUES
-    never add certainty."""
-    if g.union:
-        sets = [(_certain_vars(b) if isinstance(b, GroupSpec)
-                 else _group_certain(b)) for b in g.union]
-        out = sets[0]
-        for s in sets[1:]:
-            out &= s
-        return set(out)
-    cert = {t[1:] for pat in g.patterns for t in pat
-            if isinstance(t, str) and t.startswith("?")}
-    for sq in g.subselects:
-        cert |= _certain_out_vars(sq)
-    cert |= set(g.graph_ranges)
-    return cert
-
-
 def _check_subselect_commutes(g: Group, sub_cols: list) -> None:
     """§18.2 composition guard: the compiled plan joins sub-SELECT
-    relations AFTER bgp_match applies the group's OPTIONAL/MINUS/
-    EXISTS, i.e. it evaluates ``Join(LeftJoin(P, O), S)``.  SPARQL's
+    relations AFTER the group's OPTIONAL/MINUS/EXISTS, i.e. it
+    evaluates ``Join(LeftJoin(P, O), S)``.  SPARQL's
     left-to-right group algebra can instead mean
     ``LeftJoin(Join(P, S), O)`` — the two commute exactly when every
     variable an O-entry touches that also appears in a sub-SELECT's
@@ -2005,10 +1926,7 @@ def _check_subselect_commutes(g: Group, sub_cols: list) -> None:
     rewriting happens only for maybe-unbound shared variables under
     the §18.3 mask machinery).  Anything else raises rather than
     silently picking an order.  ``sub_cols`` is a list of per-sub
-    column-name sets (parse-time projections for nested groups,
-    actual DataFrame columns at the top level)."""
-    if not sub_cols:
-        return
+    parse-time projection sets (:func:`_projected_vars`)."""
     all_cols = set()
     for s in sub_cols:
         all_cols |= set(s)
@@ -2024,71 +1942,9 @@ def _check_subselect_commutes(g: Group, sub_cols: list) -> None:
                 "compose at the DataFrame level")
 
 
-def _compile_where(triples: DataFrame, g: Group,
-                   meta_vars: frozenset = frozenset()) -> DataFrame:
-    if g.union:
-        return bgp_union(
-            *[_compile_where(triples, b, meta_vars) for b in g.union])
-    subs = [(_execute_select(triples, sq), _certain_out_vars(sq))
-            for sq in g.subselects]
-    certain = {t[1:] for pat in g.patterns for t in pat
-               if isinstance(t, str) and t.startswith("?")}
-    if g.patterns:
-        _check_subselect_commutes(g, [s.columns for s, _c in subs])
-        sol = bgp_match(
-            triples, g.patterns,
-            meta_vars=meta_vars,
-            # with sub-SELECTs present, group filters may reference the
-            # subquery's variables, so they apply to the joined
-            # relation below (SPARQL filters scope to the whole group;
-            # Catalyst still pushes var-local conjuncts to the scans)
-            filters=None if subs else (g.filters or None),
-            optionals=g.optionals or None,
-            minus=g.minus or None,
-            values=g.values or None,
-            binds=g.binds or None,
-            late_binds=g.late_binds or None,
-            exists=g.exists or None,
-            not_exists=g.not_exists or None)
-    elif subs:
-        if g.values or g.binds or g.late_binds:
-            raise SparqlSyntaxError(
-                "VALUES/BIND in a group whose only relation is a "
-                "sub-SELECT is not supported — add a triple pattern "
-                "or compose at the DataFrame level")
-        sol, cert0 = subs.pop(0)
-        certain |= set(cert0)
-    else:
-        raise SparqlSyntaxError("empty group pattern")
-    for s, cert in subs:
-        # §18.3-exact Join: a shared variable that is maybe-unbound on
-        # either side (an OPTIONAL/BIND projection of the sub-SELECT,
-        # or an OPTIONAL/BIND/VALUES variable of the group) routes
-        # through the bound-mask machinery — a plain equi join would
-        # drop the NULL side, computing non-SPARQL answers.
-        sol = join_relation(sol, s, certain, cert)
-        certain |= set(cert)
-    if g.subselects and g.filters:
-        for expr in g.filters:
-            sol = sol.filter(F.expr(expr))
-    for var in g.graph_ranges:
-        # an outer GRAPH variable that scoped nothing (§13.3): range it
-        # over every graph name.  The distinct-name dimension is tiny
-        # relative to the quads table — broadcast, never a shuffle.
-        if "graph" not in triples.columns:
-            raise SparqlSyntaxError(
-                f"GRAPH ?{var} ranges over graph names, but the input "
-                "is a triples table with no 'graph' column — query a "
-                "quads table")
-        # §13.3 ranges over NAMED graphs only: a quads table may hold
-        # default-graph rows (NULL graph — e.g. after a SPARQL Update
-        # inserting bare triples), which must not mint a NULL name
-        names = (triples.filter(F.col("graph").isNotNull())
-                 .select(F.col("graph").alias(var)).distinct())
-        sol = (sol.join(F.broadcast(names), on=var, how="inner")
-               if var in sol.columns
-               else sol.crossJoin(F.broadcast(names)))
-    return sol
+def _compile_where(triples: DataFrame, q: ParsedQuery) -> DataFrame:
+    """The solution relation of a query's WHERE group."""
+    return _eval_spec(triples, _group_to_spec(q.where), q.meta_vars)
 
 
 def sparql_query(triples: DataFrame, text: str) -> DataFrame:
@@ -2110,13 +1966,13 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
         var_names = [v[1:] for v in q.describe_targets
                      if v.startswith("?")]
         if var_names:
-            sol = _compile_where(triples, q.where, q.meta_vars)
+            sol = _compile_where(triples, q)
             for v in var_names:
                 s = sol.select(F.col(v).alias("node")).distinct()
                 seeds = s if seeds is None else (
                     seeds.unionByName(s).distinct())
         return describe(triples, seeds)
-    sol = _compile_where(triples, q.where, q.meta_vars)
+    sol = _compile_where(triples, q)
     if q.form == "ask":
         return (sol.limit(1)
                 .agg((F.count(F.lit(1)) > 0).alias("ask")))
@@ -2188,7 +2044,7 @@ def _execute_select(triples: DataFrame, q: ParsedQuery) -> DataFrame:
     """The SELECT pipeline (shared by top-level queries and §18.2
     sub-SELECTs): aggregate path vs plain projection, then DISTINCT /
     ORDER / LIMIT / OFFSET in SPARQL's slice order."""
-    sol = _compile_where(triples, q.where, q.meta_vars)
+    sol = _compile_where(triples, q)
     items = q.select
     agg_mode = bool(q.group_by) or bool(
         items and any(it.is_agg for it in items))

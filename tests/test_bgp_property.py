@@ -378,7 +378,10 @@ def test_uncertain_minus_agrees_with_naive(spark, case):
 def graph_and_two_sided_optional(draw):
     """?x is maybe-unbound on BOTH sides: the enclosing solution gets
     it from a flat OPTIONAL, the GroupSpec group binds it only under
-    its own nested OPTIONAL — mask pairs on both sides."""
+    its own nested OPTIONAL — mask pairs on both sides.  The second
+    group is also drawn flat (``flat2``), binding ?x in its required
+    pattern: only the enclosing side is maybe-unbound there, and a
+    flat tuple entry must get the same §18.3 compatibility."""
     triples = draw(st.lists(
         st.tuples(st.sampled_from(SUBJECTS), st.sampled_from(PREDS),
                   st.sampled_from(OBJECTS)),
@@ -387,48 +390,59 @@ def graph_and_two_sided_optional(draw):
     flat = [("?a", draw(st.sampled_from(PREDS)), "?x")]
     outer = [("?a", draw(st.sampled_from(PREDS)), "?c")]
     inner = [("?c", draw(st.sampled_from(PREDS)), "?x")]
-    return triples, req, flat, outer, inner
+    flat2 = [("?a", draw(st.sampled_from(PREDS)), "?x")]
+    return triples, req, flat, outer, inner, flat2
+
+
+def _second_groups(triples, outer, inner, flat2):
+    """The two forms of the second group, each with its naive
+    solutions: the nested GroupSpec and the flat tuple entry."""
+    from rdfa_streaming_parser_js_spark.operators.bgp import GroupSpec
+    spec = GroupSpec(patterns=outer,
+                     optionals=[GroupSpec(patterns=inner)])
+    return [(spec, _left_join(naive_bgp(triples, outer),
+                              naive_bgp(triples, inner))),
+            ((flat2, None), naive_bgp(triples, flat2))]
 
 
 @given(graph_and_two_sided_optional())
 @settings(max_examples=20, deadline=None)
 def test_two_sided_optional_agrees_with_naive(spark, case):
-    from rdfa_streaming_parser_js_spark.operators.bgp import GroupSpec
-    triples, req, flat, outer, inner = case
+    triples, req, flat, outer, inner, flat2 = case
     df = spark.createDataFrame(
         triples, "subj string, pred string, obj_value string")
-    spec = GroupSpec(patterns=outer,
-                     optionals=[GroupSpec(patterns=inner)])
-    got_rows = bgp_match(df, req,
-                         optionals=[(flat, None), spec]).collect()
-    want = _left_join(
-        _left_join(naive_bgp(triples, req), naive_bgp(triples, flat)),
-        _left_join(naive_bgp(triples, outer), naive_bgp(triples, inner)))
-    all_vars = ["a", "b", "c", "x"]
-    got = Counter(tuple(getattr(r, v) for v in all_vars)
-                  for r in got_rows)
-    expect = Counter(tuple(sol.get(v) for v in all_vars) for sol in want)
-    assert got == expect, (req, flat, outer, inner)
+    for second, group_sols in _second_groups(triples, outer, inner,
+                                             flat2):
+        got_rows = bgp_match(df, req,
+                             optionals=[(flat, None), second]).collect()
+        want = _left_join(
+            _left_join(naive_bgp(triples, req), naive_bgp(triples, flat)),
+            group_sols)
+        all_vars = ["a", "b", "c", "x"]
+        got = Counter(tuple(r.asDict().get(v) for v in all_vars)
+                      for r in got_rows)
+        expect = Counter(tuple(sol.get(v) for v in all_vars)
+                         for sol in want)
+        assert got == expect, (req, flat, second)
 
 
 @given(graph_and_two_sided_optional())
 @settings(max_examples=15, deadline=None)
 def test_two_sided_minus_agrees_with_naive(spark, case):
-    from rdfa_streaming_parser_js_spark.operators.bgp import GroupSpec
-    triples, req, flat, outer, inner = case
+    triples, req, flat, outer, inner, flat2 = case
     df = spark.createDataFrame(
         triples, "subj string, pred string, obj_value string")
-    spec = GroupSpec(patterns=outer,
-                     optionals=[GroupSpec(patterns=inner)])
-    got_rows = bgp_match(df, req, optionals=[(flat, None)],
-                         minus=[spec]).collect()
-    want = _naive_minus(
-        _left_join(naive_bgp(triples, req), naive_bgp(triples, flat)),
-        _left_join(naive_bgp(triples, outer), naive_bgp(triples, inner)))
-    got = Counter((r.a, r.b, r.x) for r in got_rows)
-    expect = Counter((sol["a"], sol["b"], sol.get("x"))
-                     for sol in want)
-    assert got == expect, (req, flat, outer, inner)
+    for second, group_sols in _second_groups(triples, outer, inner,
+                                             flat2):
+        got_rows = bgp_match(df, req, optionals=[(flat, None)],
+                             minus=[second]).collect()
+        want = _naive_minus(
+            _left_join(naive_bgp(triples, req), naive_bgp(triples, flat)),
+            group_sols)
+        got = Counter((r.a, r.b, r.x) for r in got_rows)
+        expect = Counter((sol["a"], sol["b"], sol.get("x"))
+                         for sol in want)
+        assert got == expect, (req, flat, second)
 
 
 # ---------------------------------------------------------------------

@@ -1164,6 +1164,62 @@ def test_three_level_nesting(spark):
     ]
 
 
+# --------------------------------------------------------------------
+# flat groups: the same §18.3 compatibility as nested ones
+# --------------------------------------------------------------------
+
+def _flat_kg(spark):
+    X = "http://x/"
+    return spark.createDataFrame([
+        ("s1", f"{X}a", "1"), ("s1", f"{X}c", "C1"),
+        ("s2", f"{X}a", "2"), ("s2", f"{X}b", "B2"), ("s2", f"{X}c", "C2"),
+    ], COLS)
+
+
+def test_flat_optional_after_optional_binds_unbound_shared_var(spark):
+    # ?y is unbound for s1 after the first OPTIONAL, so the second
+    # flat OPTIONAL is compatible with it and binds ?y = C1; for s2
+    # ?y = B2 disagrees with C2 and the row stays as it was
+    rows = sparql_query(_flat_kg(spark), """PREFIX : <http://x/>
+        SELECT ?s ?x ?y WHERE {
+            ?s :a ?x OPTIONAL { ?s :b ?y } OPTIONAL { ?s :c ?y }
+        }""").collect()
+    assert sorted((r.s, r.x, r.y) for r in rows) == [
+        ("s1", "1", "C1"), ("s2", "2", "B2")]
+
+
+def test_flat_minus_on_unbound_shared_var(spark):
+    # s1 leaves ?y unbound, so { ?s :c ?y } is compatible with it on a
+    # shared domain (?s) and removes it; s2's ?y = B2 disagrees
+    rows = sparql_query(_flat_kg(spark), """PREFIX : <http://x/>
+        SELECT ?s ?x ?y WHERE {
+            ?s :a ?x OPTIONAL { ?s :b ?y } MINUS { ?s :c ?y }
+        }""").collect()
+    assert [(r.s, r.x, r.y) for r in rows] == [("s2", "2", "B2")]
+
+
+def test_flat_exists_on_bind_only_shared_var_raises(spark):
+    # the group binds the shared ?x only by BIND (maybe unbound), where
+    # substitution and compatibility diverge — raises, flat or nested
+    with pytest.raises(ValueError, match="not bound in every group"):
+        sparql_query(_flat_kg(spark), """PREFIX : <http://x/>
+            SELECT ?s WHERE {
+                ?s :a ?x FILTER EXISTS { ?s :c ?z BIND(?z AS ?x) }
+            }""").collect()
+
+
+def test_bind_after_optional_with_constructor_bind(spark):
+    # an OPTIONAL body holding a term-constructor BIND: the late-bind
+    # scan over the body's variables reads the constructor's SQL
+    rows = sparql_query(_flat_kg(spark), """PREFIX : <http://x/>
+        SELECT ?s ?i ?k WHERE {
+            ?s :a ?x OPTIONAL { ?s :b ?o BIND(IRI(?o) AS ?i) }
+            BIND(COALESCE(?i, "none") AS ?k)
+        }""").collect()
+    assert sorted((r.s, r.i, r.k) for r in rows) == [
+        ("s1", None, "none"), ("s2", "B2", "B2")]
+
+
 def _uncertain_kg(spark):
     """Documents with names; authors partly named — built so the
     maybe-unbound shared variable changes the answer vs a naive
@@ -1556,10 +1612,16 @@ def test_parse_graph_var_nothing_to_scope_marks_range():
     assert q2.where.graph_ranges == []
 
 
-def test_graph_var_nothing_to_scope_rejected_in_nested_group():
-    with pytest.raises(SparqlSyntaxError, match="nothing to scope"):
-        parse_sparql(PFX + """SELECT * WHERE {
+def test_graph_var_nothing_to_scope_ranges_in_nested_group(spark):
+    # the §13.3 range works inside an OPTIONAL body too: the group's
+    # ?g ranges over every graph name before the left join
+    got = sparql_query(_quads(spark), PFX + """
+        SELECT ?s ?src ?g WHERE {
             ?s schema:name ?n .
             OPTIONAL { ?s schema:isPartOf ?src .
                        GRAPH ?g { GRAPH <g3> { ?x a schema:Person } } }
-        }""")
+        }""").collect()
+    assert sorted((r.s, r.src, r.g) for r in got
+                  if r.src is not None) == [
+        (s, "srcA", g) for s in ("d1", "d2") for g in ("g1", "g2", "g3")]
+    assert [(r.s, r.g) for r in got if r.src is None] == [("d3", None)]
