@@ -20,6 +20,9 @@ sha1(url || label) downstream.
 
 from __future__ import annotations
 
+from functools import cached_property
+from itertools import count
+
 from .active_tag import ActiveTag, RdfaPattern
 from .contexts import INITIAL_CONTEXT, INITIAL_CONTEXT_XHTML
 from .profiles import RDFA_FEATURES, RdfaFeatures
@@ -53,14 +56,20 @@ FAST_TAG_PATH = True
 
 
 _CLONE_SLOTS = ActiveTag.__slots__
+_INITIAL_CONTEXT_WITH_XHTML = {**INITIAL_CONTEXT, **INITIAL_CONTEXT_XHTML}
 
 
-def _clone_tag(tag: ActiveTag) -> ActiveTag:
+def _clone_tag(tag: ActiveTag, donor: ActiveTag) -> ActiveTag:
     """Shallow clone, sharing mutable members — mirrors the JS object
-    spread at /root/reference/lib/RdfaParser.ts:96-103."""
+    spread at /root/reference/lib/RdfaParser.ts:96-103 — with the
+    lang/prefixes/vocab that the skipped tags up to ``donor`` donate."""
     out = ActiveTag.__new__(ActiveTag)
     for slot in _CLONE_SLOTS:
         setattr(out, slot, getattr(tag, slot))
+    out.language = donor.language
+    out.prefixes_all = donor.prefixes_all
+    out.prefixes_custom = donor.prefixes_custom
+    out.vocab = donor.vocab
     return out
 
 
@@ -75,22 +84,30 @@ class RdfaExtractor:
             profile = content_type_to_profile(content_type)
         profile = profile or ""
         self.profile = profile
-        self.features = (features or RDFA_FEATURES[profile]).copy()
+        self._features = features or RDFA_FEATURES[profile]
         self._bnode_counter = 0
         self.util = Util(base_iri, self._fresh_blank_node)
         self.triples: list[tuple] = []
 
-        self._copy_rdfa_patterns = self.features.copy_rdfa_patterns
+        self._copy_rdfa_patterns = self._features.copy_rdfa_patterns
         self.rdfa_patterns: dict[str, RdfaPattern] = {}
         self.pending_copies: dict[str, list[ActiveTag]] = {}
 
         root = ActiveTag()
         root.language = language
         root.vocab = vocab
-        root.prefixes_all = dict(INITIAL_CONTEXT)
-        if self.features.xhtml_initial_context:
-            root.prefixes_all.update(INITIAL_CONTEXT_XHTML)
+        # Prefix maps are copy-on-write, so the root shares the constants.
+        root.prefixes_all = (_INITIAL_CONTEXT_WITH_XHTML
+                             if self._features.xhtml_initial_context
+                             else INITIAL_CONTEXT)
         self.stack: list[ActiveTag] = [root]
+
+    @cached_property
+    def features(self) -> RdfaFeatures:
+        """The document's feature flags.  The extractor never mutates the
+        shared ones; the first read here detaches a private copy."""
+        self._features = self._features.copy()
+        return self._features
 
     # ------------------------------------------------------------------
     def _fresh_blank_node(self) -> BlankNode:
@@ -100,29 +117,31 @@ class RdfaExtractor:
 
     def _is_inherit_subject_in_head_body(self, name: str) -> bool:
         # /root/reference/lib/RdfaParser.ts:763-765
-        return (self.features.inherit_subject_in_head_body
+        return (self._features.inherit_subject_in_head_body
                 and name in ("head", "body"))
 
     # ------------------------------------------------------------------
     def on_tag_open(self, name: str, attributes: dict[str, str]) -> None:
-        features = self.features
+        features = self._features
         util = self.util
         stack = self.stack
 
         # Determine the parent tag, ignoring skipped tags; a skipped tag
-        # still donates lang/prefixes/vocab (RdfaParser.ts:89-104).
+        # still donates lang/prefixes/vocab (RdfaParser.ts:89-104).  The
+        # parent is cloned only when they differ, or when the frame
+        # outlives this call (pattern collection, rdfa:copy).
         parent_i = len(stack) - 1
         while parent_i > 0 and stack[parent_i].skip_element:
             parent_i -= 1
         parent = stack[parent_i]
-        if parent_i != len(stack) - 1:
-            last = stack[-1]
-            merged = _clone_tag(parent)
-            merged.language = last.language
-            merged.prefixes_all = last.prefixes_all
-            merged.prefixes_custom = last.prefixes_custom
-            merged.vocab = last.vocab
-            parent = merged
+        last = stack[-1]
+        skipped = last is not parent
+        if skipped and (last.language is not parent.language
+                        or last.prefixes_all is not parent.prefixes_all
+                        or last.prefixes_custom is not parent.prefixes_custom
+                        or last.vocab is not parent.vocab):
+            parent = _clone_tag(parent, last)
+            skipped = False
 
         tag = ActiveTag()
         tag.name = name
@@ -206,10 +225,13 @@ class RdfaExtractor:
             # Start a new pattern (RdfaParser.ts:176-187)
             if attributes.get("typeof") == "rdfa:Pattern":
                 tag.collected_pattern_tag = RdfaPattern(
-                    name, attributes, root_pattern=True, parent_tag=parent)
+                    name, attributes, root_pattern=True,
+                    parent_tag=_clone_tag(parent, last) if skipped else parent)
                 return
             # Instantiate on rdfa:copy (RdfaParser.ts:190-201)
             if attributes.get("property") == "rdfa:copy":
+                if skipped:
+                    parent = _clone_tag(parent, last)
                 copy_id = (attributes.get("resource")
                            or attributes.get("href")
                            or attributes.get("src"))
@@ -386,8 +408,7 @@ class RdfaExtractor:
 
         # 9: emit triples for the current object resource
         if current_object_resource:
-            rel_inlist = "rel" in attributes and "inlist" in attributes
-            if rel_inlist:
+            if "rel" in attributes and "inlist" in attributes:
                 for predicate in util.create_vocab_iris(
                         attributes["rel"], tag, allow_terms_in_rel, False):
                     self.add_list_mapping(
@@ -413,15 +434,12 @@ class RdfaExtractor:
         # 10: store incomplete triples when no object yet
         if not current_object_resource:
             if "rel" in attributes:
-                if "inlist" in attributes:
-                    for predicate in util.create_vocab_iris(
-                            attributes["rel"], tag, allow_terms_in_rel, False):
+                inlist = "inlist" in attributes
+                for predicate in util.create_vocab_iris(
+                        attributes["rel"], tag, allow_terms_in_rel, False):
+                    if inlist:
                         self.add_list_mapping(tag, new_subject, predicate, False)
-                        tag.incomplete_triples.append((predicate, False, True))
-                else:
-                    for predicate in util.create_vocab_iris(
-                            attributes["rel"], tag, allow_terms_in_rel, False):
-                        tag.incomplete_triples.append((predicate, False, False))
+                    tag.incomplete_triples.append((predicate, False, inlist))
             if "rev" in attributes:
                 for predicate in util.create_vocab_iris(
                         attributes["rev"], tag, allow_terms_in_rev, False):
@@ -466,28 +484,16 @@ class RdfaExtractor:
 
             if "content" in attributes:
                 # content= wins over text (RdfaParser.ts:506-521)
-                obj = util.create_literal(attributes["content"], tag)
-                if "inlist" in attributes:
-                    for predicate in tag.predicates:
-                        self.add_list_mapping(tag, new_subject, predicate, obj)
-                else:
-                    subject = util.get_resource_or_base_iri(new_subject, tag)
-                    for predicate in tag.predicates:
-                        self.emit_triple(subject, predicate, obj)
-                tag.predicates = None
+                values = [util.create_literal(attributes["content"], tag)]
             elif features.datetime_attribute and "datetime" in attributes:
                 tag.interpret_object_as_time = True
-                obj = util.create_literal(attributes["datetime"], tag)
-                if "inlist" in attributes:
-                    for predicate in tag.predicates:
-                        self.add_list_mapping(tag, new_subject, predicate, obj)
-                else:
-                    subject = util.get_resource_or_base_iri(new_subject, tag)
-                    for predicate in tag.predicates:
-                        self.emit_triple(subject, predicate, obj)
-                tag.predicates = None
+                values = [util.create_literal(attributes["datetime"], tag)]
             elif local_object_resource:
-                obj = util.get_resource_or_base_iri(local_object_resource, tag)
+                values = [util.get_resource_or_base_iri(
+                    local_object_resource, tag)]
+            else:
+                values = []  # the element's text, at its close
+            for obj in values:
                 if "inlist" in attributes:
                     for predicate in tag.predicates:
                         self.add_list_mapping(tag, new_subject, predicate, obj)
@@ -711,15 +717,8 @@ class RdfaExtractor:
         pattern.referenced = True
 
         if pattern.constructed_blank_nodes is not None:
-            nodes = pattern.constructed_blank_nodes
-            state = {"i": 0}
-
-            def replay_factory() -> BlankNode:
-                node = nodes[state["i"]]
-                state["i"] += 1
-                return node
-
-            self.util.blank_node_factory = replay_factory
+            nodes, i = pattern.constructed_blank_nodes, count()
+            self.util.blank_node_factory = lambda: nodes[next(i)]
         else:
             pattern.constructed_blank_nodes = []
             constructed = pattern.constructed_blank_nodes

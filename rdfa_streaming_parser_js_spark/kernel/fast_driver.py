@@ -83,6 +83,7 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
     # -- scanner -------------------------------------------------------
 
     def _scan(self, s: str, final: bool) -> str:
+        open_tag, on_text = self._open, self.sink.on_text
         i, n = 0, len(s)
         while i < n:
             if self._cdata_elem is not None:
@@ -96,7 +97,7 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                 if i < m.start():
                     # one raw chunk, no unescape — html.parser emits the
                     # whole CDATA run at once when the close is found
-                    self.handle_data(s[i:m.start()])
+                    on_text(s[i:m.start()])
                 elem = self._cdata_elem
                 self._cdata_elem = None
                 self.handle_endtag(elem)
@@ -114,9 +115,9 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                     if amp >= 0 and ";" not in text[amp:] \
                             and len(text) - amp < 34:
                         if amp:
-                            self.handle_data(_unescape(text[:amp]))
+                            on_text(_unescape(text[:amp]))
                         return text[amp:]
-                self.handle_data(_unescape(text))
+                on_text(_unescape(text))
             if lt >= n:
                 return ""
             i = lt
@@ -189,7 +190,7 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                 # html.parser's invalid-'<' path
                 if not final and i + 1 >= n:
                     return s[i:]
-                self.handle_data("<")
+                on_text("<")
                 i += 1
                 continue
 
@@ -209,7 +210,7 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                     i = self._salvage(s, i)
                     continue
                 else:
-                    self.handle_data(s[i:j])  # junk: '<...' becomes text
+                    on_text(s[i:j])  # junk: '<...' becomes text
                     i = j
                     continue
             elif nxt2 == "" or nxt2 in (
@@ -258,11 +259,11 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                 tag, attrs, kind = cached
 
             if kind == 0:
-                self.handle_data(raw)
+                on_text(raw)
             elif kind == 1:
-                self.handle_startendtag(tag, attrs)
+                open_tag(tag, attrs, True)
             else:
-                self.handle_starttag(tag, attrs)
+                open_tag(tag, attrs, False)
                 if tag in _CDATA_ELEMS:  # html.parser enters CDATA mode
                     self._cdata_elem = tag  # regardless of context
             i = endpos

@@ -58,8 +58,8 @@ class GroupSpec:
     FILTER NOT EXISTS {...} }``.
 
     Evaluation is SPARQL bottom-up (§18.5): the spec compiles to its
-    own solution relation (patterns → VALUES → BIND → OPTIONAL → MINUS
-    → FILTER → EXISTS → relations → graph ranges), which the enclosing
+    own solution relation (patterns and graph ranges → VALUES → BIND →
+    OPTIONAL → MINUS → FILTER → EXISTS → relations), which the enclosing
     group then left/anti/semi joins.  ``union`` makes the spec a
     UNION node instead — the branch specs stack by variable name — and
     is exclusive with every other field except nothing (the SPARQL
@@ -94,9 +94,9 @@ class GroupSpec:
 
     ``graph_ranges`` names GRAPH variables that scoped no pattern
     (every contained pattern re-scoped by a nested GRAPH block): §13.3
-    still ranges each over every graph name, so they join LAST with
-    the distinct named-graph dimension (a broadcast join); they are
-    certain (never NULL)."""
+    still ranges each over every graph name, so they join with the
+    patterns, before every other member, with the distinct named-graph
+    dimension (a broadcast join); they are certain (never NULL)."""
     patterns: "list[Pattern]" = None
     filters: "list[str] | None" = None
     binds: "list[tuple] | None" = None
@@ -1084,8 +1084,8 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
                meta_vars: frozenset,
                constant_only_ok: bool = False) -> DataFrame:
     """Evaluate one :class:`GroupSpec` bottom-up (SPARQL §18.5), in
-    the member order patterns → VALUES → BIND → OPTIONAL → MINUS →
-    FILTER → EXISTS/NOT EXISTS → relations → graph ranges.  This is
+    the member order patterns and graph ranges → VALUES → BIND →
+    OPTIONAL → MINUS → FILTER → EXISTS/NOT EXISTS → relations.  This is
     the one group evaluator: a query's WHERE and every nested group
     run through it.  Group FILTERs apply to the WHOLE group solution
     (SPARQL §8.3) — after VALUES/BIND/OPTIONAL/MINUS — so expressions
@@ -1113,6 +1113,23 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
         (thunk, cert, _cols), *relations = relations
         solution = thunk(triples)
         certain = set(cert)
+    for var in spec.graph_ranges or ():
+        # a GRAPH variable that scoped nothing (§13.3) ranges over
+        # every graph name — NAMED graphs only, so default-graph rows
+        # (NULL graph) mint no name.  The distinct-name dimension is
+        # tiny relative to the quads table: broadcast, never a shuffle.
+        # It joins with the patterns, so the group's VALUES, BIND,
+        # OPTIONAL, MINUS and FILTER see it.
+        if "graph" not in triples.columns:
+            raise ValueError(
+                f"GRAPH ?{var} ranges over graph names, but the input "
+                "has no 'graph' column — query a quads table")
+        names = (triples.filter(F.col("graph").isNotNull())
+                 .select(F.col("graph").alias(var)).distinct())
+        solution = (solution.join(F.broadcast(names), on=var, how="inner")
+                    if var in solution.columns
+                    else solution.crossJoin(F.broadcast(names)))
+        certain.add(var)
     if spec.values:
         solution = _join_values(solution, spec.values)
     for var, expr in spec.binds or ():
@@ -1184,20 +1201,6 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     if spec.relations:
         for expr in spec.filters or ():
             solution = solution.filter(F.expr(expr))
-    for var in spec.graph_ranges or ():
-        # a GRAPH variable that scoped nothing (§13.3) ranges over
-        # every graph name — NAMED graphs only, so default-graph rows
-        # (NULL graph) mint no name.  The distinct-name dimension is
-        # tiny relative to the quads table: broadcast, never a shuffle.
-        if "graph" not in triples.columns:
-            raise ValueError(
-                f"GRAPH ?{var} ranges over graph names, but the input "
-                "has no 'graph' column — query a quads table")
-        names = (triples.filter(F.col("graph").isNotNull())
-                 .select(F.col("graph").alias(var)).distinct())
-        solution = (solution.join(F.broadcast(names), on=var, how="inner")
-                    if var in solution.columns
-                    else solution.crossJoin(F.broadcast(names)))
     return solution
 
 

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import skip_unchanged_zip_rereads
+
 MEDIA_TYPES = ("image", "audio", "video")
 _MAGIC = b"FAKE"
 
@@ -86,6 +88,7 @@ def decode_media_meta(media: DataFrame) -> DataFrame:
     pruned = media.select("media_id", "payload")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             rows = [_decode_payload(p) for p in pdf["payload"]]
             yield pd.DataFrame({
@@ -110,6 +113,7 @@ def resize_images(media: DataFrame, max_side: int = 64) -> DataFrame:
               .select("media_id", "payload"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             out = {k: [] for k in ("media_id", "width", "height",
                                    "new_width", "new_height", "payload")}
@@ -136,6 +140,7 @@ def sample_frames(media: DataFrame, every_k: int = 5) -> DataFrame:
               .select("media_id", "payload"))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for pdf in batches:
             ids, idxs, shas = [], [], []
             for mid, p in zip(pdf["media_id"], pdf["payload"]):

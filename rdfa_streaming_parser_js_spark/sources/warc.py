@@ -37,6 +37,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from ..plans.lineage import _Checkpoint, _chunks
+from ..worker import skip_unchanged_zip_rereads
 
 WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
 _WARC_DATE_SPARK_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
@@ -205,6 +206,7 @@ def read_warc_pages(spark: SparkSession, path: str | list[str],
         ", shard string" if with_shard else "")
 
     def parse_batches(batches):
+        skip_unchanged_zip_rereads()
         for batch in batches:
             contents = batch.column("content")
             paths = batch.column("path") if with_shard else None

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import (GroupState,
                                          GroupStateTimeout)
 
+from ..worker import skip_unchanged_zip_rereads
+
 DEDUP_OUT_SCHEMA = "url string, warc_ts timestamp, lang string"
 _STATE_SCHEMA = "seen_count long"
 
@@ -30,6 +32,7 @@ _STATE_SCHEMA = "seen_count long"
 def _make_first_seen(ttl_ms: int | None):
     def _first_seen(key: Any, pdfs: Iterator[pd.DataFrame],
                     state: GroupState) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         if state.hasTimedOut:
             state.remove()
             return

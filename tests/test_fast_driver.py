@@ -4,6 +4,7 @@ fixture corpus, on seeded tag soup, and under arbitrary chunking."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 import random
 from pathlib import Path
@@ -240,3 +241,116 @@ def test_fast_tag_path_plain_markup_parity(monkeypatch):
     slow = _run(FastHtmlSaxDriver, doc, {"base_iri": "http://example.org/"})
     assert fast == slow
     assert fast[0]  # sanity: the document does yield triples
+
+
+# --------------------------------------------------------------------------
+# Kernel golden digest.  The differentials above run the same
+# evaluation-context frame code on both sides, so a change in how frames
+# are shared or cloned would cancel out there.  This pins the kernel's
+# output itself: sorted triples and extracted text of the seeded soup
+# corpus plus a boilerplate corpus where non-RDFa wrappers — plain ones
+# and lang/prefix/vocab donors — nest under a parent object, with
+# rdfa:Pattern and rdfa:copy inside the skipped wrappers.
+# --------------------------------------------------------------------------
+
+WRAPPERS = ["<div class='w'>", "<span id='i{n}'>", "<section>",
+            "<div lang='fr'>", "<span xml:lang='de'>", "<div lang=''>",
+            "<div prefix='p{n}: http://p{n}.example/'>",
+            "<span vocab='http://v{n}.example/'>", "<div vocab=''>",
+            "<p class='x' data-k='v'>"]
+LEAVES = ["<span property='name'>N{n}</span>",
+          "<span property='p{n}:name'>P{n}</span>",
+          "<span property='dc:title' lang='it'>T{n}</span>",
+          "<a rel='schema:url' href='/u{n}'>link</a>",
+          "<span>plain {n}</span>", "text {n} ",
+          "<div typeof='rdfa:Pattern' resource='#pat{n}'>"
+          "<span property='schema:name'>Pat{n}</span>"
+          "<b class='w'>bold {n}</b></div>",
+          "<link property='rdfa:copy' href='#pat{m}'/>",
+          "<div property='rdfa:copy' resource='#pat{m}'>c{n}</div>"]
+PARENTS = ["<div about='#s{n}' typeof='schema:Thing'>",
+           "<div resource='#r{n}'>", "<div vocab='http://schema.org/' "
+           "typeof='Person' prefix='p{n}: http://q{n}.example/'>",
+           "<div about='#s{n}' rel='schema:knows'>"]
+
+
+def _skipped_soup(rng: random.Random) -> str:
+    def wrap(depth: int) -> str:
+        parts = []
+        for _ in range(rng.randrange(1, 4)):
+            n, m = rng.randrange(4), rng.randrange(4)
+            if depth < 4 and rng.randrange(2):
+                w = rng.choice(WRAPPERS + PARENTS).format(n=n)
+                close = w[1:w.index(" ") if " " in w else -1]
+                parts.append(f"{w}{wrap(depth + 1)}</{close}>")
+            else:
+                parts.append(rng.choice(LEAVES).format(n=n, m=m))
+        return "".join(parts)
+
+    body = "".join(rng.choice(PARENTS).format(n=rng.randrange(4))
+                   + wrap(0) + "</div>" for _ in range(rng.randrange(1, 4)))
+    return f"<html><body>{wrap(0)}{body}</body></html>"
+
+
+# A different digest is a change in kernel output, not a test to update.
+GOLDEN_DIGEST = (
+    "e264742ce25044e03966f9d87cbdea03fa9d3f1905fbc927fc64e202bc189929")
+
+
+def test_kernel_golden_digest():
+    rng = random.Random(20261018)
+    docs = [_soup(rng) for _ in range(3000)]
+    docs += [_skipped_soup(rng) for _ in range(1000)]
+    opts = {"base_iri": "http://example.org/d/p"}
+    digest = hashlib.sha256()
+    for doc in docs:
+        triples, text = _run(FastHtmlSaxDriver, doc, opts)
+        digest.update(repr((sorted(map(repr, triples)), text)).encode())
+    assert digest.hexdigest() == GOLDEN_DIGEST
+
+
+def test_skipped_donor_reaches_children():
+    """A wrapper skipped under a parent object still donates its lang,
+    prefix and vocab to the elements below it."""
+    doc = ("<html><body><div about='#s' typeof='schema:Thing'>"
+           "<div lang='fr'><b class='w'>"
+           "<span property='schema:name'>Nom</span></b></div>"
+           "<div prefix='ex: http://ex.example/'>"
+           "<span property='ex:p'>P</span></div>"
+           "<div vocab='http://v.example/'><span property='term'>T</span>"
+           "</div><span property='schema:name'>Name</span>"
+           "</div></body></html>")
+    triples, _ = _run(FastHtmlSaxDriver, doc,
+                      {"base_iri": "http://example.org/"})
+    s = ("iri", "http://example.org/#s")
+    assert (s, ("iri", "http://schema.org/name"),
+            ("lit", "Nom", None, "fr")) in triples
+    assert (s, ("iri", "http://ex.example/p"),
+            ("lit", "P", None, None)) in triples
+    assert (s, ("iri", "http://v.example/term"),
+            ("lit", "T", None, None)) in triples
+    assert (s, ("iri", "http://schema.org/name"),
+            ("lit", "Name", None, None)) in triples
+
+
+_COPY = "<link property='rdfa:copy' href='#p'/>"
+
+
+@pytest.mark.parametrize("before,after,subject", [
+    ("", _COPY, "#s"),  # copied once the pattern is known
+    (_COPY, "", "#s"),  # copied when the pattern closes
+    ("", "", "#p"),     # never copied: flushed at the end
+])
+def test_pattern_under_skipped_element_keeps_text(before, after, subject):
+    """A pattern collected, or copied, under a skipped wrapper replays
+    into a detached frame: its text never reaches the document text."""
+    doc = ("<html><body><div about='#s' typeof='schema:Thing'>before "
+           f"<div class='w'>{before}<div typeof='rdfa:Pattern' "
+           "resource='#p'><span property='schema:name'>Pat</span> plain"
+           f"</div>{after}</div> after</div></body></html>")
+    triples, text = _run(FastHtmlSaxDriver, doc,
+                         {"base_iri": "http://example.org/"})
+    assert text == "before  after"
+    assert (("iri", "http://example.org/" + subject),
+            ("iri", "http://schema.org/name"),
+            ("lit", "Pat", None, None)) in triples

@@ -1601,6 +1601,21 @@ def test_exec_graph_var_with_nothing_to_scope_ranges_names(spark):
     assert got.count() == 3
 
 
+def test_graph_range_is_visible_to_the_group_filter(spark):
+    # the range joins with the group's patterns, so a FILTER of the
+    # same group can read it
+    quads = spark.createDataFrame([
+        ("x1", f"{S}name", "n1", "g3"),
+        ("x2", f"{S}name", "n2", "g1"),
+    ], ["subj", "pred", "obj_value", "graph"])
+    got = sparql_query(quads, PFX + """
+        SELECT ?g ?n WHERE {
+            GRAPH ?g { GRAPH <g3> { ?x schema:name ?n } }
+            FILTER(?g != "g1")
+        }""")
+    assert [(r.g, r.n) for r in got.collect()] == [("g3", "n1")]
+
+
 def test_parse_graph_var_nothing_to_scope_marks_range():
     q = parse_sparql(PFX + """SELECT * WHERE {
         GRAPH ?g { GRAPH <g3> { ?x schema:name ?n } } }""")
