@@ -5,6 +5,7 @@ the reference's ``toBeRdfIsomorphic``."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 from pathlib import Path
 
@@ -29,13 +30,12 @@ def _expected_terms(case):
     return out
 
 
-@pytest.mark.parametrize("case", CASES, ids=[c["name"] for c in CASES])
-def test_reference_fixture(case):
+def _parse(case):
     opts = case["options"]
     features = None
     if "features" in opts:
         features = RdfaFeatures(**opts["features"])
-    extractor = parse_rdfa(
+    return parse_rdfa(
         case["html"],
         base_iri=opts.get("base_iri", ""),
         profile=opts.get("profile", ""),
@@ -44,6 +44,11 @@ def test_reference_fixture(case):
         vocab=opts.get("vocab"),
         features=features,
     )
+
+
+@pytest.mark.parametrize("case", CASES, ids=[c["name"] for c in CASES])
+def test_reference_fixture(case):
+    extractor = _parse(case)
     got = flatten_triples(extractor.triples)
     expected = _expected_terms(case)
     assert isomorphic(got, expected), (
@@ -51,3 +56,18 @@ def test_reference_fixture(case):
         + "\n  ".join(map(str, sorted(set(got))))
         + "\nexpected:\n  "
         + "\n  ".join(map(str, sorted(set(expected)))))
+
+
+# The cases pin triples only; this pins every case's extracted_text().
+# A different digest is a change in kernel output, not a test to update.
+TEXT_DIGEST = (
+    "ecf4707fd2356ba5edda2aa8409900978f1d01bda42379101cc31befe995c434")
+
+
+def test_fixture_text_golden_digest():
+    digest = hashlib.sha256()
+    for case in CASES:
+        digest.update(repr((case["name"],
+                            _parse(case).extracted_text())).encode())
+    assert len(CASES) == 185
+    assert digest.hexdigest() == TEXT_DIGEST

@@ -35,6 +35,7 @@ Comparison is graph isomorphism, like the reference's
 
 from __future__ import annotations
 
+import hashlib
 import json
 from pathlib import Path
 
@@ -58,14 +59,15 @@ def _expected_terms(case):
     return out
 
 
+def _parse(case):
+    opts = case["options"]
+    return parse_rdfa(case["html"], base_iri=opts.get("base_iri", ""),
+                      profile=opts.get("profile", ""))
+
+
 @pytest.mark.parametrize("case", CASES, ids=[c["name"] for c in CASES])
 def test_w3c_case(case):
-    opts = case["options"]
-    extractor = parse_rdfa(
-        case["html"],
-        base_iri=opts.get("base_iri", ""),
-        profile=opts.get("profile", ""),
-    )
+    extractor = _parse(case)
     got = flatten_triples(extractor.triples)
     expected = _expected_terms(case)
     assert isomorphic(got, expected), (
@@ -73,3 +75,18 @@ def test_w3c_case(case):
         + "\n  ".join(map(str, sorted(set(got))))
         + "\nexpected:\n  "
         + "\n  ".join(map(str, sorted(set(expected)))))
+
+
+# The cases pin triples only; this pins every case's extracted_text().
+# A different digest is a change in kernel output, not a test to update.
+TEXT_DIGEST = (
+    "c75b86cbaeecd845e3339ebc39c8b0f0c30e6d321245e6253ef62a18528651a0")
+
+
+def test_w3c_text_golden_digest():
+    digest = hashlib.sha256()
+    for case in CASES:
+        digest.update(repr((case["name"],
+                            _parse(case).extracted_text())).encode())
+    assert len(CASES) == 179
+    assert digest.hexdigest() == TEXT_DIGEST
