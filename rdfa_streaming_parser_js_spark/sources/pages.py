@@ -110,6 +110,14 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     )
 
 
+def _words(n: int) -> list[Column]:
+    """The text's first ``n`` space-split words; a word past the end is
+    the empty string (the DuckDB mirrors coalesce theirs the same way)."""
+    words = F.split(F.col("text"), " ")
+    return [F.coalesce(F.try_element_at(words, F.lit(i)), F.lit(""))
+            for i in range(1, n + 1)]
+
+
 RICH_URL_PREFIX = "http://pages.example.org/rich/"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
@@ -125,8 +133,7 @@ def rich_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     '|g_N')`` — which DuckDB can reconstruct (rich_expected_triples_sql).
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = F.split(F.col("text"), " ")
-    w1, w2, w3 = (F.element_at(words, i) for i in (1, 2, 3))
+    w1, w2, w3 = _words(3)
     url = F.concat(F.lit(RICH_URL_PREFIX), F.col("doc_id").cast("string"))
     html = F.concat(
         F.lit('<!DOCTYPE html><html><head><title>'), w1,
@@ -160,8 +167,8 @@ def rich_expected_triples_sql() -> str:
                             || '|g_1') AS b1,
              '_:' || sha256('{RICH_URL_PREFIX}' || CAST(doc_id AS VARCHAR)
                             || '|g_2') AS b2,
-             string_split(text, ' ')[2] AS w2,
-             string_split(text, ' ')[3] AS w3,
+             coalesce(string_split(text, ' ')[2], '') AS w2,
+             coalesce(string_split(text, ' ')[3], '') AS w3,
              'Author ' || source AS author_name
       FROM documents
     """
@@ -196,8 +203,7 @@ def xmlcopy_pages_from_documents(spark: SparkSession,
     and rdf:XMLLiteral serialization with deterministic alphabetical
     xmlns re-declaration (/root/reference/lib/RdfaParser.ts:123-139)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = F.split(F.col("text"), " ")
-    w1, w2, w3 = (F.element_at(words, i) for i in (1, 2, 3))
+    w1, w2, w3 = _words(3)
     url = F.concat(F.lit(XMLCOPY_URL_PREFIX),
                    F.col("doc_id").cast("string"))
     html = F.concat(
@@ -228,9 +234,9 @@ def xmlcopy_expected_triples_sql() -> str:
     base = f"""
       SELECT '{XMLCOPY_URL_PREFIX}' || CAST(doc_id AS VARCHAR) AS url,
              '{XMLCOPY_URL_PREFIX}' || CAST(doc_id AS VARCHAR) AS u,
-             string_split(text, ' ')[1] AS w1,
-             string_split(text, ' ')[2] AS w2,
-             string_split(text, ' ')[3] AS w3
+             coalesce(string_split(text, ' ')[1], '') AS w1,
+             coalesce(string_split(text, ' ')[2], '') AS w2,
+             coalesce(string_split(text, ' ')[3], '') AS w3
       FROM documents
     """
     return f"""
@@ -277,8 +283,7 @@ def role_time_pages_from_documents(spark: SparkSession,
     query can pin down deterministically.
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = F.split(F.col("text"), " ")
-    w1, w2 = F.element_at(words, 1), F.element_at(words, 2)
+    w1, w2 = _words(2)
     did = F.col("doc_id")
     ds = did.cast("string")
     url = F.concat(F.lit(ROLE_TIME_URL_PREFIX), ds)
@@ -331,8 +336,8 @@ def role_time_expected_triples_sql() -> str:
              '{RT_BASE_PREFIX}' || CAST(doc_id AS VARCHAR) || '/#main' AS rsubj,
              '{RT_BASE_PREFIX}' || CAST(doc_id AS VARCHAR) || '/rel.html' AS dsubj,
              '{EX_NS}item' || CAST(doc_id AS VARCHAR) AS it,
-             string_split(text, ' ')[1] AS w1,
-             string_split(text, ' ')[2] AS w2,
+             coalesce(string_split(text, ' ')[1], '') AS w1,
+             coalesce(string_split(text, ' ')[2], '') AS w2,
              lower(lang) AS lng,
              {tv_sql} AS tv,
              {dt_sql} AS tdt
