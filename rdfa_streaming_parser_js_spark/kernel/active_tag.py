@@ -3,16 +3,33 @@
 Semantic port of /root/reference/lib/IActiveTag.ts:7-30 and
 /root/reference/lib/IRdfaPattern.ts:7-16. One frame per open element; the
 stack of these frames is the complete RDFa state for a document.
+
+The top frame is always the next element's parent.  A skipped element's
+frame (``skip_element``) stands in for its parent: it carries the
+parent's ``subject``, ``object``, ``list_mapping``, ``local_base_iri``
+and ``incomplete_triples`` (and, with no @inlist of its own, the
+parent's ``inlist``, ``explicit_new_subject`` and
+``list_mapping_local``), keeps the lang, prefixes and vocab it declares
+itself, and emits no list at its close.
+
+A frame keeps one ``text`` list: the text segments below it and, while
+collecting an XMLLiteral, the serialized tags, marked as ``Markup``.
 """
 
 from __future__ import annotations
 
 
+class Markup(str):
+    """A serialized tag in a frame's ``text``; plain text is the rest."""
+
+    __slots__ = ()
+
+
 class ActiveTag:
     __slots__ = (
         "name", "prefixes_all", "prefixes_custom", "subject",
-        "explicit_new_subject", "predicates", "object", "text_with_tags",
-        "text_without_tags", "vocab", "language", "datatype",
+        "explicit_new_subject", "predicates", "object", "text", "vocab",
+        "language", "datatype",
         "collect_child_tags", "collect_child_tags_for_current_tag",
         "collected_pattern_tag", "interpret_object_as_time",
         "incomplete_triples", "inlist", "list_mapping",
@@ -27,8 +44,7 @@ class ActiveTag:
         self.explicit_new_subject = False
         self.predicates = None           # list[NamedNode] | None
         self.object = None               # NamedNode | BlankNode | True | None
-        self.text_with_tags = None       # list[str] | None
-        self.text_without_tags = None    # list[str] | None
+        self.text = None                 # list[str | Markup] | None
         self.vocab = None                # str | None
         self.language = None             # str | None
         self.datatype = None             # NamedNode | None

@@ -20,10 +20,11 @@ sha1(url || label) downstream.
 
 from __future__ import annotations
 
+from copy import copy
 from functools import cached_property
 from itertools import count
 
-from .active_tag import ActiveTag, RdfaPattern
+from .active_tag import ActiveTag, Markup, RdfaPattern
 from .contexts import INITIAL_CONTEXT, INITIAL_CONTEXT_XHTML
 from .profiles import RDFA_FEATURES, RdfaFeatures
 from .terms import BlankNode, NamedNode
@@ -38,9 +39,9 @@ _RDF_NIL = NamedNode(RDF + "nil")
 _RDFA_USES_VOCABULARY = NamedNode(RDFA + "usesVocabulary")
 
 # Attributes that make a tag RDFa-relevant: if none of these (and no
-# xmlns*) appear, steps 2-13 collapse to pure context inheritance plus
-# the skip-element rule, and ``on_tag_open`` takes a fast path.  Most
-# real-web markup (div/span/p/a-without-RDFa soup) lands there.
+# xmlns*) appear, steps 2-13 collapse to taking the parent's context,
+# and ``on_tag_open`` takes a fast path.  Most real-web markup
+# (div/span/p/a-without-RDFa soup) lands there.
 _RDFA_ATTRS = frozenset((
     "about", "resource", "href", "src", "typeof", "property", "rel",
     "rev", "content", "datatype", "datetime", "inlist", "vocab",
@@ -54,23 +55,24 @@ _NAME_TRIGGERED_TAGS = frozenset(("base", "time", "head", "body"))
 # fixture + fuzz corpora with this flag off and on.
 FAST_TAG_PATH = True
 
-
-_CLONE_SLOTS = ActiveTag.__slots__
 _INITIAL_CONTEXT_WITH_XHTML = {**INITIAL_CONTEXT, **INITIAL_CONTEXT_XHTML}
 
 
-def _clone_tag(tag: ActiveTag, donor: ActiveTag) -> ActiveTag:
-    """Shallow clone, sharing mutable members — mirrors the JS object
-    spread at /root/reference/lib/RdfaParser.ts:96-103 — with the
-    lang/prefixes/vocab that the skipped tags up to ``donor`` donate."""
-    out = ActiveTag.__new__(ActiveTag)
-    for slot in _CLONE_SLOTS:
-        setattr(out, slot, getattr(tag, slot))
-    out.language = donor.language
-    out.prefixes_all = donor.prefixes_all
-    out.prefixes_custom = donor.prefixes_custom
-    out.vocab = donor.vocab
-    return out
+def _stand_in(tag: ActiveTag, parent: ActiveTag) -> None:
+    """Make a skipped tag's frame stand in for its parent: the parent's
+    subject, object, lists, base and incomplete triples, by reference.
+    Without an @inlist of its own it also answers step 12's search for
+    the list owner as the parent would, so a frame kept for a pattern
+    replay finds the owner with no stack below it."""
+    tag.subject = parent.subject
+    tag.object = parent.object
+    tag.list_mapping = parent.list_mapping
+    tag.local_base_iri = parent.local_base_iri
+    tag.incomplete_triples = parent.incomplete_triples
+    if not tag.inlist:
+        tag.inlist = parent.inlist
+        tag.explicit_new_subject = parent.explicit_new_subject
+        tag.list_mapping_local = parent.list_mapping_local
 
 
 class RdfaExtractor:
@@ -126,23 +128,13 @@ class RdfaExtractor:
         util = self.util
         stack = self.stack
 
-        # Determine the parent tag, ignoring skipped tags; a skipped tag
-        # still donates lang/prefixes/vocab (RdfaParser.ts:89-104).  The
-        # parent is cloned only when they differ, or when the frame
-        # outlives this call (pattern collection, rdfa:copy).
-        parent_i = len(stack) - 1
-        while parent_i > 0 and stack[parent_i].skip_element:
-            parent_i -= 1
-        parent = stack[parent_i]
-        last = stack[-1]
-        skipped = last is not parent
-        if skipped and (last.language is not parent.language
-                        or last.prefixes_all is not parent.prefixes_all
-                        or last.prefixes_custom is not parent.prefixes_custom
-                        or last.vocab is not parent.vocab):
-            parent = _clone_tag(parent, last)
-            skipped = False
-
+        # The top frame is the parent.  A skipped tag's frame stands in
+        # for its own parent (``_stand_in``): it carries that parent's
+        # subject, object, lists, base and incomplete triples, while its
+        # own lang, prefixes and vocab reach its children, so the
+        # reference's walk back over skipped tags (RdfaParser.ts:89-104)
+        # is never needed.
+        parent = stack[-1]
         tag = ActiveTag()
         tag.name = name
         tag.collect_child_tags = parent.collect_child_tags
@@ -155,13 +147,13 @@ class RdfaExtractor:
 
         # Fast path: no RDFa-relevant attributes, no name-triggered
         # behavior, not the root element, not inside an XMLLiteral or an
-        # rdfa:Pattern collection.  Steps 2-4 reduce to inheritance;
-        # steps 5-13 reduce to the 5.2 no-attribute arm: inherit the
-        # parent object as subject and mark the element skipped
-        # (RdfaParser.ts:412-419), or — with no parent object — keep the
-        # parent subject and pass incomplete triples through.  Exactly
-        # equivalent to the full path below (differential-tested with
-        # FAST_TAG_PATH off/on over the fixture and fuzz corpora).
+        # rdfa:Pattern collection.  Steps 2-13 reduce to taking the
+        # parent's context by reference; with a parent object the 5.2
+        # no-attribute arm marks the element skipped (RdfaParser.ts:
+        # 412-419), and the frame is then a stand-in.  Without one it
+        # owns no list and completes no triple, so sharing is safe too.
+        # Exactly equivalent to the full path below (differential-tested
+        # with FAST_TAG_PATH off/on over the fixture and fuzz corpora).
         if (FAST_TAG_PATH and not tag.collect_child_tags
                 and len(stack) != 2
                 and name not in _NAME_TRIGGERED_TAGS
@@ -176,16 +168,8 @@ class RdfaExtractor:
                 tag.prefixes_custom = parent.prefixes_custom
                 tag.prefixes_all = parent.prefixes_all
                 tag.language = parent.language
-                parent_object = parent.object
-                if parent_object:
-                    tag.skip_element = True
-                    tag.subject = parent_object
-                    tag.object = parent_object
-                else:
-                    tag.subject = parent.subject
-                if parent.incomplete_triples:
-                    tag.incomplete_triples = (tag.incomplete_triples
-                                              + parent.incomplete_triples)
+                tag.skip_element = bool(parent.object)
+                _stand_in(tag, parent)
                 return
 
         # XMLLiteral/HTML collection: serialize the open tag, re-declaring
@@ -196,8 +180,8 @@ class RdfaExtractor:
                 if key not in attributes:
                     attributes[key] = parent.prefixes_custom[prefix]
             serialized = " ".join(f'{k}="{v}"' for k, v in attributes.items())
-            tag.text_with_tags = [
-                f"<{name} {serialized}>" if serialized else f"<{name}>"]
+            tag.text = [Markup(
+                f"<{name} {serialized}>" if serialized else f"<{name}>")]
             if features.skip_handling_xml_literal_children:
                 return
 
@@ -225,13 +209,14 @@ class RdfaExtractor:
             # Start a new pattern (RdfaParser.ts:176-187)
             if attributes.get("typeof") == "rdfa:Pattern":
                 tag.collected_pattern_tag = RdfaPattern(
-                    name, attributes, root_pattern=True,
-                    parent_tag=_clone_tag(parent, last) if skipped else parent)
+                    name, attributes, root_pattern=True, parent_tag=parent)
                 return
-            # Instantiate on rdfa:copy (RdfaParser.ts:190-201)
+            # Instantiate on rdfa:copy (RdfaParser.ts:190-201).  A copy
+            # under a skipped tag replays into a detached frame, as the
+            # reference's object spread does, so its text stays out.
             if attributes.get("property") == "rdfa:copy":
-                if skipped:
-                    parent = _clone_tag(parent, last)
+                if parent.skip_element:
+                    parent = copy(parent)
                 copy_id = (attributes.get("resource")
                            or attributes.get("href")
                            or attributes.get("src"))
@@ -529,8 +514,11 @@ class RdfaExtractor:
                                       + parent.incomplete_triples)
 
         # 13: save evaluation context
-        tag.subject = new_subject or parent.subject
-        tag.object = current_object_resource or new_subject
+        if tag.skip_element:
+            _stand_in(tag, parent)
+        else:
+            tag.subject = new_subject or parent.subject
+            tag.object = current_object_resource or new_subject
 
     # ------------------------------------------------------------------
     def on_text(self, data: str) -> None:
@@ -538,12 +526,10 @@ class RdfaExtractor:
         if self._copy_rdfa_patterns and tag.collected_pattern_tag is not None:
             tag.collected_pattern_tag.text.append(data)
             return
-        if tag.text_with_tags is None:
-            tag.text_with_tags = []
-        if tag.text_without_tags is None:
-            tag.text_without_tags = []
-        tag.text_with_tags.append(data)
-        tag.text_without_tags.append(data)
+        if tag.text is None:
+            tag.text = [data]
+        else:
+            tag.text.append(data)
 
     # ------------------------------------------------------------------
     def on_tag_close(self) -> None:
@@ -574,15 +560,15 @@ class RdfaExtractor:
             # (RdfaParser.ts:645-673)
             if tag.predicates is not None:
                 subject = util.get_resource_or_base_iri(tag.subject, tag)
-                if tag.collect_child_tags_for_current_tag:
-                    segments = tag.text_with_tags or []
-                    if (tag.collect_child_tags and parent is not None
-                            and parent.collect_child_tags):
-                        # Inside an XMLLiteral child with RDFa content:
-                        # drop the collected open-tag token
-                        segments = segments[1:]
-                else:
-                    segments = tag.text_without_tags or []
+                segments = tag.text or []
+                if not tag.collect_child_tags_for_current_tag:
+                    segments = [s for s in segments
+                                if type(s) is not Markup]
+                elif (tag.collect_child_tags and parent is not None
+                        and parent.collect_child_tags):
+                    # Inside an XMLLiteral child with RDFa content:
+                    # drop the collected open-tag token
+                    segments = segments[1:]
                 obj = util.create_literal("".join(segments), tag)
                 if tag.inlist:
                     for predicate in tag.predicates:
@@ -591,12 +577,11 @@ class RdfaExtractor:
                     for predicate in tag.predicates:
                         self.emit_triple(subject, predicate, obj)
                 if parent is None or parent.predicates is None:
-                    tag.text_without_tags = None
-                    tag.text_with_tags = None
+                    tag.text = None
 
             # 14: local list mappings → rdf:first/rest/nil chains
-            # (RdfaParser.ts:676-698)
-            if tag.object and tag.list_mapping:
+            # (RdfaParser.ts:676-698); a stand-in's list is its parent's
+            if tag.object and tag.list_mapping and not tag.skip_element:
                 subject = util.get_resource_or_base_iri(tag.object, tag)
                 for predicate_value, values in tag.list_mapping.items():
                     predicate = NamedNode(predicate_value)
@@ -619,22 +604,13 @@ class RdfaExtractor:
         self.stack.pop()
 
         # Serialize close tag for XMLLiteral collection
-        if tag.collect_child_tags and tag.text_with_tags is not None:
-            tag.text_with_tags.append(f"</{tag.name}>")
+        if tag.collect_child_tags and tag.text is not None:
+            tag.text.append(Markup(f"</{tag.name}>"))
 
         # Propagate text to the parent (RdfaParser.ts:705-723)
-        if tag.text_with_tags is not None and parent is not None:
-            if parent.text_with_tags is not None:
-                parent.text_with_tags = (parent.text_with_tags
-                                         + tag.text_with_tags)
-            else:
-                parent.text_with_tags = tag.text_with_tags
-        if tag.text_without_tags is not None and parent is not None:
-            if parent.text_without_tags is not None:
-                parent.text_without_tags = (parent.text_without_tags
-                                            + tag.text_without_tags)
-            else:
-                parent.text_without_tags = tag.text_without_tags
+        if tag.text is not None and parent is not None:
+            parent.text = (tag.text if parent.text is None
+                           else parent.text + tag.text)
 
     # ------------------------------------------------------------------
     def on_end(self) -> None:
@@ -752,7 +728,7 @@ class RdfaExtractor:
     # ------------------------------------------------------------------
     def extracted_text(self) -> str:
         """The document's accumulated text (the byte-identical-text
-        invariant): the root frame's textWithoutTags segments joined,
-        matching RdfaParser.ts:592-610 + :717-723 propagation."""
-        root = self.stack[0]
-        return "".join(root.text_without_tags or [])
+        invariant): the root frame's plain segments joined, matching
+        textWithoutTags in RdfaParser.ts:592-610 + :717-723."""
+        return "".join(s for s in self.stack[0].text or ()
+                       if type(s) is not Markup)

@@ -16,7 +16,7 @@ from rdfa_streaming_parser_js_spark.kernel.fast_driver import (
     FastHtmlSaxDriver)
 from rdfa_streaming_parser_js_spark.kernel.html_driver import HtmlSaxDriver
 from rdfa_streaming_parser_js_spark.kernel.isomorphism import (
-    flatten_triples)
+    flatten_triples, isomorphic)
 from rdfa_streaming_parser_js_spark.kernel.profiles import RdfaFeatures
 
 CASES = json.loads(
@@ -213,11 +213,14 @@ def test_fast_tag_path_fixture_parity(monkeypatch):
 
 
 def test_fast_tag_path_fuzz_parity(monkeypatch):
+    """Seeded soup, then the skipped-wrapper corpus: there the fast path
+    and step 13 each build the stand-in frames the other reads."""
     from rdfa_streaming_parser_js_spark.kernel import extractor as ex_mod
     rng = random.Random(20260819)
     opts = {"base_iri": "http://example.org/d/p"}
-    for trial in range(3000):
-        doc = _soup(rng)
+    docs = [_soup(rng) for _ in range(3000)]
+    docs += [_skipped_soup(rng) for _ in range(1000)]
+    for trial, doc in enumerate(docs):
         fast = _run(FastHtmlSaxDriver, doc, opts)
         monkeypatch.setattr(ex_mod, "FAST_TAG_PATH", False)
         slow = _run(FastHtmlSaxDriver, doc, opts)
@@ -354,3 +357,65 @@ def test_pattern_under_skipped_element_keeps_text(before, after, subject):
     assert (("iri", "http://example.org/" + subject),
             ("iri", "http://schema.org/name"),
             ("lit", "Pat", None, None)) in triples
+
+
+RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+
+
+def test_inlist_under_skipped_wrapper_emitted_once():
+    """A list built under a skipped wrapper is emitted once, by the
+    element that owns it; the wrapper's frame shares that list."""
+    doc = ("<div about='#s' prefix='ex: http://ex.example/'><div class='w'>"
+           "<b><span property='ex:l' inlist=''>a</span></b>"
+           "<span property='ex:l' inlist=''>b</span></div></div>")
+    triples, _ = _run(FastHtmlSaxDriver, doc,
+                      {"base_iri": "http://example.org/"})
+    s, rdf = ("iri", "http://example.org/#s"), RDF_NS
+    assert isomorphic(triples, [
+        (s, ("iri", "http://ex.example/l"), ("bnode", "a")),
+        (("bnode", "a"), ("iri", rdf + "first"), ("lit", "a", None, None)),
+        (("bnode", "a"), ("iri", rdf + "rest"), ("bnode", "b")),
+        (("bnode", "b"), ("iri", rdf + "first"), ("lit", "b", None, None)),
+        (("bnode", "b"), ("iri", rdf + "rest"), ("iri", rdf + "nil"))])
+
+_HANGING = ("<html><body><div about='#s' rel='ex:l' inlist='' "
+            "prefix='ex: http://ex.example/'><span class='w'>")
+_PATTERN = ("<div typeof='rdfa:Pattern' resource='#p' about='#x'>"
+            "<span property='ex:n'>N</span></div>")
+
+
+@pytest.mark.parametrize("doc,flushed", [
+    (_HANGING + _PATTERN + "</span></div></body></html>", True),
+    (_HANGING + _COPY + "</span></div>" + _PATTERN + "</body></html>",
+     False),
+    (_HANGING + _PATTERN + _COPY + "</span></div></body></html>", False),
+], ids=["flushed", "copied-later", "copied-at-once"])
+def test_pattern_under_skipped_wrapper_completes_hanging_list(doc, flushed):
+    """A pattern replayed into a skipped wrapper's frame, under a hanging
+    @rel with @inlist, completes that list as the wrapper's parent would,
+    also when the frame is replayed on its own at the document end."""
+    triples, _ = _run(FastHtmlSaxDriver, doc,
+                      {"base_iri": "http://example.org/"})
+    s, x = ("iri", "http://example.org/#s"), ("iri", "http://example.org/#x")
+    ex_l, nil = ("iri", "http://ex.example/l"), ("iri", RDF_NS + "nil")
+    expected = [
+        (s, ex_l, ("bnode", "a")),
+        (("bnode", "a"), ("iri", RDF_NS + "rest"), nil),
+        (x, ex_l, ("bnode", "b")),
+        (("bnode", "b"), ("iri", RDF_NS + "first"), x),
+        (("bnode", "b"), ("iri", RDF_NS + "rest"), nil),
+        (x, ("iri", "http://ex.example/n"), ("lit", "N", None, None))]
+    if flushed:
+        expected.append((x, ("iri", RDF_NS + "type"),
+                         ("iri", "http://www.w3.org/ns/rdfa#Pattern")))
+    assert isomorphic(triples, expected)
+
+
+def test_xml_literal_tags_stay_out_of_text():
+    """An XMLLiteral whose value is @content leaves its element's text,
+    serialized tags and all, to the ancestors; only the plain segments
+    reach the document text."""
+    doc = ("<p>a <span property='ex:x' datatype='rdf:XMLLiteral' "
+           "content='c'>b<b>bo</b></span> z</p>")
+    _, text = _run(FastHtmlSaxDriver, doc, {"base_iri": "http://e.org/"})
+    assert text == "a bbo z"
