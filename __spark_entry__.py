@@ -1474,7 +1474,7 @@ def q_kg_sparql_nested(spark, sf_dir):
     the REQUIRED solution while binding it only under its own nested
     OPTIONAL (late-month slice): ?d2 is maybe-UNBOUND in the group, so
     the enclosing join takes the bound-mask §18.3 compatibility path
-    (_compat_left_join) — a naive equi-join would drop ?wc for every
+    (bgp._compat_join) — a naive equi-join would drop ?wc for every
     early-month page, so the hash gate proves the exact semantics.
     Round 5 adds an OPTIONAL whose body holds a SUB-SELECT (§18.2
     inside a nested group, compiled to a lazy GroupSpec relation —
@@ -1840,7 +1840,7 @@ def q_kg_exists_filters(spark, sf_dir):
     demands a German peer in ITS source; a row that leaves it unbound
     leaves ?src FREE in the group (any German doc anywhere passes it).
     Compiled via the bound-mask decomposition in
-    ``bgp._subst_exists``; the oracle mirrors the two cases with an
+    ``bgp._compat_join``; the oracle mirrors the two cases with an
     explicit CASE over ``src IS NULL``."""
     from rdfa_streaming_parser_js_spark.operators.bgp import bgp_match
     t = _triples_cut(spark, sf_dir)

@@ -75,4 +75,4 @@ class RdfaPattern:
         self.children: list[RdfaPattern] = []
         self.referenced = False
         self.parent_tag = parent_tag
-        self.constructed_blank_nodes = None  # list[BlankNode] | None
+        self.constructed_blank_nodes: list = []  # shared by all copies

@@ -692,19 +692,17 @@ class RdfaExtractor:
         self.stack.append(parent_tag)
         pattern.referenced = True
 
-        if pattern.constructed_blank_nodes is not None:
-            nodes, i = pattern.constructed_blank_nodes, count()
-            self.util.blank_node_factory = lambda: nodes[next(i)]
-        else:
-            pattern.constructed_blank_nodes = []
-            constructed = pattern.constructed_blank_nodes
+        nodes, i = pattern.constructed_blank_nodes, count()
 
-            def recording_factory() -> BlankNode:
-                node = self._fresh_blank_node()
-                constructed.append(node)
-                return node
+        def replay_or_mint() -> BlankNode:
+            # the k-th node of this copy is the k-th any copy minted; a
+            # copy that needs more than earlier copies mints the rest
+            k = next(i)
+            if k == len(nodes):
+                nodes.append(self._fresh_blank_node())
+            return nodes[k]
 
-            self.util.blank_node_factory = recording_factory
+        self.util.blank_node_factory = replay_or_mint
 
         self.emit_pattern_copy_absolute(pattern, True, root_pattern_id)
 

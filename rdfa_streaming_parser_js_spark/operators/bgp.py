@@ -70,9 +70,9 @@ class GroupSpec:
     nested OPTIONAL, bound in only some UNION branches, or minted by
     BIND/VALUES (NULL on error / UNDEF) are maybe-unbound.  When a
     shared variable is maybe-unbound — on the group side, the
-    enclosing side, or BOTH — the enclosing OPTIONAL/MINUS join
-    decomposes by bound-mask on each side (:func:`_masks`) into exact
-    SPARQL §18.3 compatibility: still pure equi/anti joins, one
+    enclosing side, or BOTH — the enclosing join decomposes by
+    bound-mask on each side into exact SPARQL §18.3 compatibility
+    (:func:`_compat_join`): still pure equi/semi/anti joins, one
     partition per mask pair, merged per §18.3 (an unbound side takes
     the other side's value).  It raises only when the total mask
     fan-out would exceed 2^{_MASK_CAP} partitions — never silently
@@ -87,10 +87,8 @@ class GroupSpec:
     row, ``cols`` its full column tuple (used by composition guards
     without evaluating).  Relations join after the spec's own
     OPTIONAL/MINUS/FILTER/EXISTS (callers must guard that the orders
-    commute), via
-    §18.3-exact :func:`_compat_inner_join` when a shared variable is
-    maybe-unbound on either side.  A spec may consist of relations
-    only (``OPTIONAL { { SELECT ... } }``).
+    commute), by the same §18.3-exact :func:`_compat_join`.  A spec
+    may consist of relations only (``OPTIONAL { { SELECT ... } }``).
 
     ``graph_ranges`` names GRAPH variables that scoped no pattern
     (every contained pattern re-scoped by a nested GRAPH block): §13.3
@@ -594,103 +592,6 @@ def _apply_bind(solution: DataFrame, var: str, expr) -> DataFrame:
     return solution
 
 
-def _apply_exists(triples: DataFrame, solution: DataFrame,
-                  groups: "list[GroupSpec]", negate: bool,
-                  meta_vars: "frozenset[str]", certain: set) -> DataFrame:
-    """FILTER [NOT] EXISTS: each group keeps (or removes) the solutions
-    some group solution is compatible with on the shared variables —
-    a semi (anti) join, so multiplicities never change.  A group sharing
-    no variable — including a constant-only group — is a global probe:
-    EXISTS keeps everything iff the group matches at all, NOT EXISTS
-    empties the solution iff it does (the SPARQL §8.3.3 case where
-    NOT EXISTS and MINUS genuinely differ).
-
-    ``certain`` names the variables bound in EVERY enclosing solution
-    row; a shared variable outside it may be UNBOUND (an OPTIONAL /
-    partial-UNION / BIND / VALUES binding) and routes through
-    :func:`_subst_exists`, which is the EXACT SPARQL §8.1.1
-    substitution semantics for an unbound outer variable: EXISTS
-    substitutes only the variables the row actually binds (§18.6
-    ``substitute()``), so an unbound one stays a FREE variable of the
-    group and constrains nothing for that row."""
-    kind = "NOT EXISTS" if negate else "EXISTS"
-    for grp in groups:
-        group = _eval_spec(
-            triples, grp, constant_only_ok=True,
-            meta_vars=frozenset(v for v in meta_vars
-                                if v not in solution.columns))
-        shared = [v for v in group.columns
-                  if v != "_gate" and v in solution.columns
-                  and not v.endswith(META_SUFFIXES)]
-        if shared:
-            _check_join_keys(grp, shared, kind)
-            unc_s = [v for v in shared if v not in certain]
-            if unc_s:
-                _check_fan_out(kind, unc_s, [])
-                solution = _subst_exists(solution, group, shared,
-                                         unc_s, negate)
-            else:
-                solution = solution.join(group.select(*shared),
-                                         on=shared,
-                                         how="left_anti" if negate
-                                         else "left_semi")
-        else:
-            gate = group.limit(1).select(F.lit(1).alias("_exists"))
-            if negate:
-                solution = solution.join(F.broadcast(gate), F.lit(True),
-                                         "left_anti")
-            else:
-                solution = (solution.crossJoin(F.broadcast(gate))
-                            .drop("_exists"))
-    return solution
-
-
-def _subst_exists(solution: DataFrame, group: DataFrame,
-                  shared: list, unc_s: list, negate: bool) -> DataFrame:
-    """SPARQL §8.1.1-exact FILTER [NOT] EXISTS when a shared variable
-    may be UNBOUND in the ENCLOSING solution.  EXISTS evaluates the
-    group with the row's bindings substituted in (§18.6) — a variable
-    the row does NOT bind is left free in the group, so it constrains
-    nothing for that row (it is NOT "never matches", and it is NOT the
-    §18.3 compatibility reading either).  That is expressible exactly
-    by partitioning the solution by bound-mask over the maybe-unbound
-    shared variables: each part semi (anti) joins the group on the
-    variables that part actually binds, and the all-unbound part
-    degenerates to the global non-emptiness probe.  Partitions are
-    disjoint, so bag multiplicities are preserved exactly.
-
-    Group-side unboundness is NOT handled here — under substitution
-    the group's own solution relation is not sufficient evidence (a
-    substituted OPTIONAL can never fail the group), so
-    :func:`_check_join_keys` keeps raising for it upstream.
-
-    Both inputs are materialized once: the masks consume the solution
-    O(2^k) times and the group per-mask (tracked; release_tracked()
-    frees the blocks)."""
-    from rdfa_streaming_parser_js_spark.operators.storage import (
-        checkpoint, track)
-    solution = track(checkpoint(solution))
-    group = track(checkpoint(group))
-    parts = []
-    for s_nulls, sol_s in _masks(solution, unc_s):
-        keys = [v for v in shared if v not in s_nulls]
-        if keys:
-            j = sol_s.join(group.select(*keys), on=keys,
-                           how="left_anti" if negate else "left_semi")
-        else:
-            gate = group.limit(1).select(F.lit(1).alias("_exists"))
-            if negate:
-                j = sol_s.join(F.broadcast(gate), F.lit(True),
-                               "left_anti")
-            else:
-                j = sol_s.crossJoin(F.broadcast(gate)).drop("_exists")
-        parts.append(j)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def bgp_match(triples: DataFrame, patterns: list[Pattern],
               select: list[str] | None = None,
               filters: list[str] | None = None,
@@ -809,9 +710,8 @@ def bgp_match(triples: DataFrame, patterns: list[Pattern],
     variables that may be UNBOUND — in the group, in the enclosing
     solution, or both — decompose by bound-mask pairs into exact
     SPARQL §18.3 compatibility (unbound matches anything; an unbound
-    side takes the other side's value — see :func:`_compat_left_join`
-    / :func:`_compat_minus`); only a mask fan-out beyond 2^4
-    partitions raises.
+    side takes the other side's value — see :func:`_compat_join`);
+    only a mask fan-out beyond 2^4 partitions raises.
 
     ``exists`` / ``not_exists``: SPARQL FILTER (NOT) EXISTS — each
     ``(patterns, filters)`` group keeps (removes) the solutions that
@@ -827,7 +727,7 @@ def bgp_match(triples: DataFrame, patterns: list[Pattern],
     semantics: a row that binds the variable correlates on it, a row
     that leaves it unbound leaves it FREE in the group (it constrains
     nothing for that row) — decomposed by bound-mask in
-    :func:`_subst_exists`, capped at 2^4 partitions.  A shared
+    :func:`_compat_join`, capped at 2^4 partitions.  A shared
     variable maybe-unbound in the GROUP's own solutions still raises
     (substitution and compatibility genuinely diverge there — bind it
     in the group's required patterns).
@@ -872,23 +772,17 @@ def _as_specs(entries) -> "list[GroupSpec]":
     return out
 
 
-def _check_join_keys(grp, shared: list, kind: str) -> None:
-    """Raise when a nested-group equi-join key can be NULL (unbound) in
-    the GROUP's solutions — NULL never equi-joins, but SPARQL says an
-    unbound variable is compatible with ANYTHING, so silently joining
-    would compute non-SPARQL answers.  OPTIONAL and MINUS no longer
-    come here (they decompose by bound-mask, :func:`_compat_left_join`
-    / :func:`_compat_minus`); EXISTS keeps the guard for GROUP-side
-    unboundness because its SPARQL semantics is SUBSTITUTION, not
-    compatibility — the group's own solution relation is not
-    sufficient evidence (a substituted OPTIONAL can never fail the
-    group), so masking the group side would pick one of two
-    non-equivalent readings silently.  ENCLOSING-side unboundness is
-    exact under substitution and handled by :func:`_subst_exists`."""
-    unsafe = sorted(v for v in shared if v not in _certain_vars(grp))
-    if unsafe:
+def _check_join_keys(kind: str, unc_g: list) -> None:
+    """Raise when an EXISTS group shares a variable its own solutions
+    may leave unbound.  EXISTS is SUBSTITUTION (§8.1.1), not
+    compatibility: the group's solution relation is not sufficient
+    evidence (a substituted OPTIONAL can never fail the group), so
+    masking the group side would pick one of two non-equivalent
+    readings silently.  Enclosing-side unboundness is exact under
+    substitution (:func:`_compat_join`)."""
+    if unc_g:
         raise ValueError(
-            f"{kind} group shares variable(s) {unsafe} with the "
+            f"{kind} group shares variable(s) {sorted(unc_g)} with the "
             "enclosing solution, but they are not bound in every group "
             "solution (nested OPTIONAL / partial UNION branch / BIND / "
             "VALUES) — an unbound variable is compatible with anything "
@@ -903,9 +797,7 @@ _MASK_CAP = 4  # ≤ 2^4 mask-pair partitions; beyond this the plan
 def _check_fan_out(kind: str, unc_s: list, unc_g: list) -> None:
     """Raise when the bound-mask decomposition over the maybe-unbound
     shared variables of the enclosing solution (``unc_s``) and of the
-    group (``unc_g``) would fan out beyond 2^_MASK_CAP partitions —
-    the one cap every compatibility join and EXISTS substitution
-    shares."""
+    group (``unc_g``) would fan out beyond 2^_MASK_CAP partitions."""
     if len(unc_s) + len(unc_g) > _MASK_CAP:
         raise ValueError(
             f"{kind} group shares {len(unc_s) + len(unc_g)} "
@@ -929,155 +821,86 @@ def _masks(df: DataFrame, uncertain: list):
         yield nulls, part
 
 
-def _compat_left_join(solution: DataFrame, group: DataFrame,
-                      shared: list, unc_sol: list,
-                      unc_grp: list) -> DataFrame:
-    """SPARQL §18.3-exact LeftJoin when shared variables may be
-    unbound on EITHER side: both sides are partitioned by which of
-    their maybe-unbound shared variables each row actually binds;
-    every mask pair equi-joins on the variables bound on BOTH sides
-    (an unbound variable constrains nothing), merging per §18.3 —
-    a variable unbound on one side takes the other side's value, one
-    unbound on both stays NULL.  Solutions compatible with NO group
-    row survive bare with NULL-extended group columns (the Diff
-    half).  Every join is an equi/anti join — no theta-join blowup;
-    an empty key set is the one SPARQL-mandated cross join.
+_KIND = {"inner": "sub-SELECT", "left": "OPTIONAL", "minus": "MINUS",
+         "left_semi": "EXISTS", "left_anti": "NOT EXISTS"}
 
-    Both inputs are eagerly materialized first: the mask pairs
-    consume each side O(2^k) times, and re-evaluating a deep
-    enclosing-solution DAG per consumer costs far more than one
-    checkpoint (tracked — the lazy result still references the
-    blocks; release_tracked() frees them)."""
-    from rdfa_streaming_parser_js_spark.operators.storage import (
-        checkpoint, track)
-    solution = track(checkpoint(solution))
-    group = track(checkpoint(group))
-    group_only = [c for c in group.columns if c not in solution.columns]
-    out_cols = solution.columns + group_only
+
+def _compat_join(solution: DataFrame, group: DataFrame, how: str,
+                 certain_s, certain_g) -> DataFrame:
+    """Join a nested group's solutions into ``solution`` with exact
+    SPARQL semantics; ``how`` names the operator:
+
+    - ``inner``: Join (§18.3), the §18.2 sub-SELECT composition;
+    - ``left``: LeftJoin, OPTIONAL — the inner join plus the Diff: the
+      solutions no group row is compatible with, NULL-extended;
+    - ``minus``: Minus (§18.5) removes a solution iff some group row is
+      compatible AND shares a bound variable with it, so a mask pair
+      with no key removes nothing (the §8.3.3 disjoint-domain rule);
+    - ``left_semi`` / ``left_anti``: FILTER EXISTS / NOT EXISTS, which
+      substitute the row's bindings into the group (§8.1.1, §18.6): a
+      variable the row leaves unbound stays FREE in the group, so a
+      pair with no key is a global non-emptiness probe of the group.
+      Group-side unboundness raises (:func:`_check_join_keys`).
+
+    ``certain_s`` / ``certain_g`` name the variables bound in every row
+    of each side.  A shared variable outside them may be unbound (an
+    OPTIONAL / partial-UNION / BIND / VALUES binding) and partitions
+    its side by bound mask (:func:`_masks`).  Each mask pair joins on
+    the variables bound on both sides (an unbound variable constrains
+    nothing); a variable bound on one side takes that side's value and
+    one bound on neither stays NULL.  Partitions are disjoint, so bag
+    multiplicities add up exactly once, and every join is an equi,
+    semi or anti join.  With no maybe-unbound shared variable there is
+    one mask pair: one plain join, no Union, no checkpoint.  The mask
+    fan-out is capped by :func:`_check_fan_out`."""
+    kind = _KIND[how]
+    shared = [v for v in group.columns if v in solution.columns
+              and v != "_gate" and not v.endswith(META_SUFFIXES)]
+    if how == "left" and not shared:
+        raise ValueError(
+            "OPTIONAL group shares no variable with the required "
+            f"group: {group.columns}")
+    unc_s = [v for v in shared if v not in certain_s]
+    unc_g = [v for v in shared if v not in certain_g]
+    if how in ("left_semi", "left_anti"):
+        _check_join_keys(kind, unc_g)
+    _check_fan_out(kind, unc_s, unc_g)
+    merge = how in ("inner", "left")
+    # against one group mask a left join is one left join per solution
+    # mask; against several, their inner joins plus the Diff, which
+    # anti-joins each solution mask with every group mask like MINUS
+    diff = how == "left" and bool(unc_g)
+    filtering = not merge or diff
+    filt = how if how in ("left_semi", "left_anti") else "left_anti"
+    # A side that more than one partition plan reads is checkpointed
+    # once (tracked: release_tracked() frees it) instead of being
+    # re-evaluated per read.  Every mask pair reads the group; a
+    # merging join's pairs read the solution too, while a filtering
+    # join chains the group masks onto one read per solution mask.
+    n_s, n_g = 2 ** len(unc_s), 2 ** len(unc_g)
+    if n_s * n_g > 1:
+        from rdfa_streaming_parser_js_spark.operators.storage import (
+            checkpoint, track)
+        if merge or n_s > 1:
+            solution = track(checkpoint(solution))
+        group = track(checkpoint(group))
     parts = []
-    for s_nulls, sol_s in _masks(solution, unc_sol):
-        unmatched = sol_s
-        for g_nulls, grp_g in _masks(group, unc_grp):
-            grp_g = grp_g.drop(*g_nulls)
-            keys = [v for v in shared
-                    if v not in s_nulls and v not in g_nulls]
-            # a var unbound on the sol side but bound in the group
-            # takes the GROUP's value — drop sol's NULL column so the
-            # join result carries the group's
-            left = sol_s.drop(*[v for v in s_nulls
-                                if v not in g_nulls])
-            if keys:
-                j = left.join(grp_g, on=keys, how="inner")
-                unmatched = unmatched.join(grp_g.select(*keys),
-                                           on=keys, how="left_anti")
-            else:
-                j = left.crossJoin(grp_g)
-                unmatched = unmatched.join(
-                    grp_g.select(F.lit(1).alias("_m")), F.lit(True),
-                    "left_anti")
-            for v in s_nulls:  # unbound on BOTH sides stays NULL
-                if v in g_nulls:
-                    j = j.withColumn(
-                        v, F.lit(None).cast(group.schema[v].dataType))
-            parts.append(j.select(*out_cols))
-        bare = unmatched
-        for c in group_only:
-            bare = bare.withColumn(
-                c, F.lit(None).cast(group.schema[c].dataType))
-        parts.append(bare.select(*out_cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _compat_minus(solution: DataFrame, group: DataFrame,
-                  shared: list, unc_sol: list,
-                  unc_grp: list) -> DataFrame:
-    """SPARQL §18.5 Minus when shared variables may be unbound on
-    either side: a solution is removed iff SOME group row is
-    compatible AND their domains overlap.  Per mask pair the overlap
-    is exactly the pair's join keys, so an empty key set (disjoint
-    row-level domains, the §8.3.3 rule) removes nothing and every
-    other pair is one anti-join.  ``group`` is materialized once."""
-    from rdfa_streaming_parser_js_spark.operators.storage import (
-        checkpoint, track)
-    group = track(checkpoint(group))
-    kept = []
-    for s_nulls, sol_s in _masks(solution, unc_sol):
-        for g_nulls, grp_g in _masks(group, unc_grp):
-            keys = [v for v in shared
-                    if v not in s_nulls and v not in g_nulls]
-            if keys:
-                sol_s = sol_s.join(grp_g.select(*keys), on=keys,
-                                   how="left_anti")
-        kept.append(sol_s)
-    out = kept[0]
-    for p in kept[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _compat_inner_join(solution: DataFrame, group: DataFrame,
-                       shared: list, unc_sol: list,
-                       unc_grp: list) -> DataFrame:
-    """SPARQL §18.3-exact Join when shared variables may be unbound on
-    EITHER side — the sub-SELECT composition path (§18.2 joins the
-    sub-query's multiset into the group).  Identical mask-pair
-    decomposition to :func:`_compat_left_join`, minus the Diff half:
-    a solution compatible with no group row is dropped (Join, not
-    LeftJoin).  Every pair is an equi join on the variables bound on
-    BOTH sides; an empty key set is the SPARQL-mandated compatibility
-    cross join (an unbound variable constrains nothing), merged per
-    §18.3 — a variable unbound on one side takes the other side's
-    value, one unbound on both stays NULL."""
-    from rdfa_streaming_parser_js_spark.operators.storage import (
-        checkpoint, track)
-    solution = track(checkpoint(solution))
-    group = track(checkpoint(group))
-    group_only = [c for c in group.columns if c not in solution.columns]
-    out_cols = solution.columns + group_only
-    parts = []
-    for s_nulls, sol_s in _masks(solution, unc_sol):
-        for g_nulls, grp_g in _masks(group, unc_grp):
-            grp_g = grp_g.drop(*g_nulls)
-            keys = [v for v in shared
-                    if v not in s_nulls and v not in g_nulls]
-            left = sol_s.drop(*[v for v in s_nulls
-                                if v not in g_nulls])
-            j = (left.join(grp_g, on=keys, how="inner") if keys
-                 else left.crossJoin(grp_g))
-            for v in s_nulls:  # unbound on BOTH sides stays NULL
-                if v in g_nulls:
-                    j = j.withColumn(
-                        v, F.lit(None).cast(group.schema[v].dataType))
-            parts.append(j.select(*out_cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def join_relation(solution: DataFrame, rel: DataFrame,
-                  certain_sol, certain_rel) -> DataFrame:
-    """Join a pre-compiled solution relation (a §18.2 sub-SELECT
-    multiset) into ``solution`` with exact SPARQL §18.3 semantics.
-    ``certain_sol`` / ``certain_rel`` are the variables bound in every
-    row of each side; a shared variable outside them is maybe-unbound
-    and routes the join through the bound-mask machinery
-    (:func:`_compat_inner_join`) instead of a plain equi join.  No
-    shared variable at all is the SPARQL-mandated cross join.  Raises
-    beyond the 2^{_MASK_CAP} mask fan-out, like every compat join."""
-    shared = [c for c in rel.columns if c in solution.columns
-              and not c.endswith(META_SUFFIXES)]
-    if not shared:
-        return solution.crossJoin(rel)
-    unc_s = [v for v in shared if v not in certain_sol]
-    unc_g = [v for v in shared if v not in certain_rel]
-    if not unc_s and not unc_g:
-        return solution.join(rel, on=shared, how="inner")
-    _check_fan_out("sub-SELECT", unc_s, unc_g)
-    return _compat_inner_join(solution, rel, shared, unc_s, unc_g)
+    for s_nulls, sol_s in _masks(solution, unc_s):
+        kept = sol_s
+        for g_nulls, grp_g in _masks(group, unc_g):
+            keys = [v for v in shared if v not in s_nulls + g_nulls]
+            if merge:
+                left = sol_s.drop(*[v for v in s_nulls if v not in g_nulls])
+                parts.append(left.join(grp_g.drop(*g_nulls), keys or None,
+                                       "inner" if diff else how))
+            if filtering and keys:
+                kept = kept.join(grp_g.select(*keys), keys, filt)
+            elif filtering and how != "minus":
+                gate = grp_g.limit(1).select(F.lit(1).alias("_exists"))
+                kept = kept.join(F.broadcast(gate), F.lit(True), filt)
+        if filtering:
+            parts.append(kept)
+    return bgp_union(*parts)
 
 
 def _eval_spec(triples: DataFrame, spec: GroupSpec,
@@ -1135,33 +958,19 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     for var, expr in spec.binds or ():
         solution = _apply_bind(solution, var, expr)
 
-    def _join_side(grp, kind):
-        """Evaluate one OPTIONAL/MINUS group against the current
-        solution → (group relation, shared variables, maybe-unbound
-        shared variables on the solution side and on the group side,
-        which decompose by bound-mask)."""
+    def nested(solution, grp, how):
+        """Evaluate one OPTIONAL/MINUS/EXISTS group and join it into
+        the current solution."""
         group = _eval_spec(
             triples, grp,
             meta_vars=frozenset(v for v in meta_vars
-                                if v not in solution.columns))
-        shared = [v for v in group.columns if v in solution.columns
-                  and not v.endswith(META_SUFFIXES)]
-        unc_s = [v for v in shared if v not in certain]
-        unc_g = [v for v in shared if v not in _certain_vars(grp)]
-        _check_fan_out(kind, unc_s, unc_g)
-        return group, shared, unc_s, unc_g
+                                if v not in solution.columns),
+            constant_only_ok=how in ("left_semi", "left_anti"))
+        return _compat_join(solution, group, how, certain,
+                            _certain_vars(grp))
 
     for grp in spec.optionals or ():
-        group, shared, unc_s, unc_g = _join_side(grp, "OPTIONAL")
-        if not shared:
-            raise ValueError(
-                "OPTIONAL group shares no variable with the required "
-                f"group: {grp.patterns}")
-        if unc_s or unc_g:
-            solution = _compat_left_join(solution, group, shared,
-                                         unc_s, unc_g)
-        else:
-            solution = solution.join(group, on=shared, how="left")
+        solution = nested(solution, grp, "left")
     # BINDs that reference OPTIONAL-introduced variables apply after
     # the left joins that bind them (§18.2.2.6 syntax order — the
     # ``OPTIONAL {...} BIND(COALESCE(?x, d) AS ?y)`` idiom), before
@@ -1169,25 +978,14 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     for var, expr in spec.late_binds or ():
         solution = _apply_bind(solution, var, expr)
     for grp in spec.minus or ():
-        group, shared, unc_s, unc_g = _join_side(grp, "MINUS")
-        # disjoint-domain MINUS is a no-op (SPARQL §8.3.3)
-        if unc_s or unc_g:
-            solution = _compat_minus(solution, group, shared,
-                                     unc_s, unc_g)
-        elif shared:
-            solution = solution.join(group.select(*shared),
-                                     on=shared, how="left_anti")
+        solution = nested(solution, grp, "minus")
     if not spec.relations:
         for expr in spec.filters or ():
             solution = solution.filter(F.expr(expr))
-    if spec.exists:
-        solution = _apply_exists(triples, solution, spec.exists,
-                                 negate=False, meta_vars=meta_vars,
-                                 certain=certain)
-    if spec.not_exists:
-        solution = _apply_exists(triples, solution, spec.not_exists,
-                                 negate=True, meta_vars=meta_vars,
-                                 certain=certain)
+    for grp in spec.exists or ():
+        solution = nested(solution, grp, "left_semi")
+    for grp in spec.not_exists or ():
+        solution = nested(solution, grp, "left_anti")
     # §18.2 sub-SELECT relations join after the group's own members
     # (callers guard that the join orders commute: every variable the
     # spec's O-entries share with a relation's columns must be certain
@@ -1196,7 +994,8 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     # with relations present they apply here; filters commute with
     # the semi/anti EXISTS joins above.
     for thunk, cert, _cols in relations:
-        solution = join_relation(solution, thunk(triples), certain, cert)
+        solution = _compat_join(solution, thunk(triples), "inner",
+                                certain, cert)
         certain |= set(cert)
     if spec.relations:
         for expr in spec.filters or ():
@@ -1395,26 +1194,8 @@ def entity_table(triples: DataFrame, type_iri: str,
     consumers join against (the reference leaves it to the rdfjs store;
     here it is one pivoted aggregation).
     """
-    if not properties:
-        raise ValueError("entity_table requires at least one property")
-    pred_to_col = {iri: name for name, iri in properties.items()}
-    typed = (triples
-             .filter((F.col("pred") ==
-                      "http://www.w3.org/1999/02/22-rdf-syntax-ns#type")
-                     & (F.col("obj_value") == type_iri))
-             .select("subj").distinct())
-    props = (triples
-             .filter(F.col("pred").isin(list(pred_to_col)))
-             .join(typed, "subj")
-             .groupBy("subj")
-             .pivot("pred", list(pred_to_col))
-             .agg(F.min("obj_value")))
-    renamed = props.select(
-        "subj", *[F.col(f"`{iri}`").alias(name)
-                  for iri, name in pred_to_col.items()])
-    # subjects with the type but none of the properties still get a row
-    return (typed.join(renamed, "subj", "left")
-            .select("subj", *pred_to_col.values()))
+    return _pivot_entities(triples, type_iri, properties, "entity_table",
+                           F.min("obj_value"), lambda c: c)
 
 
 def entity_table_multi(triples: DataFrame, type_iri: str,
@@ -1428,10 +1209,24 @@ def entity_table_multi(triples: DataFrame, type_iri: str,
     aggregation — one shuffle on ``subj`` regardless of column count;
     the sort is per-row (array_sort), byte-stable at any parallelism.
     """
+    # collect_set over zero rows yields [] — normalize to NULL so a
+    # subject lacking one property matches one lacking all of them
+    return _pivot_entities(triples, type_iri, properties,
+                           "entity_table_multi",
+                           F.array_sort(F.collect_set("obj_value")),
+                           lambda c: F.when(F.size(c) > 0, c))
+
+
+def _pivot_entities(triples: DataFrame, type_iri: str,
+                    properties: dict[str, str], name: str, agg,
+                    finish) -> DataFrame:
+    """The typed-subject slice, one pivoted ``agg`` per property
+    (``finish`` maps each pivoted column) and the left join back, so a
+    subject with the type but none of the properties still gets a
+    row."""
     if not properties:
-        raise ValueError("entity_table_multi requires at least one "
-                         "property")
-    pred_to_col = {iri: name for name, iri in properties.items()}
+        raise ValueError(f"{name} requires at least one property")
+    pred_to_col = {iri: col for col, iri in properties.items()}
     typed = (triples
              .filter((F.col("pred") ==
                       "http://www.w3.org/1999/02/22-rdf-syntax-ns#type")
@@ -1442,12 +1237,9 @@ def entity_table_multi(triples: DataFrame, type_iri: str,
              .join(typed, "subj")
              .groupBy("subj")
              .pivot("pred", list(pred_to_col))
-             .agg(F.array_sort(F.collect_set("obj_value"))))
-    # collect_set over zero rows yields [] — normalize to NULL so a
-    # subject lacking one property matches one lacking all of them
+             .agg(agg))
     renamed = props.select(
-        "subj", *[F.when(F.size(F.col(f"`{iri}`")) > 0,
-                         F.col(f"`{iri}`")).alias(name)
-                  for iri, name in pred_to_col.items()])
+        "subj", *[finish(F.col(f"`{iri}`")).alias(col)
+                  for iri, col in pred_to_col.items()])
     return (typed.join(renamed, "subj", "left")
             .select("subj", *pred_to_col.values()))

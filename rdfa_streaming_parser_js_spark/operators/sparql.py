@@ -439,22 +439,22 @@ _SCALAR_FNS = {
     # type-error rule).  SECONDS returns the decimal seconds; TZ the
     # 'Z' / '±HH:MM' designator or '' when absent (§17.4.5.8).
     "year": lambda a: (
-        f"CAST(nullif(regexp_extract({a[0]}, "
+        f"TRY_CAST(nullif(regexp_extract({a[0]}, "
         f"'^(-?\\\\d{{4,}})-', 1), '') AS INT)"),
     "month": lambda a: (
-        f"CAST(nullif(regexp_extract({a[0]}, "
+        f"TRY_CAST(nullif(regexp_extract({a[0]}, "
         f"'^-?\\\\d{{4,}}-(\\\\d{{2}})-', 1), '') AS INT)"),
     "day": lambda a: (
-        f"CAST(nullif(regexp_extract({a[0]}, "
+        f"TRY_CAST(nullif(regexp_extract({a[0]}, "
         f"'^-?\\\\d{{4,}}-\\\\d{{2}}-(\\\\d{{2}})', 1), '') AS INT)"),
     "hours": lambda a: (
-        f"CAST(nullif(regexp_extract({a[0]}, "
+        f"TRY_CAST(nullif(regexp_extract({a[0]}, "
         f"'T(\\\\d{{2}}):', 1), '') AS INT)"),
     "minutes": lambda a: (
-        f"CAST(nullif(regexp_extract({a[0]}, "
+        f"TRY_CAST(nullif(regexp_extract({a[0]}, "
         f"'T\\\\d{{2}}:(\\\\d{{2}})', 1), '') AS INT)"),
     "seconds": lambda a: (
-        f"CAST(nullif(regexp_extract({a[0]}, "
+        f"TRY_CAST(nullif(regexp_extract({a[0]}, "
         f"'T\\\\d{{2}}:\\\\d{{2}}:(\\\\d{{2}}(?:\\\\.\\\\d+)?)', 1), "
         f"'') AS DOUBLE)"),
     "tz": lambda a: (
@@ -1060,11 +1060,13 @@ class _Parser:
             rhs, rkind = self._add_expr()
             lhs = sql
             # SPARQL numeric comparison over lexical columns: cast the
-            # bare-variable side when the other side is a number.
+            # bare-variable side when the other side is a number.  A
+            # non-numeric value is a type error (NULL), which drops the
+            # row (§17.2) instead of aborting the query under ANSI.
             if rkind == "num" and kind == "var":
-                lhs = f"CAST({lhs} AS DOUBLE)"
+                lhs = f"TRY_CAST({lhs} AS DOUBLE)"
             elif kind == "num" and rkind == "var":
-                rhs = f"CAST({rhs} AS DOUBLE)"
+                rhs = f"TRY_CAST({rhs} AS DOUBLE)"
             return f"({lhs} {self._REL_OPS[t.text]} {rhs})", "other"
         negated = False
         if (self.peek().kind == "NAME" and self.peek().text.lower() == "not"
@@ -1268,7 +1270,7 @@ class _Parser:
                     "the variables and COUNT(DISTINCT ?v) instead")
             self.expect_op(")")
             return "count(1)"
-        arg = self.parse_expr()
+        arg, kind = self._or_expr()
         sep = " "
         if fn == "group_concat" and self.take_op(";"):
             self.expect_kw("separator")
@@ -1286,6 +1288,13 @@ class _Parser:
                     f"{_sql_str(sep)})")
         if fn == "sample":
             return f"min({d}{arg})"
+        if fn in ("sum", "avg") and kind == "var":
+            # a lexical column: a group holding a non-numeric value is
+            # unbound (the aggregate is a type error, §18.5.1) instead
+            # of an ANSI cast error that aborts the query
+            num = f"TRY_CAST({arg} AS DOUBLE)"
+            return (f"CASE WHEN count_if({arg} IS NOT NULL AND {num} IS "
+                    f"NULL) = 0 THEN {fn}({d}{num}) END")
         return f"{fn}({d}{arg})"
 
     def _parse_select_body(self) -> ParsedQuery:

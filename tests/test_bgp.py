@@ -495,3 +495,29 @@ def test_bind_var_joins_with_optional(spark):
         select=["x", "n", "y"])
     rows = {(r.x, r.n, r.y) for r in got.collect()}
     assert rows == {("d1", "alpha", "d1"), ("d2", "zz", None)}
+
+
+@pytest.mark.parametrize("body,join", [
+    ("OPTIONAL { ?x schema:isPartOf ?s }", "LeftOuter"),
+    ("MINUS { ?x schema:isPartOf ?s }", "LeftAnti"),
+    ("FILTER EXISTS { ?x schema:isPartOf ?s }", "LeftSemi"),
+    ("FILTER NOT EXISTS { ?x schema:isPartOf ?s }", "LeftAnti"),
+    ("{ SELECT ?x ?s WHERE { ?x schema:isPartOf ?s } }", "Inner"),
+], ids=["optional", "minus", "exists", "not-exists", "sub-select"])
+def test_certain_shared_variables_compile_to_one_plain_join(spark, body,
+                                                            join):
+    """Shared variables bound in every row of both sides make one
+    bound-mask pair: the plan is one plain join, with no Union of mask
+    partitions and no checkpoint."""
+    from rdfa_streaming_parser_js_spark.operators.sparql import (
+        sparql_query)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    got = sparql_query(_kg(spark), (
+        f"PREFIX schema: <{S}>\n"
+        f"SELECT * WHERE {{ ?x a schema:Article . {body} }}"))
+    got.collect()
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan
+    assert plan.count("Join ") == 1 and f"Join {join}" in plan
+    assert jsc.getPersistentRDDs().size() == before

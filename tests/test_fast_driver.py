@@ -411,6 +411,31 @@ def test_pattern_under_skipped_wrapper_completes_hanging_list(doc, flushed):
     assert isomorphic(triples, expected)
 
 
+@pytest.mark.parametrize("profile", ["html", "xhtml"])
+def test_later_copy_mints_the_blank_nodes_earlier_copies_did_not(profile):
+    """Copies of a pattern share its blank nodes.  A later copy that
+    needs more of them than the first one minted (here: the one that
+    completes a hanging @inlist) reuses the recorded nodes and mints
+    the rest; the page is not lost."""
+    doc = ("<div prefix='ex: http://ex.example/'><div about='#a'>" + _COPY
+           + "</div><div about='#s' rel='ex:l' inlist=''>" + _COPY
+           + "</div>" + _PATTERN + "</div>")
+    triples, _ = _run(FastHtmlSaxDriver, doc,
+                      {"base_iri": "http://example.org/",
+                       "profile": profile})
+    s, x = ("iri", "http://example.org/#s"), ("iri", "http://example.org/#x")
+    ex_l, nil = ("iri", "http://ex.example/l"), ("iri", RDF_NS + "nil")
+    name = (x, ("iri", "http://ex.example/n"), ("lit", "N", None, None))
+    assert triples.count(name) == 2  # once per copy
+    assert isomorphic(triples, [
+        name,
+        (s, ex_l, ("bnode", "a")),
+        (("bnode", "a"), ("iri", RDF_NS + "rest"), nil),
+        (x, ex_l, ("bnode", "b")),
+        (("bnode", "b"), ("iri", RDF_NS + "first"), x),
+        (("bnode", "b"), ("iri", RDF_NS + "rest"), nil)])
+
+
 def test_xml_literal_tags_stay_out_of_text():
     """An XMLLiteral whose value is @content leaves its element's text,
     serialized tags and all, to the ancestors; only the plain segments

@@ -100,7 +100,7 @@ def test_parse_filter_translation():
     }""")
     (f,) = q.where.filters
     # outermost parens = the FILTER's bracketted expression itself
-    assert f == ("((((CAST(wc AS DOUBLE) > 100) AND startswith(x, 'd'))"
+    assert f == ("((((TRY_CAST(wc AS DOUBLE) > 100) AND startswith(x, 'd'))"
                  " OR (NOT (wc IS NOT NULL))))")
 
 
@@ -124,7 +124,7 @@ def test_parse_aggregates():
     # the bare-var-vs-number cast heuristic applies in HAVING too
     # (harmless on the already-numeric aggregate column)
     assert q.group_by == ["s"]
-    assert q.having == [("((CAST(n AS DOUBLE) > 1))", False)]
+    assert q.having == [("((TRY_CAST(n AS DOUBLE) > 1))", False)]
 
 
 def test_parse_rejects_term_constructors():
@@ -887,6 +887,47 @@ def test_exec_datetime_accessor_malformed_is_error_row_dropped(spark):
     got = sparql_query(_kgd(spark), PFX + """
         SELECT ?x WHERE { ?x schema:name ?d . FILTER(YEAR(?d) > 0) }""")
     assert got.collect() == []
+
+
+def _kg_wc(spark):
+    return spark.createDataFrame([
+        ("d1", f"{S}wordCount", "120"),
+        ("d2", f"{S}wordCount", "n/a"),
+        ("d3", f"{S}wordCount", "7"),
+    ], COLS)
+
+
+@pytest.mark.parametrize("cond,docs", [
+    ("?wc > 50", ["d1"]), ("50 < ?wc", ["d1"]), ("?wc = 7", ["d3"])])
+def test_exec_numeric_comparison_drops_non_numeric_row(spark, cond, docs):
+    """Comparing a non-numeric value with a number is a type error: the
+    FILTER drops that row (§17.2) and the query runs on, under ANSI
+    casts too."""
+    got = sparql_query(_kg_wc(spark), PFX + (
+        f"SELECT ?d WHERE {{ ?d schema:wordCount ?wc FILTER({cond}) }}"))
+    assert sorted(r.d for r in got.collect()) == docs
+
+
+def test_exec_sum_avg_over_non_numeric_value_is_unbound(spark):
+    """SUM/AVG over a group holding a non-numeric value is unbound for
+    that group (§18.5.1); the other groups keep their values."""
+    total = sparql_query(_kg_wc(spark), PFX + """
+        SELECT (SUM(?wc) AS ?t) WHERE { ?d schema:wordCount ?wc }""")
+    assert [r.t for r in total.collect()] == [None]
+    per_doc = sparql_query(_kg_wc(spark), PFX + """
+        SELECT ?d (SUM(?wc) AS ?t) (AVG(?wc) AS ?a)
+        WHERE { ?d schema:wordCount ?wc } GROUP BY ?d""")
+    assert {r.d: (r.t, r.a) for r in per_doc.collect()} == {
+        "d1": (120.0, 120.0), "d2": (None, None), "d3": (7.0, 7.0)}
+
+
+def test_exec_datetime_accessor_int_overflow_is_unbound(spark):
+    kg = spark.createDataFrame(
+        [("d1", f"{S}dateCreated", "99999999999-01-02T03:04:05Z")], COLS)
+    got = sparql_query(kg, PFX + """
+        SELECT (YEAR(?d) AS ?y) (DAY(?d) AS ?dd)
+        WHERE { ?x schema:dateCreated ?d }""")
+    assert [(r.y, r.dd) for r in got.collect()] == [(None, 2)]
 
 
 def test_exec_not_in(spark):
