@@ -30,7 +30,7 @@ Scale notes (100 TB / 10^12 pages → ~10^13 triples):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,11 +39,11 @@ Pattern = tuple[str, str, str]
 # a named-graph-scoped pattern: (subject, predicate, object, graph) —
 # the 4th term matches the quad table's ``graph`` column (SPARQL §13)
 QuadPattern = tuple[str, str, str, str]
-# Every OPTIONAL/MINUS/EXISTS group is a :class:`GroupSpec`.  bgp_match
-# also takes its own entries in the flat tuple form ``(patterns,
-# filters or None[, binds or None[, values or None]])`` and converts
-# each to a GroupSpec at its boundary (:func:`_as_specs`); below it a
-# group has that one shape and one evaluator (:func:`_eval_spec`).
+# Every group is a :class:`GroupSpec`.  Its constructor also takes
+# nested entries in the flat tuple form ``(patterns, filters or None[,
+# binds or None[, values or None]])`` and converts each to a GroupSpec,
+# so bgp_match's keyword surface and the SPARQL parser build the same
+# shape, which one evaluator (:func:`_eval_spec`) runs.
 
 _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
@@ -51,9 +51,10 @@ _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 @dataclass
 class GroupSpec:
     """A recursive group graph pattern — the full bgp_match surface as
-    a value and the one shape of a group below the SPARQL parser: a
-    query's WHERE and every ``optionals`` / ``minus`` / ``exists`` /
-    ``not_exists`` entry is one, so groups NEST: ``OPTIONAL { P1
+    a value and the one shape of a group, which the SPARQL parser
+    builds directly: a query's or update's WHERE and every
+    ``optionals`` / ``minus`` / ``exists`` / ``not_exists`` entry is
+    one, so groups NEST: ``OPTIONAL { P1
     OPTIONAL { P2 } }``, ``OPTIONAL { {A} UNION {B} } }``, ``MINUS { P
     FILTER NOT EXISTS {...} }``.
 
@@ -95,51 +96,61 @@ class GroupSpec:
     still ranges each over every graph name, so they join with the
     patterns, before every other member, with the distinct named-graph
     dimension (a broadcast join); they are certain (never NULL)."""
-    patterns: "list[Pattern]" = None
-    filters: "list[str] | None" = None
-    binds: "list[tuple] | None" = None
+    patterns: "list[Pattern]" = field(default_factory=list)
+    filters: "list[str]" = field(default_factory=list)
+    binds: "list[tuple]" = field(default_factory=list)
     #: BINDs whose expressions reference OPTIONAL-introduced variables
     #: (or earlier late binds): applied AFTER the optionals join —
     #: the ``OPTIONAL {...} BIND(COALESCE(?x, d) AS ?y)`` idiom, where
     #: §18.2.2.6 puts the Extend after the LeftJoin it follows in
     #: syntax — and before MINUS / FILTER / EXISTS
-    late_binds: "list[tuple] | None" = None
-    values: "list[dict] | None" = None
-    optionals: "list[GroupSpec] | None" = None
-    minus: "list[GroupSpec] | None" = None
-    exists: "list[GroupSpec] | None" = None
-    not_exists: "list[GroupSpec] | None" = None
-    union: "list[GroupSpec] | None" = None
-    relations: "list | None" = None      # entries: (thunk, certain, cols)
-    graph_ranges: "list[str] | None" = None
+    late_binds: "list[tuple]" = field(default_factory=list)
+    values: "list[dict]" = field(default_factory=list)
+    optionals: "list[GroupSpec]" = field(default_factory=list)
+    minus: "list[GroupSpec]" = field(default_factory=list)
+    exists: "list[GroupSpec]" = field(default_factory=list)
+    not_exists: "list[GroupSpec]" = field(default_factory=list)
+    union: "list[GroupSpec]" = field(default_factory=list)
+    relations: list = field(default_factory=list)  # (thunk, certain, cols)
+    graph_ranges: "list[str]" = field(default_factory=list)
 
     def __post_init__(self):
-        if self.union and (self.patterns or self.filters or self.binds
-                           or self.late_binds
-                           or self.values or self.optionals or self.minus
-                           or self.exists or self.not_exists
-                           or self.relations or self.graph_ranges):
+        # the group-shape rules, checked here once for every producer
+        # (the SPARQL parser re-raises them as syntax errors).  None
+        # reads as an empty member; a flat ``(patterns, filters[,
+        # binds[, values]])`` nested entry becomes a GroupSpec.
+        for f in fields(self):
+            members = getattr(self, f.name) or []
+            if f.name in ("optionals", "minus", "exists", "not_exists"):
+                members = [e if isinstance(e, GroupSpec) else GroupSpec(
+                    **dict(zip(("patterns", "filters", "binds", "values"),
+                               e))) for e in members]
+            setattr(self, f.name, members)
+        if self.union and any(getattr(self, f.name) for f in fields(self)
+                              if f.name != "union"):
             raise ValueError(
                 "a UNION GroupSpec holds only its branches — SPARQL "
                 "makes UNION the entire group body")
         if not self.union and not self.patterns and not self.relations:
             raise ValueError(
-                "GroupSpec needs patterns, relations or union branches")
+                "empty group pattern — a group needs at least one "
+                "triple pattern, sub-SELECT or UNION branch")
         if self.relations and not self.patterns and (
                 self.binds or self.late_binds or self.values
                 or self.optionals
                 or self.minus or self.exists or self.not_exists):
             raise ValueError(
-                "a relations-only GroupSpec supports FILTER only — "
-                "BIND/VALUES/OPTIONAL/MINUS/EXISTS need the group's "
-                "own patterns to anchor join order (§18.2)")
+                "a group whose only relation is a sub-SELECT supports "
+                "FILTER only — BIND/VALUES/OPTIONAL/MINUS/EXISTS need a "
+                "triple pattern of the group's own to anchor join order "
+                "(§18.2); add one or compose at the DataFrame level")
 
 
 def _pattern_vars(patterns) -> set:
     """Variables bound by a list of (quad) patterns — required
     bindings, so never NULL in the compiled solution."""
     out = set()
-    for pat in patterns or ():
+    for pat in patterns:
         for t in pat:
             if _is_var(t):
                 out.add(t[1:])
@@ -159,8 +170,8 @@ def _certain_vars(spec: GroupSpec) -> set:
         return out
     # relations are inner-joined into the spec's solution and graph
     # ranges inner-joined with non-NULL names, so both are certain too
-    out = _pattern_vars(spec.patterns) | set(spec.graph_ranges or ())
-    for _thunk, cert, _cols in spec.relations or ():
+    out = _pattern_vars(spec.patterns) | set(spec.graph_ranges)
+    for _thunk, cert, _cols in spec.relations:
         out |= set(cert)
     return out
 
@@ -275,7 +286,6 @@ def _meta_exprs(triples: DataFrame, var: str, col: str) -> list:
 
 
 def _compile_group(triples: DataFrame, patterns: list[Pattern],
-                   filters: list[str] | None,
                    constant_only_ok: bool = False,
                    meta_vars: "frozenset[str] | set[str]" = frozenset()
                    ) -> DataFrame:
@@ -411,8 +421,6 @@ def _compile_group(triples: DataFrame, patterns: list[Pattern],
             for g in gates[1:]:
                 probe = probe.crossJoin(
                     g.select(F.col("_gate").alias("_g2"))).drop("_g2")
-            for expr in filters or ():
-                probe = probe.filter(F.expr(expr))
             return probe
         raise ValueError(
             "group binds no variable (all patterns constant) — there is "
@@ -423,8 +431,6 @@ def _compile_group(triples: DataFrame, patterns: list[Pattern],
     for v in meta_vars:
         if v in solution.columns and v not in meta_done:
             _meta_exprs(triples, v, "a")  # raises: bound by paths only
-    for expr in filters or ():
-        solution = solution.filter(F.expr(expr))
     return solution
 
 
@@ -702,7 +708,7 @@ def bgp_match(triples: DataFrame, patterns: list[Pattern],
     OPTIONAL / MINUS / EXISTS / UNION, evaluated bottom-up by
     recursion — or flat tuples ``(patterns, filters[, binds[,
     values]])``, with BIND / VALUES scoped INSIDE the group.  Each
-    tuple is converted to a GroupSpec here, at the boundary, so a flat
+    tuple becomes a GroupSpec when the group is built, so a flat
     group and a nested one are evaluated the same way (the group's
     filters apply after its BIND / VALUES, mirroring the enclosing
     group's member order).  Shared variables bound in every
@@ -751,25 +757,10 @@ def bgp_match(triples: DataFrame, patterns: list[Pattern],
         raise ValueError("bgp_match requires at least one pattern")
     spec = GroupSpec(patterns=patterns, filters=filters, binds=binds,
                      late_binds=late_binds, values=values,
-                     optionals=_as_specs(optionals),
-                     minus=_as_specs(minus), exists=_as_specs(exists),
-                     not_exists=_as_specs(not_exists))
+                     optionals=optionals, minus=minus, exists=exists,
+                     not_exists=not_exists)
     solution = _eval_spec(triples, spec, frozenset(meta_vars))
     return solution.select(*select) if select else solution
-
-
-def _as_specs(entries) -> "list[GroupSpec]":
-    """bgp_match's boundary: each flat ``(patterns, filters[, binds[,
-    values]])`` entry becomes a :class:`GroupSpec`; a GroupSpec passes
-    through."""
-    out = []
-    for e in entries or ():
-        if not isinstance(e, GroupSpec):
-            patterns, filters, binds, values = (*e, None, None)[:4]
-            e = GroupSpec(patterns=patterns, filters=filters,
-                          binds=binds, values=values)
-        out.append(e)
-    return out
 
 
 def _check_join_keys(kind: str, unc_g: list) -> None:
@@ -919,9 +910,9 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     if spec.union:
         return bgp_union(*[_eval_spec(triples, b, meta_vars)
                            for b in spec.union])
-    relations = list(spec.relations or ())
+    relations = list(spec.relations)
     if spec.patterns:
-        solution = _compile_group(triples, spec.patterns, None,
+        solution = _compile_group(triples, spec.patterns,
                                   constant_only_ok=constant_only_ok,
                                   meta_vars=meta_vars)
         # variables certainly bound (never NULL) in the ENCLOSING
@@ -936,7 +927,7 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
         (thunk, cert, _cols), *relations = relations
         solution = thunk(triples)
         certain = set(cert)
-    for var in spec.graph_ranges or ():
+    for var in spec.graph_ranges:
         # a GRAPH variable that scoped nothing (§13.3) ranges over
         # every graph name — NAMED graphs only, so default-graph rows
         # (NULL graph) mint no name.  The distinct-name dimension is
@@ -955,7 +946,7 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
         certain.add(var)
     if spec.values:
         solution = _join_values(solution, spec.values)
-    for var, expr in spec.binds or ():
+    for var, expr in spec.binds:
         solution = _apply_bind(solution, var, expr)
 
     def nested(solution, grp, how):
@@ -969,22 +960,22 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
         return _compat_join(solution, group, how, certain,
                             _certain_vars(grp))
 
-    for grp in spec.optionals or ():
+    for grp in spec.optionals:
         solution = nested(solution, grp, "left")
     # BINDs that reference OPTIONAL-introduced variables apply after
     # the left joins that bind them (§18.2.2.6 syntax order — the
     # ``OPTIONAL {...} BIND(COALESCE(?x, d) AS ?y)`` idiom), before
     # MINUS / FILTER / EXISTS
-    for var, expr in spec.late_binds or ():
+    for var, expr in spec.late_binds:
         solution = _apply_bind(solution, var, expr)
-    for grp in spec.minus or ():
+    for grp in spec.minus:
         solution = nested(solution, grp, "minus")
     if not spec.relations:
-        for expr in spec.filters or ():
+        for expr in spec.filters:
             solution = solution.filter(F.expr(expr))
-    for grp in spec.exists or ():
+    for grp in spec.exists:
         solution = nested(solution, grp, "left_semi")
-    for grp in spec.not_exists or ():
+    for grp in spec.not_exists:
         solution = nested(solution, grp, "left_anti")
     # §18.2 sub-SELECT relations join after the group's own members
     # (callers guard that the join orders commute: every variable the
@@ -998,7 +989,7 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
                                 certain, cert)
         certain |= set(cert)
     if spec.relations:
-        for expr in spec.filters or ():
+        for expr in spec.filters:
             solution = solution.filter(F.expr(expr))
     return solution
 

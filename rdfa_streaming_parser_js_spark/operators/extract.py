@@ -79,13 +79,13 @@ def _skolem(url: str, label: str) -> str:
     return "_:" + hashlib.sha256(f"{url}|{label}".encode()).hexdigest()
 
 
-def _term_cols(term, url: str, skolemize: bool):
-    """Flatten one RDF term → (value, kind, datatype, lang)."""
+def _term_cols(term, url: str):
+    """Flatten one RDF term → (value, kind, datatype, lang); a blank
+    node's page-local label is skolemized with the page url."""
     if isinstance(term, NamedNode):
         return term.value, "iri", None, None
     if isinstance(term, BlankNode):
-        value = _skolem(url, term.value) if skolemize else term.value
-        return value, "bnode", None, None
+        return _skolem(url, term.value), "bnode", None, None
     lit: Literal = term
     return (lit.value, "literal",
             lit.datatype.value if lit.datatype else None, lit.language)
@@ -158,7 +158,7 @@ def _kernel_pass(pages: DataFrame, fields: pa.Schema, emit: _Emitter, *,
 
 
 def extract_triples(pages: DataFrame, profile: str = "html",
-                    skolemize: bool = True, url_col: str = "url",
+                    url_col: str = "url",
                     html_col: str = "html",
                     lang_col: str | None = "lang",
                     content_type_col: str | None = None,
@@ -193,8 +193,8 @@ def extract_triples(pages: DataFrame, profile: str = "html",
         subj, subj_kind, pred, obj_value, obj_kind, obj_dt, obj_lang = (
             c.append for c in cols)
         for s, p, o in ex.triples:
-            sv, sk, _, _ = _term_cols(s, url, skolemize)
-            ov, ok, odt, olang = _term_cols(o, url, skolemize)
+            sv, sk, _, _ = _term_cols(s, url)
+            ov, ok, odt, olang = _term_cols(o, url)
             subj(sv)
             subj_kind(sk)
             pred(p.value)

@@ -20,11 +20,14 @@ Everything compiles to the existing operators — the parser adds ZERO
 execution code, so every scale property of the algebra (predicate
 pushdown per pattern, equi-joins on shared variables, frontier-seeded
 closures, anti-join MINUS) carries over unchanged.  A group graph
-pattern has one shape below the parser: the parse tree's
-:class:`Group` becomes a :class:`bgp.GroupSpec` — a query's WHERE and
-every OPTIONAL / MINUS / EXISTS body alike, flat or nested — and one
-evaluator, ``bgp._eval_spec``, runs them all, so a group's answer
-never depends on how deeply it nests.
+pattern has one shape: the parser builds each ``{...}`` group once,
+as the :class:`bgp.GroupSpec` the algebra evaluates — a query's or
+an update's WHERE and every OPTIONAL / MINUS / EXISTS body alike,
+flat or nested, with each sub-SELECT a relation entry of its group —
+and one evaluator, ``bgp._eval_spec``, runs them all, so a group's
+answer never depends on how deeply it nests or which form holds it.
+The group-shape rules live in ``GroupSpec`` and surface here as
+:class:`SparqlSyntaxError`.
 
 Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
 
@@ -114,7 +117,9 @@ Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
   DATA`` (ground triples; typed/tagged literal constants accepted),
   ``DELETE WHERE``, and ``DELETE {} INSERT {} WHERE {}`` — compiled
   onto :mod:`operators.update` (lexical-identity deletes,
-  metadata-preserving inserts, set-semantics result).  All four forms
+  metadata-preserving inserts, set-semantics result).  An update's
+  WHERE is a query group like any other (UNION, sub-SELECT, BIND after
+  OPTIONAL, GRAPH ranges included).  All four forms
   are QUADS-aware: ``GRAPH <g> { ... }`` wrappers in DATA blocks
   (§3.1.1 QuadData, ground graph IRIs only) and ``GRAPH ?g/<iri>
   { ... }`` wrappers in DELETE/INSERT templates (§3.1.3 QuadPattern)
@@ -176,7 +181,9 @@ Documented deviations (each raises or is noted, never silent):
   choice) and ``SAMPLE`` returns the minimum.
 - Comparing a bare variable against a numeric literal casts the
   variable to DOUBLE (SPARQL's numeric-comparison semantics over this
-  engine's lexical columns).
+  engine's lexical columns).  In ``+ - * /`` a bare variable casts to
+  BIGINT against an integer literal and to DOUBLE otherwise; a
+  non-numeric value leaves that row's result unbound (§17.2).
 - With ``DISTINCT``, ``ORDER BY`` keys must be projected variables
   (ordering applies after de-duplication).
 - ``ORDER BY`` compares the LEXICAL form (binary UTF-8 — the engine's
@@ -222,7 +229,7 @@ Documented deviations (each raises or is noted, never silent):
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -230,7 +237,7 @@ from pyspark.sql import functions as F
 from rdfa_streaming_parser_js_spark.operators import paths as P
 from rdfa_streaming_parser_js_spark.operators.bgp import (
     BNODE_FRESH_SENTINEL, META_SUFFIXES, GroupSpec, Lit,
-    _certain_vars, _eval_spec, bgp_construct, describe)
+    _certain_vars, _eval_spec, _pattern_vars, bgp_construct, describe)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -287,75 +294,14 @@ def _tokenize(text: str) -> list[_Tok]:
 # parsed-query model
 # --------------------------------------------------------------------
 
-@dataclass
-class Group:
-    """One ``{...}`` group graph pattern as parsed: the parse tree that
-    :func:`_group_to_spec` turns into the :class:`bgp.GroupSpec` the
-    algebra evaluates.  OPTIONAL/MINUS/EXISTS bodies are GroupSpecs
-    already; UNION branches stay Groups."""
-    patterns: list = field(default_factory=list)
-    filters: list = field(default_factory=list)
-    optionals: list = field(default_factory=list)
-    minus: list = field(default_factory=list)
-    values: list = field(default_factory=list)
-    binds: list = field(default_factory=list)
-    #: BINDs referencing OPTIONAL-introduced variables (or earlier
-    #: late binds): compiled to bgp's ``late_binds`` — applied after
-    #: the optionals join, per §18.2.2.6 syntax order
-    late_binds: list = field(default_factory=list)
-    exists: list = field(default_factory=list)
-    not_exists: list = field(default_factory=list)
-    union: list = field(default_factory=list)  # list[Group] if UNION
-    subselects: list = field(default_factory=list)  # list[ParsedQuery]
-    # outer GRAPH variables left with NOTHING to scope (every contained
-    # pattern re-scoped by a nested GRAPH block): the algebra still
-    # ranges them over every graph name (§13.3) — compiled as a join /
-    # broadcast cross-join with the distinct graph-name dimension
-    graph_ranges: list = field(default_factory=list)
-
-
 def _relation_entry(sq: "ParsedQuery"):
-    """A nested sub-SELECT → the ``(thunk, certain, cols)`` relation
-    entry :class:`bgp.GroupSpec` evaluates lazily.  The thunk defers
-    to :func:`_execute_select` at evaluation time, when the triples
-    DataFrame exists and meta-variable stamping has completed."""
+    """A sub-SELECT → the ``(thunk, certain, cols)`` relation entry of
+    its enclosing :class:`bgp.GroupSpec`, made once when the sub-SELECT
+    closes.  The thunk defers to :func:`_execute_select` at evaluation
+    time, when the triples DataFrame exists and meta-variable stamping
+    has completed."""
     return (lambda triples, _sq=sq: _execute_select(triples, _sq),
             _certain_out_vars(sq), tuple(sorted(_projected_vars(sq))))
-
-
-def _group_to_spec(sub: Group) -> GroupSpec:
-    """A parser Group → the :class:`bgp.GroupSpec` the algebra
-    evaluates bottom-up — the one group shape below the parser, for a
-    query's WHERE and for every OPTIONAL/MINUS/EXISTS body alike.
-    Entries in sub.optionals/minus/exists/not_exists were already
-    converted as they were parsed; UNION branches are parser Groups
-    and convert here; sub-SELECT blocks become lazy relation entries,
-    guarded by the §18.2 commutation check."""
-    if sub.union:
-        if sub.patterns or sub.filters or sub.subselects:
-            raise SparqlSyntaxError("UNION must be the entire group body")
-        return GroupSpec(union=[_group_to_spec(b) for b in sub.union])
-    relations = None
-    if sub.subselects:
-        _check_subselect_commutes(
-            sub, [_projected_vars(sq) for sq in sub.subselects])
-        if not sub.patterns and (sub.binds or sub.late_binds
-                                 or sub.values):
-            raise SparqlSyntaxError(
-                "VALUES/BIND in a group whose only relation is a "
-                "sub-SELECT is not supported — add a triple pattern "
-                "or compose at the DataFrame level")
-        relations = [_relation_entry(sq) for sq in sub.subselects]
-    if not sub.patterns and not relations:
-        raise SparqlSyntaxError("empty group pattern")
-    return GroupSpec(
-        patterns=sub.patterns or None, filters=sub.filters or None,
-        binds=sub.binds or None,
-        late_binds=sub.late_binds or None,
-        values=sub.values or None,
-        optionals=sub.optionals or None, minus=sub.minus or None,
-        exists=sub.exists or None, not_exists=sub.not_exists or None,
-        relations=relations, graph_ranges=sub.graph_ranges or None)
 
 
 @dataclass
@@ -367,8 +313,8 @@ class SelectItem:
 
 @dataclass
 class ParsedQuery:
-    form: str                      # "select" | "ask" | "construct"
-    where: Group
+    form: str          # "select" | "ask" | "construct" | "describe"
+    where: GroupSpec | None = None   # None: DESCRIBE with no WHERE
     select: list[SelectItem] | None = None   # None = SELECT *
     distinct: bool = False
     group_by: list[str] = field(default_factory=list)
@@ -765,23 +711,29 @@ class _Parser:
         return P.alt(*parts)
 
     # -- group graph pattern ------------------------------------------
-    def parse_group(self) -> Group:
+    def parse_group(self) -> GroupSpec:
+        """One ``{...}`` group graph pattern → its :class:`bgp.GroupSpec`,
+        built once when the group closes.  Nested OPTIONAL / MINUS /
+        EXISTS bodies and UNION branches are GroupSpecs already, and a
+        sub-SELECT becomes a relation entry as soon as it closes.
+        GroupSpec checks the group-shape rules; a violation re-raises
+        here as a syntax error."""
         self.expect_op("{")
-        g = Group()
         if self.at_op("{") and not (
                 self.peek(1).kind == "NAME"
                 and self.peek(1).text.lower() == "select"):
             # {A} UNION {B} [UNION {C}...] — at the top level or
             # nested inside OPTIONAL/MINUS/EXISTS (GroupSpec recursion)
-            g.union.append(self.parse_group())
+            union = [self.parse_group()]
             while self.take_kw("union"):
-                g.union.append(self.parse_group())
+                union.append(self.parse_group())
             if not self.at_op("}"):
                 self.fail("UNION must be the entire group body — "
                           "join further patterns at the DataFrame "
                           "level")
             self.next()
-            return g
+            return GroupSpec(union=union)
+        g = {f.name: [] for f in fields(GroupSpec)}  # its members
         while not self.at_op("}"):
             if self.at_op("{"):
                 # mid-group braced block: a sub-SELECT (§18.2) — at
@@ -794,15 +746,15 @@ class _Parser:
                               "entire group body)")
                 self.next()
                 sq = self._parse_select_body()
-                g.subselects.append(sq)
+                g["relations"].append(_relation_entry(sq))
                 self.all_subqueries.append(sq)
                 self.expect_op("}")
             elif self.take_kw("filter"):
                 self._parse_filter(g)
             elif self.take_kw("optional"):
-                g.optionals.append(_group_to_spec(self.parse_group()))
+                g["optionals"].append(self.parse_group())
             elif self.take_kw("minus"):
-                g.minus.append(_group_to_spec(self.parse_group()))
+                g["minus"].append(self.parse_group())
             elif self.take_kw("graph"):
                 t = self.peek()
                 if t.kind == "VAR":
@@ -812,16 +764,13 @@ class _Parser:
                 else:
                     self.fail("expected a variable or IRI after GRAPH")
                 sub = self.parse_group()
-                if (sub.optionals or sub.minus or sub.values or sub.binds
-                        or sub.late_binds
-                        or sub.exists or sub.not_exists or sub.union
-                        or sub.subselects):
+                if any(members for name, members in vars(sub).items()
+                       if name not in ("patterns", "filters",
+                                       "graph_ranges")):
                     self.fail(
                         "GRAPH blocks support triple patterns and plain "
                         "FILTER only — compose richer graph-scoped "
                         "groups at the DataFrame level")
-                if not sub.patterns:
-                    self.fail("GRAPH block contains no triple pattern")
                 # stamp the graph term onto each contained pattern; the
                 # compiler treats it as a 4th match position (a FILTER
                 # inside GRAPH scopes to the enclosing group, per
@@ -831,15 +780,16 @@ class _Parser:
                 # already carrying a graph term pass through unstamped.
                 stamped = [pat if len(pat) == 4 else pat + (gterm,)
                            for pat in sub.patterns]
-                g.patterns.extend(stamped)
-                g.filters.extend(sub.filters)
+                g["patterns"].extend(stamped)
+                g["filters"].extend(sub.filters)
+                g["graph_ranges"].extend(sub.graph_ranges)
                 if (gterm.startswith("?")
                         and not any(pat[3] == gterm for pat in stamped)):
                     # the variable scoped NOTHING (every pattern was
                     # re-scoped by a nested GRAPH block): §13.3 still
                     # ranges it over every graph name — record it for
                     # the distinct-graph-name join in bgp._eval_spec
-                    g.graph_ranges.append(gterm[1:])
+                    g["graph_ranges"].append(gterm[1:])
             elif self.take_kw("bind"):
                 self.expect_op("(")
                 expr = self._parse_constructor()
@@ -867,34 +817,27 @@ class _Parser:
                              else (expr,)):
                     if isinstance(part, str):
                         refs |= set(_SQL_IDENT.findall(part))
-                req = {t[1:] for pat in g.patterns for t in pat
-                       if isinstance(t, str) and t.startswith("?")}
-                opt = set()
-                for entry in g.optionals:
-                    opt |= _entry_vars(entry)
-                late = {name for name, _ in g.late_binds}
-                if refs & ((opt - req) | late):
-                    g.late_binds.append((v.text[1:], expr))
+                opt = set().union(*map(_entry_vars, g["optionals"]))
+                late = {name for name, _ in g["late_binds"]}
+                if refs & ((opt - _pattern_vars(g["patterns"])) | late):
+                    g["late_binds"].append((v.text[1:], expr))
                 else:
-                    g.binds.append((v.text[1:], expr))
+                    g["binds"].append((v.text[1:], expr))
             elif self.take_kw("values"):
-                g.values.extend(self._parse_values())
+                g["values"].extend(self._parse_values())
             else:
-                self._parse_triples_block(g)
+                self._parse_triples_block(g["patterns"])
             self.take_op(".")
         self.expect_op("}")
-        if g.union and (g.patterns or g.filters):
-            self.fail("UNION must be the entire group body")
-        if (g.subselects and not g.patterns
-                and (g.optionals or g.minus or g.exists
-                     or g.not_exists)):
-            self.fail("a group whose only relation is a sub-SELECT "
-                      "cannot take OPTIONAL/MINUS/EXISTS — add a "
-                      "triple pattern or compose at the DataFrame "
-                      "level")
-        return g
+        try:
+            spec = GroupSpec(**g)
+        except ValueError as e:
+            self.fail(str(e))
+        if spec.relations:
+            _check_subselect_commutes(spec)
+        return spec
 
-    def _parse_filter(self, g: Group) -> None:
+    def _parse_filter(self, g: dict) -> None:
         negate = False
         if self.take_kw("not"):
             self.expect_kw("exists")
@@ -902,19 +845,19 @@ class _Parser:
         elif self.take_kw("exists"):
             pass
         else:
-            g.filters.append(self.parse_expr_or_call())
+            g["filters"].append(self.parse_expr_or_call())
             return
-        dest = g.not_exists if negate else g.exists
-        dest.append(_group_to_spec(self.parse_group()))
+        g["not_exists" if negate else "exists"].append(self.parse_group())
 
-    def _parse_triples_block(self, g: Group) -> None:
+    def _parse_triples_block(self, out: list) -> None:
+        """One subject's triples (``;`` / ``,`` lists) → ``out``."""
         subj = self.parse_term()
         while True:
             pred = self.parse_path()
             obj = self.parse_term()
-            g.patterns.append((subj, pred, obj))
+            out.append((subj, pred, obj))
             while self.take_op(","):
-                g.patterns.append((subj, pred, self.parse_term()))
+                out.append((subj, pred, self.parse_term()))
             if not self.take_op(";"):
                 return
             if self.at_op(".", "}"):  # trailing ; before . or }
@@ -1087,20 +1030,18 @@ class _Parser:
         return sql, kind
 
     def _add_expr(self):
-        sql, kind = self._mul_expr()
+        lhs = self._mul_expr()
         while self.at_op("+", "-"):
             op = self.next().text
-            rhs, _ = self._mul_expr()
-            sql, kind = f"({sql} {op} {rhs})", "other"
-        return sql, kind
+            lhs = _arith(lhs, op, self._mul_expr())
+        return lhs
 
     def _mul_expr(self):
-        sql, kind = self._unary()
+        lhs = self._unary()
         while self.at_op("*", "/"):
             op = self.next().text
-            rhs, _ = self._unary()
-            sql, kind = f"({sql} {op} {rhs})", "other"
-        return sql, kind
+            lhs = _arith(lhs, op, self._unary())
+        return lhs
 
     def _unary(self):
         if self.take_op("!"):
@@ -1300,7 +1241,7 @@ class _Parser:
     def _parse_select_body(self) -> ParsedQuery:
         """Everything after the SELECT keyword (shared by the top-level
         form and mid-group sub-SELECTs, §18.2)."""
-        q = ParsedQuery(form="select", where=Group())
+        q = ParsedQuery(form="select")
         if self.take_kw("distinct") or self.take_kw("reduced"):
             q.distinct = True
         if self.take_op("*"):
@@ -1316,6 +1257,22 @@ class _Parser:
         q.where = self.parse_group()
         _parse_modifiers(self, q)
         return q
+
+
+def _arith(lhs: tuple, op: str, rhs: tuple) -> tuple:
+    """``lhs op rhs`` over the engine's lexical columns.  A bare-variable
+    operand is TRY_CAST — to BIGINT against an integer literal (the
+    type Spark's own coercion picks there, so "120" + 1 stays 121), to
+    DOUBLE otherwise — so a non-numeric value leaves that row's result
+    unbound (§17.2) instead of aborting the query under ANSI."""
+    def operand(side, other):
+        sql, kind = side
+        if kind != "var":
+            return sql
+        typ = ("BIGINT" if other[1] == "num" and other[0].isdigit()
+               else "DOUBLE")
+        return f"TRY_CAST({sql} AS {typ})"
+    return f"({operand(lhs, rhs)} {op} {operand(rhs, lhs)})", "other"
 
 
 def _unquote(raw: str) -> str:
@@ -1346,7 +1303,7 @@ class ParsedUpdate:
     data: list = field(default_factory=list)   # ground triples
     delete: list | None = None     # template patterns
     insert: list | None = None
-    where: Group | None = None
+    where: GroupSpec | None = None
     template_literals: dict = field(default_factory=dict)  # lex→(dt,lang)
     meta_vars: frozenset = frozenset()  # vars whose FILTERs need term meta
     target: str | None = None      # clear/drop/create selector
@@ -1393,10 +1350,11 @@ def _parse_data_term(p: _Parser, position: str):
 
 
 def _parse_data_triples(p: _Parser, out: list, graph: "str | None"):
-    """The triple list of one DATA block scope (top level or inside a
+    """The triple list of one DATA block scope (a default-graph run up
+    to the next ``GRAPH`` or the closing brace, or the inside of a
     ``GRAPH <g> { ... }`` wrapper); appends ``(s, p, obj)`` rows, or
     ``(s, p, obj, graph)`` quads when a graph IRI scopes them."""
-    while not p.at_op("}"):
+    while not p.at_op("}") and not p.at_kw("graph"):
         s = _parse_data_term(p, "subj")[0]
         while True:
             pr = _parse_data_term(p, "pred")[0]
@@ -1431,29 +1389,11 @@ def _parse_data_block(p: _Parser) -> list:
             _parse_data_triples(p, out, g)
             p.expect_op("}")
         else:
-            _parse_data_triples_top(p, out)
+            _parse_data_triples(p, out, None)
     p.expect_op("}")
     if not out:
         p.fail("empty DATA block")
     return out
-
-
-def _parse_data_triples_top(p: _Parser, out: list) -> None:
-    """One top-level (default-graph) triple group of a DATA block:
-    parse subject..object runs until a GRAPH keyword or the closing
-    brace takes over."""
-    while not p.at_op("}") and not p.at_kw("graph"):
-        s = _parse_data_term(p, "subj")[0]
-        while True:
-            pr = _parse_data_term(p, "pred")[0]
-            out.append((s, pr, _parse_data_term(p, "obj")))
-            while p.take_op(","):
-                out.append((s, pr, _parse_data_term(p, "obj")))
-            if not p.take_op(";"):
-                break
-            if p.at_op(".", "}"):
-                break
-        p.take_op(".")
 
 
 def _parse_template(p: _Parser) -> list:
@@ -1463,7 +1403,7 @@ def _parse_template(p: _Parser) -> list:
     wrappers (§3.1.3 QuadPattern) emit 4-tuple patterns targeting that
     named graph — the executing table must then be a quads table; bare
     triples target the default graph."""
-    tmpl = Group()
+    tmpl = []
     p.expect_op("{")
     p.in_template = True
     try:
@@ -1477,17 +1417,16 @@ def _parse_template(p: _Parser) -> list:
                     gterm = p.expand_iri(p.next())
                 else:
                     p.fail("expected a variable or IRI after GRAPH")
-                sub = Group()
+                sub = []
                 p.expect_op("{")
                 while not p.at_op("}"):
                     p._parse_triples_block(sub)
                     p.take_op(".")
                 p.expect_op("}")
-                if not sub.patterns:
+                if not sub:
                     p.fail("GRAPH template block contains no triple "
                            "pattern")
-                tmpl.patterns.extend(pat + (gterm,)
-                                     for pat in sub.patterns)
+                tmpl.extend(pat + (gterm,) for pat in sub)
                 p.take_op(".")
             else:
                 p._parse_triples_block(tmpl)
@@ -1495,13 +1434,13 @@ def _parse_template(p: _Parser) -> list:
     finally:
         p.in_template = False
     p.expect_op("}")
-    for pat in tmpl.patterns:
+    for pat in tmpl:
         if not isinstance(pat[1], str):
             raise SparqlSyntaxError(
                 "property paths are not allowed in an update template")
-    if not tmpl.patterns:
+    if not tmpl:
         p.fail("empty update template")
-    return tmpl.patterns
+    return tmpl
 
 
 def parse_update(text: str) -> ParsedUpdate:
@@ -1569,9 +1508,8 @@ def parse_update(text: str) -> ParsedUpdate:
             u = ParsedUpdate("delete_data", data=_parse_data_block(p))
         elif p.take_kw("where"):
             tmpl = _parse_template(p)
-            w = Group()
-            w.patterns = list(tmpl)
-            u = ParsedUpdate("modify", delete=tmpl, where=w)
+            u = ParsedUpdate("modify", delete=tmpl,
+                             where=GroupSpec(patterns=list(tmpl)))
         else:
             tmpl = _parse_template(p)
             ins = _parse_template(p) if p.take_kw("insert") else None
@@ -1585,7 +1523,7 @@ def parse_update(text: str) -> ParsedUpdate:
         p.fail("trailing input after update (one operation per call)")
     _check_template_collisions(p)
     u.template_literals = dict(p.template_literals)
-    u.meta_vars = frozenset(p.meta_vars)
+    _stamp_meta(u, p)
     return u
 
 
@@ -1628,25 +1566,10 @@ def sparql_update(graph: DataFrame, text: str) -> DataFrame:
         return U.insert_data(graph, u.data)
     if u.form == "delete_data":
         return U.delete_data(graph, u.data)
-    g = u.where
-    if g.union or g.subselects or g.graph_ranges:
-        raise SparqlSyntaxError(
-            "UNION / sub-SELECT / an all-rescoped GRAPH variable in an "
-            "update WHERE is not supported — compose at the DataFrame "
-            "level with apply_update")
-    if g.late_binds:
-        raise SparqlSyntaxError(
-            "BIND referencing OPTIONAL-bound variables in an update "
-            "WHERE is not supported — compose at the DataFrame level "
-            "with apply_update")
     return U.apply_update(
-        graph, delete=u.delete, insert=u.insert,
+        graph, delete=u.delete, insert=u.insert, where=u.where,
         literal_consts=u.template_literals or None,
-        meta_vars=u.meta_vars,
-        where=g.patterns, filters=g.filters or None,
-        optionals=g.optionals or None, minus=g.minus or None,
-        values=g.values or None, binds=g.binds or None,
-        exists=g.exists or None, not_exists=g.not_exists or None)
+        meta_vars=u.meta_vars)
 
 
 # --------------------------------------------------------------------
@@ -1660,11 +1583,11 @@ def parse_sparql(text: str) -> ParsedQuery:
     if p.take_kw("select"):
         q = p._parse_select_body()
     elif p.take_kw("ask"):
-        q = ParsedQuery(form="ask", where=Group())
+        q = ParsedQuery(form="ask")
         p.take_kw("where")
         q.where = p.parse_group()
     elif p.take_kw("describe"):
-        q = ParsedQuery(form="describe", where=Group())
+        q = ParsedQuery(form="describe")
         while True:
             t = p.peek()
             if t.kind == "VAR":
@@ -1677,13 +1600,12 @@ def parse_sparql(text: str) -> ParsedQuery:
             p.fail("DESCRIBE needs at least one IRI or variable")
         if p.take_kw("where") or p.at_op("{"):
             q.where = p.parse_group()
-        if any(v.startswith("?") for v in q.describe_targets) \
-                and not q.where.patterns and not q.where.union \
-                and not q.where.subselects:
+        if (any(v.startswith("?") for v in q.describe_targets)
+                and q.where is None):
             p.fail("DESCRIBE with a variable needs a WHERE clause "
                    "binding it")
     elif p.take_kw("construct"):
-        q = ParsedQuery(form="construct", where=Group())
+        q = ParsedQuery(form="construct")
         if p.at_kw("where"):
             # CONSTRUCT WHERE { ... } shorthand (§10.2.3): the WHERE
             # pattern doubles as the template.  The spec limits the
@@ -1694,16 +1616,10 @@ def parse_sparql(text: str) -> ParsedQuery:
             # template meaning.
             p.next()
             q.where = p.parse_group()
-            if (q.where.filters or q.where.binds or q.where.late_binds
-                    or q.where.values
-                    or q.where.optionals or q.where.minus
-                    or q.where.exists or q.where.not_exists
-                    or q.where.union or q.where.subselects):
+            if any(members for name, members in vars(q.where).items()
+                   if name != "patterns"):
                 p.fail("CONSTRUCT WHERE shorthand allows triple "
                        "patterns only (SPARQL §10.2.3)")
-            if not q.where.patterns:
-                p.fail("CONSTRUCT WHERE shorthand needs at least one "
-                       "triple pattern")
             for pat in q.where.patterns:
                 if len(pat) != 3 or not isinstance(pat[1], str):
                     p.fail("CONSTRUCT WHERE shorthand allows plain "
@@ -1723,7 +1639,7 @@ def parse_sparql(text: str) -> ParsedQuery:
                 p.fail("trailing input after query")
             _stamp_meta(q, p)
             return q
-        tmpl = Group()
+        tmpl = []
         p.expect_op("{")
         p.in_template = True
         try:
@@ -1733,12 +1649,12 @@ def parse_sparql(text: str) -> ParsedQuery:
         finally:
             p.in_template = False
         p.expect_op("}")
-        for s, pr, o in tmpl.patterns:
+        for s, pr, o in tmpl:
             if not isinstance(pr, str):
                 raise SparqlSyntaxError(
                     "property paths are not allowed in a CONSTRUCT "
                     "template")
-        q.template = tmpl.patterns
+        q.template = tmpl
         p.expect_kw("where")
         q.where = p.parse_group()
         _parse_modifiers(p, q)
@@ -1752,9 +1668,9 @@ def parse_sparql(text: str) -> ParsedQuery:
     return q
 
 
-def _stamp_meta(q: ParsedQuery, p: _Parser) -> None:
-    """Record the term-metadata variable set on the query and on every
-    sub-SELECT parsed anywhere in it — the parser's flat
+def _stamp_meta(q: "ParsedQuery | ParsedUpdate", p: _Parser) -> None:
+    """Record the term-metadata variable set on the query or update
+    and on every sub-SELECT parsed anywhere in it — the parser's flat
     ``all_subqueries`` registry lists them all, nested ones included
     (the set is parser-global; a variable only gains companion columns
     in groups that actually bind it)."""
@@ -1839,14 +1755,12 @@ def _attach_trailing_values(p: "_Parser", q: ParsedQuery) -> None:
     for row in rows:
         used |= set(row)
 
-    def _inject(g: Group) -> None:
+    def _inject(g: GroupSpec) -> None:
         if g.union:
             for b in g.union:
                 _inject(b)
             return
-        req = {t[1:] for pat in g.patterns for t in pat
-               if isinstance(t, str) and t.startswith("?")}
-        missing = used - req
+        missing = used - _pattern_vars(g.patterns)
         if missing:
             p.fail("trailing VALUES constrains "
                    f"{sorted('?' + v for v in missing)} which the "
@@ -1874,24 +1788,20 @@ def _entry_vars(spec: GroupSpec, refs: bool = True) -> set:
     ``refs=False`` keeps only the variables the group's solution binds
     (its columns): no expression identifiers, no MINUS/EXISTS
     bodies."""
-    out = set(spec.graph_ranges or ())
-    for pat in spec.patterns or ():
-        out |= {t[1:] for t in pat
-                if isinstance(t, str) and t.startswith("?")}
-    for name, expr in (spec.binds or []) + (spec.late_binds or []):
+    out = set(spec.graph_ranges) | _pattern_vars(spec.patterns)
+    for name, expr in spec.binds + spec.late_binds:
         out.add(name)
         if refs:
             out |= set(_SQL_IDENT.findall(
                 expr if isinstance(expr, str) else expr[0]))
-    for row in spec.values or ():
+    for row in spec.values:
         out |= set(row)
-    for _thunk, _cert, cols in spec.relations or ():
+    for _thunk, _cert, cols in spec.relations:
         out |= set(cols)
-    subs = (spec.optionals or []) + (spec.union or [])
+    subs = spec.optionals + spec.union
     if refs:
-        subs += ((spec.minus or []) + (spec.exists or [])
-                 + (spec.not_exists or []))
-        for f in spec.filters or ():
+        subs += spec.minus + spec.exists + spec.not_exists
+        for f in spec.filters:
             out |= set(_SQL_IDENT.findall(f))
     for sub in subs:
         out |= _entry_vars(sub, refs)
@@ -1904,7 +1814,7 @@ def _projected_vars(q: "ParsedQuery") -> set:
     ``SELECT *`` the columns its WHERE group binds."""
     if q.select is not None:
         return {it.var for it in q.select}
-    return _entry_vars(_group_to_spec(q.where), refs=False)
+    return _entry_vars(q.where, refs=False)
 
 
 def _certain_out_vars(q: "ParsedQuery") -> frozenset:
@@ -1915,7 +1825,7 @@ def _certain_out_vars(q: "ParsedQuery") -> frozenset:
     variable is certain iff certain in the WHERE group; every
     expression/aggregate projection counts as maybe-unbound (COUNT
     never is, but conservatism is free here)."""
-    cert = _certain_vars(_group_to_spec(q.where))
+    cert = _certain_vars(q.where)
     if q.select is None:
         return frozenset(cert)
     return frozenset(it.var for it in q.select
@@ -1923,7 +1833,7 @@ def _certain_out_vars(q: "ParsedQuery") -> frozenset:
                      and it.var in cert)
 
 
-def _check_subselect_commutes(g: Group, sub_cols: list) -> None:
+def _check_subselect_commutes(g: GroupSpec) -> None:
     """§18.2 composition guard: the compiled plan joins sub-SELECT
     relations AFTER the group's OPTIONAL/MINUS/EXISTS, i.e. it
     evaluates ``Join(LeftJoin(P, O), S)``.  SPARQL's
@@ -1934,13 +1844,9 @@ def _check_subselect_commutes(g: Group, sub_cols: list) -> None:
     P solution, so the left join can neither mint nor rewrite it —
     rewriting happens only for maybe-unbound shared variables under
     the §18.3 mask machinery).  Anything else raises rather than
-    silently picking an order.  ``sub_cols`` is a list of per-sub
-    parse-time projection sets (:func:`_projected_vars`)."""
-    all_cols = set()
-    for s in sub_cols:
-        all_cols |= set(s)
-    certain = {t[1:] for pat in g.patterns for t in pat
-               if isinstance(t, str) and t.startswith("?")}
+    silently picking an order."""
+    all_cols = {c for _thunk, _cert, cols in g.relations for c in cols}
+    certain = _pattern_vars(g.patterns)
     for entry in (g.optionals + g.minus + g.exists + g.not_exists):
         clash = (_entry_vars(entry) & all_cols) - certain
         if clash:
@@ -1949,11 +1855,6 @@ def _check_subselect_commutes(g: Group, sub_cols: list) -> None:
                 f"share maybe-unbound variable(s) {sorted(clash)} — "
                 "join order is semantically significant here; "
                 "compose at the DataFrame level")
-
-
-def _compile_where(triples: DataFrame, q: ParsedQuery) -> DataFrame:
-    """The solution relation of a query's WHERE group."""
-    return _eval_spec(triples, _group_to_spec(q.where), q.meta_vars)
 
 
 def sparql_query(triples: DataFrame, text: str) -> DataFrame:
@@ -1975,13 +1876,13 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
         var_names = [v[1:] for v in q.describe_targets
                      if v.startswith("?")]
         if var_names:
-            sol = _compile_where(triples, q)
+            sol = _eval_spec(triples, q.where, q.meta_vars)
             for v in var_names:
                 s = sol.select(F.col(v).alias("node")).distinct()
                 seeds = s if seeds is None else (
                     seeds.unionByName(s).distinct())
         return describe(triples, seeds)
-    sol = _compile_where(triples, q)
+    sol = _eval_spec(triples, q.where, q.meta_vars)
     if q.form == "ask":
         return (sol.limit(1)
                 .agg((F.count(F.lit(1)) > 0).alias("ask")))
@@ -2053,7 +1954,7 @@ def _execute_select(triples: DataFrame, q: ParsedQuery) -> DataFrame:
     """The SELECT pipeline (shared by top-level queries and §18.2
     sub-SELECTs): aggregate path vs plain projection, then DISTINCT /
     ORDER / LIMIT / OFFSET in SPARQL's slice order."""
-    sol = _compile_where(triples, q)
+    sol = _eval_spec(triples, q.where, q.meta_vars)
     items = q.select
     agg_mode = bool(q.group_by) or bool(
         items and any(it.is_agg for it in items))

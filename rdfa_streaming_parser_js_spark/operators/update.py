@@ -5,8 +5,8 @@ The reference parser only PRODUCES quads (/root/reference/lib/
 RdfaParser.ts:803-811); maintaining the downstream store — predicate
 migrations, retractions, enrichment — is left to its consumer.  This
 module closes that loop Spark-first: an update is compiled onto the
-existing BGP algebra (``bgp_match`` for WHERE, ``bgp_construct`` for
-the templates) and returns the NEW graph as a DataFrame — the caller
+existing BGP algebra (``bgp._eval_spec`` for WHERE, ``bgp_construct``
+for the templates) and returns the NEW graph as a DataFrame — the caller
 replaces the graph table with it (or hands it to the recrawl-merge /
 snapshot-delta operators).  Nothing mutates in place: Spark DataFrames
 are immutable, so an update is a plan, not a side effect — which is
@@ -39,20 +39,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfa_streaming_parser_js_spark.operators.bgp import (
-    TERM_COLS, Pattern, bgp_construct, bgp_match)
+    TERM_COLS, GroupSpec, Pattern, _eval_spec, _pattern_vars,
+    bgp_construct)
 
 _LEX_KEY = ("subj", "pred", "obj_value")
 
 
-def _template_vars(template: "list[Pattern] | None") -> set[str]:
-    return {t[1:] for pat in template or () for t in pat
-            if isinstance(t, str) and t.startswith("?")}
+def _plain_bound(spec: GroupSpec) -> set[str]:
+    """WHERE variables a plain (non-path) pattern binds, in the group's
+    own patterns or in a UNION branch's, and that no branch binds by
+    property paths alone (path endpoints carry no term metadata)."""
+    plain, path_only, todo = set(), set(), [spec]
+    while todo:
+        g = todo.pop()
+        todo += g.union
+        bound = _pattern_vars(p for p in g.patterns if isinstance(p[1], str))
+        plain |= bound
+        path_only |= _pattern_vars(g.patterns) - bound
+    return plain - path_only
 
 
 def apply_update(graph: DataFrame,
                  delete: "list[Pattern] | None" = None,
                  insert: "list[Pattern] | None" = None,
-                 where: "list[Pattern] | None" = None,
+                 where: "GroupSpec | list[Pattern] | None" = None,
                  filters: "list[str] | None" = None,
                  literal_consts: "dict[str, tuple] | None" = None,
                  meta_vars: "frozenset[str]" = frozenset(),
@@ -62,9 +72,12 @@ def apply_update(graph: DataFrame,
 
     ``delete`` / ``insert`` are triple templates (either may be
     omitted); ``where`` defaults to the ``delete`` template — the
-    ``DELETE WHERE`` shorthand (§3.1.3.2).  ``filters`` and any extra
-    ``bgp_kwargs`` (``optionals``, ``values``, ``binds``, ...) pass
-    through to :func:`bgp_match` for the WHERE evaluation.
+    ``DELETE WHERE`` shorthand (§3.1.3.2).  ``where`` is a
+    :class:`bgp.GroupSpec` (the SPARQL front-end passes its parsed
+    group), or a pattern list that ``filters`` and any extra
+    ``bgp_kwargs`` (``optionals``, ``values``, ``binds``, ...) complete
+    into one, as :func:`bgp_match` does; either way the group is
+    evaluated by ``bgp._eval_spec``.
     ``literal_consts`` marks constant template terms that are literals
     (lexical → ``(datatype, lang)``; see :func:`bgp_construct`).
 
@@ -101,17 +114,20 @@ def apply_update(graph: DataFrame,
                 "INSERT without WHERE has no solutions to instantiate "
                 "the template with — use insert_data for ground triples")
         where = delete  # DELETE WHERE shorthand
+    if not isinstance(where, GroupSpec):
+        where = GroupSpec(patterns=where, filters=filters, **bgp_kwargs)
+    elif filters or bgp_kwargs:
+        raise ValueError("a GroupSpec where carries its own filters and "
+                         "group members")
     # metadata for inserted vars so copied terms stay themselves; the
     # delete side needs none (lexical identity).  Only vars bound by a
-    # plain pattern qualify (path endpoints carry no metadata).
-    plain_bound = _template_vars(
-        [pat for pat in where if isinstance(pat[1], str)])
-    # extra meta_vars (e.g. isBlank/datatype FILTER references from the
-    # text front-end) pass through unfiltered — bgp_match itself raises
+    # plain pattern qualify (path endpoints carry no metadata).  Extra
+    # meta_vars (e.g. isBlank/datatype FILTER references from the text
+    # front-end) pass through unfiltered — the evaluator itself raises
     # for a metadata request on a path-only binding
-    meta = (_template_vars(insert) & plain_bound) | frozenset(meta_vars)
-    solutions = bgp_match(graph, where, filters=filters,
-                          meta_vars=meta, **bgp_kwargs)
+    meta = ((_pattern_vars(insert or ()) & _plain_bound(where))
+            | frozenset(meta_vars))
+    solutions = _eval_spec(graph, where, meta)
     # the result is the 7-column term table (extra input columns like a
     # provenance url would survive dropDuplicates nondeterministically);
     # in quads mode the graph column is the 8th — a bare 3-tuple

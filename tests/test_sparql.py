@@ -7,7 +7,8 @@ from __future__ import annotations
 import pytest
 
 from rdfa_streaming_parser_js_spark.operators import paths as P
-from rdfa_streaming_parser_js_spark.operators.bgp import bgp_match
+from rdfa_streaming_parser_js_spark.operators.bgp import (
+    GroupSpec, bgp_match)
 from rdfa_streaming_parser_js_spark.operators.sparql import (
     SparqlSyntaxError, parse_sparql, sparql_query)
 
@@ -921,6 +922,30 @@ def test_exec_sum_avg_over_non_numeric_value_is_unbound(spark):
         "d1": (120.0, 120.0), "d2": (None, None), "d3": (7.0, 7.0)}
 
 
+def test_exec_arithmetic_on_integer_literal_keeps_integer_result(spark):
+    """``?wc + 1`` casts the variable like Spark's own coercion did
+    ("120" + 1 is 121); a value that is no integer ("n/a", "1.5") is a
+    type error that leaves ?t unbound for that row (§17.2) instead of
+    aborting the query."""
+    kg = _kg_wc(spark).unionByName(spark.createDataFrame(
+        [("d4", f"{S}wordCount", "1.5")], COLS))
+    got = sparql_query(kg, PFX + """
+        SELECT ?d ((?wc + 1) AS ?t) WHERE { ?d schema:wordCount ?wc }""")
+    assert {r.d: r.t for r in got.collect()} == {
+        "d1": 121, "d2": None, "d3": 8, "d4": None}
+
+
+def test_exec_arithmetic_on_two_variables_is_numeric(spark):
+    """``?a + ?b`` over two lexical columns adds their numeric values
+    (it used to fail analysis on two strings); a non-numeric operand
+    leaves the result unbound."""
+    got = sparql_query(_kg_wc(spark), PFX + """
+        SELECT ?d ((?wc + ?wc) AS ?t) ((?wc * 0.5) AS ?h)
+        WHERE { ?d schema:wordCount ?wc }""")
+    assert {r.d: (r.t, r.h) for r in got.collect()} == {
+        "d1": (240.0, 60.0), "d2": (None, None), "d3": (14.0, 3.5)}
+
+
 def test_exec_datetime_accessor_int_overflow_is_unbound(spark):
     kg = spark.createDataFrame(
         [("d1", f"{S}dateCreated", "99999999999-01-02T03:04:05Z")], COLS)
@@ -1666,6 +1691,23 @@ def test_parse_graph_var_nothing_to_scope_marks_range():
     q2 = parse_sparql(PFX + """SELECT * WHERE {
         GRAPH ?g { GRAPH ?g { ?x schema:name ?n } } }""")
     assert q2.where.graph_ranges == []
+    # a range found inside a GRAPH body survives into the group
+    q3 = parse_sparql(PFX + """SELECT * WHERE {
+        GRAPH ?g { GRAPH ?h { GRAPH <g3> { ?x schema:name ?n } } } }""")
+    assert sorted(q3.where.graph_ranges) == ["g", "h"]
+
+
+def test_parse_where_is_one_group_spec():
+    """The parser builds the evaluator's group shape directly: WHERE is
+    a GroupSpec for SELECT, ASK and CONSTRUCT, and absent for a
+    DESCRIBE of IRIs only."""
+    for text in ("SELECT ?x WHERE { ?x a schema:Article }",
+                 "ASK { ?x a schema:Article }",
+                 "CONSTRUCT { ?x a schema:Thing } WHERE { ?x a "
+                 "schema:Article }",
+                 "DESCRIBE ?x WHERE { ?x a schema:Article }"):
+        assert isinstance(parse_sparql(PFX + text).where, GroupSpec)
+    assert parse_sparql(PFX + "DESCRIBE <d1> <d2>").where is None
 
 
 def test_graph_var_nothing_to_scope_ranges_in_nested_group(spark):

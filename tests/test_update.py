@@ -6,8 +6,9 @@ from __future__ import annotations
 
 import pytest
 
+from rdfa_streaming_parser_js_spark.operators.bgp import bgp_construct
 from rdfa_streaming_parser_js_spark.operators.sparql import (
-    SparqlSyntaxError, parse_update, sparql_update)
+    SparqlSyntaxError, parse_update, sparql_query, sparql_update)
 from rdfa_streaming_parser_js_spark.operators.update import (
     TERM_COLS, apply_update, delete_data, insert_data)
 
@@ -459,3 +460,83 @@ def test_quad_parse_errors():
     with pytest.raises(SparqlSyntaxError, match="variable or IRI"):
         parse_update(PFX + """
             DELETE { GRAPH "lit" { <a> <b> <c> } } WHERE { ?s ?p ?o }""")
+
+
+# ------------------------------------------------------------------
+# update WHERE = query WHERE: one group evaluator for both
+# ------------------------------------------------------------------
+
+def _update_as_select(graph, templates, group):
+    """Run ``templates WHERE group`` with sparql_update and check it
+    against applying the same templates to ``SELECT * WHERE group``:
+    lexical-identity DELETE, then INSERT, as sets.  Returns the new
+    graph's rows."""
+    from pyspark.sql import functions as F
+    text = PFX + templates + " WHERE " + group
+    u = parse_update(text)
+    sols = sparql_query(graph, PFX + "SELECT * WHERE " + group)
+    cols = list(TERM_COLS) + (["graph"] if "graph" in graph.columns
+                              else [])
+
+    def instantiate(template):
+        out = bgp_construct(sols, template,
+                            literal_consts=u.template_literals or None)
+        if "graph" in cols and "graph" not in out.columns:
+            out = out.withColumn("graph", F.lit(None).cast("string"))
+        return {tuple(r) for r in out.select(*cols).collect()}
+
+    def key(r):
+        return (r[0], r[2], r[3]) + tuple(r[7:])
+
+    want = {tuple(r) for r in graph.select(*cols).collect()}
+    if u.delete:
+        doomed = {key(r) for r in instantiate(u.delete)}
+        want = {r for r in want if key(r) not in doomed}
+    if u.insert:
+        want |= instantiate(u.insert)
+    got = {tuple(r) for r in
+           sparql_update(graph, text).select(*cols).collect()}
+    assert got == want
+    return got
+
+
+def test_update_where_union(spark):
+    got = _update_as_select(
+        _g(spark),
+        "DELETE { ?x schema:name ?n } INSERT { ?x schema:kind ?t }",
+        """{ { ?x a schema:Person ; schema:name ?n ; a ?t }
+             UNION { ?x schema:wordCount ?w ; schema:name ?n ; a ?t } }""")
+    assert ("d3", "iri", f"{S}kind", f"{S}Person", "iri", None,
+            None) in got
+    assert not any(r[2] == f"{S}name" and r[0] in ("d1", "d3")
+                   for r in got)
+
+
+def test_update_where_subselect(spark):
+    got = _update_as_select(
+        _g(spark),
+        "DELETE { ?x schema:name ?n } INSERT { ?x schema:long <urn:y> }",
+        """{ ?x a schema:Article .
+             { SELECT ?x ?n WHERE { ?x schema:name ?n
+                                    FILTER(STRLEN(?n) > 4) } } }""")
+    assert ("d1", "iri", f"{S}long", "urn:y", "iri", None, None) in got
+    assert ("d2", "iri", f"{S}name", "beta", "literal", None,
+            "de") in got
+
+
+def test_update_where_bind_after_optional(spark):
+    got = _update_as_select(
+        _g(spark),
+        "DELETE { ?x schema:wordCount ?w } INSERT { ?x schema:size ?l }",
+        """{ ?x a schema:Article OPTIONAL { ?x schema:wordCount ?w }
+             BIND(COALESCE(?w, "none") AS ?l) }""")
+    assert {r[3] for r in got if r[2] == f"{S}size"} == {"120", "none"}
+    assert not any(r[2] == f"{S}wordCount" for r in got)
+
+
+def test_update_where_graph_variable_scoping_nothing(spark):
+    got = _update_as_select(
+        _quads_terms(spark), "INSERT { ?x schema:alsoIn ?g }",
+        "{ GRAPH ?g { GRAPH <http://g/1> { ?x a schema:Article } } }")
+    assert {r[3] for r in got if r[2] == f"{S}alsoIn"} == {
+        "http://g/1", "http://g/2"}
