@@ -82,8 +82,10 @@ class GroupSpec:
     ``relations`` holds pre-compiled solution relations joined INTO
     the spec's own solution (the §18.2 sub-SELECT composition, e.g. a
     ``{ SELECT ... }`` block inside an OPTIONAL/MINUS/EXISTS body):
-    each entry is ``(thunk, certain, cols)`` — ``thunk(triples)``
-    yields the relation DataFrame lazily at evaluation time,
+    each entry is ``(thunk, certain, cols)`` — ``thunk(triples,
+    meta_vars)`` yields the relation DataFrame lazily at evaluation
+    time, with term-metadata companions for those of ``meta_vars`` it
+    projects from a plain pattern (see :func:`_plain_bound`),
     ``certain`` the frozenset of its columns that are bound in every
     row, ``cols`` its full column tuple (used by composition guards
     without evaluating).  Relations join after the spec's own
@@ -155,6 +157,24 @@ def _pattern_vars(patterns) -> set:
             if _is_var(t):
                 out.add(t[1:])
     return out
+
+
+def _plain_bound(spec: GroupSpec) -> set[str]:
+    """Variables that can carry term-metadata companions out of a
+    group: those a plain (non-path) pattern or a sub-SELECT projection
+    binds, in the group itself or in a UNION branch, less any a branch
+    binds by property paths alone (path endpoints carry no metadata).
+    A sub-SELECT relation keeps companions only for what its own group
+    binds plainly, so a projection counts here and is checked there."""
+    plain, path_only, todo = set(), set(), [spec]
+    while todo:
+        g = todo.pop()
+        todo += g.union
+        bound = _pattern_vars(p for p in g.patterns if isinstance(p[1], str))
+        bound |= {c for _thunk, _cert, cols in g.relations for c in cols}
+        plain |= bound
+        path_only |= _pattern_vars(g.patterns) - bound
+    return plain - path_only
 
 
 def _certain_vars(spec: GroupSpec) -> set:
@@ -925,7 +945,7 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
         # first relation IS the solution; the rest join below.  The
         # constructor guarantees no BIND/VALUES/OPTIONAL/MINUS/EXISTS.
         (thunk, cert, _cols), *relations = relations
-        solution = thunk(triples)
+        solution = thunk(triples, meta_vars)
         certain = set(cert)
     for var in spec.graph_ranges:
         # a GRAPH variable that scoped nothing (§13.3) ranges over
@@ -985,8 +1005,9 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     # with relations present they apply here; filters commute with
     # the semi/anti EXISTS joins above.
     for thunk, cert, _cols in relations:
-        solution = _compat_join(solution, thunk(triples), "inner",
-                                certain, cert)
+        rel = thunk(triples, frozenset(v for v in meta_vars
+                                       if v not in solution.columns))
+        solution = _compat_join(solution, rel, "inner", certain, cert)
         certain |= set(cert)
     if spec.relations:
         for expr in spec.filters:

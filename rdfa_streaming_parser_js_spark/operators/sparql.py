@@ -119,7 +119,9 @@ Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
   onto :mod:`operators.update` (lexical-identity deletes,
   metadata-preserving inserts, set-semantics result).  An update's
   WHERE is a query group like any other (UNION, sub-SELECT, BIND after
-  OPTIONAL, GRAPH ranges included).  All four forms
+  OPTIONAL, GRAPH ranges included); a sub-SELECT hands out the term
+  metadata of what it projects from plain patterns, so a literal it
+  binds is inserted as that literal.  All four forms
   are QUADS-aware: ``GRAPH <g> { ... }`` wrappers in DATA blocks
   (§3.1.1 QuadData, ground graph IRIs only) and ``GRAPH ?g/<iri>
   { ... }`` wrappers in DELETE/INSERT templates (§3.1.3 QuadPattern)
@@ -156,7 +158,8 @@ Documented deviations (each raises or is noted, never silent):
   ``LANG(COALESCE(?n, ?alt))`` over OPTIONAL-bound variables works);
   any other nested argument raises.  Each variable must be bound by a
   plain triple pattern in scope (property-path endpoints carry no
-  metadata) or by a constructor BIND.
+  metadata), by a constructor BIND, or by a sub-SELECT that projects
+  it from a plain pattern.
 - Plain STRING constants in patterns match the LEXICAL value (the
   engine-wide identity documented on bgp_match) — only tagged/typed
   constants get strict term equality.  Tagged/typed literals in
@@ -182,8 +185,8 @@ Documented deviations (each raises or is noted, never silent):
 - Comparing a bare variable against a numeric literal casts the
   variable to DOUBLE (SPARQL's numeric-comparison semantics over this
   engine's lexical columns).  In ``+ - * /`` a bare variable casts to
-  BIGINT against an integer literal and to DOUBLE otherwise; a
-  non-numeric value leaves that row's result unbound (§17.2).
+  DOUBLE too (so ``"120" + 1`` is ``121.0``); a non-numeric value
+  leaves that row's result unbound (§17.2).
 - With ``DISTINCT``, ``ORDER BY`` keys must be projected variables
   (ordering applies after de-duplication).
 - ``ORDER BY`` compares the LEXICAL form (binary UTF-8 — the engine's
@@ -237,7 +240,8 @@ from pyspark.sql import functions as F
 from rdfa_streaming_parser_js_spark.operators import paths as P
 from rdfa_streaming_parser_js_spark.operators.bgp import (
     BNODE_FRESH_SENTINEL, META_SUFFIXES, GroupSpec, Lit,
-    _certain_vars, _eval_spec, _pattern_vars, bgp_construct, describe)
+    _certain_vars, _eval_spec, _pattern_vars, _plain_bound, bgp_construct,
+    describe)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -299,8 +303,10 @@ def _relation_entry(sq: "ParsedQuery"):
     its enclosing :class:`bgp.GroupSpec`, made once when the sub-SELECT
     closes.  The thunk defers to :func:`_execute_select` at evaluation
     time, when the triples DataFrame exists and meta-variable stamping
-    has completed."""
-    return (lambda triples, _sq=sq: _execute_select(triples, _sq),
+    has completed, and keeps the metadata companions the enclosing
+    group asks for."""
+    return (lambda triples, meta, _sq=sq: _execute_select(triples, _sq,
+                                                          meta),
             _certain_out_vars(sq), tuple(sorted(_projected_vars(sq))))
 
 
@@ -1261,18 +1267,16 @@ class _Parser:
 
 def _arith(lhs: tuple, op: str, rhs: tuple) -> tuple:
     """``lhs op rhs`` over the engine's lexical columns.  A bare-variable
-    operand is TRY_CAST — to BIGINT against an integer literal (the
-    type Spark's own coercion picks there, so "120" + 1 stays 121), to
-    DOUBLE otherwise — so a non-numeric value leaves that row's result
-    unbound (§17.2) instead of aborting the query under ANSI."""
-    def operand(side, other):
+    operand is TRY_CAST to DOUBLE, as in the numeric comparisons and
+    SUM/AVG: a column's SQL type is fixed for every row, so DOUBLE is
+    the one type that keeps both "120" and a fraction ("1.5", or a
+    double an earlier BIND or aggregate computed) exact enough, and a
+    non-numeric value leaves that row's result unbound (§17.2) instead
+    of aborting the query under ANSI."""
+    def operand(side):
         sql, kind = side
-        if kind != "var":
-            return sql
-        typ = ("BIGINT" if other[1] == "num" and other[0].isdigit()
-               else "DOUBLE")
-        return f"TRY_CAST({sql} AS {typ})"
-    return f"({operand(lhs, rhs)} {op} {operand(rhs, lhs)})", "other"
+        return f"TRY_CAST({sql} AS DOUBLE)" if kind == "var" else sql
+    return f"({operand(lhs)} {op} {operand(rhs)})", "other"
 
 
 def _unquote(raw: str) -> str:
@@ -1906,21 +1910,10 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
                 "CONSTRUCT template variable(s) ?" + " ?".join(bad)
                 + " must appear in GROUP BY (aggregates cannot be "
                 "projected into a template)")
-        # carry each key's term-metadata companions through the
-        # grouping as one co-observed (kind, lang, dt) tuple — min of
-        # the struct is deterministic and never mixes columns from
-        # different source terms
-        meta_aggs = []
-        for v in q.group_by:
-            comps = [v + sfx for sfx in META_SUFFIXES]
-            if all(c in sol.columns for c in comps):
-                meta_aggs.append((v, comps))
         hidden = [F.expr(expr).alias(f"__having_{i}")
                   for i, (expr, has_agg) in enumerate(q.having)
                   if has_agg]
-        carried = [F.min(F.struct(*[F.col(c) for c in comps]))
-                   .alias(f"__meta_{v}")
-                   for v, comps in meta_aggs]
+        carried, unpack = _carry_meta(sol, q.group_by)
         if hidden or carried:
             sol = sol.groupBy(*q.group_by).agg(*hidden, *carried)
         else:
@@ -1932,13 +1925,7 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
                     "condition (there are no SELECT aliases to "
                     "reference)")
             sol = sol.filter(F.col(f"__having_{i}"))
-        sol = sol.drop(*[f"__having_{i}"
-                         for i in range(len(q.having))])
-        for v, comps in meta_aggs:
-            for c in comps:
-                sol = sol.withColumn(
-                    c, F.col(f"__meta_{v}.{c}"))
-            sol = sol.drop(f"__meta_{v}")
+        sol = sol.select(*q.group_by, *unpack)
     if q.order_by:
         sol = _order(sol, q.order_by)
     sol = _slice(sol, q)
@@ -1950,12 +1937,35 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
                          literal_consts=q.template_literals or None)
 
 
-def _execute_select(triples: DataFrame, q: ParsedQuery) -> DataFrame:
+def _carry_meta(sol: DataFrame, keys) -> tuple[list, list]:
+    """Carry each group key's term-metadata companions through a
+    grouping as one co-observed (kind, lang, dt) tuple — min of the
+    struct is deterministic and never mixes columns from different
+    source terms.  Returns the aggregates to add to the grouping and
+    the columns that unpack them afterwards."""
+    carried, unpack = [], []
+    for v in keys:
+        comps = [v + sfx for sfx in META_SUFFIXES]
+        if all(c in sol.columns for c in comps):
+            carried.append(F.min(F.struct(*comps)).alias(f"__meta_{v}"))
+            unpack += [F.col(f"__meta_{v}.{c}").alias(c) for c in comps]
+    return carried, unpack
+
+
+def _execute_select(triples: DataFrame, q: ParsedQuery,
+                    keep_meta: frozenset = frozenset()) -> DataFrame:
     """The SELECT pipeline (shared by top-level queries and §18.2
     sub-SELECTs): aggregate path vs plain projection, then DISTINCT /
-    ORDER / LIMIT / OFFSET in SPARQL's slice order."""
-    sol = _eval_spec(triples, q.where, q.meta_vars)
+    ORDER / LIMIT / OFFSET in SPARQL's slice order.  ``keep_meta``
+    names variables whose term-metadata companions the result keeps
+    (what an enclosing group asks of a sub-SELECT); only plainly
+    projected variables that the WHERE group binds by plain patterns
+    have them."""
     items = q.select
+    keep = keep_meta & _plain_bound(q.where)
+    if items is not None:
+        keep &= {it.var for it in items if it.sql is None}
+    sol = _eval_spec(triples, q.where, q.meta_vars | keep)
     agg_mode = bool(q.group_by) or bool(
         items and any(it.is_agg for it in items))
     if agg_mode:
@@ -1980,12 +1990,13 @@ def _execute_select(triples: DataFrame, q: ParsedQuery) -> DataFrame:
         hidden = [F.expr(expr).alias(f"__having_{i}")
                   for i, (expr, has_agg) in enumerate(q.having)
                   if has_agg]
-        sol = (sol.groupBy(*q.group_by).agg(*aggs, *hidden)
+        carried, unpack = _carry_meta(sol, [k for k in keys if k in keep])
+        sol = (sol.groupBy(*q.group_by).agg(*aggs, *hidden, *carried)
                if q.group_by else sol.agg(*aggs, *hidden))
         for i, (expr, has_agg) in enumerate(q.having):
             sol = sol.filter(F.col(f"__having_{i}") if has_agg
                              else F.expr(expr))
-        sol = sol.select(*[it.var for it in items])
+        sol = sol.select(*[it.var for it in items], *unpack)
     else:
         for it in items or []:
             if it.sql is not None:
@@ -2000,14 +2011,17 @@ def _execute_select(triples: DataFrame, q: ParsedQuery) -> DataFrame:
             # order on the full solution (keys may be unprojected —
             # SPARQL sorts before projection)...
             sol = _order(sol, q.order_by)
+        # companion metadata columns are engine plumbing, not solution
+        # variables — drop after ordering (ORDER BY expressions may
+        # reference them) unless the enclosing group keeps them
+        kept = [v + sfx for v in keep for sfx in META_SUFFIXES
+                if v + sfx in sol.columns]
         if items is not None:
-            sol = sol.select(*[it.var for it in items])
+            sol = sol.select(*[it.var for it in items], *kept)
         elif q.meta_vars:
-            # SELECT *: companion metadata columns are engine plumbing,
-            # not solution variables — drop after ordering (ORDER BY
-            # expressions may reference them)
             sol = sol.drop(*[v + sfx for v in q.meta_vars
-                             for sfx in META_SUFFIXES])
+                             for sfx in META_SUFFIXES
+                             if v + sfx not in kept])
 
     if q.distinct:
         sol = sol.dropDuplicates()

@@ -40,23 +40,9 @@ from pyspark.sql import functions as F
 
 from rdfa_streaming_parser_js_spark.operators.bgp import (
     TERM_COLS, GroupSpec, Pattern, _eval_spec, _pattern_vars,
-    bgp_construct)
+    _plain_bound, bgp_construct)
 
 _LEX_KEY = ("subj", "pred", "obj_value")
-
-
-def _plain_bound(spec: GroupSpec) -> set[str]:
-    """WHERE variables a plain (non-path) pattern binds, in the group's
-    own patterns or in a UNION branch's, and that no branch binds by
-    property paths alone (path endpoints carry no term metadata)."""
-    plain, path_only, todo = set(), set(), [spec]
-    while todo:
-        g = todo.pop()
-        todo += g.union
-        bound = _pattern_vars(p for p in g.patterns if isinstance(p[1], str))
-        plain |= bound
-        path_only |= _pattern_vars(g.patterns) - bound
-    return plain - path_only
 
 
 def apply_update(graph: DataFrame,
@@ -121,7 +107,9 @@ def apply_update(graph: DataFrame,
                          "group members")
     # metadata for inserted vars so copied terms stay themselves; the
     # delete side needs none (lexical identity).  Only vars bound by a
-    # plain pattern qualify (path endpoints carry no metadata).  Extra
+    # plain pattern or a sub-SELECT projection qualify (path endpoints
+    # carry no metadata; a sub-SELECT keeps what its own plain
+    # patterns bind, see GroupSpec.relations).  Extra
     # meta_vars (e.g. isBlank/datatype FILTER references from the text
     # front-end) pass through unfiltered — the evaluator itself raises
     # for a metadata request on a path-only binding

@@ -922,9 +922,9 @@ def test_exec_sum_avg_over_non_numeric_value_is_unbound(spark):
         "d1": (120.0, 120.0), "d2": (None, None), "d3": (7.0, 7.0)}
 
 
-def test_exec_arithmetic_on_integer_literal_keeps_integer_result(spark):
-    """``?wc + 1`` casts the variable like Spark's own coercion did
-    ("120" + 1 is 121); a value that is no integer ("n/a", "1.5") is a
+def test_exec_arithmetic_casts_a_variable_to_double(spark):
+    """``?wc + 1`` adds the variable's numeric value: "120" + 1 is 121
+    and a decimal "1.5" + 1 is 2.5; a non-numeric value ("n/a") is a
     type error that leaves ?t unbound for that row (§17.2) instead of
     aborting the query."""
     kg = _kg_wc(spark).unionByName(spark.createDataFrame(
@@ -932,7 +932,24 @@ def test_exec_arithmetic_on_integer_literal_keeps_integer_result(spark):
     got = sparql_query(kg, PFX + """
         SELECT ?d ((?wc + 1) AS ?t) WHERE { ?d schema:wordCount ?wc }""")
     assert {r.d: r.t for r in got.collect()} == {
-        "d1": 121, "d2": None, "d3": 8, "d4": None}
+        "d1": 121, "d2": None, "d3": 8, "d4": 2.5}
+
+
+def test_exec_arithmetic_keeps_a_computed_fraction(spark):
+    """A fractional operand computed earlier — a BIND, or an AVG
+    projected by a sub-SELECT — keeps its fraction against an integer
+    literal."""
+    got = sparql_query(_kg_wc(spark), PFX + """
+        SELECT ?d ((?h + 1) AS ?t)
+        WHERE { ?d schema:wordCount ?wc BIND(?wc * 0.5 AS ?h) }""")
+    assert {r.d: r.t for r in got.collect()} == {
+        "d1": 61, "d2": None, "d3": 4.5}
+    got = sparql_query(spark.createDataFrame(
+        [("d1", f"{S}wordCount", "1"), ("d2", f"{S}wordCount", "2")],
+        COLS), PFX + """
+        SELECT ((?a * 2) AS ?t) WHERE {
+            { SELECT (AVG(?wc) AS ?a) WHERE { ?d schema:wordCount ?wc } } }""")
+    assert [r.t for r in got.collect()] == [3]
 
 
 def test_exec_arithmetic_on_two_variables_is_numeric(spark):

@@ -169,6 +169,19 @@ def test_constructor_companions_dropped_by_select_star(spark):
     assert sorted(out.columns) == ["s", "src", "v"]
 
 
+def test_introspection_over_subselect_variable(spark):
+    """A variable a sub-SELECT projects from a plain pattern carries
+    its term metadata out to the enclosing group's FILTER (it used to
+    fail analysis on the missing companion column)."""
+    out = sparql_query(_typed_kg(spark), PFX + """
+        SELECT ?s WHERE {
+            ?s schema:wordCount ?w .
+            { SELECT ?s ?n WHERE { ?s schema:name ?n } }
+            FILTER(LANG(?n) = "fr" || isIRI(?n)) }""")
+    assert sorted(r.s for r in out.collect()) == ["d1"]
+    assert out.columns == ["s"]
+
+
 def test_constructed_term_in_construct_template(spark):
     # metadata-faithful CONSTRUCT: the constructed langString keeps
     # its tag in the emitted triple
