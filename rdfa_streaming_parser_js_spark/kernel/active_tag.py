@@ -4,6 +4,14 @@ Semantic port of /root/reference/lib/IActiveTag.ts:7-30 and
 /root/reference/lib/IRdfaPattern.ts:7-16. One frame per open element; the
 stack of these frames is the complete RDFa state for a document.
 
+Plain elements are the exception.  A plain element (no RDFa attribute,
+no xmlns*, not the root, not <base>/<time>/<head>/<body>, not inside an
+XMLLiteral or a pattern) opens no frame: it adds one to the ``depth`` of
+the top frame, which is its effective parent, and its close subtracts
+one.  It does open the frame it would have had while an rdfa:copy waits
+for its pattern, and when a pattern root or an rdfa:copy opens inside
+it.
+
 The top frame is always the next element's parent.  A skipped element's
 frame (``skip_element``) stands in for its parent: it carries the
 parent's ``subject``, ``object``, ``list_mapping``, ``local_base_iri``
@@ -12,8 +20,9 @@ parent's ``inlist``, ``explicit_new_subject`` and
 ``list_mapping_local``), keeps the lang, prefixes and vocab it declares
 itself, and emits no list at its close.
 
-A frame keeps one ``text`` list: the text segments below it and, while
-collecting an XMLLiteral, the serialized tags, marked as ``Markup``.
+A frame owns one ``text`` list: the text segments below it and, while
+collecting an XMLLiteral, the serialized tags, marked as ``Markup``.  At
+its close a frame hands the list to its parent and keeps none.
 """
 
 from __future__ import annotations
@@ -33,7 +42,7 @@ class ActiveTag:
         "collect_child_tags", "collect_child_tags_for_current_tag",
         "collected_pattern_tag", "interpret_object_as_time",
         "incomplete_triples", "inlist", "list_mapping",
-        "list_mapping_local", "skip_element", "local_base_iri",
+        "list_mapping_local", "skip_element", "local_base_iri", "depth",
     )
 
     def __init__(self) -> None:
@@ -58,6 +67,7 @@ class ActiveTag:
         self.list_mapping_local: dict[str, list] = {}
         self.skip_element = False
         self.local_base_iri = None       # NamedNode | None
+        self.depth = 0                   # plain elements open above it
 
 
 class RdfaPattern:

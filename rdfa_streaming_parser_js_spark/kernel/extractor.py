@@ -40,8 +40,9 @@ _RDFA_USES_VOCABULARY = NamedNode(RDFA + "usesVocabulary")
 
 # Attributes that make a tag RDFa-relevant: if none of these (and no
 # xmlns*) appear, steps 2-13 collapse to taking the parent's context,
-# and ``on_tag_open`` takes a fast path.  Most real-web markup
-# (div/span/p/a-without-RDFa soup) lands there.
+# and ``on_tag_open`` counts the element on the top frame instead of
+# opening a frame.  Most real-web markup (div/span/p/a-without-RDFa
+# soup) lands there.
 _RDFA_ATTRS = frozenset((
     "about", "resource", "href", "src", "typeof", "property", "rel",
     "rev", "content", "datatype", "datetime", "inlist", "vocab",
@@ -50,12 +51,27 @@ _RDFA_ATTRS = frozenset((
 # sniffing, head/body subject inheritance) that must take the full path
 # even with no attributes.
 _NAME_TRIGGERED_TAGS = frozenset(("base", "time", "head", "body"))
-# Differential-test switch (tests/test_fast_driver.py): the fast path
-# must be behaviorally invisible; parity is asserted by running the
-# fixture + fuzz corpora with this flag off and on.
+# Differential-test switch (tests/test_fast_driver.py): off, every
+# element opens a frame on the full path.  Counting must be behaviorally
+# invisible; parity is asserted by running the fixture + fuzz corpora
+# with this flag off and on.
 FAST_TAG_PATH = True
 
 _INITIAL_CONTEXT_WITH_XHTML = {**INITIAL_CONTEXT, **INITIAL_CONTEXT_XHTML}
+
+
+def _plain_frame(parent: ActiveTag) -> ActiveTag:
+    """The frame a plain element would open under ``parent``: all of its
+    context is the parent's, and with a parent object it is skipped
+    (the 5.2 no-attribute arm, RdfaParser.ts:412-419)."""
+    tag = ActiveTag()
+    tag.vocab = parent.vocab
+    tag.prefixes_custom = parent.prefixes_custom
+    tag.prefixes_all = parent.prefixes_all
+    tag.language = parent.language
+    tag.skip_element = bool(parent.object)
+    _stand_in(tag, parent)
+    return tag
 
 
 def _stand_in(tag: ActiveTag, parent: ActiveTag) -> None:
@@ -124,17 +140,53 @@ class RdfaExtractor:
 
     # ------------------------------------------------------------------
     def on_tag_open(self, name: str, attributes: dict[str, str]) -> None:
-        features = self._features
-        util = self.util
         stack = self.stack
 
         # The top frame is the parent.  A skipped tag's frame stands in
-        # for its own parent (``_stand_in``): it carries that parent's
-        # subject, object, lists, base and incomplete triples, while its
-        # own lang, prefixes and vocab reach its children, so the
-        # reference's walk back over skipped tags (RdfaParser.ts:89-104)
-        # is never needed.
+        # for its own parent (``_stand_in``) and a plain element opens no
+        # frame, so the reference's walk back over skipped tags
+        # (RdfaParser.ts:89-104) is never needed.
         parent = stack[-1]
+
+        # Plain element: no RDFa-relevant attributes, no name-triggered
+        # behavior, not the root element, not inside an XMLLiteral or an
+        # rdfa:Pattern collection.  Steps 2-13 reduce to taking the
+        # parent's context, so the element opens no frame: it is counted
+        # on the top frame (``depth``), which is its effective parent.
+        # While an rdfa:copy waits for its pattern it opens the frame it
+        # would have had (``_plain_frame``), so the replay into the
+        # copy's frame lands before the text of that frame's children.
+        # Exactly equivalent to the full path below (differential-tested
+        # with FAST_TAG_PATH off/on over the fixture and fuzz corpora).
+        if (FAST_TAG_PATH and not parent.collect_child_tags
+                and len(stack) != 1
+                and name not in _NAME_TRIGGERED_TAGS
+                and (not self._copy_rdfa_patterns
+                     or parent.collected_pattern_tag is None)
+                and _RDFA_ATTRS.isdisjoint(attributes)):
+            for a in attributes:
+                if a.startswith("xmlns"):
+                    break
+            else:
+                if self.pending_copies:
+                    stack.append(_plain_frame(parent))
+                else:
+                    parent.depth += 1
+                return
+
+        features = self._features
+        util = self.util
+
+        # A pattern root or an rdfa:copy keeps its parent frame past its
+        # own close (to replay into it), so under counted elements the
+        # innermost one first opens the frame it would have had.
+        if parent.depth and self._copy_rdfa_patterns and (
+                attributes.get("typeof") == "rdfa:Pattern"
+                or attributes.get("property") == "rdfa:copy"):
+            parent.depth -= 1
+            parent = _plain_frame(parent)
+            stack.append(parent)
+
         tag = ActiveTag()
         tag.name = name
         tag.collect_child_tags = parent.collect_child_tags
@@ -144,33 +196,6 @@ class RdfaExtractor:
         tag.list_mapping_local = parent.list_mapping
         tag.local_base_iri = parent.local_base_iri
         stack.append(tag)
-
-        # Fast path: no RDFa-relevant attributes, no name-triggered
-        # behavior, not the root element, not inside an XMLLiteral or an
-        # rdfa:Pattern collection.  Steps 2-13 reduce to taking the
-        # parent's context by reference; with a parent object the 5.2
-        # no-attribute arm marks the element skipped (RdfaParser.ts:
-        # 412-419), and the frame is then a stand-in.  Without one it
-        # owns no list and completes no triple, so sharing is safe too.
-        # Exactly equivalent to the full path below (differential-tested
-        # with FAST_TAG_PATH off/on over the fixture and fuzz corpora).
-        if (FAST_TAG_PATH and not tag.collect_child_tags
-                and len(stack) != 2
-                and name not in _NAME_TRIGGERED_TAGS
-                and (not self._copy_rdfa_patterns
-                     or parent.collected_pattern_tag is None)
-                and _RDFA_ATTRS.isdisjoint(attributes)):
-            for a in attributes:
-                if a.startswith("xmlns"):
-                    break
-            else:
-                tag.vocab = parent.vocab
-                tag.prefixes_custom = parent.prefixes_custom
-                tag.prefixes_all = parent.prefixes_all
-                tag.language = parent.language
-                tag.skip_element = bool(parent.object)
-                _stand_in(tag, parent)
-                return
 
         # XMLLiteral/HTML collection: serialize the open tag, re-declaring
         # inherited custom prefixes alphabetically (RdfaParser.ts:123-139).
@@ -213,10 +238,12 @@ class RdfaExtractor:
                 return
             # Instantiate on rdfa:copy (RdfaParser.ts:190-201).  A copy
             # under a skipped tag replays into a detached frame, as the
-            # reference's object spread does, so its text stays out.
+            # reference's object spread does, so its text stays out: the
+            # detached frame starts with no text list of its own.
             if attributes.get("property") == "rdfa:copy":
                 if parent.skip_element:
                     parent = copy(parent)
+                    parent.text = None
                 copy_id = (attributes.get("resource")
                            or attributes.get("href")
                            or attributes.get("src"))
@@ -533,8 +560,11 @@ class RdfaExtractor:
 
     # ------------------------------------------------------------------
     def on_tag_close(self) -> None:
-        util = self.util
         tag = self.stack[-1]
+        if tag.depth:  # a counted element
+            tag.depth -= 1
+            return
+        util = self.util
         parent = self.stack[-2] if len(self.stack) >= 2 else None
 
         if not (tag.collect_child_tags and parent is not None
@@ -576,7 +606,8 @@ class RdfaExtractor:
                 else:
                     for predicate in tag.predicates:
                         self.emit_triple(subject, predicate, obj)
-                if parent is None or parent.predicates is None:
+                if (parent is None or parent.predicates is None
+                        or parent.depth):  # a counted parent has none
                     tag.text = None
 
             # 14: local list mappings → rdf:first/rest/nil chains
@@ -607,10 +638,15 @@ class RdfaExtractor:
         if tag.collect_child_tags and tag.text is not None:
             tag.text.append(Markup(f"</{tag.name}>"))
 
-        # Propagate text to the parent (RdfaParser.ts:705-723)
+        # Propagate text to the parent (RdfaParser.ts:705-723).  A closed
+        # frame keeps no list: a pattern flushed into it later must not
+        # reach the list it handed up.
         if tag.text is not None and parent is not None:
-            parent.text = (tag.text if parent.text is None
-                           else parent.text + tag.text)
+            if parent.text is None:
+                parent.text = tag.text
+            else:
+                parent.text += tag.text
+            tag.text = None
 
     # ------------------------------------------------------------------
     def on_end(self) -> None:

@@ -239,7 +239,7 @@ from pyspark.sql import functions as F
 
 from rdfa_streaming_parser_js_spark.operators import paths as P
 from rdfa_streaming_parser_js_spark.operators.bgp import (
-    BNODE_FRESH_SENTINEL, META_SUFFIXES, GroupSpec, Lit,
+    BNODE_FRESH_SENTINEL, META_SUFFIXES, TERM_COLS, GroupSpec, Lit,
     _certain_vars, _eval_spec, _pattern_vars, _plain_bound, bgp_construct,
     describe)
 
@@ -1886,7 +1886,12 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
                 seeds = s if seeds is None else (
                     seeds.unionByName(s).distinct())
         return describe(triples, seeds)
-    sol = _eval_spec(triples, q.where, q.meta_vars)
+    meta = q.meta_vars
+    if q.form == "construct" and set(TERM_COLS) <= set(triples.columns):
+        # a template variable a plain pattern binds keeps its source
+        # term, as in apply_update: a copied literal stays that literal
+        meta = meta | (_pattern_vars(q.template) & _plain_bound(q.where))
+    sol = _eval_spec(triples, q.where, meta)
     if q.form == "ask":
         return (sol.limit(1)
                 .agg((F.count(F.lit(1)) > 0).alias("ask")))

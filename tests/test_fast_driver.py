@@ -444,3 +444,159 @@ def test_xml_literal_tags_stay_out_of_text():
            "content='c'>b<b>bo</b></span> z</p>")
     _, text = _run(FastHtmlSaxDriver, doc, {"base_iri": "http://e.org/"})
     assert text == "a bbo z"
+
+
+# --------------------------------------------------------------------------
+# Counted elements.  A plain element (one that takes FAST_TAG_PATH) adds
+# one to the depth count of the top frame instead of opening a frame of
+# its own.  Four rules keep the output byte-identical to the per-element
+# frames; each document below fails with one of them dropped.  Each runs
+# with the fast path on and off.
+# --------------------------------------------------------------------------
+
+_BASE = {"base_iri": "http://example.org/"}
+
+
+@pytest.fixture(params=[True, False], ids=["fast", "full"])
+def _tag_path(request, monkeypatch):
+    from rdfa_streaming_parser_js_spark.kernel import extractor as ex_mod
+    monkeypatch.setattr(ex_mod, "FAST_TAG_PATH", request.param)
+
+
+def test_pending_copy_pins_its_frame(_tag_path):
+    """(a) While an rdfa:copy waits for its pattern, plain elements open
+    frames: the replay into the copy's still-open frame lands before the
+    text of that frame's open children."""
+    doc = ("<html><body><div about='#s1' typeof='schema:Thing'>"
+           "<div property='rdfa:copy' resource='#p'>c</div><section>mid "
+           "<div typeof='rdfa:Pattern' resource='#p'><span "
+           "property='schema:name'>Pat</span><b>bold</b></div></section>"
+           "</div></body></html>")
+    _, text = _run(FastHtmlSaxDriver, doc, _BASE)
+    assert text == "cboldmid "
+
+
+def test_detached_copy_starts_with_no_text(_tag_path):
+    """(b) A copy replayed into a detached copy of a skipped frame does
+    not add its text to the skipped frame's own text list."""
+    doc = ("<html><body><div typeof='rdfa:Pattern' resource='#p'><span "
+           "property='schema:name'>Pat</span><b>bold</b></div><div "
+           "about='#s' typeof='schema:Thing'>before <div lang='fr'>in "
+           "<link property='rdfa:copy' href='#p'/> out</div> after</div>"
+           "</body></html>")
+    _, text = _run(FastHtmlSaxDriver, doc, _BASE)
+    assert text == "before in  out after"
+
+
+def test_closed_frame_keeps_no_text(_tag_path):
+    """(c) An unreferenced pattern is flushed at the document end into
+    its closed parent; that frame handed its text up at its close, so
+    the flush reaches no open text list."""
+    doc = ("<html><body><div lang='en'>w <div typeof='rdfa:Pattern' "
+           "resource='#p'><b>bold</b></div></div></body></html>")
+    _, text = _run(FastHtmlSaxDriver, doc, _BASE)
+    assert text == "w "
+
+
+def test_counted_parent_has_no_predicates(_tag_path):
+    """(d) A literal under a plain element leaves its text out of the
+    enclosing literal, as it does under any parent without predicates."""
+    doc = ("<html><body><div about='#s'><span property='http://e.org/a'>"
+           "A <b><span property='http://e.org/b'>x</span></b> z</span>"
+           "</div></body></html>")
+    triples, _ = _run(FastHtmlSaxDriver, doc, _BASE)
+    s = ("iri", "http://example.org/#s")
+    assert (s, ("iri", "http://e.org/a"), ("lit", "A  z", None, None)) \
+        in triples
+    assert (s, ("iri", "http://e.org/b"), ("lit", "x", None, None)) \
+        in triples
+
+
+_NAME = ("iri", "http://schema.org/name")
+
+
+@pytest.mark.parametrize("inner", [
+    "<link property='rdfa:copy' href='#p'/>",
+    "<div property='rdfa:copy' resource='#p'>c</div>",
+], ids=["link", "div"])
+def test_copy_under_counted_elements_uses_the_innermost_frame(
+        _tag_path, inner):
+    """An rdfa:copy under nested plain elements replays into the stand-in
+    frame of the innermost one: that frame is skipped, so the replay is
+    detached and its text stays out."""
+    doc = ("<html><body><div about='#s' typeof='schema:Thing'>"
+           "<div typeof='rdfa:Pattern' resource='#p'><span "
+           "property='schema:name'>Pat</span> plain</div>x <div "
+           f"class='w'><b>y {inner}</b></div> z</div></body></html>")
+    triples, text = _run(FastHtmlSaxDriver, doc, _BASE)
+    assert text == "x y " + ("c" if "div" in inner else "") + " z"
+    assert (("iri", "http://example.org/#s"), _NAME,
+            ("lit", "Pat", None, None)) in triples
+
+
+def test_pattern_under_counted_elements_is_flushed_detached(_tag_path):
+    """An unreferenced pattern under nested plain elements is flushed at
+    the document end into the innermost one's stand-in frame."""
+    doc = ("<html><body><div about='#s' property='http://e.org/a'>x "
+           "<div class='w'><b>y <div typeof='rdfa:Pattern' resource='#p'>"
+           "<span property='schema:name'>Pat</span> plain</div></b></div>"
+           " z</div></body></html>")
+    triples, _ = _run(FastHtmlSaxDriver, doc, _BASE)
+    assert (("iri", "http://example.org/#p"), _NAME,
+            ("lit", "Pat", None, None)) in triples
+    assert (("iri", "http://example.org/#s"), ("iri", "http://e.org/a"),
+            ("lit", "x y  z", None, None)) in triples
+
+
+_BLOCK = ("<div about='#s' typeof='schema:Thing'><span property="
+          "'schema:name'>N</span><div rel='schema:knows'><span "
+          "about='#o'>o</span></div></div>")
+_BLOCK_DEPTH = 3
+
+
+class _StackDepth(RdfaExtractor):
+    """Records the deepest frame stack seen at an element's open."""
+
+    deepest = 0
+
+    def on_tag_open(self, name, attributes):
+        super().on_tag_open(name, attributes)
+        self.deepest = max(self.deepest, len(self.stack))
+
+
+def test_plain_elements_allocate_no_frame(monkeypatch):
+    """2,000 plain siblings and 5,000-deep plain nesting around one RDFa
+    block cost no frame: as many frames are built as for the bare block,
+    and the stack never holds more than the root frame, <body> and the
+    block's own frames."""
+    from rdfa_streaming_parser_js_spark.kernel import extractor as ex_mod
+    built = [0]
+
+    class Counted(ex_mod.ActiveTag):
+        __slots__ = ()
+
+        def __init__(self):
+            built[0] += 1
+            super().__init__()
+
+    monkeypatch.setattr(ex_mod, "ActiveTag", Counted)
+
+    def run(doc):
+        built[0] = 0
+        ex = _StackDepth(base_iri="http://example.org/", profile="html")
+        d = FastHtmlSaxDriver(ex)
+        d.feed(doc)
+        d.finish()
+        return (built[0], ex.deepest,
+                (flatten_triples(ex.triples), ex.extracted_text()))
+
+    siblings = "<p class='x'>t <b>u</b></p>" * 1000
+    wrapped = ("<body>" + siblings + "<div class='w'>" * 5000 + _BLOCK
+               + "</div>" * 5000 + siblings + "</body>")
+    bare_built, _, _ = run("<body>" + _BLOCK + "</body>")
+    n_built, deepest, out = run(wrapped)
+    assert n_built == bare_built
+    assert deepest <= _BLOCK_DEPTH + 2
+    assert out[0]  # the block's triples
+    monkeypatch.setattr(ex_mod, "FAST_TAG_PATH", False)
+    assert run(wrapped)[2] == out

@@ -195,6 +195,24 @@ def test_constructed_term_in_construct_template(spark):
         ("d2", "hi", "literal", "de")
 
 
+def test_construct_copies_a_literal_as_that_literal(spark):
+    # a template variable bound by a plain pattern carries its source
+    # term: the tagged literal stays tagged, the IRI stays an IRI
+    kg = spark.createDataFrame([
+        ("x1", "iri", f"{S}name", "alpha", "literal", None, "en"),
+        ("x2", "iri", f"{S}name", "beta", "iri", None, None),
+        ("x3", "iri", f"{S}name", "7", "literal", f"{XSD}integer", None),
+    ], TERM_SCHEMA)
+    out = sparql_query(kg, PFX + """
+        CONSTRUCT { ?x schema:alt ?n } WHERE { ?x schema:name ?n }""")
+    rows = {r.subj: (r.pred, r.obj_value, r.obj_kind, r.obj_datatype,
+                     r.obj_lang) for r in out.collect()}
+    assert rows == {
+        "x1": (f"{S}alt", "alpha", "literal", None, "en"),
+        "x2": (f"{S}alt", "beta", "iri", None, None),
+        "x3": (f"{S}alt", "7", "literal", f"{XSD}integer", None)}
+
+
 def test_nested_constructor_raises():
     with pytest.raises(SparqlSyntaxError, match="entire BIND"):
         parse_sparql(PFX + """SELECT ?s WHERE {
