@@ -1558,8 +1558,8 @@ def q_kg_sparql_update(spark, sf_dir):
     DELETE/INSERT/WHERE migrates schema:name → schema:headline with
     language tags preserved (metadata-carrying insert) and enriches
     each matched article with a typed-integer constant
-    (``schema:version 2`` → xsd:integer literal, the parse-time
-    literal-constant channel).  Deletion is by lexical triple identity
+    (``schema:version 2`` → the xsd:integer ``bgp.Lit`` the parser
+    makes of a template number).  Deletion is by lexical triple identity
     (one anti-join); result is the graph-set slice of the three
     touched predicates.  The update is a pure plan over the canonical
     graph — at scale the swap is the catalog-layer table replace."""

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rdfa_streaming_parser_js_spark.operators.bgp import node_kind
+
 
 # C0 controls other than LF/CR/TAB (which get short escapes): RFC 8259
 # requires EVERY control below 0x20 escaped, and raw bytes like 0x01 do
@@ -133,8 +135,8 @@ def parse_json_nodes(nodes: DataFrame,
     ``from_json`` + one ``explode`` — pure flatMap, zero shuffle,
     JVM-side JSON parsing (all the escaping the sink emits, including
     ``\\u00XX`` C0 controls, is standard JSON and round-trips).  Term
-    kinds are re-derived by shape (``_:`` prefix = bnode), the same
-    convention bgp_construct documents; a literal's NULL datatype is
+    kinds are re-derived by :func:`bgp.node_kind` (``_:`` prefix =
+    bnode), the rule bgp_construct uses; a literal's NULL datatype is
     the RDF 1.1 plain/xsd:string reading, and language-tagged
     literals carry no datatype — exactly what the sink serialized.
     Rows whose document fails to parse are DROPPED (from_json yields
@@ -146,16 +148,12 @@ def parse_json_nodes(nodes: DataFrame,
     e = n.select(F.col("n.`@id`").alias("subj"),
                  F.explode("n.edges").alias("e"))
     obj_id = F.col("e.o.`@id`")
-
-    def _kind(col):
-        return (F.when(col.startswith("_:"), F.lit("bnode"))
-                .otherwise(F.lit("iri")))
     return e.select(
         "subj",
-        _kind(F.col("subj")).alias("subj_kind"),
+        node_kind(F.col("subj")).alias("subj_kind"),
         F.col("e.p").alias("pred"),
         F.coalesce(obj_id, F.col("e.o.`@value`")).alias("obj_value"),
-        F.when(obj_id.isNotNull(), _kind(obj_id))
+        F.when(obj_id.isNotNull(), node_kind(obj_id))
         .otherwise(F.lit("literal")).alias("obj_kind"),
         F.col("e.o.`@type`").alias("obj_datatype"),
         F.col("e.o.`@language`").alias("obj_lang"))

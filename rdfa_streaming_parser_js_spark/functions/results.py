@@ -48,6 +48,7 @@ from pyspark.sql import types as T
 
 from rdfa_streaming_parser_js_spark.functions.ntriples import (
     escape_literal, unescape_literal)
+from rdfa_streaming_parser_js_spark.operators.bgp import node_kind
 
 # one TSV field: empty (unbound) | <iri> | _:bnode | "lit"[@lang|^^<dt>]
 TSV_FIELD_RE = (r'^(?:<([^>]*)>|(_:[^\t]+)|"((?:[^"\\]|\\.)*)"'
@@ -65,22 +66,18 @@ def _meta(sol: DataFrame, var: str, suffix: str) -> Column:
 def _term_field(sol: DataFrame, var: str) -> Column:
     """One TSV term field for ``var``: SPARQL-syntax encoding driven by
     the ``__kind`` companion; a variable with no companion defaults to
-    kind by shape (``_:`` prefix = bnode, else IRI — the engine's
-    subject convention).  NULL value = unbound = empty field."""
+    :func:`bgp.node_kind`.  NULL value = unbound = empty field."""
     v = F.col(var)
-    kind = _meta(sol, var, "__kind")
+    kind = F.coalesce(_meta(sol, var, "__kind"), node_kind(v))
     lang, dt = _meta(sol, var, "__lang"), _meta(sol, var, "__dt")
     lit = F.concat(
         F.lit('"'), escape_literal(v), F.lit('"'),
         F.when(lang.isNotNull(), F.concat(F.lit("@"), lang))
         .when(dt.isNotNull(), F.concat(F.lit("^^<"), dt, F.lit(">")))
         .otherwise(F.lit("")))
-    shaped = F.when(v.startswith("_:"), v).otherwise(
-        F.concat(F.lit("<"), v, F.lit(">")))
     enc = (F.when(kind == "literal", lit)
            .when(kind == "bnode", v)
-           .when(kind.isNotNull(), F.concat(F.lit("<"), v, F.lit(">")))
-           .otherwise(shaped))
+           .otherwise(F.concat(F.lit("<"), v, F.lit(">"))))
     return F.when(v.isNull(), F.lit("")).otherwise(enc)
 
 
@@ -165,13 +162,11 @@ def _binding_struct(sol: DataFrame, var: str) -> Column:
     unbound.  A literal carrying both keeps only xml:lang, as the TSV
     and XML legs do."""
     v = F.col(var)
-    kind = _meta(sol, var, "__kind")
+    kind = F.coalesce(_meta(sol, var, "__kind"), node_kind(v))
     lang, dt = _meta(sol, var, "__lang"), _meta(sol, var, "__dt")
-    shaped = F.when(v.startswith("_:"), "bnode").otherwise(F.lit("iri"))
     typ = (F.when(kind == "literal", "literal")
            .when(kind == "bnode", "bnode")
-           .when(kind.isNotNull(), "iri")
-           .otherwise(shaped))
+           .otherwise("iri"))
     is_bn = typ == "bnode"
     return F.when(v.isNull(), F.lit(None)).otherwise(F.struct(
         F.when(typ == "iri", "uri").otherwise(typ).alias("type"),
@@ -290,11 +285,8 @@ def results_xml(sol: DataFrame, variables: list[str]) -> DataFrame:
     parts = []
     for v in variables:
         val = F.col(v)
-        kind = _meta(sol, v, "__kind")
+        typ = F.coalesce(_meta(sol, v, "__kind"), node_kind(val))
         lang, dt = _meta(sol, v, "__lang"), _meta(sol, v, "__dt")
-        shaped = F.when(val.startswith("_:"), "bnode") \
-            .otherwise(F.lit("iri"))
-        typ = (F.when(kind.isNotNull(), kind).otherwise(shaped))
         esc = _xml_escape(val)
         lit = F.concat(
             F.lit("<literal"),

@@ -45,7 +45,8 @@ QuadPattern = tuple[str, str, str, str]
 # so bgp_match's keyword surface and the SPARQL parser build the same
 # shape, which one evaluator (:func:`_eval_spec`) runs.
 
-_XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
+_XSD = "http://www.w3.org/2001/XMLSchema#"
+_XSD_STRING = _XSD + "string"
 
 
 @dataclass
@@ -198,10 +199,11 @@ def _certain_vars(spec: GroupSpec) -> set:
 
 @dataclass(frozen=True)
 class Lit:
-    """A language-tagged or datatyped literal CONSTANT in a pattern's
-    object position — matches on lexical form AND term metadata
-    (SPARQL simple-entailment term equality), unlike a bare string
-    term, which keeps the engine-wide lexical-value identity.
+    """A literal CONSTANT.  In a pattern's object position it matches
+    on lexical form AND term metadata (SPARQL simple-entailment term
+    equality), unlike a bare string term, which keeps the engine-wide
+    lexical-value identity; in a CONSTRUCT/update template or a DATA
+    row it is the literal instantiated (:func:`bgp_construct`).
 
     ``Lit("chat", lang="fr")`` ≙ ``"chat"@fr`` and
     ``Lit("5", datatype=XSD+"integer")`` ≙ ``"5"^^xsd:integer``.
@@ -217,6 +219,13 @@ class Lit:
 
 def _is_var(term) -> bool:
     return isinstance(term, str) and term.startswith("?")
+
+
+def node_kind(value):
+    """The kind of a term known only by its value, which is not a
+    literal: ``_:`` prefix → ``bnode``, else ``iri`` (the engine's
+    skolemized-bnode convention)."""
+    return F.when(value.startswith("_:"), F.lit("bnode")).otherwise("iri")
 
 
 def _literal_filter(df: DataFrame, col: str, lit: Lit) -> DataFrame:
@@ -281,8 +290,7 @@ def _meta_exprs(triples: DataFrame, var: str, col: str) -> list:
                 F.col("obj_datatype").alias(f"{var}__dt")]
     if col == "subj":
         kind = (F.col("subj_kind") if "subj_kind" in cols
-                else F.when(F.col("subj").startswith("_:"),
-                            F.lit("bnode")).otherwise(F.lit("iri")))
+                else node_kind(F.col("subj")))
         return [kind.alias(f"{var}__kind"),
                 F.lit(None).cast("string").alias(f"{var}__lang"),
                 F.lit(None).cast("string").alias(f"{var}__dt")]
@@ -568,15 +576,24 @@ def _join_values(solution: DataFrame,
 # string — _apply_bind special-cases it.
 BNODE_FRESH_SENTINEL = "__bnode_fresh__"
 
+#: SQL result type → the datatype of the literal a BIND computes
+_SQL_XSD = {"double": _XSD + "double", "decimal": _XSD + "decimal",
+            **{t: _XSD + "integer"
+               for t in ("byte", "short", "integer", "long")}}
+
 
 def _apply_bind(solution: DataFrame, var: str, expr) -> DataFrame:
     """One SPARQL BIND (``Extend``): ``expr`` is a SQL string, or a
     ``(lex_sql, kind, datatype, lang)`` 4-tuple for the term
-    constructors (IRI/STRDT/STRLANG/BNODE) — those mint the variable's
+    constructors (IRI/STRDT/STRLANG/BNODE) and the computed literals
+    (a string function or arithmetic) — those mint the variable's
     term-metadata companion columns alongside the value, so LANG /
     DATATYPE / isIRI / SAMETERM and CONSTRUCT's metadata-faithful
     instantiation work on constructed terms exactly as on matched
-    ones.  Companions are NULL where the value expression is NULL
+    ones.  A literal with neither datatype nor language takes its
+    datatype from the SQL result type: DOUBLE → xsd:double, DECIMAL →
+    xsd:decimal, integral → xsd:integer, a string → none (a simple
+    literal).  Companions are NULL where the value expression is NULL
     (an error in SPARQL leaves the variable unbound).
 
     ``lex_sql == BNODE_FRESH_SENTINEL`` is zero-arg ``BNODE()``
@@ -609,6 +626,8 @@ def _apply_bind(solution: DataFrame, var: str, expr) -> DataFrame:
                           F.lit("_"), idx.cast("string")))
     else:
         solution = solution.withColumn(var, F.expr(lex_sql))
+    if knd == "literal" and dt is None and lang is None:
+        dt = _SQL_XSD.get(solution.schema[var].dataType.typeName())
     bound = F.col(var).isNotNull()
     meta = {"__kind": knd, "__dt": dt, "__lang": lang}
     for sfx, val in meta.items():
@@ -1015,78 +1034,49 @@ def _eval_spec(triples: DataFrame, spec: GroupSpec,
     return solution
 
 
-def bgp_construct(solutions: DataFrame, template: list[Pattern],
-                  literal_vars: frozenset[str] | set[str] = frozenset(),
-                  use_meta: bool = False,
-                  literal_consts: "dict[str, tuple] | None" = None
+def bgp_construct(solutions: DataFrame, template: list[Pattern]
                   ) -> DataFrame:
     """SPARQL CONSTRUCT: instantiate a triple template once per
     solution row, producing a new triples-shaped DataFrame.
 
-    Each template pattern is ``(subject, predicate, object)`` where a
-    ``?var`` term pulls the solution column of that name and any other
-    term is a constant.  Output schema matches the engine's term
-    columns (``subj, subj_kind, pred, obj_value, obj_kind,
-    obj_datatype, obj_lang``); rows where any template position is
-    NULL (an unbound OPTIONAL variable) are dropped, per SPARQL.
+    Each template pattern is ``(subject, predicate, object)``; every
+    term gets its kind, datatype and language by one rule:
 
-    Solution columns are bare strings (bgp_match does not carry term
-    metadata), so object kinds are re-derived from shape (``_:`` →
-    bnode, else iri) unless the variable name is listed in
-    ``literal_vars`` — those emit plain literals (datatype/language of
-    the source literal are not recoverable from a solution mapping;
-    templates that need them should match the typed columns
-    explicitly).  One projection + union per template pattern — no
-    shuffle; dedup to graph-set semantics downstream like every other
-    producer.
+    - a :class:`Lit` constant is that literal;
+    - a string constant is a bnode if it starts with ``_:``, else an
+      IRI (:func:`node_kind`);
+    - a ``?var`` pulls the solution column of that name and takes its
+      kind, datatype and language from the ``{var}__kind`` /
+      ``__dt`` / ``__lang`` companions when the solutions carry them
+      (``bgp_match(meta_vars=...)``, or a BIND that mints them), so a
+      copied literal stays the same literal; without them its kind is
+      the string constant's.
 
-    ``use_meta``: when the solutions carry term-metadata companion
-    columns (``bgp_match(meta_vars=...)``), a template variable with a
-    ``{var}__kind`` column emits the SOURCE term's kind — and in object
-    position its datatype and language too — instead of the shape
-    heuristic.  This is what makes INSERT-style graph rewrites
-    faithful: a copied literal stays the same literal.
-
-    ``literal_consts``: CONSTANT template terms the caller knows are
-    literals, mapped lexical form → ``(datatype, lang)`` — the SPARQL
-    text front-end collects these while parsing a template, since the
-    engine's string patterns can't distinguish the literal ``"0"``
-    from a relative IRI ``0``.  Matching constants emit
-    ``obj_kind='literal'`` with the given datatype/language.  Keys are
-    LEXICAL forms: a template where the same text also appears as an
-    IRI constant is ambiguous under this marking (the SPARQL text
-    front-end rejects such templates at parse time; direct callers
-    must not mix the two).
+    Output schema matches the engine's term columns (``subj,
+    subj_kind, pred, obj_value, obj_kind, obj_datatype, obj_lang``),
+    all strings, so the result unions into a graph table whatever SQL
+    type a BIND gave a solution column.  Rows where any template
+    position is NULL (an unbound OPTIONAL variable) are dropped, per
+    SPARQL, and so is a pattern with a literal subject (§16.2: it
+    instantiates no RDF triple).  One projection + union per template
+    pattern — no shuffle; dedup to graph-set semantics downstream like
+    every other producer.
     """
     if not template:
         raise ValueError("bgp_construct requires at least one pattern")
     cols = set(solutions.columns)
-    literal_consts = literal_consts or {}
 
     def term(t):
-        return F.col(t[1:]) if _is_var(t) else F.lit(t)
-
-    def has_meta(t):
-        return use_meta and _is_var(t) and f"{t[1:]}__kind" in cols
-
-    def is_lit_const(t):
-        return not _is_var(t) and t in literal_consts
-
-    def kind(t, value):
-        if has_meta(t):
-            return F.col(f"{t[1:]}__kind")
-        if is_lit_const(t) or (_is_var(t) and t[1:] in literal_vars):
-            return F.lit("literal")
-        return (F.when(value.startswith("_:"), F.lit("bnode"))
-                .otherwise("iri"))
-
-    def obj_meta(t, suffix):
-        if has_meta(t):
-            return F.col(f"{t[1:]}{suffix}")
-        if is_lit_const(t):
-            dt, lang = literal_consts[t]
-            return F.lit(dt if suffix == "__dt" else lang).cast("string")
-        return F.lit(None).cast("string")
+        """``(value, kind, datatype, lang)`` columns of one term."""
+        if isinstance(t, Lit):
+            parts = (t.lex, "literal", t.datatype, t.lang)
+        elif _is_var(t) and f"{t[1:]}__kind" in cols:
+            parts = [F.col(t[1:] + sfx)
+                     for sfx in ("", "__kind", "__dt", "__lang")]
+        else:
+            parts = (F.col(t[1:]) if _is_var(t) else t, None, None, None)
+        value, kind, dt, lang = (F.lit(c).cast("string") for c in parts)
+        return value, F.coalesce(kind, node_kind(value)), dt, lang
 
     # QUAD templates: a 4-tuple pattern ``(s, p, o, g)`` targets a named
     # graph (variable or IRI); when any pattern carries one, EVERY
@@ -1095,21 +1085,17 @@ def bgp_construct(solutions: DataFrame, template: list[Pattern],
     has_graph = any(len(pat) == 4 for pat in template)
     out: DataFrame | None = None
     for pat in template:
-        s, p, o = pat[0], pat[1], pat[2]
-        sv, pv, ov = term(s), term(p), term(o)
+        (sv, skind, _, _), (pv, _, _, _), (ov, *obj) = map(term, pat[:3])
+        if isinstance(pat[0], Lit):
+            sv = F.lit(None).cast("string")
         part = (solutions
                 .filter(sv.isNotNull() & pv.isNotNull() & ov.isNotNull()))
-        sel = [sv.alias("subj"),
-               kind(s, sv).alias("subj_kind"),
-               pv.alias("pred"),
-               ov.alias("obj_value"),
-               kind(o, ov).alias("obj_kind"),
-               obj_meta(o, "__dt").alias("obj_datatype"),
-               obj_meta(o, "__lang").alias("obj_lang")]
+        sel = [c.alias(name) for c, name in zip(
+            (sv, skind, pv, ov, *obj), TERM_COLS)]
         if has_graph:
             g = pat[3] if len(pat) == 4 else None
-            gv = (F.lit(None).cast("string") if g is None else term(g))
-            if g is not None and _is_var(g):
+            gv = term(g)[0] if g else F.lit(None).cast("string")
+            if _is_var(g):
                 part = part.filter(gv.isNotNull())
             sel.append(gv.alias("graph"))
         part = part.select(*sel)

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdfa_streaming_parser_js_spark.operators.bgp import TERM_COLS
+from rdfa_streaming_parser_js_spark.operators.bgp import TERM_COLS, node_kind
 from rdfa_streaming_parser_js_spark.operators.components import (
     connected_components_star)
 
@@ -57,12 +57,6 @@ def same_as_mapping(triples: DataFrame,
                     F.col("comp").alias("canonical")))
 
 
-def _kind_of(value):
-    """Term kind from a canonical identifier's shape (bnodes are
-    skolemized to ``_:...`` labels upstream, operators/extract.py)."""
-    return F.when(value.startswith("_:"), F.lit("bnode")).otherwise("iri")
-
-
 def resolve_same_as(triples: DataFrame,
                     same_as_pred: str = OWL_SAMEAS,
                     mapping: DataFrame | None = None) -> DataFrame:
@@ -85,7 +79,7 @@ def resolve_same_as(triples: DataFrame,
                      F.coalesce("subj_canonical", "subj"))
          .withColumn("subj_kind",
                      F.when(F.col("subj_canonical").isNotNull(),
-                            _kind_of(F.col("subj_canonical")))
+                            node_kind(F.col("subj_canonical")))
                      .otherwise(F.col("subj_kind")))
          .drop("subj_canonical"))
 
@@ -98,7 +92,7 @@ def resolve_same_as(triples: DataFrame,
                      F.coalesce("obj_canonical", "obj_value"))
          .withColumn("obj_kind",
                      F.when(F.col("obj_canonical").isNotNull(),
-                            _kind_of(F.col("obj_canonical")))
+                            node_kind(F.col("obj_canonical")))
                      .otherwise(F.col("obj_kind")))
          .drop("obj_canonical"))
     return t
@@ -154,7 +148,7 @@ def ifp_same_as(triples: DataFrame, ifp_preds,
                     F.col("node_kind").alias("subj_kind"),
                     F.lit(OWL_SAMEAS).alias("pred"),
                     F.col("anchor").alias("obj_value"),
-                    _kind_of(F.col("anchor")).alias("obj_kind"),
+                    node_kind(F.col("anchor")).alias("obj_kind"),
                     F.lit(None).cast("string").alias("obj_datatype"),
                     F.lit(None).cast("string").alias("obj_lang"))
             .distinct())

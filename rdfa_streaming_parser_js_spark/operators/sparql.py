@@ -33,9 +33,17 @@ Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
 
 - ``PREFIX`` / ``BASE`` prologue; ``a`` for rdf:type.
 - ``SELECT [DISTINCT|REDUCED] (?v... | * | (expr AS ?v)...)``,
-  ``ASK``, ``CONSTRUCT { template } WHERE``, and ``DESCRIBE`` (IRIs
-  and/or variables bound by an optional WHERE clause; Concise Bounded
+  ``ASK``, ``CONSTRUCT { template } WHERE`` (and the ``CONSTRUCT
+  WHERE { triples }`` shorthand), and ``DESCRIBE`` (IRIs and/or
+  variables bound by an optional WHERE clause; Concise Bounded
   Description via :func:`operators.bgp.describe`).
+- One block routine (``_parse_template``) reads every CONSTRUCT
+  template, DELETE/INSERT template and INSERT/DELETE DATA block, and
+  the parser gives each constant its RDF term there: a literal of any
+  form (plain, tagged, typed, numeric, boolean) is a ``bgp.Lit``, an
+  IRI or ``_:`` blank node a string.  ``bgp_construct`` instantiates
+  by that one rule, so the same text may stand as an IRI, a plain and
+  a tagged literal in one template.
 - Triples blocks with ``;`` predicate and ``,`` object lists; the
   predicate position takes an IRI, a ``?variable``, or a property
   path.
@@ -83,7 +91,13 @@ Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
   (deterministic skolem-style labels — see deviations) — the
   constructed term's metadata is minted as companion columns, so
   LANG / DATATYPE / isIRI / isBlank / SAMETERM and metadata-faithful
-  templates see it.
+  templates see it.  A BIND whose entire expression is a string
+  function (CONCAT, STR, LCASE, UCASE, SUBSTR, REPLACE, STRBEFORE,
+  STRAFTER) binds a simple literal the same way, and one whose entire
+  expression is ``+ - * /`` a literal typed by its SQL result type
+  (xsd:double, xsd:decimal or xsd:integer); a bare variable, IF,
+  COALESCE or any other BIND binds a bare value, which a template
+  instantiates as an IRI or blank node.
 - ``GRAPH ?g {...}`` / ``GRAPH <iri> {...}`` (§13) over a QUADS table
   (a ``graph`` column, e.g. extraction output with ``url`` aliased to
   ``graph``): the graph term becomes a 4th match position on each
@@ -114,7 +128,7 @@ Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
 
 - SPARQL 1.1 Update, one operation per call (:func:`sparql_update` —
   returns the NEW graph, nothing mutates): ``INSERT DATA`` / ``DELETE
-  DATA`` (ground triples; typed/tagged literal constants accepted),
+  DATA`` (ground triples, read by the template block routine),
   ``DELETE WHERE``, and ``DELETE {} INSERT {} WHERE {}`` — compiled
   onto :mod:`operators.update` (lexical-identity deletes,
   metadata-preserving inserts, set-semantics result).  An update's
@@ -158,15 +172,16 @@ Documented deviations (each raises or is noted, never silent):
   ``LANG(COALESCE(?n, ?alt))`` over OPTIONAL-bound variables works);
   any other nested argument raises.  Each variable must be bound by a
   plain triple pattern in scope (property-path endpoints carry no
-  metadata), by a constructor BIND, or by a sub-SELECT that projects
+  metadata), by a constructor or computed-literal BIND, or by a
+  sub-SELECT that projects
   it from a plain pattern.
-- Plain STRING constants in patterns match the LEXICAL value (the
-  engine-wide identity documented on bgp_match) — only tagged/typed
-  constants get strict term equality.  Tagged/typed literals in
-  VALUES are term-exact too (they join on the variable's metadata
-  companion columns) and can only CONSTRAIN a variable the group
-  binds — a Lit entry for an unbound variable raises (extend with
-  the bare lexical form instead).
+- Plain, numeric and boolean constants in patterns match the LEXICAL
+  value (the engine-wide identity documented on bgp_match) — only
+  tagged/typed constants get strict term equality.  Tagged/typed
+  literals in VALUES are term-exact too (they join on the variable's
+  metadata companion columns) and can only CONSTRAIN a variable the
+  group binds — a Lit entry for an unbound variable raises (extend
+  with the bare lexical form instead).
 - Term constructors are only valid as the entire BIND expression;
   STRDT's datatype and STRLANG's tag must be constants; nested
   anywhere else they raise.  ``BNODE(expr)`` mints a deterministic
@@ -240,8 +255,8 @@ from pyspark.sql import functions as F
 from rdfa_streaming_parser_js_spark.operators import paths as P
 from rdfa_streaming_parser_js_spark.operators.bgp import (
     BNODE_FRESH_SENTINEL, META_SUFFIXES, TERM_COLS, GroupSpec, Lit,
-    _certain_vars, _eval_spec, _pattern_vars, _plain_bound, bgp_construct,
-    describe)
+    _certain_vars, _eval_spec, _is_var, _pattern_vars, _plain_bound,
+    bgp_construct, describe)
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -332,7 +347,6 @@ class ParsedQuery:
     template: list | None = None   # CONSTRUCT triples
     describe_targets: list = field(default_factory=list)  # IRIs/?vars
     meta_vars: frozenset = frozenset()  # vars needing term metadata
-    template_literals: dict = field(default_factory=dict)  # lex→(dt,lang)
 
 
 # --------------------------------------------------------------------
@@ -457,6 +471,12 @@ _TERM_FNS = {
 #: expression there is nowhere to carry the metadata, so they raise
 _CONSTRUCTOR_FNS = frozenset({"iri", "uri", "bnode", "strdt", "strlang"})
 
+#: scalar builtins whose result is a simple literal: as the entire
+#: BIND expression they bind one (a constructed term, like the above);
+#: arithmetic binds a literal typed by its SQL result type
+_STRING_FNS = frozenset({"concat", "str", "lcase", "ucase", "substr",
+                         "replace", "strbefore", "strafter"})
+
 _NUM_RE = re.compile(r"^\d+(\.\d*)?([eE][+-]?\d+)?$")
 _IDENT_RE = re.compile(r"^[A-Za-z_]\w*$")
 
@@ -471,13 +491,9 @@ class _Parser:
         # in the query (over-approximation across groups is harmless:
         # companion columns are only minted where the variable binds)
         self.meta_vars: set[str] = set()
-        # literal constants seen in CONSTRUCT / update templates while
-        # ``in_template`` is set: lexical form → (datatype, lang).  The
-        # engine's patterns carry bare strings, so without this a
-        # template constant like "0" would fall to bgp_construct's
-        # shape heuristic and be emitted as an IRI.
+        # set while a template or DATA block is read: parse_term then
+        # keeps every literal as the bgp.Lit it instantiates
         self.in_template = False
-        self.template_literals: dict[str, tuple] = {}
         # every sub-SELECT body parsed anywhere in the query (top-level
         # groups AND nested OPTIONAL/MINUS/EXISTS bodies, where the
         # ParsedQuery hides inside a GroupSpec relation thunk): kept
@@ -488,7 +504,6 @@ class _Parser:
         # the current condition actually used one
         self._allow_agg = False
         self._saw_agg = False
-        self.template_iris: set[str] = set()
 
     # -- token helpers ------------------------------------------------
     def peek(self, ahead: int = 0) -> _Tok:
@@ -566,68 +581,45 @@ class _Parser:
             return self.prefixes[pfx] + local
         raise SparqlSyntaxError(f"not an IRI token: {t.text!r}")
 
-    def parse_term(self) -> str:
-        """A subject/object term → the engine's string form."""
+    def parse_term(self) -> "str | Lit":
+        """A subject/object term → the engine's form: a string for an
+        IRI, a blank node or a variable, and a :class:`bgp.Lit` for a
+        literal.  In a pattern a plain, numeric or boolean literal is
+        its bare lexical form instead (matched by lexical value, the
+        engine-wide identity); in a template or DATA block
+        (``in_template``) every literal is a Lit, the term
+        instantiated."""
         t = self.next()
-        if t.kind == "VAR":
+        if t.kind in ("VAR", "BNODE"):
             return t.text
         if t.kind in ("IRIREF", "PNAME", "COLON"):
-            iri = self.expand_iri(t)
-            if self.in_template:
-                self.template_iris.add(iri)
-            return iri
+            return self.expand_iri(t)
         if t.kind == "NAME" and t.text == "a":
             return RDF_TYPE
+        lang = dt = None
         if t.kind == "NAME" and t.text.lower() in ("true", "false"):
-            # boolean RDF term literal (§19.8 BooleanLiteral); matching
-            # is lexical, and in a template the marking map stamps the
-            # xsd:boolean datatype on instantiation
-            lex = t.text.lower()
-            if self.in_template:
-                self.template_literals[lex] = (f"{_XSD}boolean", None)
-            return lex
-        if t.kind == "BNODE":
-            return t.text
-        if t.kind == "NUMBER":
-            if self.in_template:
-                dt = (f"{_XSD}double" if "e" in t.text.lower()
-                      else f"{_XSD}decimal" if "." in t.text
-                      else f"{_XSD}integer")
-                self.template_literals[t.text] = (dt, None)
-            return t.text
-        if t.kind == "STRING":
+            # §19.8 BooleanLiteral
+            lex, dt, exact = t.text.lower(), f"{_XSD}boolean", False
+        elif t.kind == "NUMBER":
+            lex, exact = t.text, False
+            dt = _XSD + ("double" if "e" in lex.lower()
+                         else "decimal" if "." in lex else "integer")
+        elif t.kind == "STRING":
             lex = _unquote(t.text)
-            nxt = self.peek()
-            lang = dt = None
-            if nxt.kind == "LANGTAG":
-                self.next()
-                lang = nxt.text[1:].lower()
-            elif nxt.kind == "DHAT":
+            if self.peek().kind == "LANGTAG":
+                lang = self.next().text[1:].lower()
+            elif self.peek().kind == "DHAT":
                 self.next()
                 it = self.next()
                 if it.kind not in ("IRIREF", "PNAME", "COLON"):
                     self.fail("expected a datatype IRI after ^^")
                 dt = self.expand_iri(it)
-            if self.in_template:
-                # template instantiation carries metadata via the
-                # lexical-form marking map (bgp_construct
-                # literal_consts); the same text with two different
-                # markings would stamp one of them wrongly
-                meta = (dt, lang)
-                if self.template_literals.get(lex, meta) != meta:
-                    raise SparqlSyntaxError(
-                        f"literal {lex!r} appears with two different "
-                        "datatype/language markings in the template — "
-                        "ambiguous under lexical literal marking; "
-                        "compose at the DataFrame level instead")
-                self.template_literals[lex] = meta
-                return lex
-            if lang or dt:
-                # pattern position: exact SPARQL term equality —
-                # lexical form AND kind/language/datatype (bgp.Lit)
-                return Lit(lex, lang=lang, datatype=dt)
-            return lex
-        self.fail("expected a term")
+            exact = bool(lang or dt)
+        else:
+            self.fail("expected a term")
+        if exact or self.in_template:
+            return Lit(lex, lang=lang, datatype=dt)
+        return lex
 
     # -- property paths -----------------------------------------------
     def parse_path(self):
@@ -800,7 +792,11 @@ class _Parser:
                 self.expect_op("(")
                 expr = self._parse_constructor()
                 if expr is None:
-                    expr = self.parse_expr()
+                    expr, kind = self._or_expr()
+                    if kind == "literal":
+                        # a string function or arithmetic computes a
+                        # literal; bgp._apply_bind types it
+                        expr = (expr, "literal", None, None)
                 self.expect_kw("as")
                 v = self.next()
                 if v.kind != "VAR":
@@ -1179,7 +1175,8 @@ class _Parser:
                     while self.take_op(","):
                         args.append(self.parse_expr())
                 self.expect_op(")")
-                return _SCALAR_FNS[word](args), "other"
+                return _SCALAR_FNS[word](args), (
+                    "literal" if word in _STRING_FNS else "other")
             self.fail(f"unsupported function or keyword {t.text!r}")
         self.fail("expected an expression")
 
@@ -1272,11 +1269,13 @@ def _arith(lhs: tuple, op: str, rhs: tuple) -> tuple:
     the one type that keeps both "120" and a fraction ("1.5", or a
     double an earlier BIND or aggregate computed) exact enough, and a
     non-numeric value leaves that row's result unbound (§17.2) instead
-    of aborting the query under ANSI."""
+    of aborting the query under ANSI.  The result's kind is
+    ``literal``: as the entire BIND expression it binds a numeric
+    literal."""
     def operand(side):
         sql, kind = side
         return f"TRY_CAST({sql} AS DOUBLE)" if kind == "var" else sql
-    return f"({operand(lhs)} {op} {operand(rhs)})", "other"
+    return f"({operand(lhs)} {op} {operand(rhs)})", "literal"
 
 
 def _unquote(raw: str) -> str:
@@ -1304,147 +1303,71 @@ def _sql_str(s: str) -> str:
 @dataclass
 class ParsedUpdate:
     form: str                      # insert_data | delete_data | modify
-    data: list = field(default_factory=list)   # ground triples
+    data: list = field(default_factory=list)   # ground (s, p, o[, g])
     delete: list | None = None     # template patterns
     insert: list | None = None
     where: GroupSpec | None = None
-    template_literals: dict = field(default_factory=dict)  # lex→(dt,lang)
     meta_vars: frozenset = frozenset()  # vars whose FILTERs need term meta
     target: str | None = None      # clear/drop/create selector
     src: str | None = None         # add/move/copy source graph
     dst: str | None = None         # add/move/copy destination graph
 
 
-def _parse_data_term(p: _Parser, position: str):
-    """A ground term in an INSERT/DELETE DATA block.  Objects return an
-    explicit ``(value, kind, datatype, lang)`` tuple — the one place
-    the front-end supports typed/tagged literal constants, since no
-    solution column is involved."""
-    t = p.next()
-    if t.kind in ("IRIREF", "PNAME", "COLON"):
-        return (p.expand_iri(t), "iri", None, None)
-    if t.kind == "BNODE":
-        if position == "pred":
-            p.fail("a predicate must be an IRI")
-        return (t.text, "bnode", None, None)
-    if position != "obj":
-        if t.kind == "NAME" and t.text == "a" and position == "pred":
-            return (RDF_TYPE, "iri", None, None)
-        p.fail(f"ground {position} must be an IRI"
-               + ("" if position == "pred" else " or blank node"))
-    if t.kind == "NUMBER":
-        dt = (f"{_XSD}double" if "e" in t.text.lower()
-              else f"{_XSD}decimal" if "." in t.text
-              else f"{_XSD}integer")
-        return (t.text, "literal", dt, None)
-    if t.kind == "STRING":
-        lex = _unquote(t.text)
-        nxt = p.peek()
-        if nxt.kind == "LANGTAG":
-            p.next()
-            return (lex, "literal", None, nxt.text[1:].lower())
-        if nxt.kind == "DHAT":
-            p.next()
-            dt_tok = p.next()
-            if dt_tok.kind not in ("IRIREF", "PNAME", "COLON"):
-                p.fail("expected a datatype IRI after ^^")
-            return (lex, "literal", p.expand_iri(dt_tok), None)
-        return (lex, "literal", None, None)
-    p.fail("expected a ground RDF term")
-
-
-def _parse_data_triples(p: _Parser, out: list, graph: "str | None"):
-    """The triple list of one DATA block scope (a default-graph run up
-    to the next ``GRAPH`` or the closing brace, or the inside of a
-    ``GRAPH <g> { ... }`` wrapper); appends ``(s, p, obj)`` rows, or
-    ``(s, p, obj, graph)`` quads when a graph IRI scopes them."""
-    while not p.at_op("}") and not p.at_kw("graph"):
-        s = _parse_data_term(p, "subj")[0]
-        while True:
-            pr = _parse_data_term(p, "pred")[0]
-            row = (s, pr, _parse_data_term(p, "obj"))
-            out.append(row + (graph,) if graph else row)
-            while p.take_op(","):
-                row = (s, pr, _parse_data_term(p, "obj"))
-                out.append(row + (graph,) if graph else row)
-            if not p.take_op(";"):
-                break
-            if p.at_op(".", "}"):
-                break
-        p.take_op(".")
-
-
-def _parse_data_block(p: _Parser) -> list:
-    """``{ ground triples }`` → ``[(s, p, (ov, okind, odt, olang))]``
-    rows for operators.update.insert_data/delete_data.  ``GRAPH <g>
-    { ... }`` wrappers (§3.1.1 QuadData) emit 4-tuples with the graph
-    IRI — the executing table must then be a quads table."""
-    p.expect_op("{")
+def _parse_template(p: _Parser, ground: bool = False) -> list:
+    """One ``{ triples }`` block — a CONSTRUCT or DELETE/INSERT
+    template, or with ``ground`` an INSERT/DELETE DATA block — → its
+    patterns, every literal a :class:`bgp.Lit`.  Variables may stand
+    anywhere, the predicate included; property paths raise.  ``GRAPH
+    ?g/<iri> { triples }`` wrappers (§3.1.3 QuadPattern, §3.1.1
+    QuadData) emit 4-tuple patterns targeting that named graph — the
+    executing table must then be a quads table; bare triples target
+    the default graph.  A DATA block is ground: no variables, no
+    ``GRAPH ?g``, and no literal subject."""
     out = []
-    while not p.at_op("}"):
-        if p.at_kw("graph"):
-            p.next()
-            t = p.peek()
-            if t.kind not in ("IRIREF", "PNAME", "COLON"):
-                p.fail("expected a graph IRI after GRAPH (DATA blocks "
-                       "are ground — no graph variables)")
-            g = p.expand_iri(p.next())
-            p.expect_op("{")
-            _parse_data_triples(p, out, g)
-            p.expect_op("}")
-        else:
-            _parse_data_triples(p, out, None)
-    p.expect_op("}")
-    if not out:
-        p.fail("empty DATA block")
-    return out
-
-
-def _parse_template(p: _Parser) -> list:
-    """``{ triples }`` template for DELETE/INSERT: plain patterns only
-    (variables allowed anywhere incl. the predicate; property paths
-    raise, as in CONSTRUCT templates).  ``GRAPH ?g/<iri> { triples }``
-    wrappers (§3.1.3 QuadPattern) emit 4-tuple patterns targeting that
-    named graph — the executing table must then be a quads table; bare
-    triples target the default graph."""
-    tmpl = []
     p.expect_op("{")
     p.in_template = True
     try:
         while not p.at_op("}"):
-            if p.at_kw("graph"):
-                p.next()
+            graph = ()
+            if p.take_kw("graph"):
                 t = p.peek()
-                if t.kind == "VAR":
-                    gterm = p.next().text
-                elif t.kind in ("IRIREF", "PNAME", "COLON"):
-                    gterm = p.expand_iri(p.next())
+                if t.kind in ("IRIREF", "PNAME", "COLON"):
+                    graph = (p.expand_iri(p.next()),)
+                elif t.kind == "VAR" and not ground:
+                    graph = (p.next().text,)
+                elif ground:
+                    p.fail("expected a graph IRI after GRAPH (DATA blocks "
+                           "are ground — no graph variables)")
                 else:
                     p.fail("expected a variable or IRI after GRAPH")
-                sub = []
                 p.expect_op("{")
-                while not p.at_op("}"):
-                    p._parse_triples_block(sub)
-                    p.take_op(".")
-                p.expect_op("}")
-                if not sub:
+                if p.at_op("}"):
                     p.fail("GRAPH template block contains no triple "
                            "pattern")
-                tmpl.extend(pat + (gterm,) for pat in sub)
+            block = []
+            while not p.at_op("}") and (graph or not p.at_kw("graph")):
+                p._parse_triples_block(block)
                 p.take_op(".")
-            else:
-                p._parse_triples_block(tmpl)
+            if graph:
+                p.expect_op("}")
                 p.take_op(".")
+            out += [pat + graph for pat in block]
     finally:
         p.in_template = False
     p.expect_op("}")
-    for pat in tmpl:
+    if not out:
+        p.fail("empty DATA block" if ground else "empty template")
+    for pat in out:
         if not isinstance(pat[1], str):
             raise SparqlSyntaxError(
-                "property paths are not allowed in an update template")
-    if not tmpl:
-        p.fail("empty update template")
-    return tmpl
+                "templates take plain triple patterns only — property "
+                "paths are not allowed")
+        if ground and (isinstance(pat[0], Lit)
+                       or any(_is_var(t) for t in pat)):
+            raise SparqlSyntaxError(
+                "a DATA block is ground: an IRI or blank-node subject, "
+                f"an IRI predicate and no variables, not {pat}")
+    return out
 
 
 def parse_update(text: str) -> ParsedUpdate:
@@ -1501,7 +1424,7 @@ def parse_update(text: str) -> ParsedUpdate:
         return u
     if p.take_kw("insert"):
         if p.take_kw("data"):
-            u = ParsedUpdate("insert_data", data=_parse_data_block(p))
+            u = ParsedUpdate("insert_data", data=_parse_template(p, True))
         else:
             tmpl = _parse_template(p)
             p.expect_kw("where")
@@ -1509,11 +1432,15 @@ def parse_update(text: str) -> ParsedUpdate:
                              where=p.parse_group())
     elif p.take_kw("delete"):
         if p.take_kw("data"):
-            u = ParsedUpdate("delete_data", data=_parse_data_block(p))
+            u = ParsedUpdate("delete_data", data=_parse_template(p, True))
         elif p.take_kw("where"):
-            tmpl = _parse_template(p)
-            u = ParsedUpdate("modify", delete=tmpl,
-                             where=GroupSpec(patterns=list(tmpl)))
+            # DELETE WHERE shorthand: the block is read as
+            # the WHERE group, then again as the template
+            start = p.i
+            where = p.parse_group()
+            p.i = start
+            u = ParsedUpdate("modify", delete=_parse_template(p),
+                             where=where)
         else:
             tmpl = _parse_template(p)
             ins = _parse_template(p) if p.take_kw("insert") else None
@@ -1525,23 +1452,8 @@ def parse_update(text: str) -> ParsedUpdate:
                "MOVE or COPY")
     if p.peek().kind != "EOF":
         p.fail("trailing input after update (one operation per call)")
-    _check_template_collisions(p)
-    u.template_literals = dict(p.template_literals)
     _stamp_meta(u, p)
     return u
-
-
-def _check_template_collisions(p: _Parser) -> None:
-    """Literal-constant marking is by lexical form (the engine's
-    template terms are bare strings), so a template where the same text
-    appears both quoted and as an IRI would silently stamp the IRI
-    triple ``obj_kind='literal'`` — reject it loudly instead."""
-    clash = set(p.template_literals) & p.template_iris
-    if clash:
-        raise SparqlSyntaxError(
-            f"{sorted(clash)!r} appear(s) as both an IRI and a literal "
-            "constant in the template — ambiguous under lexical "
-            "literal marking; compose at the DataFrame level instead")
 
 
 def sparql_update(graph: DataFrame, text: str) -> DataFrame:
@@ -1572,7 +1484,6 @@ def sparql_update(graph: DataFrame, text: str) -> DataFrame:
         return U.delete_data(graph, u.data)
     return U.apply_update(
         graph, delete=u.delete, insert=u.insert, where=u.where,
-        literal_consts=u.template_literals or None,
         meta_vars=u.meta_vars)
 
 
@@ -1610,65 +1521,31 @@ def parse_sparql(text: str) -> ParsedQuery:
                    "binding it")
     elif p.take_kw("construct"):
         q = ParsedQuery(form="construct")
-        if p.at_kw("where"):
-            # CONSTRUCT WHERE { ... } shorthand (§10.2.3): the WHERE
-            # pattern doubles as the template.  The spec limits the
-            # body to triple patterns; this engine additionally
-            # requires variable/IRI terms only — a literal constant
-            # would need the template literal-marking channel that
-            # only full templates thread, and a quad or path has no
-            # template meaning.
-            p.next()
+        if p.take_kw("where"):
+            # CONSTRUCT WHERE { ... } shorthand (§10.2.3): the block is
+            # read as the WHERE group, then again as the template.  The
+            # spec limits the body to triple patterns.
+            start = p.i
             q.where = p.parse_group()
             if any(members for name, members in vars(q.where).items()
                    if name != "patterns"):
                 p.fail("CONSTRUCT WHERE shorthand allows triple "
                        "patterns only (SPARQL §10.2.3)")
-            for pat in q.where.patterns:
-                if len(pat) != 3 or not isinstance(pat[1], str):
-                    p.fail("CONSTRUCT WHERE shorthand allows plain "
-                           "triple patterns only (no GRAPH, no "
-                           "property paths)")
-                if any(isinstance(t, Lit) for t in pat) or (
-                        isinstance(pat[2], str)
-                        and not pat[2].startswith("?")
-                        and ":" not in pat[2]):
-                    p.fail("CONSTRUCT WHERE shorthand takes variable "
-                           "or IRI terms only — use the full "
-                           "CONSTRUCT {} WHERE {} form for literal "
-                           "constants")
-            q.template = list(q.where.patterns)
-            _parse_modifiers(p, q)
-            if p.peek().kind != "EOF":
-                p.fail("trailing input after query")
-            _stamp_meta(q, p)
-            return q
-        tmpl = []
-        p.expect_op("{")
-        p.in_template = True
-        try:
-            while not p.at_op("}"):
-                p._parse_triples_block(tmpl)
-                p.take_op(".")
-        finally:
-            p.in_template = False
-        p.expect_op("}")
-        for s, pr, o in tmpl:
-            if not isinstance(pr, str):
-                raise SparqlSyntaxError(
-                    "property paths are not allowed in a CONSTRUCT "
-                    "template")
-        q.template = tmpl
-        p.expect_kw("where")
-        q.where = p.parse_group()
+            p.i = start
+        q.template = _parse_template(p)
+        if any(len(pat) == 4 for pat in q.template):
+            raise SparqlSyntaxError(
+                "CONSTRUCT templates take plain triple patterns only — "
+                "GRAPH is not allowed")
+        if q.where is None:
+            p.expect_kw("where")
+            q.where = p.parse_group()
         _parse_modifiers(p, q)
     else:
         p.fail("expected SELECT, ASK or CONSTRUCT")
     if p.peek().kind != "EOF":
         p.fail("trailing input after query")
     _stamp_meta(q, p)
-    _check_template_collisions(p)
-    q.template_literals = dict(p.template_literals)
     return q
 
 
@@ -1907,9 +1784,7 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
         # group keys (CONSTRUCT templates have no AS, so aggregates
         # can't be projected — they may only appear in HAVING), so
         # every template variable must be a group key.
-        tvars = {term[1:] for pat in q.template for term in pat
-                 if term.startswith("?")}
-        bad = sorted(tvars - set(q.group_by))
+        bad = sorted(_pattern_vars(q.template) - set(q.group_by))
         if bad:
             raise SparqlSyntaxError(
                 "CONSTRUCT template variable(s) ?" + " ?".join(bad)
@@ -1934,12 +1809,7 @@ def sparql_query(triples: DataFrame, text: str) -> DataFrame:
     if q.order_by:
         sol = _order(sol, q.order_by)
     sol = _slice(sol, q)
-    # use_meta: template variables that carry companion metadata
-    # columns (introspected or constructor-bound) emit the SOURCE
-    # term's kind/datatype/language instead of the shape heuristic —
-    # a copied literal stays the same literal
-    return bgp_construct(sol, q.template, use_meta=True,
-                         literal_consts=q.template_literals or None)
+    return bgp_construct(sol, q.template)
 
 
 def _carry_meta(sol: DataFrame, keys) -> tuple[list, list]:

@@ -22,9 +22,11 @@ Semantics (graph-SET, the engine-wide convention):
   ``bgp_match`` uses — via one anti-join (Catalyst broadcasts the
   matched-delete side when it is small, the common case).
 - INSERT instantiates its template once per WHERE solution with
-  ``bgp_construct(use_meta=True)``: template variables carry the
-  SOURCE term's kind/datatype/language (companion metadata columns),
-  so a copied literal stays the same literal.
+  :func:`bgp_construct`: template variables carry the SOURCE term's
+  kind/datatype/language (companion metadata columns), so a copied
+  literal stays the same literal, and a :class:`bgp.Lit` constant is
+  that literal.  INSERT/DELETE DATA rows follow the same constant
+  rule.
 
 Scale: one scan of the graph for the WHERE solutions (each pattern a
 pushed-filter slice), one anti-join for DELETE, a union for INSERT,
@@ -39,8 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfa_streaming_parser_js_spark.operators.bgp import (
-    TERM_COLS, GroupSpec, Pattern, _eval_spec, _pattern_vars,
-    _plain_bound, bgp_construct)
+    TERM_COLS, GroupSpec, Lit, Pattern, _eval_spec, _pattern_vars,
+    _plain_bound, bgp_construct, node_kind)
 
 _LEX_KEY = ("subj", "pred", "obj_value")
 
@@ -50,7 +52,6 @@ def apply_update(graph: DataFrame,
                  insert: "list[Pattern] | None" = None,
                  where: "GroupSpec | list[Pattern] | None" = None,
                  filters: "list[str] | None" = None,
-                 literal_consts: "dict[str, tuple] | None" = None,
                  meta_vars: "frozenset[str]" = frozenset(),
                  **bgp_kwargs) -> DataFrame:
     """``DELETE { delete } INSERT { insert } WHERE { where }`` → the
@@ -63,9 +64,9 @@ def apply_update(graph: DataFrame,
     group), or a pattern list that ``filters`` and any extra
     ``bgp_kwargs`` (``optionals``, ``values``, ``binds``, ...) complete
     into one, as :func:`bgp_match` does; either way the group is
-    evaluated by ``bgp._eval_spec``.
-    ``literal_consts`` marks constant template terms that are literals
-    (lexical → ``(datatype, lang)``; see :func:`bgp_construct`).
+    evaluated by ``bgp._eval_spec``.  A template constant is a term
+    by :func:`bgp_construct`'s rule: a :class:`bgp.Lit` is that
+    literal, a string an IRI or (``_:``) a blank node.
 
     The graph must carry the full seven term columns.  Deletion is by
     lexical triple identity; insertion preserves source-term metadata
@@ -140,41 +141,29 @@ def apply_update(graph: DataFrame,
             doomed = doomed.select(*_LEX_KEY).dropDuplicates()
             out = out.join(doomed, on=list(_LEX_KEY), how="left_anti")
     if insert:
-        added = bgp_construct(solutions, insert, use_meta=True,
-                              literal_consts=literal_consts)
+        added = bgp_construct(solutions, insert)
         if quads and "graph" not in added.columns:
             added = added.withColumn("graph", F.lit(None).cast("string"))
         out = out.unionByName(added.select(*out_cols))
     return out.dropDuplicates(out_cols)
 
 
-def _ground_rows(spark, triples, quads: bool = False):
-    """Ground triples → a term-schema DataFrame.  The object is either
-    a bare string (kind by shape: ``_:`` prefix = bnode, a ``:``
-    anywhere = IRI, else plain literal) or an explicit term tuple
-    ``(value, kind[, datatype[, lang]])``.  Subjects: ``_:`` = bnode,
-    else IRI.  With ``quads=True`` each entry may carry a 4th element —
-    the graph IRI, or ``None`` for the default graph — and the result
-    has a ``graph`` column."""
-    rows = []
-    for t in triples:
-        s, p, o = t[0], t[1], t[2]
-        g = t[3] if len(t) > 3 else None
-        if isinstance(o, tuple):
-            ov, okind, odt, olang = (tuple(o) + (None, None))[:4]
-        else:
-            ov, odt, olang = o, None, None
-            okind = ("bnode" if o.startswith("_:")
-                     else "iri" if ":" in o else "literal")
-        row = (s, "bnode" if s.startswith("_:") else "iri",
-               p, ov, okind, odt, olang)
-        rows.append(row + (g,) if quads else row)
-    schema = ("subj string, subj_kind string, pred string, "
-              "obj_value string, obj_kind string, obj_datatype string, "
-              "obj_lang string")
-    if quads:
-        schema += ", graph string"
-    return spark.createDataFrame(rows, schema)
+def _ground_rows(spark, rows, quads: bool = False):
+    """Ground rows ``(s, p, o[, g])`` → a term-schema DataFrame, by
+    :func:`bgp_construct`'s constant rule: a :class:`bgp.Lit` object
+    is that literal, any other term an IRI or (``_:``) a blank node.
+    The 4th element is the graph IRI, or ``None`` for the default
+    graph; with ``quads=True`` the result has a ``graph`` column."""
+    data = [(s, p, *((o.lex, "literal", o.datatype, o.lang)
+                     if isinstance(o, Lit) else (o, None, None, None)),
+             g[0] if g else None) for s, p, o, *g in rows]
+    df = spark.createDataFrame(
+        data, "subj string, pred string, obj_value string, obj_kind "
+        "string, obj_datatype string, obj_lang string, graph string")
+    df = df.withColumns({
+        "subj_kind": node_kind(F.col("subj")),
+        "obj_kind": F.coalesce("obj_kind", node_kind(F.col("obj_value")))})
+    return df.select(*TERM_COLS, *(["graph"] if quads else []))
 
 
 def _data_quads(graph: DataFrame, triples) -> bool:
@@ -188,10 +177,11 @@ def _data_quads(graph: DataFrame, triples) -> bool:
 
 
 def insert_data(graph: DataFrame, triples) -> DataFrame:
-    """``INSERT DATA`` (§3.1.1): add ground triples to the graph.  See
-    :func:`_ground_rows` for the accepted object forms; entries with a
-    4th (graph) element insert into that named graph — the table must
-    then be a quads table."""
+    """``INSERT DATA`` (§3.1.1): add ground triples to the graph.
+    Each is ``(s, p, o[, g])`` in the template row shape: a
+    :class:`bgp.Lit` object is that literal, a string term an IRI or
+    (``_:``) a blank node.  Entries with a 4th (graph) element insert
+    into that named graph — the table must then be a quads table."""
     if not triples:
         raise ValueError("insert_data needs at least one triple")
     quads = _data_quads(graph, triples)
@@ -202,9 +192,10 @@ def insert_data(graph: DataFrame, triples) -> DataFrame:
 
 
 def delete_data(graph: DataFrame, triples) -> DataFrame:
-    """``DELETE DATA`` (§3.1.2): remove ground triples by lexical
-    identity (plus null-safe graph identity for 4-tuple entries over a
-    quads table).  The tiny constant side broadcasts."""
+    """``DELETE DATA`` (§3.1.2): remove ground triples (rows as for
+    :func:`insert_data`) by lexical identity (plus null-safe graph
+    identity for 4-tuple entries over a quads table).  The tiny
+    constant side broadcasts."""
     if not triples:
         raise ValueError("delete_data needs at least one triple")
     quads = _data_quads(graph, triples)

@@ -147,12 +147,17 @@ def test_bgp_union_stacks_with_unbound_nulls(spark):
 
 
 def test_bgp_construct_instantiates_template_per_solution(spark):
-    sols = bgp_match(_kg(spark), [("?x", RDF_TYPE, f"{S}Article"),
-                                  ("?x", f"{S}name", "?n")])
+    kg = _kg(spark).withColumns({
+        "obj_kind": F.when(F.col("pred") == f"{S}name", "literal")
+        .otherwise("iri"),
+        "obj_datatype": F.lit(None).cast("string"),
+        "obj_lang": F.lit(None).cast("string")})
+    sols = bgp_match(kg, [("?x", RDF_TYPE, f"{S}Article"),
+                          ("?x", f"{S}name", "?n")], meta_vars={"n"})
     got = bgp_construct(sols, [
         ("?x", f"{S}headline", "?n"),
         ("?x", RDF_TYPE, f"{S}Thing"),
-    ], literal_vars={"n"})
+    ])
     rows = {(r.subj, r.pred, r.obj_value, r.obj_kind)
             for r in got.collect()}
     assert rows == {

@@ -365,8 +365,49 @@ def test_template_tagged_literal_constant(spark):
                                        None)
 
 
-def test_template_conflicting_markings_raise():
-    with pytest.raises(SparqlSyntaxError, match="two different"):
-        parse_sparql(PFX + """
-            CONSTRUCT { ?s schema:a "x"@en . ?s schema:b "x"@fr }
-            WHERE { ?s ?p ?o }""")
+def _terms(out):
+    return {(r.subj, r.pred, r.obj_value, r.obj_kind, r.obj_datatype,
+             r.obj_lang) for r in out.collect()}
+
+
+def test_template_constant_is_the_term_written(spark):
+    """One lexical text written as two different terms in one
+    template instantiates two different terms."""
+    got = _terms(sparql_query(_typed_kg(spark), PFX + """
+        CONSTRUCT { ?s schema:a "x"@en . ?s schema:b "x"@fr .
+                    ?s schema:c 5 . ?s schema:d "5" }
+        WHERE { ?s schema:isPartOf ?o }"""))
+    assert got == {
+        ("d2", f"{S}a", "x", "literal", None, "en"),
+        ("d2", f"{S}b", "x", "literal", None, "fr"),
+        ("d2", f"{S}c", "5", "literal", f"{XSD}integer", None),
+        ("d2", f"{S}d", "5", "literal", None, None)}
+
+
+def test_construct_where_shorthand_literal_constant(spark):
+    # the plain constant matches lexically (the IRI "chat" of d4 too)
+    # and is instantiated as the simple literal it was written as
+    got = _terms(sparql_query(_typed_kg(spark), PFX + """
+        CONSTRUCT WHERE { ?s schema:name "chat" }"""))
+    assert got == {(s, f"{S}name", "chat", "literal", None, None)
+                   for s in ("d1", "d2", "d3", "d4")}
+
+
+def test_template_computed_bind_is_a_typed_literal(spark):
+    """A BIND whose whole expression is a string function is a simple
+    literal; one whose whole expression is arithmetic is a literal
+    typed by its SQL result type.  Every term column is a string."""
+    out = sparql_query(_typed_kg(spark), PFX + """
+        CONSTRUCT { ?s schema:c ?c . ?s schema:t ?t . ?s schema:d ?d .
+                    ?s schema:i ?i . ?s schema:e ?e }
+        WHERE { ?s schema:wordCount ?w . FILTER(?s = "d1")
+                BIND(CONCAT(?w, "!") AS ?c) BIND(STR(?w) AS ?t)
+                BIND(?w + 1 AS ?d) BIND(2 + 3 AS ?i) BIND(1.5 * 2 AS ?e) }
+        """)
+    assert {t for _, t in out.dtypes} == {"string"}
+    assert _terms(out) == {
+        ("d1", f"{S}c", "5!", "literal", None, None),
+        ("d1", f"{S}t", "5", "literal", None, None),
+        ("d1", f"{S}d", "6.0", "literal", f"{XSD}double", None),
+        ("d1", f"{S}i", "5", "literal", f"{XSD}integer", None),
+        ("d1", f"{S}e", "3.0", "literal", f"{XSD}decimal", None)}

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from rdfa_streaming_parser_js_spark.operators.bgp import bgp_construct
+from rdfa_streaming_parser_js_spark.operators.bgp import Lit, bgp_construct
 from rdfa_streaming_parser_js_spark.operators.sparql import (
     SparqlSyntaxError, parse_update, sparql_query, sparql_update)
 from rdfa_streaming_parser_js_spark.operators.update import (
@@ -41,7 +41,7 @@ def _rows(df):
 
 def test_delete_insert_predicate_migration_keeps_metadata(spark):
     """Rename schema:name → schema:headline; the inserted literals must
-    keep their language tags (use_meta path)."""
+    keep their language tags (metadata companions)."""
     out = apply_update(
         _g(spark),
         delete=[("?x", f"{S}name", "?n")],
@@ -90,8 +90,7 @@ def test_insert_is_set_semantics(spark):
 def test_insert_data_and_delete_data_roundtrip(spark):
     g = _g(spark)
     g2 = insert_data(g, [("d9", RDF_TYPE, f"{S}Dataset"),
-                         ("d9", f"{S}name", ("neu", "literal", None,
-                                             "de"))])
+                         ("d9", f"{S}name", Lit("neu", lang="de"))])
     assert g2.count() == 9
     g3 = delete_data(g2, [("d9", RDF_TYPE, f"{S}Dataset"),
                           ("d9", f"{S}name", "neu")])
@@ -117,9 +116,8 @@ def test_parse_update_forms():
     u = parse_update(PFX + 'INSERT DATA { <d9> schema:name "x"@en ; '
                            'a schema:Person . }')
     assert u.form == "insert_data"
-    assert u.data == [("d9", f"{S}name", ("x", "literal", None, "en")),
-                      ("d9", RDF_TYPE, (f"{S}Person", "iri", None,
-                                        None))]
+    assert u.data == [("d9", f"{S}name", Lit("x", lang="en")),
+                      ("d9", RDF_TYPE, f"{S}Person")]
     u = parse_update(PFX + "DELETE WHERE { ?x schema:name ?n }")
     assert u.form == "modify" and u.delete == u.where.patterns
     u = parse_update(PFX + """DELETE { ?x schema:name ?n }
@@ -133,9 +131,9 @@ def test_parse_update_typed_ground_literal():
         PFX + "PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>\n"
               'INSERT DATA { <d9> schema:wordCount "7"^^xsd:integer }')
     assert u.data == [("d9", f"{S}wordCount",
-                       ("7", "literal", f"{XSD}integer", None))]
+                       Lit("7", datatype=f"{XSD}integer"))]
     u = parse_update(PFX + "INSERT DATA { <d9> schema:rank 3.5 }")
-    assert u.data[0][2] == ("3.5", "literal", f"{XSD}decimal", None)
+    assert u.data[0][2] == Lit("3.5", datatype=f"{XSD}decimal")
 
 
 def test_parse_update_rejects_path_template():
@@ -201,14 +199,33 @@ def test_exec_sparql_update_term_filter_meta(spark):
     assert out.filter(f"pred = '{S}name'").count() == 3
 
 
-def test_parse_update_template_iri_literal_collision_rejected():
-    """The same lexical text as both an IRI and a literal constant in
-    one template is ambiguous under lexical literal marking — must be
-    rejected loudly, never silently stamped wrong."""
-    with pytest.raises(SparqlSyntaxError, match="both an IRI"):
-        parse_update(PFX + """
-            INSERT { ?d schema:p "http://x" . ?d schema:q <http://x> }
-            WHERE  { ?d a schema:Article }""")
+def test_update_template_iri_and_literal_with_one_text(spark):
+    """The same text as a literal and as an IRI in one template
+    inserts one literal and one IRI."""
+    out = sparql_update(_g(spark), PFX + """
+        INSERT { ?d schema:p "http://x" . ?d schema:q <http://x> }
+        WHERE  { ?d a schema:Person }""")
+    assert set(_rows(out)) - set(_rows(_g(spark))) == {
+        ("d3", "iri", f"{S}p", "http://x", "literal", None, None),
+        ("d3", "iri", f"{S}q", "http://x", "iri", None, None)}
+
+
+def test_update_computed_bind_is_a_literal(spark):
+    """String-function and arithmetic BINDs insert literals.  The
+    arithmetic one is a DOUBLE column in the solution; the inserted
+    term is its string form, so the graph's other objects ("alpha")
+    are never cast to DOUBLE."""
+    out = sparql_update(_g(spark), PFX + """
+        INSERT { ?x schema:alt ?l . ?x schema:lex ?t . ?x schema:m ?m }
+        WHERE  { ?x schema:wordCount ?v
+                 BIND(CONCAT(?v, "!") AS ?l) BIND(STR(?v) AS ?t)
+                 BIND(?v + 1 AS ?m) }""")
+    assert set(_rows(out)) - set(_rows(_g(spark))) == {
+        ("d1", "iri", f"{S}alt", "120!", "literal", None, None),
+        ("d1", "iri", f"{S}lex", "120", "literal", None, None),
+        ("d1", "iri", f"{S}m", "121.0", "literal", f"{XSD}double",
+         None)}
+    assert out.count() == 10
 
 
 def test_unquote_backslash_and_raw_bytes():
@@ -482,8 +499,7 @@ def _update_as_select(graph, templates, group):
                               else [])
 
     def instantiate(template):
-        out = bgp_construct(sols, template,
-                            literal_consts=u.template_literals or None)
+        out = bgp_construct(sols, template)
         if "graph" in cols and "graph" not in out.columns:
             out = out.withColumn("graph", F.lit(None).cast("string"))
         return {tuple(r) for r in out.select(*cols).collect()}

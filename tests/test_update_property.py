@@ -6,13 +6,16 @@ random small term graphs, WHERE groups, and templates.
 Term metadata in the generated graphs is a FUNCTION of the lexical
 value (IRIs s*/p*; "lit-a" is @en, "lit-b" is ^^xsd:integer), so the
 reference can re-derive each binding's kind/datatype/language without
-modelling which pattern position minted the companion columns."""
+modelling which pattern position minted the companion columns.
+Template constants are terms: a ``Lit`` is that literal, even one
+whose text is an IRI of the graph (``Lit("s0")``)."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from rdfa_streaming_parser_js_spark.operators.bgp import Lit
 from rdfa_streaming_parser_js_spark.operators.update import (
     TERM_COLS, apply_update)
 
@@ -24,7 +27,8 @@ LITERALS = ["lit-a", "lit-b"]
 OBJECTS = SUBJECTS + LITERALS
 VARS = ["?a", "?b"]
 
-LITERAL_CONSTS = {"lit-a": (None, "en"), "lit-b": (XSD_INT, None)}
+TEMPLATE_LITS = [Lit("lit-a", lang="en"), Lit("lit-b", datatype=XSD_INT),
+                 Lit("s0")]
 
 
 def term_meta(v):
@@ -63,7 +67,7 @@ def update_case(draw):
         for _ in range(draw(st.integers(1, max_pats))):
             s = draw(st.sampled_from(bound + SUBJECTS))
             p = draw(st.sampled_from(bound + PREDS))
-            o = draw(st.sampled_from(bound + OBJECTS))
+            o = draw(st.sampled_from(bound + SUBJECTS + TEMPLATE_LITS))
             pats.append((s, p, o))
         return pats
 
@@ -103,19 +107,22 @@ def naive_update(triples, where, delete, insert):
     sols = naive_solutions(triples, where)
 
     def resolve(term, sol):
-        return sol[term] if term.startswith("?") else term
+        """(value, kind, datatype, lang) of a template term."""
+        if isinstance(term, Lit):
+            return (term.lex, "literal", term.datatype, term.lang)
+        v = sol[term] if term.startswith("?") else term
+        return (v,) + term_meta(v)
 
     out = set(graph)
     if delete:
-        doomed = {(resolve(s, b), resolve(p, b), resolve(o, b))
+        doomed = {(resolve(s, b)[0], resolve(p, b)[0], resolve(o, b)[0])
                   for b in sols for s, p, o in delete}
         out = {r for r in out if (r[0], r[2], r[3]) not in doomed}
     if insert:
         for b in sols:
             for s, p, o in insert:
-                sv, pv, ov = resolve(s, b), resolve(p, b), resolve(o, b)
-                okind, odt, olang = term_meta(ov)
-                out.add((sv, term_meta(sv)[0], pv, ov, okind, odt, olang))
+                sv, skind = resolve(s, b)[:2]
+                out.add((sv, skind, resolve(p, b)[0], *resolve(o, b)))
     return out
 
 
@@ -127,8 +134,7 @@ def test_apply_update_agrees_with_naive_evaluator(spark, case):
         [as_row(*t) for t in triples],
         "subj string, subj_kind string, pred string, obj_value string,"
         " obj_kind string, obj_datatype string, obj_lang string")
-    got = apply_update(df, delete=delete, insert=insert, where=where,
-                       literal_consts=LITERAL_CONSTS)
+    got = apply_update(df, delete=delete, insert=insert, where=where)
     got_set = {tuple(r) for r in got.select(*TERM_COLS).collect()}
     assert got_set == naive_update(triples, where, delete, insert)
 
