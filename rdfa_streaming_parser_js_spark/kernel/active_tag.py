@@ -10,7 +10,11 @@ XMLLiteral or a pattern) opens no frame: it adds one to the ``depth`` of
 the top frame, which is its effective parent, and its close subtracts
 one.  It does open the frame it would have had while an rdfa:copy waits
 for its pattern, and when a pattern root or an rdfa:copy opens inside
-it.
+it.  The HTML driver classifies each distinct raw tag once
+(``extractor.plain_element``) and opens a plain one with
+``RdfaExtractor.on_plain_open``, which counts it without copying its
+attributes; only the root element, XMLLiteral and pattern contents get
+a copy, on the full path.
 
 The top frame is always the next element's parent.  A skipped element's
 frame (``skip_element``) stands in for its parent: it carries the

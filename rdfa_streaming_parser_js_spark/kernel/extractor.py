@@ -40,9 +40,9 @@ _RDFA_USES_VOCABULARY = NamedNode(RDFA + "usesVocabulary")
 
 # Attributes that make a tag RDFa-relevant: if none of these (and no
 # xmlns*) appear, steps 2-13 collapse to taking the parent's context,
-# and ``on_tag_open`` counts the element on the top frame instead of
-# opening a frame.  Most real-web markup (div/span/p/a-without-RDFa
-# soup) lands there.
+# and the element is counted on the top frame instead of opening a
+# frame (``plain_element``).  Most real-web markup (div/span/p/a soup
+# without RDFa) lands there.
 _RDFA_ATTRS = frozenset((
     "about", "resource", "href", "src", "typeof", "property", "rel",
     "rev", "content", "datatype", "datetime", "inlist", "vocab",
@@ -52,12 +52,27 @@ _RDFA_ATTRS = frozenset((
 # even with no attributes.
 _NAME_TRIGGERED_TAGS = frozenset(("base", "time", "head", "body"))
 # Differential-test switch (tests/test_fast_driver.py): off, every
-# element opens a frame on the full path.  Counting must be behaviorally
+# element opens a frame on the full path and the HTML driver hands every
+# start tag to ``on_tag_open``.  Counting must be behaviorally
 # invisible; parity is asserted by running the fixture + fuzz corpora
 # with this flag off and on.
 FAST_TAG_PATH = True
 
 _INITIAL_CONTEXT_WITH_XHTML = {**INITIAL_CONTEXT, **INITIAL_CONTEXT_XHTML}
+
+
+def plain_element(name: str, attributes) -> bool:
+    """True when an element's name and attributes give RDFa nothing to
+    do: no RDFa attribute, no xmlns*, no name-triggered behavior.  The
+    one rule behind ``on_tag_open``'s fast path and the HTML driver's
+    plain-tag classification (``fast_driver._TAG_CACHE``)."""
+    if name in _NAME_TRIGGERED_TAGS \
+            or not _RDFA_ATTRS.isdisjoint(attributes):
+        return False
+    for a in attributes:
+        if a.startswith("xmlns"):
+            return False
+    return True
 
 
 def _plain_frame(parent: ActiveTag) -> ActiveTag:
@@ -147,32 +162,9 @@ class RdfaExtractor:
         # frame, so the reference's walk back over skipped tags
         # (RdfaParser.ts:89-104) is never needed.
         parent = stack[-1]
-
-        # Plain element: no RDFa-relevant attributes, no name-triggered
-        # behavior, not the root element, not inside an XMLLiteral or an
-        # rdfa:Pattern collection.  Steps 2-13 reduce to taking the
-        # parent's context, so the element opens no frame: it is counted
-        # on the top frame (``depth``), which is its effective parent.
-        # While an rdfa:copy waits for its pattern it opens the frame it
-        # would have had (``_plain_frame``), so the replay into the
-        # copy's frame lands before the text of that frame's children.
-        # Exactly equivalent to the full path below (differential-tested
-        # with FAST_TAG_PATH off/on over the fixture and fuzz corpora).
-        if (FAST_TAG_PATH and not parent.collect_child_tags
-                and len(stack) != 1
-                and name not in _NAME_TRIGGERED_TAGS
-                and (not self._copy_rdfa_patterns
-                     or parent.collected_pattern_tag is None)
-                and _RDFA_ATTRS.isdisjoint(attributes)):
-            for a in attributes:
-                if a.startswith("xmlns"):
-                    break
-            else:
-                if self.pending_copies:
-                    stack.append(_plain_frame(parent))
-                else:
-                    parent.depth += 1
-                return
+        if (FAST_TAG_PATH and plain_element(name, attributes)
+                and self._count_plain(parent)):
+            return
 
         features = self._features
         util = self.util
@@ -546,6 +538,36 @@ class RdfaExtractor:
         else:
             tag.subject = new_subject or parent.subject
             tag.object = current_object_resource or new_subject
+
+    def on_plain_open(self, name: str, attributes: dict[str, str]) -> None:
+        """The HTML driver's entry for a start tag it classified plain
+        (``plain_element``).  ``attributes`` is the driver's cached dict,
+        shared by every occurrence of the raw tag, so only a copy may
+        reach ``on_tag_open``, which can mutate it."""
+        if not self._count_plain(self.stack[-1]):
+            self.on_tag_open(name, attributes.copy())
+
+    def _count_plain(self, parent: ActiveTag) -> bool:
+        """Take a plain element's open without the full path, which
+        would only hand it ``parent``'s context: count it on ``parent``
+        (``depth``), its effective parent, or, while an rdfa:copy waits
+        for its pattern, open the frame it would have had
+        (``_plain_frame``), so the replay into the copy's frame lands
+        before the text of that frame's children.  False where it takes
+        the full path: the root element, inside an XMLLiteral or an
+        rdfa:Pattern collection.  Exactly equivalent to the full path
+        (differential-tested with FAST_TAG_PATH off/on over the fixture
+        and fuzz corpora)."""
+        stack = self.stack
+        if (parent.collect_child_tags or len(stack) == 1
+                or (self._copy_rdfa_patterns
+                    and parent.collected_pattern_tag is not None)):
+            return False
+        if self.pending_copies:
+            stack.append(_plain_frame(parent))
+        else:
+            parent.depth += 1
+        return True
 
     # ------------------------------------------------------------------
     def on_text(self, data: str) -> None:

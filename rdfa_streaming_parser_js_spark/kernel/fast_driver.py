@@ -11,6 +11,14 @@ and inherits all html-mode *semantics* (void elements, open-implies-
 close, foreign-content depth, stray-end-tag recovery) from
 ``HtmlSaxDriver`` unchanged.
 
+Per start tag the scan pays one ``_TAG_CACHE`` hit on templated pages:
+a cached tag whose end no later text can move (``_end_stable``) is
+found from its first '>' with no regex, and a plain one (no RDFa
+attribute, no xmlns*, not name-triggered, void, foreign or CDATA) goes
+to the sink's ``on_plain_open`` with no attribute copy, after the
+open-implies-close rule.  An end tag that closes the top of the stack
+outside foreign content closes it directly.
+
 Parity is enforced by differential tests: the full transcribed fixture
 corpus and a seeded 5000-document tag-soup fuzz are run through BOTH
 drivers and must produce identical triples and extracted text
@@ -24,8 +32,10 @@ import html.parser as _hp
 
 import re
 
-from .extractor import RdfaExtractor
-from .html_driver import HtmlSaxDriver
+from . import extractor as _extractor
+from .extractor import RdfaExtractor, plain_element
+from .html_driver import (
+    _FOREIGN_CONTEXT, OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, HtmlSaxDriver)
 
 _CDATA_ELEMS = ("script", "style")
 # Full close pattern, mirroring html.parser's set_cdata_mode
@@ -40,12 +50,17 @@ _ASCII_LETTERS = frozenset(
 # Start-tag parse cache: parsing a raw ``<tag ...>`` slice is a pure
 # function of the slice, and crawl corpora are heavily templated — the
 # same tag source recurs across millions of pages.  Keyed on the exact
-# raw text; value is (tag, attrs-as-dict, kind) where kind 0 = junk
-# (emit raw as data), 1 = self-closing, 2 = start tag.  The dict is
-# prebuilt with ``_open``'s first-duplicate-wins + None→"" rules so the
-# sink path is a single C-level ``dict.copy`` per event instead of a
-# Python attr loop.  Bounded: reset when full (adversarial corpora with
-# unbounded distinct tags must not grow worker memory).
+# raw text; value is (tag, attrs-as-dict, kind, end_stable) where kind
+# 0 = junk (emit raw as data), 1 = self-closing, 2 = start tag, 3 =
+# plain start tag: not void, foreign or CDATA, and ``plain_element``
+# (no RDFa attribute, no xmlns*, not name-triggered), which the driver
+# opens with one ``on_plain_open`` call.  The dict is prebuilt with
+# ``_open``'s first-duplicate-wins + None→"" rules so the sink path is
+# at most one C-level ``dict.copy`` per event instead of a Python attr
+# loop.  ``end_stable`` lets the scan take a tag's end from the first
+# '>' instead of the tolerant regex (``_end_stable``).  Bounded: reset
+# when full (adversarial corpora with unbounded distinct tags must not
+# grow worker memory).
 _TAG_CACHE: dict = {}
 _TAG_CACHE_MAX = 1 << 16
 
@@ -57,6 +72,69 @@ _END_CACHE: dict = {}
 
 def _unescape(text: str) -> str:
     return html_mod.unescape(text) if "&" in text else text
+
+
+def _end_stable(raw: str) -> bool:
+    """Whether no text after ``raw``, a start tag ending in '>', can
+    move its end.
+
+    Proof.  In ``locatestarttagend_tolerant`` only a quoted value
+    ('...' or "...") can consume '>'; every other element stops at it.
+    So the regex paths that read past the '>' ending ``raw`` are those
+    that open a quote before it and find no closing quote inside
+    ``raw``.  ``re`` returns the first path in priority order that
+    succeeds.  Over ``raw`` + any text, a path that stays inside ``raw``
+    succeeds or fails as it does over ``raw`` alone.  A path that opens
+    such a quote fails over ``raw`` alone; over a text holding the
+    closing quote it succeeds (all that follows a value may match
+    empty) and ends past the '>'.  So some text moves the end exactly
+    when such a path comes before the path that wins over ``raw``.
+    Appending ``'"`` closes either quote, so that happens exactly when
+    the match over ``raw + '"`` ends past the '>'.  Otherwise every
+    text leaves the match, and so the end the scan takes from it (at
+    the '>' or its '/>'), as it is over ``raw``.
+
+    Two uses: the scan takes a cached end-stable tag's end from the
+    first '>' after its '<', with no regex; and, feeding in chunks, it
+    holds back a tag that is not end-stable, since a quote in a later
+    chunk may close it.  The paths that make such a tag unstable failed
+    over the whole buffer too (had their quote closed there, one of them
+    would have won), so the buffer's end cuts them off."""
+    return (raw[-1:] == ">" and _hp.locatestarttagend_tolerant.match(
+        raw + "'\"").end() < len(raw))
+
+
+def _tag_entry(s: str, i: int, endpos: int) -> tuple:
+    """Parse the start tag ``s[i:endpos]`` into its ``_TAG_CACHE``
+    entry."""
+    mt = _hp.tagfind_tolerant.match(s, i + 1)
+    tag = mt.group(1).lower()
+    attrs: dict = {}
+    k = mt.end()
+    while k < endpos:
+        am = _hp.attrfind_tolerant.match(s, k)
+        if not am:
+            break
+        name, rest, value = am.group(1, 2, 3)
+        if not rest:
+            value = None
+        elif value[:1] == "'" == value[-1:] \
+                or value[:1] == '"' == value[-1:]:
+            value = value[1:-1]
+        if value:
+            value = _unescape(value)
+        name = name.lower()
+        if name not in attrs:  # first duplicate wins
+            attrs[name] = value if value is not None else ""
+        k = am.end()
+
+    endtext = s[k:endpos].strip()
+    kind = 0 if endtext not in (">", "/>") else 1 if endtext == "/>" else 2
+    if kind == 2 and tag not in VOID_ELEMENTS \
+            and tag not in _FOREIGN_CONTEXT and tag not in _CDATA_ELEMS \
+            and plain_element(tag, attrs):
+        kind = 3
+    return tag, attrs, kind, _end_stable(s[i:endpos])
 
 
 class FastHtmlSaxDriver(HtmlSaxDriver):
@@ -83,7 +161,14 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
     # -- scanner -------------------------------------------------------
 
     def _scan(self, s: str, final: bool) -> str:
-        open_tag, on_text = self._open, self.sink.on_text
+        sink, open_tags = self.sink, self.open_tags
+        open_tag, on_text, on_close = self._open, sink.on_text, \
+            sink.on_tag_close
+        # A sink without on_plain_open (the listener tee) gets every
+        # start tag through ``_open``, attributes and all.
+        plain_open = (getattr(sink, "on_plain_open", None)
+                      if _extractor.FAST_TAG_PATH else None)
+        unescape = html_mod.unescape
         i, n = 0, len(s)
         while i < n:
             if self._cdata_elem is not None:
@@ -117,7 +202,7 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                         if amp:
                             on_text(_unescape(text[:amp]))
                         return text[amp:]
-                on_text(_unescape(text))
+                on_text(unescape(text) if "&" in text else text)
             if lt >= n:
                 return ""
             i = lt
@@ -146,7 +231,14 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                         _END_CACHE.clear()
                     _END_CACHE[raw] = closes
                 if closes is not None:
-                    self.handle_endtag(closes)
+                    if open_tags and open_tags[-1] == closes \
+                            and not self._foreign_depth:
+                        # handle_endtag's common case.  With no foreign
+                        # content open no void element is on the stack.
+                        open_tags.pop()
+                        on_close()
+                    else:
+                        self.handle_endtag(closes)
                 i = gt + 1
                 continue
             if nxt == "!":
@@ -194,72 +286,66 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                 i += 1
                 continue
 
-            # start tag — mirrors html.parser check_for_whole_start_tag
-            # + parse_starttag decision structure exactly
-            m = _hp.locatestarttagend_tolerant.match(s, i)
-            j = m.end()
-            nxt2 = s[j:j + 1]
-            if nxt2 == ">":
-                endpos = j + 1
-            elif nxt2 == "/":
-                if s.startswith("/>", j):
-                    endpos = j + 2
-                elif j + 1 >= n:
+            # start tag.  A cached end-stable tag ends at its first '>'
+            # whatever follows, so one dict hit replaces the regex scan
+            # (gt < 0 slices '', which is never a key).
+            gt = s.find(">", i)
+            entry = _TAG_CACHE.get(s[i:gt + 1])
+            if entry is not None and entry[3]:
+                endpos = gt + 1
+            else:
+                # mirrors html.parser check_for_whole_start_tag +
+                # parse_starttag decision structure exactly
+                m = _hp.locatestarttagend_tolerant.match(s, i)
+                j = m.end()
+                nxt2 = s[j:j + 1]
+                if nxt2 == ">":
+                    endpos = j + 1
+                elif nxt2 == "/":
+                    if s.startswith("/>", j):
+                        endpos = j + 2
+                    elif j + 1 >= n:
+                        if not final:
+                            return s[i:]  # possibly split across chunks
+                        i = self._salvage(s, i)
+                        continue
+                    else:
+                        on_text(s[i:j])  # junk: '<...' becomes text
+                        i = j
+                        continue
+                elif nxt2 == "" or nxt2 in (
+                        "abcdefghijklmnopqrstuvwxyz="
+                        "ABCDEFGHIJKLMNOPQRSTUVWXYZ"):
+                    # end of input, possibly inside an attribute value —
+                    # buffer boundary (check_for_whole_start_tag returns
+                    # -1)
                     if not final:
-                        return s[i:]  # possibly split across chunks
+                        return s[i:]
                     i = self._salvage(s, i)
                     continue
                 else:
-                    on_text(s[i:j])  # junk: '<...' becomes text
-                    i = j
-                    continue
-            elif nxt2 == "" or nxt2 in (
-                    "abcdefghijklmnopqrstuvwxyz="
-                    "ABCDEFGHIJKLMNOPQRSTUVWXYZ"):
-                # end of input, possibly inside an attribute value —
-                # buffer boundary (check_for_whole_start_tag returns -1)
-                if not final:
-                    return s[i:]
-                i = self._salvage(s, i)
-                continue
-            else:
-                endpos = j if j > i else i + 1
+                    endpos = j if j > i else i + 1
+                raw = s[i:endpos]
+                entry = _TAG_CACHE.get(raw)
+                if entry is None:
+                    entry = _tag_entry(s, i, endpos)
+                    if len(_TAG_CACHE) >= _TAG_CACHE_MAX:
+                        _TAG_CACHE.clear()
+                    _TAG_CACHE[raw] = entry
+                if not (final or entry[3]) and raw[-1] == ">":
+                    return s[i:]  # a later quote may move its end
 
-            raw = s[i:endpos]
-            cached = _TAG_CACHE.get(raw)
-            if cached is None:
-                mt = _hp.tagfind_tolerant.match(s, i + 1)
-                tag = mt.group(1).lower()
-                attrs: dict = {}
-                k = mt.end()
-                while k < endpos:
-                    am = _hp.attrfind_tolerant.match(s, k)
-                    if not am:
-                        break
-                    name, rest, value = am.group(1, 2, 3)
-                    if not rest:
-                        value = None
-                    elif value[:1] == "'" == value[-1:] \
-                            or value[:1] == '"' == value[-1:]:
-                        value = value[1:-1]
-                    if value:
-                        value = _unescape(value)
-                    name = name.lower()
-                    if name not in attrs:  # first duplicate wins
-                        attrs[name] = value if value is not None else ""
-                    k = am.end()
-
-                endtext = s[k:endpos].strip()
-                kind = (0 if endtext not in (">", "/>")
-                        else 1 if endtext == "/>" else 2)
-                if len(_TAG_CACHE) >= _TAG_CACHE_MAX:
-                    _TAG_CACHE.clear()
-                _TAG_CACHE[raw] = (tag, attrs, kind)
-            else:
-                tag, attrs, kind = cached
-
-            if kind == 0:
-                on_text(raw)
+            tag, attrs, kind, _ = entry
+            if kind == 3 and plain_open is not None \
+                    and not self._foreign_depth:
+                closers = OPEN_IMPLIES_CLOSE.get(tag)
+                if closers:
+                    while open_tags and open_tags[-1] in closers:
+                        self._close_top()
+                open_tags.append(tag)
+                plain_open(tag, attrs)
+            elif kind == 0:
+                on_text(s[i:endpos])
             elif kind == 1:
                 open_tag(tag, attrs, True)
             else:

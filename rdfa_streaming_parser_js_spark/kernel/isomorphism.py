@@ -1,21 +1,16 @@
-"""Graph isomorphism + canonical blank-node labeling.
+"""Graph isomorphism.
 
 The reference's fixture suite compares quad sets with graph isomorphism
 (``toBeRdfIsomorphic``, /root/reference/test/RdfParser-test.ts:178) —
-blank-node labels don't matter, structure does. We implement:
-
-- ``isomorphic(a, b)``   — exact bnode-bijection check (backtracking with
-  signature pruning; fixture graphs are small).
-- ``canonical_triples``  — deterministic WL-style relabeling, used for
-  corpus-level P/R scoring and distributed skolemization parity.
+blank-node labels don't matter, structure does. ``isomorphic(a, b)`` is
+an exact bnode-bijection check (backtracking with signature pruning;
+fixture graphs are small).
 
 Triples here are *flattened*: tuples of term tuples
 ``('iri', v) | ('bnode', label) | ('lit', value, datatype, language)``.
 """
 
 from __future__ import annotations
-
-from hashlib import sha1
 
 from .terms import BlankNode, Literal, NamedNode
 
@@ -107,49 +102,3 @@ def isomorphic(a, b) -> bool:
         return False
 
     return backtrack(0)
-
-
-def canonical_triples(triples, rounds: int = 4) -> set[tuple]:
-    """Deterministically relabel bnodes by iterative neighborhood hashing
-    (Weisfeiler-Leman refinement). Two isomorphic graphs without
-    automorphic bnode twins map to identical sets; used for corpus-scale
-    P/R scoring where exact backtracking is too slow."""
-    ts = flatten = list(set(triples))
-    labels = {x[1] for t in ts for x in t if _is_bnode(x)}
-    color = {l: "0" for l in labels}
-    for _ in range(rounds):
-        new_color = {}
-        for l in labels:
-            parts = []
-            key = ("bnode", l)
-            for t in flatten:
-                for i, x in enumerate(t):
-                    if x == key:
-                        parts.append((i, tuple(
-                            ("bnode", color[y[1]]) if _is_bnode(y) else y
-                            for j, y in enumerate(t) if j != i)))
-            new_color[l] = sha1(repr(sorted(parts)).encode()).hexdigest()[:16]
-        color = new_color
-    # disambiguate identical colors deterministically by sorted label order
-    seen: dict[str, int] = {}
-    final = {}
-    for l in sorted(labels):
-        c = color[l]
-        n = seen.get(c, 0)
-        seen[c] = n + 1
-        final[l] = f"{c}_{n}"
-    return {
-        tuple(("bnode", final[x[1]]) if _is_bnode(x) else x for x in t)
-        for t in ts}
-
-
-def precision_recall(got, expected) -> tuple[float, float]:
-    """Triple-level P/R after canonical relabeling (BASELINE.json gate)."""
-    g = canonical_triples(got)
-    e = canonical_triples(expected)
-    if not g and not e:
-        return 1.0, 1.0
-    inter = len(g & e)
-    precision = inter / len(g) if g else 1.0
-    recall = inter / len(e) if e else 1.0
-    return precision, recall

@@ -717,6 +717,12 @@ class _Parser:
         GroupSpec checks the group-shape rules; a violation re-raises
         here as a syntax error."""
         self.expect_op("{")
+        if self.take_kw("select"):
+            # '{' SubSelect '}' (grammar rule 53): the group is one
+            # sub-SELECT, as in the form '{ { SELECT ... } }'
+            spec = GroupSpec(relations=[self._subselect()])
+            self.expect_op("}")
+            return spec
         if self.at_op("{") and not (
                 self.peek(1).kind == "NAME"
                 and self.peek(1).text.lower() == "select"):
@@ -733,19 +739,15 @@ class _Parser:
             return GroupSpec(union=union)
         g = {f.name: [] for f in fields(GroupSpec)}  # its members
         while not self.at_op("}"):
-            if self.at_op("{"):
+            if self.take_op("{"):
                 # mid-group braced block: a sub-SELECT (§18.2) — at
                 # the top level or inside an OPTIONAL/MINUS/EXISTS
                 # body; either way it compiles to a GroupSpec relation
-                self.next()
-                if not self.at_kw("select"):
+                if not self.take_kw("select"):
                     self.fail("expected SELECT (only sub-SELECT blocks "
                               "may appear mid-group; UNION must be the "
                               "entire group body)")
-                self.next()
-                sq = self._parse_select_body()
-                g["relations"].append(_relation_entry(sq))
-                self.all_subqueries.append(sq)
+                g["relations"].append(self._subselect())
                 self.expect_op("}")
             elif self.take_kw("filter"):
                 self._parse_filter(g)
@@ -838,6 +840,14 @@ class _Parser:
         if spec.relations:
             _check_subselect_commutes(spec)
         return spec
+
+    def _subselect(self) -> tuple:
+        """A sub-SELECT, read after its SELECT keyword → the relation
+        entry of its group."""
+        sq = self._parse_select_body()
+        entry = _relation_entry(sq)
+        self.all_subqueries.append(sq)
+        return entry
 
     def _parse_filter(self, g: dict) -> None:
         negate = False

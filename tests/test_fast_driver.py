@@ -61,12 +61,20 @@ JUNK = ["<!--c-->", "<!-- unterminated", "<!DOCTYPE html>",
         "<![CDATA[x]]>", "&amp;", "&ampx", "&#65;", "&#x41;", "&bogus;",
         "&", "<", ">", "</", "<>", "< div>", "\x00", "<?pi?>",
         "</p extra>", "<a", "<div class=", "text&am"]
+# Quote-split tags: a quoted value holding '>', and quotes cut at an
+# inner '>' that a later quote in the document may close.  The driver
+# may take a cached tag's end from its first '>' only when no later
+# text can move it.  ``_soup`` mixes them in only when asked, so the
+# golden-digest corpus below keeps its random stream.
+QUOTE_SPLIT = ['<span b ="c>', '<span b ="c>d" property="ex:y">',
+               "<p t='>'>", "<p t='a>b' about='#q'>", "<span b ='c>",
+               "x' rel='ex:r'>", '<div title="a>b">', '"', "'"]
 
 
-def _soup(rng: random.Random) -> str:
+def _soup(rng: random.Random, quote_split: bool = False) -> str:
     parts = []
     for _ in range(rng.randrange(0, 20)):
-        k = rng.randrange(6)
+        k = rng.randrange(7 if quote_split else 6)
         t = rng.choice(TAGS)
         if k == 0:
             attrs = []
@@ -88,8 +96,10 @@ def _soup(rng: random.Random) -> str:
             parts.append(f"<{t}/>")
         elif k == 4:
             parts.append(rng.choice(JUNK))
-        else:
+        elif k == 5:
             parts.append(f"<{t.upper()} Prop='{rng.choice(VALS)}'>")
+        else:
+            parts.append(rng.choice(QUOTE_SPLIT))
     return "".join(parts)
 
 
@@ -97,7 +107,7 @@ def test_fuzz_parity_5000():
     rng = random.Random(20260817)
     opts = {"base_iri": "http://example.org/d/p"}
     for trial in range(5000):
-        doc = _soup(rng)
+        doc = _soup(rng, quote_split=True)
         slow = _run(HtmlSaxDriver, doc, opts)
         fast = _run(FastHtmlSaxDriver, doc, opts)
         assert fast == slow, f"trial {trial}: {doc!r}"
@@ -107,7 +117,7 @@ def test_chunked_parity():
     rng = random.Random(42)
     opts = {"base_iri": "http://example.org/"}
     for trial in range(400):
-        doc = _soup(rng)
+        doc = _soup(rng, quote_split=True)
         whole = _run(FastHtmlSaxDriver, doc, opts)
         ex = RdfaExtractor(base_iri=opts["base_iri"], profile="html")
         d = FastHtmlSaxDriver(ex)
@@ -119,6 +129,115 @@ def test_chunked_parity():
         d.finish()
         assert (flatten_triples(ex.triples),
                 ex.extracted_text()) == whole, f"trial {trial}: {doc!r}"
+
+
+# A cached tag's end from its first '>'.  After ``<span b ="c>`` is
+# cached (its quote finds no close, so the tag ends at the '>'), the
+# same text opening a tag whose quote closes later must not end there:
+# the second document below has the triple (s, p, "v").  Each order is
+# fed twice, so each document meets a cache the other one warmed.
+_SPLIT_OPEN = ('<html><body><div about="http://x/s"><span b ="c></span>'
+               '</div></body></html>')
+_SPLIT_CLOSED = ('<html><body><div about="http://x/s"><span b ="c>d" '
+                 'property="http://x/p">v</span></div></body></html>')
+_SPLIT_TRIPLE = (("iri", "http://x/s"), ("iri", "http://x/p"),
+                 ("lit", "v", None, None))
+
+
+@pytest.fixture
+def _cold_tag_cache(monkeypatch):
+    from rdfa_streaming_parser_js_spark.kernel import fast_driver
+    monkeypatch.setattr(fast_driver, "_TAG_CACHE", {})
+
+
+@pytest.mark.parametrize("order", [(_SPLIT_OPEN, _SPLIT_CLOSED),
+                                   (_SPLIT_CLOSED, _SPLIT_OPEN)],
+                         ids=["open-first", "closed-first"])
+def test_cached_tag_end_survives_a_later_quote(_cold_tag_cache, order):
+    for doc in order * 2:
+        fast = _run(FastHtmlSaxDriver, doc, {})
+        assert fast == _run(HtmlSaxDriver, doc, {})
+        assert (_SPLIT_TRIPLE in fast[0]) == (doc is _SPLIT_CLOSED)
+
+
+def test_cached_tag_end_survives_a_later_quote_chunked(_cold_tag_cache):
+    """Fed in chunks, a tag whose end a later quote may move waits for
+    more text, cached or not."""
+    rng = random.Random(7)
+    for trial in range(200):
+        doc = (_SPLIT_OPEN, _SPLIT_CLOSED)[trial % 2]
+        ex = RdfaExtractor(profile="html")
+        d = FastHtmlSaxDriver(ex)
+        i = 0
+        while i < len(doc):
+            step = rng.randrange(1, 9)
+            d.feed(doc[i:i + step])
+            i += step
+        d.finish()
+        assert (flatten_triples(ex.triples), ex.extracted_text()) \
+            == _run(HtmlSaxDriver, doc, {}), f"trial {trial}"
+
+
+class _Recorder(RdfaExtractor):
+    """Counts the start-tag events the driver sends."""
+
+    def __init__(self, **kw):
+        super().__init__(**kw)
+        self.opens: list[str] = []
+        self.plain: list[str] = []
+
+    def on_tag_open(self, name, attributes):
+        self.opens.append(name)
+        super().on_tag_open(name, attributes)
+
+    def on_plain_open(self, name, attributes):
+        self.plain.append(name)
+        super().on_plain_open(name, attributes)
+
+
+_PLAIN_DOC = ("<html><body><div class='w'><p id='x'>t <b>u</b></p><div "
+              "about='#s' property='http://e.org/a'>v</div></div>"
+              "</body></html>")
+
+
+def test_plain_tags_take_one_sink_call():
+    """A plain start tag reaches the extractor as one ``on_plain_open``;
+    <body> and the RDFa element reach ``on_tag_open``, and so does the
+    root element, which is plain but opens a frame."""
+    ex = _Recorder(base_iri="http://example.org/", profile="html")
+    d = FastHtmlSaxDriver(ex)
+    d.feed(_PLAIN_DOC)
+    d.finish()
+    assert ex.plain == ["html", "div", "p", "b"]
+    assert ex.opens == ["html", "body", "div"]
+
+
+def test_fast_tag_path_off_turns_off_the_driver_plain_path(_slow_tag_path):
+    ex = _Recorder(base_iri="http://example.org/", profile="html")
+    d = FastHtmlSaxDriver(ex)
+    d.feed(_PLAIN_DOC)
+    d.finish()
+    assert ex.plain == []
+    assert ex.opens == ["html", "body", "div", "p", "b", "div"]
+
+
+def test_listener_sees_plain_tags_with_their_attributes():
+    from rdfa_streaming_parser_js_spark.kernel import parse_rdfa
+    from rdfa_streaming_parser_js_spark.kernel.html_driver import (
+        HtmlParseListener)
+    seen = []
+
+    class Listener(HtmlParseListener):
+        def on_tag_open(self, name, attributes):
+            seen.append((name, dict(attributes)))
+
+    ex = parse_rdfa(_PLAIN_DOC, base_iri="http://example.org/",
+                    html_parse_listener=Listener())
+    assert seen == [("html", {}), ("body", {}), ("div", {"class": "w"}),
+                    ("p", {"id": "x"}), ("b", {}),
+                    ("div", {"about": "#s",
+                             "property": "http://e.org/a"})]
+    assert ex.triples  # the extractor still saw the RDFa element
 
 
 # CDATA (script/style) content-model corner cases: html.parser stays in
@@ -561,6 +680,10 @@ class _StackDepth(RdfaExtractor):
 
     def on_tag_open(self, name, attributes):
         super().on_tag_open(name, attributes)
+        self.deepest = max(self.deepest, len(self.stack))
+
+    def on_plain_open(self, name, attributes):
+        super().on_plain_open(name, attributes)
         self.deepest = max(self.deepest, len(self.stack))
 
 

@@ -313,6 +313,20 @@ def test_exec_subselect_as_only_relation(spark):
     assert [tuple(r) for r in got.collect()] == [("srcA", 2)]
 
 
+def test_exec_subselect_as_the_whole_group(spark):
+    """'{' SubSelect '}' (grammar rule 53) gives the rows of the
+    double-brace form; nothing may follow the sub-SELECT there."""
+    inner = ("SELECT ?s (COUNT(?d) AS ?n) "
+             "WHERE { ?d schema:isPartOf ?s } GROUP BY ?s")
+    single, double = (sparql_query(_kg(spark), PFX + f"""
+        SELECT ?s ?n WHERE {{ {body} }} ORDER BY ?s""").collect()
+        for body in (inner, "{ " + inner + " }"))
+    assert [tuple(r) for r in single] == [tuple(r) for r in double] \
+        == [("srcA", 2)]
+    with pytest.raises(SparqlSyntaxError):
+        parse_sparql(PFX + f"SELECT ?n WHERE {{ {inner} FILTER(?n > 1) }}")
+
+
 def test_parse_rejects_subselect_with_optional():
     # pattern-less group: nothing for the OPTIONAL to left-join onto
     with pytest.raises(SparqlSyntaxError, match="sub-SELECT"):
