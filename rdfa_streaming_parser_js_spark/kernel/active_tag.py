@@ -11,7 +11,7 @@ the top frame, which is its effective parent, and its close subtracts
 one.  It does open the frame it would have had while an rdfa:copy waits
 for its pattern, and when a pattern root or an rdfa:copy opens inside
 it.  The HTML driver classifies each distinct raw tag once
-(``extractor.plain_element``) and opens a plain one with
+(``extractor.tag_shape``) and opens a plain one with
 ``RdfaExtractor.on_plain_open``, which counts it without copying its
 attributes; only the root element, XMLLiteral and pattern contents get
 a copy, on the full path.
@@ -55,7 +55,7 @@ class ActiveTag:
         self.prefixes_custom: dict[str, str] = {}
         self.subject = None              # NamedNode | BlankNode | True | None
         self.explicit_new_subject = False
-        self.predicates = None           # list[NamedNode] | None
+        self.predicates = None           # tuple[NamedNode, ...] | None
         self.object = None               # NamedNode | BlankNode | True | None
         self.text = None                 # list[str | Markup] | None
         self.vocab = None                # str | None

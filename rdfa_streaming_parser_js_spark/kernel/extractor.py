@@ -16,6 +16,13 @@ parallelism — unlike the reference's process-global counter
 (/root/reference/lib/Util.ts:219-224); fixture comparison uses graph
 isomorphism so labels don't matter, and distributed runs skolemize with
 sha1(url || label) downstream.
+
+An element's open pays only for what depends on its context.  What its
+name and attributes alone decide is a ``TagShape``, built once per
+distinct raw tag by the HTML driver (``fast_driver._TAG_CACHE``) and
+once per call for every other caller.  Terms resolve through the
+per-worker prefix and term tables in ``util.py``, which share a result
+between pages only where no base can change it.
 """
 
 from __future__ import annotations
@@ -28,7 +35,9 @@ from .active_tag import ActiveTag, Markup, RdfaPattern
 from .contexts import INITIAL_CONTEXT, INITIAL_CONTEXT_XHTML
 from .profiles import RDFA_FEATURES, RdfaFeatures
 from .terms import BlankNode, NamedNode
-from .util import RDF, RDFA, XHTML_VOCAB, Util, content_type_to_profile, parse_prefixes
+from .util import (
+    RDF, RDFA, XHTML_VOCAB, Util, content_type_to_profile, merge_prefixes,
+    parse_prefixes)
 
 # Hoisted constant terms (NamedNode is immutable value-equality):
 # constructing these per emitted triple showed up in profiles.
@@ -59,6 +68,7 @@ _NAME_TRIGGERED_TAGS = frozenset(("base", "time", "head", "body"))
 FAST_TAG_PATH = True
 
 _INITIAL_CONTEXT_WITH_XHTML = {**INITIAL_CONTEXT, **INITIAL_CONTEXT_XHTML}
+_NO_PREFIXES: dict[str, str] = {}
 
 
 def plain_element(name: str, attributes) -> bool:
@@ -73,6 +83,49 @@ def plain_element(name: str, attributes) -> bool:
         if a.startswith("xmlns"):
             return False
     return True
+
+
+class TagShape:
+    """What RDFa processing reads from a start tag's name and attributes
+    alone (``tag_shape``): whether it is plain, an rdfa:Pattern root or
+    an rdfa:copy, whether it declares prefixes, the values of the
+    attributes that steps 5-11 read, and the whitespace-split tokens of
+    @typeof, @property, @rel and @rev (None: absent).
+
+    The HTML driver caches one shape per distinct raw start tag
+    (``fast_driver._TAG_CACHE``, shared by html and xhtml pages), so a
+    shape holds no fact that depends on the profile's features or on the
+    element's context; ``on_tag_open`` makes those choices.  A shape is
+    immutable once built."""
+
+    __slots__ = ("plain", "pattern", "copy", "declares", "about",
+                 "resource", "href", "src", "content", "datatype", "inlist",
+                 "typeof", "property", "rel", "rev")
+
+    def __init__(self, name: str, attributes) -> None:
+        get = attributes.get
+        self.plain = plain_element(name, attributes)
+        self.pattern = get("typeof") == "rdfa:Pattern"
+        self.copy = get("property") == "rdfa:copy"
+        self.declares = bool(get("prefix")) or any(
+            a.startswith("xmlns") for a in attributes)
+        (self.about, self.resource, self.href, self.src, self.content,
+         self.datatype) = map(get, ("about", "resource", "href", "src",
+                                    "content", "datatype"))
+        self.inlist = "inlist" in attributes
+        self.typeof, self.property, self.rel, self.rev = (
+            None if v is None else tuple(v.split())  # splits as \s+ does
+            for v in map(get, ("typeof", "property", "rel", "rev")))
+
+
+# The shape of every plain tag: plain, and no RDFa attribute.
+_PLAIN = TagShape("span", {})
+
+
+def tag_shape(name: str, attributes) -> TagShape:
+    """The one function that analyzes a start tag for ``on_tag_open``."""
+    return _PLAIN if plain_element(name, attributes) \
+        else TagShape(name, attributes)
 
 
 def _plain_frame(parent: ActiveTag) -> ActiveTag:
@@ -118,8 +171,7 @@ class RdfaExtractor:
         profile = profile or ""
         self.profile = profile
         self._features = features or RDFA_FEATURES[profile]
-        self._bnode_counter = 0
-        self.util = Util(base_iri, self._fresh_blank_node)
+        self.util = Util(base_iri)
         self.triples: list[tuple] = []
 
         self._copy_rdfa_patterns = self._features.copy_rdfa_patterns
@@ -130,6 +182,7 @@ class RdfaExtractor:
         root.language = language
         root.vocab = vocab
         # Prefix maps are copy-on-write, so the root shares the constants.
+        root.prefixes_custom = _NO_PREFIXES
         root.prefixes_all = (_INITIAL_CONTEXT_WITH_XHTML
                              if self._features.xhtml_initial_context
                              else INITIAL_CONTEXT)
@@ -143,18 +196,20 @@ class RdfaExtractor:
         return self._features
 
     # ------------------------------------------------------------------
-    def _fresh_blank_node(self) -> BlankNode:
-        label = f"g_{self._bnode_counter}"
-        self._bnode_counter += 1
-        return BlankNode(label)
-
     def _is_inherit_subject_in_head_body(self, name: str) -> bool:
         # /root/reference/lib/RdfaParser.ts:763-765
         return (self._features.inherit_subject_in_head_body
                 and name in ("head", "body"))
 
     # ------------------------------------------------------------------
-    def on_tag_open(self, name: str, attributes: dict[str, str]) -> None:
+    def on_tag_open(self, name: str, attributes: dict[str, str],
+                    shape: TagShape | None = None) -> None:
+        """Open an element.  ``shape`` is ``tag_shape(name, attributes)``
+        as the HTML driver cached it; every other caller (the XML driver,
+        pattern replay, ``on_end``, the listener tee, tests) leaves it
+        out and the shape is worked out here."""
+        if shape is None:
+            shape = tag_shape(name, attributes)
         stack = self.stack
 
         # The top frame is the parent.  A skipped tag's frame stands in
@@ -162,8 +217,7 @@ class RdfaExtractor:
         # frame, so the reference's walk back over skipped tags
         # (RdfaParser.ts:89-104) is never needed.
         parent = stack[-1]
-        if (FAST_TAG_PATH and plain_element(name, attributes)
-                and self._count_plain(parent)):
+        if FAST_TAG_PATH and shape.plain and self._count_plain(parent):
             return
 
         features = self._features
@@ -173,8 +227,7 @@ class RdfaExtractor:
         # own close (to replay into it), so under counted elements the
         # innermost one first opens the frame it would have had.
         if parent.depth and self._copy_rdfa_patterns and (
-                attributes.get("typeof") == "rdfa:Pattern"
-                or attributes.get("property") == "rdfa:copy"):
+                shape.pattern or shape.copy):
             parent.depth -= 1
             parent = _plain_frame(parent)
             stack.append(parent)
@@ -184,7 +237,7 @@ class RdfaExtractor:
         tag.collect_child_tags = parent.collect_child_tags
         tag.collect_child_tags_for_current_tag = \
             parent.collect_child_tags_for_current_tag
-        tag.inlist = "inlist" in attributes
+        tag.inlist = inlist = shape.inlist
         tag.list_mapping_local = parent.list_mapping
         tag.local_base_iri = parent.local_base_iri
         stack.append(tag)
@@ -202,19 +255,26 @@ class RdfaExtractor:
             if features.skip_handling_xml_literal_children:
                 return
 
+        typeof, prop, rel, rev = (shape.typeof, shape.property, shape.rel,
+                                  shape.rev)
+        about, resource, content, datatype = (
+            shape.about, shape.resource, shape.content, shape.datatype)
+        href_or_src = shape.href or shape.src
         allow_terms_in_rel = True
         allow_terms_in_rev = True
-        if features.only_allow_uri_rel_rev_if_property:
+        if features.only_allow_uri_rel_rev_if_property and prop is not None:
             # Drop non-CURIE rel/rev when property is present
             # (RdfaParser.ts:143-157)
-            if "property" in attributes and "rel" in attributes:
+            if rel is not None:
                 allow_terms_in_rel = False
                 if ":" not in attributes["rel"]:
                     del attributes["rel"]
-            if "property" in attributes and "rev" in attributes:
+                    rel = None
+            if rev is not None:
                 allow_terms_in_rev = False
                 if ":" not in attributes["rev"]:
                     del attributes["rev"]
+                    rev = None
 
         if self._copy_rdfa_patterns:
             # Collect children of an open pattern (RdfaParser.ts:161-173)
@@ -224,7 +284,7 @@ class RdfaExtractor:
                 tag.collected_pattern_tag = pattern
                 return
             # Start a new pattern (RdfaParser.ts:176-187)
-            if attributes.get("typeof") == "rdfa:Pattern":
+            if shape.pattern:
                 tag.collected_pattern_tag = RdfaPattern(
                     name, attributes, root_pattern=True, parent_tag=parent)
                 return
@@ -232,13 +292,11 @@ class RdfaExtractor:
             # under a skipped tag replays into a detached frame, as the
             # reference's object spread does, so its text stays out: the
             # detached frame starts with no text list of its own.
-            if attributes.get("property") == "rdfa:copy":
+            if shape.copy:
                 if parent.skip_element:
                     parent = copy(parent)
                     parent.text = None
-                copy_id = (attributes.get("resource")
-                           or attributes.get("href")
-                           or attributes.get("src"))
+                copy_id = resource or href_or_src
                 if copy_id in self.rdfa_patterns:
                     self.emit_pattern_copy(
                         parent, self.rdfa_patterns[copy_id], copy_id)
@@ -248,13 +306,13 @@ class RdfaExtractor:
 
         # <base> overrides the document base; xml:base is subtree-scoped
         # (RdfaParser.ts:204-211)
-        if features.base_tag and name == "base" and attributes.get("href"):
-            util.base_iri = util.get_base_iri(attributes["href"])
+        if features.base_tag and name == "base" and shape.href:
+            util.base_iri = util.get_base_iri(shape.href)
         if features.xml_base and attributes.get("xml:base"):
             tag.local_base_iri = util.get_base_iri(attributes["xml:base"])
 
         # <time> sniffs datatypes (RdfaParser.ts:214-216)
-        if features.time_tag and name == "time" and "datatype" not in attributes:
+        if features.time_tag and name == "time" and datatype is None:
             tag.interpret_object_as_time = True
 
         # RDFa Core processing steps 1-13 (RdfaParser.ts:218-589)
@@ -275,12 +333,17 @@ class RdfaExtractor:
         else:
             tag.vocab = parent.vocab
 
-        # 3: prefixes
-        tag.prefixes_custom = parse_prefixes(
-            attributes, parent.prefixes_custom,
-            bool(features.xmlns_prefix_mappings))
-        tag.prefixes_all = ({**parent.prefixes_all, **tag.prefixes_custom}
-                            if tag.prefixes_custom else parent.prefixes_all)
+        # 3: prefixes, interned (util.py); a tag that declares none
+        # shares its parent's maps
+        if shape.declares:
+            tag.prefixes_custom = parse_prefixes(
+                attributes, parent.prefixes_custom,
+                bool(features.xmlns_prefix_mappings))
+            tag.prefixes_all = merge_prefixes(parent.prefixes_all,
+                                              tag.prefixes_custom)
+        else:
+            tag.prefixes_custom = parent.prefixes_custom
+            tag.prefixes_all = parent.prefixes_all
 
         # @role (RdfaParser.ts:253-268)
         if features.role_attribute and attributes.get("role"):
@@ -292,7 +355,7 @@ class RdfaExtractor:
             vocab_old = tag.vocab
             tag.vocab = XHTML_VOCAB
             for role in util.create_vocab_iris(
-                    attributes["role"], tag, True, False):
+                    tuple(attributes["role"].split()), tag, True, False):
                 self.emit_triple(
                     role_subject, NamedNode(XHTML_VOCAB + "role"), role)
             tag.vocab = vocab_old
@@ -306,34 +369,32 @@ class RdfaExtractor:
             tag.language = parent.language
 
         is_root_tag = len(stack) == 2
-        if "rel" not in attributes and "rev" not in attributes:
+        if rel is None and rev is None:
             # 5: new subject without rel/rev
-            if ("property" in attributes and "content" not in attributes
-                    and "datatype" not in attributes):
+            if prop is not None and content is None and datatype is None:
                 # 5.1
-                if "about" in attributes:
+                if about is not None:
                     new_subject = util.create_iri(
-                        attributes["about"], tag, False, True, True)
+                        about, tag, False, True, True)
                     tag.explicit_new_subject = bool(new_subject)
                 elif is_root_tag:
                     new_subject = True
                 elif parent.object:
                     new_subject = parent.object
 
-                if "typeof" in attributes:
-                    if "about" in attributes:
+                if typeof is not None:
+                    if about is not None:
                         typed_resource = util.create_iri(
-                            attributes["about"], tag, False, True, True)
+                            about, tag, False, True, True)
                     if not typed_resource and is_root_tag:
                         typed_resource = True
-                    if not typed_resource and "resource" in attributes:
+                    if not typed_resource and resource is not None:
                         typed_resource = util.create_iri(
-                            attributes["resource"], tag, False, True, True)
+                            resource, tag, False, True, True)
                     if not typed_resource and (
-                            "href" in attributes or "src" in attributes):
+                            shape.href is not None or shape.src is not None):
                         typed_resource = util.create_iri(
-                            attributes.get("href") or attributes.get("src"),
-                            tag, False, False, True)
+                            href_or_src, tag, False, False, True)
                     if (not typed_resource
                             and self._is_inherit_subject_in_head_body(name)):
                         typed_resource = new_subject
@@ -342,57 +403,53 @@ class RdfaExtractor:
                     current_object_resource = typed_resource
             else:
                 # 5.2
-                if "about" in attributes or "resource" in attributes:
+                if about is not None or resource is not None:
                     new_subject = util.create_iri(
-                        attributes.get("about") or attributes.get("resource"),
-                        tag, False, True, True)
+                        about or resource, tag, False, True, True)
                     tag.explicit_new_subject = bool(new_subject)
                 if not new_subject and (
-                        "href" in attributes or "src" in attributes):
+                        shape.href is not None or shape.src is not None):
                     new_subject = util.create_iri(
-                        attributes.get("href") or attributes.get("src"),
-                        tag, False, False, True)
+                        href_or_src, tag, False, False, True)
                     tag.explicit_new_subject = bool(new_subject)
                 if not new_subject:
                     if is_root_tag:
                         new_subject = True
                     elif self._is_inherit_subject_in_head_body(name):
                         new_subject = parent.object
-                    elif "typeof" in attributes:
+                    elif typeof is not None:
                         new_subject = util.create_blank_node()
                         tag.explicit_new_subject = True
                     elif parent.object:
                         new_subject = parent.object
-                        if "property" not in attributes:
+                        if prop is None:
                             tag.skip_element = True
-                if "typeof" in attributes:
+                if typeof is not None:
                     typed_resource = new_subject
         else:
             # 6: new subject with rel/rev
-            if "about" in attributes:
-                new_subject = util.create_iri(
-                    attributes["about"], tag, False, True, True)
+            if about is not None:
+                new_subject = util.create_iri(about, tag, False, True, True)
                 tag.explicit_new_subject = bool(new_subject)
-                if "typeof" in attributes:
+                if typeof is not None:
                     typed_resource = new_subject
             elif is_root_tag:
                 new_subject = True
             elif parent.object:
                 new_subject = parent.object
 
-            if "resource" in attributes:
+            if resource is not None:
                 current_object_resource = util.create_iri(
-                    attributes["resource"], tag, False, True, True)
+                    resource, tag, False, True, True)
             if not current_object_resource:
-                if "href" in attributes or "src" in attributes:
+                if shape.href is not None or shape.src is not None:
                     current_object_resource = util.create_iri(
-                        attributes.get("href") or attributes.get("src"),
-                        tag, False, False, True)
-                elif ("typeof" in attributes and "about" not in attributes
+                        href_or_src, tag, False, False, True)
+                elif (typeof is not None and about is None
                       and not self._is_inherit_subject_in_head_body(name)):
                     current_object_resource = util.create_blank_node()
 
-            if "typeof" in attributes and "about" not in attributes:
+            if typeof is not None and about is None:
                 if self._is_inherit_subject_in_head_body(name):
                     typed_resource = new_subject
                 else:
@@ -400,8 +457,7 @@ class RdfaExtractor:
 
         # 7: emit rdf:type for the typed resource
         if typed_resource:
-            for type_term in util.create_vocab_iris(
-                    attributes.get("typeof"), tag, True, True):
+            for type_term in util.create_vocab_iris(typeof, tag, True, True):
                 self.emit_triple(
                     util.get_resource_or_base_iri(typed_resource, tag),
                     _RDF_TYPE, type_term)
@@ -412,23 +468,23 @@ class RdfaExtractor:
 
         # 9: emit triples for the current object resource
         if current_object_resource:
-            if "rel" in attributes and "inlist" in attributes:
+            if rel is not None and inlist:
                 for predicate in util.create_vocab_iris(
-                        attributes["rel"], tag, allow_terms_in_rel, False):
+                        rel, tag, allow_terms_in_rel, False):
                     self.add_list_mapping(
                         tag, new_subject, predicate, current_object_resource)
             else:
-                if "rel" in attributes:
+                if rel is not None:
                     for predicate in util.create_vocab_iris(
-                            attributes["rel"], tag, allow_terms_in_rel, False):
+                            rel, tag, allow_terms_in_rel, False):
                         self.emit_triple(
                             util.get_resource_or_base_iri(new_subject, tag),
                             predicate,
                             util.get_resource_or_base_iri(
                                 current_object_resource, tag))
-                if "rev" in attributes:
+                if rev is not None:
                     for predicate in util.create_vocab_iris(
-                            attributes["rev"], tag, allow_terms_in_rev, False):
+                            rev, tag, allow_terms_in_rev, False):
                         self.emit_triple(
                             util.get_resource_or_base_iri(
                                 current_object_resource, tag),
@@ -437,29 +493,27 @@ class RdfaExtractor:
 
         # 10: store incomplete triples when no object yet
         if not current_object_resource:
-            if "rel" in attributes:
-                inlist = "inlist" in attributes
+            if rel is not None:
                 for predicate in util.create_vocab_iris(
-                        attributes["rel"], tag, allow_terms_in_rel, False):
+                        rel, tag, allow_terms_in_rel, False):
                     if inlist:
                         self.add_list_mapping(tag, new_subject, predicate, False)
                     tag.incomplete_triples.append((predicate, False, inlist))
-            if "rev" in attributes:
+            if rev is not None:
                 for predicate in util.create_vocab_iris(
-                        attributes["rev"], tag, allow_terms_in_rev, False):
+                        rev, tag, allow_terms_in_rev, False):
                     tag.incomplete_triples.append((predicate, True, False))
             if tag.incomplete_triples:
                 current_object_resource = util.create_blank_node()
 
         # 11: property values
-        if "property" in attributes:
-            tag.predicates = util.create_vocab_iris(
-                attributes["property"], tag, True, False)
+        if prop is not None:
+            tag.predicates = util.create_vocab_iris(prop, tag, True, False)
 
             local_object_resource = None
-            if "datatype" in attributes:
+            if datatype is not None:
                 tag.datatype = util.create_iri(
-                    attributes["datatype"], tag, True, True, False)
+                    datatype, tag, True, True, False)
                 if tag.datatype and (
                         tag.datatype.value == RDF + "XMLLiteral"
                         or (features.html_datatype
@@ -467,28 +521,27 @@ class RdfaExtractor:
                     tag.collect_child_tags = True
                     tag.collect_child_tags_for_current_tag = True
             else:
-                if ("rev" not in attributes and "rel" not in attributes
-                        and "content" not in attributes):
-                    if "resource" in attributes:
+                if rev is None and rel is None and content is None:
+                    if resource is not None:
                         local_object_resource = util.create_iri(
-                            attributes["resource"], tag, False, True, True)
-                    if not local_object_resource and "href" in attributes:
+                            resource, tag, False, True, True)
+                    if not local_object_resource and shape.href is not None:
                         local_object_resource = util.create_iri(
-                            attributes["href"], tag, False, False, True)
-                    if not local_object_resource and "src" in attributes:
+                            shape.href, tag, False, False, True)
+                    if not local_object_resource and shape.src is not None:
                         local_object_resource = util.create_iri(
-                            attributes["src"], tag, False, False, True)
-                if "typeof" in attributes and "about" not in attributes:
+                            shape.src, tag, False, False, True)
+                if typeof is not None and about is None:
                     local_object_resource = typed_resource
 
             # A non-XMLLiteral tag inside a collecting parent stops
             # collection for the current tag (RdfaParser.ts:499-504)
-            if "datatype" not in attributes or attributes["datatype"] == "":
+            if not datatype:
                 tag.collect_child_tags_for_current_tag = False
 
-            if "content" in attributes:
+            if content is not None:
                 # content= wins over text (RdfaParser.ts:506-521)
-                values = [util.create_literal(attributes["content"], tag)]
+                values = [util.create_literal(content, tag)]
             elif features.datetime_attribute and "datetime" in attributes:
                 tag.interpret_object_as_time = True
                 values = [util.create_literal(attributes["datetime"], tag)]
@@ -498,7 +551,7 @@ class RdfaExtractor:
             else:
                 values = []  # the element's text, at its close
             for obj in values:
-                if "inlist" in attributes:
+                if inlist:
                     for predicate in tag.predicates:
                         self.add_list_mapping(tag, new_subject, predicate, obj)
                 else:
@@ -545,7 +598,7 @@ class RdfaExtractor:
         shared by every occurrence of the raw tag, so only a copy may
         reach ``on_tag_open``, which can mutate it."""
         if not self._count_plain(self.stack[-1]):
-            self.on_tag_open(name, attributes.copy())
+            self.on_tag_open(name, attributes.copy(), _PLAIN)
 
     def _count_plain(self, parent: ActiveTag) -> bool:
         """Take a plain element's open without the full path, which
@@ -757,7 +810,7 @@ class RdfaExtractor:
             # copy that needs more than earlier copies mints the rest
             k = next(i)
             if k == len(nodes):
-                nodes.append(self._fresh_blank_node())
+                nodes.append(self.util.fresh_blank_node())
             return nodes[k]
 
         self.util.blank_node_factory = replay_or_mint

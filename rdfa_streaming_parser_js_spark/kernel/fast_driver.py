@@ -16,8 +16,10 @@ a cached tag whose end no later text can move (``_end_stable``) is
 found from its first '>' with no regex, and a plain one (no RDFa
 attribute, no xmlns*, not name-triggered, void, foreign or CDATA) goes
 to the sink's ``on_plain_open`` with no attribute copy, after the
-open-implies-close rule.  An end tag that closes the top of the stack
-outside foreign content closes it directly.
+open-implies-close rule.  Any other start tag reaches ``on_tag_open``
+with its cached ``extractor.TagShape``, so the extractor analyzes each
+distinct tag once per worker.  An end tag that closes the top of the
+stack outside foreign content closes it directly.
 
 Parity is enforced by differential tests: the full transcribed fixture
 corpus and a seeded 5000-document tag-soup fuzz are run through BOTH
@@ -33,7 +35,7 @@ import html.parser as _hp
 import re
 
 from . import extractor as _extractor
-from .extractor import RdfaExtractor, plain_element
+from .extractor import RdfaExtractor, tag_shape
 from .html_driver import (
     _FOREIGN_CONTEXT, OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, HtmlSaxDriver)
 
@@ -50,17 +52,20 @@ _ASCII_LETTERS = frozenset(
 # Start-tag parse cache: parsing a raw ``<tag ...>`` slice is a pure
 # function of the slice, and crawl corpora are heavily templated — the
 # same tag source recurs across millions of pages.  Keyed on the exact
-# raw text; value is (tag, attrs-as-dict, kind, end_stable) where kind
-# 0 = junk (emit raw as data), 1 = self-closing, 2 = start tag, 3 =
-# plain start tag: not void, foreign or CDATA, and ``plain_element``
-# (no RDFa attribute, no xmlns*, not name-triggered), which the driver
-# opens with one ``on_plain_open`` call.  The dict is prebuilt with
-# ``_open``'s first-duplicate-wins + None→"" rules so the sink path is
-# at most one C-level ``dict.copy`` per event instead of a Python attr
-# loop.  ``end_stable`` lets the scan take a tag's end from the first
-# '>' instead of the tolerant regex (``_end_stable``).  Bounded: reset
-# when full (adversarial corpora with unbounded distinct tags must not
-# grow worker memory).
+# raw text; value is (tag, attrs-as-dict, kind, end_stable, shape) where
+# kind 0 = junk (emit raw as data), 1 = self-closing, 2 = start tag, 3 =
+# plain start tag: not void, foreign or CDATA, and plain by its shape
+# (``extractor.tag_shape``: no RDFa attribute, no xmlns*, not
+# name-triggered), which the driver opens with one ``on_plain_open``
+# call.  ``shape`` depends on the tag's name and attributes only, never
+# on the profile, so html and xhtml pages share entries; the driver
+# hands it to ``on_tag_open`` with every other start tag.  The dict is
+# prebuilt with ``_open``'s first-duplicate-wins + None→"" rules so the
+# sink path is at most one C-level ``dict.copy`` per event instead of a
+# Python attr loop.  ``end_stable`` lets the scan take a tag's end from
+# the first '>' instead of the tolerant regex (``_end_stable``).
+# Bounded: reset when full (adversarial corpora with unbounded distinct
+# tags must not grow worker memory).
 _TAG_CACHE: dict = {}
 _TAG_CACHE_MAX = 1 << 16
 
@@ -130,11 +135,12 @@ def _tag_entry(s: str, i: int, endpos: int) -> tuple:
 
     endtext = s[k:endpos].strip()
     kind = 0 if endtext not in (">", "/>") else 1 if endtext == "/>" else 2
+    shape = tag_shape(tag, attrs)
     if kind == 2 and tag not in VOID_ELEMENTS \
             and tag not in _FOREIGN_CONTEXT and tag not in _CDATA_ELEMS \
-            and plain_element(tag, attrs):
+            and shape.plain:
         kind = 3
-    return tag, attrs, kind, _end_stable(s[i:endpos])
+    return tag, attrs, kind, _end_stable(s[i:endpos]), shape
 
 
 class FastHtmlSaxDriver(HtmlSaxDriver):
@@ -335,7 +341,7 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
                 if not (final or entry[3]) and raw[-1] == ">":
                     return s[i:]  # a later quote may move its end
 
-            tag, attrs, kind, _ = entry
+            tag, attrs, kind, _, shape = entry
             if kind == 3 and plain_open is not None \
                     and not self._foreign_depth:
                 closers = OPEN_IMPLIES_CLOSE.get(tag)
@@ -347,9 +353,9 @@ class FastHtmlSaxDriver(HtmlSaxDriver):
             elif kind == 0:
                 on_text(s[i:endpos])
             elif kind == 1:
-                open_tag(tag, attrs, True)
+                open_tag(tag, attrs, True, shape)
             else:
-                open_tag(tag, attrs, False)
+                open_tag(tag, attrs, False, shape)
                 if tag in _CDATA_ELEMS:  # html.parser enters CDATA mode
                     self._cdata_elem = tag  # regardless of context
             i = endpos

@@ -85,7 +85,8 @@ class HtmlSaxDriver(HTMLParser):
         # recognizeSelfClosing: <x/> opens and immediately closes
         self._open(tag, attrs, self_closing=True)
 
-    def _open(self, tag: str, attrs, self_closing: bool) -> None:
+    def _open(self, tag: str, attrs, self_closing: bool,
+              shape=None) -> None:
         if type(attrs) is dict:
             # FastHtmlSaxDriver hands over a prebuilt (cached) attr dict;
             # copy because the extractor mutates it (rel/rev drops,
@@ -105,14 +106,14 @@ class HtmlSaxDriver(HTMLParser):
 
         if self_closing or (self._foreign_depth == 0
                             and tag in VOID_ELEMENTS):
-            self.sink.on_tag_open(tag, attributes)
+            self.sink.on_tag_open(tag, attributes, shape)
             self.sink.on_tag_close()
             return
 
         if tag in _FOREIGN_CONTEXT:
             self._foreign_depth += 1
         self.open_tags.append(tag)
-        self.sink.on_tag_open(tag, attributes)
+        self.sink.on_tag_open(tag, attributes, shape)
 
     def _close_top(self) -> None:
         closed = self.open_tags.pop()
@@ -206,6 +207,9 @@ class XmlSaxDriver:
                 self._parser.Parse(b"", True)
             except expat.ExpatError as e:
                 self.error = str(e)  # truncated document
+        # The parser holds this driver's bound handlers: drop it, so no
+        # reference cycle keeps the page alive until a gc pass.
+        self._parser = None
         while self._depth > 0:
             self._depth -= 1
             self.sink.on_tag_close()
@@ -237,8 +241,8 @@ class _TeeSink:
         self._x = extractor
         self._l = listener
 
-    def on_tag_open(self, name: str, attributes: dict) -> None:
-        self._x.on_tag_open(name, attributes)
+    def on_tag_open(self, name: str, attributes: dict, shape=None) -> None:
+        self._x.on_tag_open(name, attributes, shape)
         self._l.on_tag_open(name, attributes)
 
     def on_text(self, data: str) -> None:

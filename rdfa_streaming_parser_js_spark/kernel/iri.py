@@ -7,6 +7,8 @@ the reference's test corpus:
 
 - absolute refs (with a scheme) are returned as-is,
 - an empty ref returns the base as-is,
+- a fragment-only ref ("#it") is the base up to its own fragment plus the
+  ref, without the RFC split (§5.2.2 with an empty path and no query),
 - an invalid/empty base returns the ref as-is (the kernel's IRI validity
   filter downstream drops anything unusable, /root/reference/lib/Util.ts:127).
 """
@@ -15,11 +17,13 @@ from __future__ import annotations
 
 import re
 
-_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
-# RFC 3986 appendix B parsing regex.
+SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
+# RFC 3986 appendix B parsing regex; a fragment may hold any character.
 _IRI_PARTS_RE = re.compile(
-    r"^(?:([^:/?#]+):)?(?://([^/?#]*))?([^?#]*)(?:\?([^#]*))?(?:#(.*))?$"
-)
+    r"^(?:([^:/?#]+):)?(?://([^/?#]*))?([^?#]*)(?:\?([^#]*))?(?:#(.*))?$",
+    re.DOTALL)
+# Its scheme part alone: whether ``_split`` finds a scheme.
+_PARTS_SCHEME_RE = re.compile(r"[^:/?#]+:")
 
 
 def _split(iri: str):
@@ -85,8 +89,18 @@ def resolve(ref: str | None, base: str | None) -> str:
         return ref
     if not ref:
         return base
-    if _SCHEME_RE.match(ref):
+    if SCHEME_RE.match(ref):
         return ref
+    if ref[0] == "#":
+        if _PARTS_SCHEME_RE.match(base) is None:
+            return ref
+        return base.partition("#")[0] + ref
+    return _resolve_split(ref, base)
+
+
+def _resolve_split(ref: str, base: str) -> str:
+    """§5.2.2 over the split ref and base; ``resolve`` checks the
+    guards first."""
     b_scheme, b_auth, b_path, b_query, _b_frag = _split(base)
     if b_scheme is None:
         # Invalid base (no scheme): leave the ref untouched; the IRI

@@ -7,15 +7,35 @@ construction + time sniffing :203-213, CURIE/IRI resolution :239-297).
 
 All functions are pure Python — they run inside the Arrow-batched UDF, never
 per-row through Spark.
+
+Two per-worker tables make a term cost one dict hit after its first page:
+
+- ``_PREFIXES`` interns prefix maps.  ``parse_prefixes`` and
+  ``merge_prefixes`` return one shared map per (parent map, declaration),
+  so every page that declares ``prefix="schema: http://schema.org/"``
+  under the same initial context gets the same map objects.  Maps stay
+  copy-on-write: nothing mutates a map once built.
+- ``_TERMS`` memoizes ``create_iri`` and ``create_vocab_iris`` on (term or
+  term tuple, flags, vocab, identity of the tag's ``prefixes_all``), and
+  only for a result no base can change: a vocab term, a blank node, a
+  CURIE or IRI that is absolute before resolution.  A relative IRI,
+  including a vocab-mode prefixed one (resolved against the document
+  base), is resolved again on every use.
+
+Keys hold map identities (``id``).  Each value also holds the maps its key
+names, so no id in a live key can be reused by a new map.  Both tables
+are bounded like ``fast_driver._TAG_CACHE`` and cleared together when
+full (``_remember``).
 """
 
 from __future__ import annotations
 
 import re
+from itertools import count
 from typing import Callable, Optional
 
 from .active_tag import ActiveTag
-from .iri import resolve
+from .iri import SCHEME_RE, resolve
 from .profiles import RDFA_CONTENTTYPES
 from .terms import BlankNode, Literal, NamedNode
 
@@ -45,8 +65,16 @@ TIME_REGEXES: list[tuple[re.Pattern, str]] = [
 # /root/reference/lib/Util.ts:32 — structural IRI validity.
 _IRI_RE = re.compile(r'^([A-Za-z][\d+-.A-Za-z]*|_):[^ "<>[\\\]`{|}]*$')
 
-# /root/reference/lib/Util.ts:191 — multi-valued attribute separator.
-_WS_SPLIT = re.compile(r"\s+")
+_PREFIXES: dict = {}
+_TERMS: dict = {}
+TABLES_MAX = 1 << 16
+
+
+def _remember(table: dict, key, value) -> None:
+    if len(_PREFIXES) + len(_TERMS) >= TABLES_MAX:
+        _PREFIXES.clear()
+        _TERMS.clear()
+    table[key] = value
 
 
 def parse_prefixes(attributes: dict[str, str], parent_prefixes: dict[str, str],
@@ -55,21 +83,37 @@ def parse_prefixes(attributes: dict[str, str], parent_prefixes: dict[str, str],
 
     Copy-on-write: returns ``parent_prefixes`` unchanged when the tag
     declares nothing new (/root/reference/lib/Util.ts:66-79).
+    Otherwise the map is interned per (parent map, declaration).
     """
-    additional: dict[str, str] = {}
-    if xmlns_prefix_mappings:
-        for attribute, value in attributes.items():
-            if attribute.startswith("xmlns"):
-                additional[attribute[6:]] = value
-
+    additional = tuple(
+        (attribute[6:], value) for attribute, value in attributes.items()
+        if attribute.startswith("xmlns")) if xmlns_prefix_mappings else ()
     prefix_attr = attributes.get("prefix")
-    if prefix_attr or additional:
-        prefixes = {**parent_prefixes, **additional}
-        if prefix_attr:
-            for m in _PREFIX_RE.finditer(prefix_attr):
-                prefixes[m.group(1)] = m.group(2)
-        return prefixes
-    return parent_prefixes
+    if not (prefix_attr or additional):
+        return parent_prefixes
+    key = (id(parent_prefixes), prefix_attr, additional)
+    hit = _PREFIXES.get(key)
+    if hit is None:
+        prefixes = {**parent_prefixes, **dict(additional)}
+        for m in _PREFIX_RE.finditer(prefix_attr or ""):
+            prefixes[m.group(1)] = m.group(2)
+        hit = (prefixes, parent_prefixes)
+        _remember(_PREFIXES, key, hit)
+    return hit[0]
+
+
+def merge_prefixes(parent_all: dict[str, str],
+                   custom: dict[str, str]) -> dict[str, str]:
+    """A tag's in-scope map: its parent's overridden by its own custom
+    prefixes, interned per pair of maps."""
+    if not custom:
+        return parent_all
+    key = (id(parent_all), id(custom))
+    hit = _PREFIXES.get(key)
+    if hit is None:
+        hit = ({**parent_all, **custom}, parent_all, custom)
+        _remember(_PREFIXES, key, hit)
+    return hit[0]
 
 
 def expand_prefixed_term(term: str, active_tag: ActiveTag) -> str:
@@ -115,12 +159,17 @@ class Util:
     vocab-mode prefixed relative IRIs, lib/Util.ts:291).
     """
 
-    def __init__(self, base_iri: str | None,
-                 fresh_blank_node: Callable[[], BlankNode]) -> None:
+    def __init__(self, base_iri: str | None) -> None:
         self.base_iri = NamedNode(base_iri or "")
         self.base_iri_document = self.base_iri
         self.blank_node_factory: Optional[Callable[[], BlankNode]] = None
-        self._fresh_blank_node = fresh_blank_node
+        self._labels = count()
+
+    def fresh_blank_node(self) -> BlankNode:
+        """Deterministic per-document labels g_0, g_1, ...  The extractor
+        calls it through its ``util`` and keeps no bound copy, so no
+        reference cycle keeps a parsed page alive."""
+        return BlankNode(f"g_{next(self._labels)}")
 
     def get_base_iri(self, base_iri_value: str) -> NamedNode:
         """<base href> / xml:base handling: strip fragment, resolve
@@ -142,20 +191,30 @@ class Util:
     def create_blank_node(self) -> BlankNode:
         if self.blank_node_factory is not None:
             return self.blank_node_factory()
-        return self._fresh_blank_node()
+        return self.fresh_blank_node()
 
-    def create_vocab_iris(self, terms: str | None, active_tag: ActiveTag,
-                          allow_terms: bool, allow_blank_node: bool) -> list:
+    def create_vocab_iris(self, terms: tuple, active_tag: ActiveTag,
+                          allow_terms: bool, allow_blank_node: bool) -> tuple:
         """Whitespace-split multi-valued attribute → term list
         (/root/reference/lib/Util.ts:182-195)."""
-        out = []
-        for term in _WS_SPLIT.split(terms or ""):
-            if not term or (not allow_terms and ":" not in term):
-                continue
-            created = self.create_iri(term, active_tag, True, True,
-                                      allow_blank_node)
-            if created is not None:
-                out.append(created)
+        # ``terms`` comes split already (``TagShape``); the result is a
+        # memoized tuple.
+        key = (terms, allow_terms, allow_blank_node, active_tag.vocab,
+               id(active_tag.prefixes_all))
+        hit = _TERMS.get(key)
+        if hit is not None:
+            return hit[0]
+        out, shared = [], True
+        for term in terms:
+            if allow_terms or ":" in term:
+                created, base_free = self._iri(term, active_tag, True, True,
+                                               allow_blank_node)
+                shared = shared and base_free
+                if created is not None:
+                    out.append(created)
+        out = tuple(out)
+        if shared:
+            _remember(_TERMS, key, (out, active_tag.prefixes_all))
         return out
 
     def create_literal(self, literal: str, active_tag: ActiveTag) -> Literal:
@@ -176,40 +235,54 @@ class Util:
                    allow_safe_curie: bool, allow_blank_node: bool):
         """CURIE/safe-CURIE/IRI resolution
         (/root/reference/lib/Util.ts:239-297). Returns NamedNode, BlankNode,
-        or None for invalid terms."""
+        or None for invalid terms; memoized."""
+        key = (term, vocab, allow_safe_curie, allow_blank_node,
+               active_tag.vocab, id(active_tag.prefixes_all))
+        hit = _TERMS.get(key)
+        if hit is not None:
+            return hit[0]
+        created, base_free = self._iri(term, active_tag, vocab,
+                                       allow_safe_curie, allow_blank_node)
+        if base_free:
+            _remember(_TERMS, key, (created, active_tag.prefixes_all))
+        return created
+
+    def _iri(self, term: str | None, active_tag: ActiveTag, vocab: bool,
+             allow_safe_curie: bool, allow_blank_node: bool) -> tuple:
+        """``create_iri``'s result, and whether no base can change it."""
         term = term or ""
-
+        base = None
         if not allow_safe_curie:
+            iri = term
             if not vocab:
-                term = resolve(term, self.get_base_iri_term(active_tag).value)
-            if not is_valid_iri(term):
-                return None
-            return NamedNode(term)
+                base = self.get_base_iri_term(active_tag).value
+        else:
+            # Safe CURIEs: [prefix:local]; must contain a prefix separator
+            if term.startswith("[") and term.endswith("]"):
+                term = term[1:-1]
+                if ":" not in term:
+                    return None, True
 
-        # Safe CURIEs: [prefix:local]; must contain a prefix separator
-        if term and term.startswith("[") and term.endswith("]"):
-            term = term[1:-1]
-            if ":" not in term:
-                return None
+            # Blank nodes
+            if term.startswith("_:"):
+                if not allow_blank_node:
+                    return None, True
+                return BlankNode(term[2:] or "b_identity"), True
 
-        # Blank nodes
-        if term.startswith("_:"):
-            if not allow_blank_node:
-                return None
-            return BlankNode(term[2:] or "b_identity")
+            # Vocab IRIs
+            if vocab and active_tag.vocab and ":" not in term:
+                return NamedNode(active_tag.vocab + term), True
 
-        # Vocab IRIs
-        if vocab and active_tag.vocab and ":" not in term:
-            return NamedNode(active_tag.vocab + term)
-
-        # Prefixed IRIs
-        iri = expand_prefixed_term(term, active_tag)
-        if not vocab:
-            iri = resolve(iri, self.get_base_iri_term(active_tag).value)
-        elif term != iri:
-            # prefixed relative IRI in vocab-mode resolves against the
-            # document (not mutated) base
-            iri = resolve(iri, self.base_iri_document.value)
-        if not is_valid_iri(iri):
-            return None
-        return NamedNode(iri)
+            # Prefixed IRIs
+            iri = expand_prefixed_term(term, active_tag)
+            if not vocab:
+                base = self.get_base_iri_term(active_tag).value
+            elif term != iri:
+                # prefixed relative IRI in vocab-mode resolves against the
+                # document (not mutated) base
+                base = self.base_iri_document.value
+        # ``resolve`` returns an absolute IRI unchanged
+        base_free = base is None or SCHEME_RE.match(iri) is not None
+        if not base_free:
+            iri = resolve(iri, base)
+        return (NamedNode(iri) if is_valid_iri(iri) else None), base_free

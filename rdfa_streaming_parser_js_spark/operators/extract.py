@@ -91,6 +91,26 @@ def _term_cols(term, url: str):
             lit.datatype.value if lit.datatype else None, lit.language)
 
 
+def _emit_triples(cols, url, ex, error) -> int:
+    """``extract_triples``' emitter: one row of term columns per triple
+    (``tools/kernel_bench.py time --split`` times it alone)."""
+    if ex is None:
+        return 0
+    subj, subj_kind, pred, obj_value, obj_kind, obj_dt, obj_lang = (
+        c.append for c in cols)
+    for s, p, o in ex.triples:
+        sv, sk, _, _ = _term_cols(s, url)
+        ov, ok, odt, olang = _term_cols(o, url)
+        subj(sv)
+        subj_kind(sk)
+        pred(p.value)
+        obj_value(ov)
+        obj_kind(ok)
+        obj_dt(odt)
+        obj_lang(olang)
+    return len(ex.triples)
+
+
 def _kernel_pass(pages: DataFrame, fields: pa.Schema, emit: _Emitter, *,
                  profile: str, url_col: str, html_col: str,
                  lang_col: str | None, content_type_col: str | None = None,
@@ -187,24 +207,7 @@ def extract_triples(pages: DataFrame, profile: str = "html",
     a constant ``graph`` column appended to the output (omitted — the
     triple default — when None, leaving existing consumers unchanged).
     """
-    def emit(cols, url, ex, error):
-        if ex is None:
-            return 0
-        subj, subj_kind, pred, obj_value, obj_kind, obj_dt, obj_lang = (
-            c.append for c in cols)
-        for s, p, o in ex.triples:
-            sv, sk, _, _ = _term_cols(s, url)
-            ov, ok, odt, olang = _term_cols(o, url)
-            subj(sv)
-            subj_kind(sk)
-            pred(p.value)
-            obj_value(ov)
-            obj_kind(ok)
-            obj_dt(odt)
-            obj_lang(olang)
-        return len(ex.triples)
-
-    out = _kernel_pass(pages, _TRIPLE_FIELDS, emit, profile=profile,
+    out = _kernel_pass(pages, _TRIPLE_FIELDS, _emit_triples, profile=profile,
                        url_col=url_col, html_col=html_col,
                        lang_col=lang_col, content_type_col=content_type_col,
                        passthrough=passthrough, vocab=vocab)

@@ -92,12 +92,13 @@ Supported grammar (SPARQL 1.1 subset, keywords case-insensitive):
   constructed term's metadata is minted as companion columns, so
   LANG / DATATYPE / isIRI / isBlank / SAMETERM and metadata-faithful
   templates see it.  A BIND whose entire expression is a string
-  function (CONCAT, STR, LCASE, UCASE, SUBSTR, REPLACE, STRBEFORE,
-  STRAFTER) binds a simple literal the same way, and one whose entire
-  expression is ``+ - * /`` a literal typed by its SQL result type
-  (xsd:double, xsd:decimal or xsd:integer); a bare variable, IF,
-  COALESCE or any other BIND binds a bare value, which a template
-  instantiates as an IRI or blank node.
+  constant or a string function (CONCAT, STR, LCASE, UCASE, SUBSTR,
+  REPLACE, STRBEFORE, STRAFTER) binds a simple literal the same way,
+  and one whose entire expression is a numeric constant or ``+ - * /``
+  a literal typed by its SQL result type (xsd:double, xsd:decimal or
+  xsd:integer); a bare variable, an IRI, IF, COALESCE or any other
+  BIND binds a bare value, which a template instantiates as an IRI or
+  blank node.
 - ``GRAPH ?g {...}`` / ``GRAPH <iri> {...}`` (§13) over a QUADS table
   (a ``graph`` column, e.g. extraction output with ``url`` aliased to
   ``graph``): the graph term becomes a 4th match position on each
@@ -795,9 +796,10 @@ class _Parser:
                 expr = self._parse_constructor()
                 if expr is None:
                     expr, kind = self._or_expr()
-                    if kind == "literal":
-                        # a string function or arithmetic computes a
-                        # literal; bgp._apply_bind types it
+                    if kind in ("literal", "num"):
+                        # a string or numeric constant, a string
+                        # function or arithmetic is a literal;
+                        # bgp._apply_bind types it
                         expr = (expr, "literal", None, None)
                 self.expect_kw("as")
                 v = self.next()
@@ -1060,8 +1062,9 @@ class _Parser:
             sql, _ = self._unary()
             return f"(NOT {sql})", "other"
         if self.take_op("-"):
-            sql, _ = self._unary()
-            return f"(- {sql})", "other"
+            sql, kind = self._unary()
+            # a negated numeric constant is still one
+            return f"(- {sql})", "num" if kind == "num" else "other"
         if self.take_op("+"):
             return self._unary()
         return self._primary()
@@ -1085,7 +1088,7 @@ class _Parser:
                 raise SparqlSyntaxError(
                     "tagged literals in expressions are not supported "
                     f"(offset {t.pos})")
-            return _sql_str(_unquote(t.text)), "str"
+            return _sql_str(_unquote(t.text)), "literal"
         if t.kind == "IRIREF" or t.kind == "PNAME":
             self.next()
             return _sql_str(self.expand_iri(t)), "str"

@@ -186,9 +186,9 @@ class _Recorder(RdfaExtractor):
         self.opens: list[str] = []
         self.plain: list[str] = []
 
-    def on_tag_open(self, name, attributes):
+    def on_tag_open(self, name, attributes, shape=None):
         self.opens.append(name)
-        super().on_tag_open(name, attributes)
+        super().on_tag_open(name, attributes, shape)
 
     def on_plain_open(self, name, attributes):
         self.plain.append(name)
@@ -429,6 +429,16 @@ def test_kernel_golden_digest():
         triples, text = _run(FastHtmlSaxDriver, doc, opts)
         digest.update(repr((sorted(map(repr, triples)), text)).encode())
     assert digest.hexdigest() == GOLDEN_DIGEST
+
+
+def test_kernel_golden_digest_with_tables_bounded_at_two(monkeypatch):
+    """The prefix and term tables (kernel/util.py) cleared every few
+    entries, mid-page too, change no output."""
+    from rdfa_streaming_parser_js_spark.kernel import util
+    monkeypatch.setattr(util, "TABLES_MAX", 2)
+    monkeypatch.setattr(util, "_PREFIXES", {})
+    monkeypatch.setattr(util, "_TERMS", {})
+    test_kernel_golden_digest()
 
 
 def test_skipped_donor_reaches_children():
@@ -678,8 +688,8 @@ class _StackDepth(RdfaExtractor):
 
     deepest = 0
 
-    def on_tag_open(self, name, attributes):
-        super().on_tag_open(name, attributes)
+    def on_tag_open(self, name, attributes, shape=None):
+        super().on_tag_open(name, attributes, shape)
         self.deepest = max(self.deepest, len(self.stack))
 
     def on_plain_open(self, name, attributes):

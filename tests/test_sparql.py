@@ -913,7 +913,8 @@ def _kg_wc(spark):
 
 
 @pytest.mark.parametrize("cond,docs", [
-    ("?wc > 50", ["d1"]), ("50 < ?wc", ["d1"]), ("?wc = 7", ["d3"])])
+    ("?wc > 50", ["d1"]), ("50 < ?wc", ["d1"]), ("?wc = 7", ["d3"]),
+    ("?wc > -1", ["d1", "d3"]), ("-1 < ?wc", ["d1", "d3"])])
 def test_exec_numeric_comparison_drops_non_numeric_row(spark, cond, docs):
     """Comparing a non-numeric value with a number is a type error: the
     FILTER drops that row (§17.2) and the query runs on, under ANSI

@@ -228,6 +228,24 @@ def test_update_computed_bind_is_a_literal(spark):
     assert out.count() == 10
 
 
+def test_update_constant_bind_is_a_literal(spark):
+    """A string or numeric constant BIND inserts a literal, typed by
+    the constant's form; an IRI constant stays an IRI."""
+    out = sparql_update(_g(spark), PFX + """
+        INSERT { ?x schema:c ?c . ?x schema:i ?i . ?x schema:f ?f .
+                 ?x schema:e ?e . ?x schema:u ?u . ?x schema:n ?n }
+        WHERE  { ?x a schema:Person BIND("x" AS ?c) BIND(7 AS ?i)
+                 BIND(1.5 AS ?f) BIND(2e1 AS ?e) BIND(<http://u> AS ?u)
+                 BIND(-2 AS ?n) }""")
+    assert set(_rows(out)) - set(_rows(_g(spark))) == {
+        ("d3", "iri", f"{S}c", "x", "literal", None, None),
+        ("d3", "iri", f"{S}i", "7", "literal", f"{XSD}integer", None),
+        ("d3", "iri", f"{S}n", "-2", "literal", f"{XSD}integer", None),
+        ("d3", "iri", f"{S}f", "1.5", "literal", f"{XSD}decimal", None),
+        ("d3", "iri", f"{S}e", "20.0", "literal", f"{XSD}double", None),
+        ("d3", "iri", f"{S}u", "http://u", "iri", None, None)}
+
+
 def test_unquote_backslash_and_raw_bytes():
     """Sentinel-free string-literal decode: raw control bytes in the
     body must survive (the NUL-sentinel scheme corrupted them)."""

@@ -4,10 +4,12 @@ createIri :281-485, createLiteral :487-640)."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from rdfa_streaming_parser_js_spark.kernel.active_tag import ActiveTag
-from rdfa_streaming_parser_js_spark.kernel.iri import resolve
+from rdfa_streaming_parser_js_spark.kernel.iri import _resolve_split, resolve
 from rdfa_streaming_parser_js_spark.kernel.terms import BlankNode, Literal, NamedNode
 from rdfa_streaming_parser_js_spark.kernel.util import (
     Util, content_type_to_profile, expand_prefixed_term, is_valid_iri,
@@ -15,8 +17,7 @@ from rdfa_streaming_parser_js_spark.kernel.util import (
 
 
 def make_util(base="http://example.org/"):
-    counter = iter(range(10 ** 6))
-    return Util(base, lambda: BlankNode(f"g_{next(counter)}"))
+    return Util(base)
 
 
 def tag(prefixes=None, vocab=None, language=None, datatype=None,
@@ -295,9 +296,33 @@ class TestIriResolve:
         ("//other.org/p", "http://example.org/", "http://other.org/p"),
         ("http://abs.org/x", "http://example.org/", "http://abs.org/x"),
         ("abc", "http://example.org", "http://example.org/abc"),
+        # a fragment may hold a newline (the split once raised on it)
+        ("x#a\nb", "http://example.org/", "http://example.org/x#a\nb"),
+        ("x", "http://example.org/d#a\nb", "http://example.org/x"),
     ])
     def test_resolution(self, ref, base, out):
         assert resolve(ref, base) == out
+
+    def test_fragment_refs_match_the_rfc_path(self):
+        """A fragment-only ref skips the RFC split (§5.2.2, empty path):
+        over random bases with and without an authority, query, fragment
+        and dot segments, and scheme-less ones, ``resolve`` agrees with
+        the full path."""
+        rng = random.Random(3986)
+        parts = {
+            "scheme": ["http:", "urn:", "a+b.c-d:", "", "1x:"],
+            "auth": ["", "//h.example", "//u@h:8080", "//"],
+            "path": ["", "/", "/a/b", "a/./b/../c", "/a/../../b/.", "x:y/z",
+                     "/a\nb"],
+            "query": ["", "?", "?q=1", "?a#b?c"],
+            "frag": ["", "#", "#f", "#a#b", "#x\ny", "#\n"],
+        }
+        for _ in range(3000):
+            base = "".join(rng.choice(v) for v in parts.values())
+            for ref in ("#", "#x", "#a#b", "#\n", "#a\nb"):
+                if base:
+                    assert resolve(ref, base) == _resolve_split(ref, base), (
+                        ref, base)
 
 
 class TestIsValidIri:

@@ -20,6 +20,17 @@ prints one JSON line: the best and median pass, and a digest over each
 page's sorted triples and extracted text (``--per-page`` lists the page
 digests too).  Two checkouts with equal digests give equal output.
 
+``time --split`` prints four JSON lines instead, one per part, each
+with its best and median pass:
+
+- ``kernel``: ``parse_rdfa`` per page, as above (with the digest);
+- ``driver``: the HTML driver feeding a sink that does nothing;
+- ``extractor``: the extractor replaying each page's recorded driver
+  events, without the tokenizer;
+- ``emission``: ``extract_triples``' per-triple emission loop
+  (``operators.extract._emit_triples``) over each page's triples; a
+  checkout without that function reports null.
+
 To compare a change with its parent, stage once, then alternate one
 ``time`` run per checkout (parent, change, parent, ...) with nothing
 else running; never run two at once.
@@ -69,42 +80,149 @@ def stage(args) -> None:
     print(json.dumps({"pages": pages.num_rows, "out": str(out)}))
 
 
+class _NullSink:
+    """Takes the driver's events and does nothing."""
+
+    def on_tag_open(self, *args) -> None: ...
+
+    def on_plain_open(self, *args) -> None: ...
+
+    def on_text(self, *args) -> None: ...
+
+    def on_tag_close(self) -> None: ...
+
+    def on_end(self) -> None: ...
+
+
+class _Tape(_NullSink):
+    """Records a page's driver events, to replay into an extractor."""
+
+    def __init__(self) -> None:
+        self.events: list[tuple] = []
+
+    def on_tag_open(self, name, attributes, *shape) -> None:
+        # the extractor may change the dict it gets, so replay copies it
+        self.events.append((0, name, attributes.copy(), shape))
+
+    def on_plain_open(self, name, attributes) -> None:
+        self.events.append((1, name, attributes, ()))
+
+    def on_text(self, data) -> None:
+        self.events.append((2, data, None, ()))
+
+    def on_tag_close(self) -> None:
+        self.events.append((3, None, None, ()))
+
+    def on_end(self) -> None:
+        self.events.append((4, None, None, ()))
+
+
+def _replay(extractor, events) -> None:
+    opens, plains = extractor.on_tag_open, extractor.on_plain_open
+    text, close = extractor.on_text, extractor.on_tag_close
+    for kind, a, b, shape in events:
+        if kind == 0:
+            opens(a, b.copy(), *shape)
+        elif kind == 1:
+            plains(a, b)
+        elif kind == 2:
+            text(a)
+        elif kind == 3:
+            close()
+        else:
+            extractor.on_end()
+
+
+def _passes(n: int, one_pass) -> dict:
+    times = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        one_pass()
+        times.append(time.perf_counter() - t0)
+    return {"best_s": round(min(times), 4),
+            "median_s": round(statistics.median(times), 4),
+            "passes_s": [round(t, 4) for t in times]}
+
+
 def time_kernel(args) -> None:
     os.sched_setaffinity(0, {args.cpu})
     sys.path.insert(0, str(Path(args.checkout).resolve()))
     import pyarrow.parquet as pq
     from rdfa_streaming_parser_js_spark import kernel
-    from rdfa_streaming_parser_js_spark.kernel import parse_rdfa
+    from rdfa_streaming_parser_js_spark.kernel import RdfaExtractor, parse_rdfa
+    from rdfa_streaming_parser_js_spark.kernel.fast_driver import (
+        FastHtmlSaxDriver)
     from rdfa_streaming_parser_js_spark.kernel.isomorphism import (
         flatten_triples)
 
     rows = pq.read_table(args.pages).to_pylist()
     pages = [(r["html"].decode("utf-8", errors="replace"), r["url"],
               r["lang"] or None) for r in rows]
-    digests = []
+    extractors, digests = [], []
     for html, url, lang in pages:
         ex = parse_rdfa(html, base_iri=url, profile="html", language=lang)
+        extractors.append(ex)
         digests.append(hashlib.sha256(repr(
             (sorted(map(repr, flatten_triples(ex.triples))),
              ex.extracted_text())).encode()).hexdigest())
-    passes = []
-    for _ in range(args.passes):
-        t0 = time.perf_counter()
+
+    def whole() -> None:
         for html, url, lang in pages:
             parse_rdfa(html, base_iri=url, profile="html", language=lang)
-        passes.append(time.perf_counter() - t0)
+
     result = {
         "kernel": str(Path(kernel.__file__).parent),
         "pages": len(pages),
         "mb": round(sum(len(h) for h, _, _ in pages) / 2**20, 2),
-        "best_s": round(min(passes), 4),
-        "median_s": round(statistics.median(passes), 4),
-        "passes_s": [round(p, 4) for p in passes],
+        **_passes(args.passes, whole),
         "digest": hashlib.sha256("".join(digests).encode()).hexdigest(),
     }
     if args.per_page:
         result["page_digests"] = digests
-    print(json.dumps(result))
+    if not args.split:
+        print(json.dumps(result))
+        return
+    print(json.dumps({"part": "kernel", **result}))
+
+    def driver() -> None:
+        for html, _, _ in pages:
+            d = FastHtmlSaxDriver(_NullSink())
+            d.feed(html)
+            d.finish()
+
+    tapes = []
+    for html, url, lang in pages:
+        tape = _Tape()
+        d = FastHtmlSaxDriver(tape)
+        d.feed(html)
+        d.finish()
+        tapes.append((url, lang, tape.events))
+
+    def extractor() -> None:
+        for url, lang, events in tapes:
+            _replay(RdfaExtractor(base_iri=url, profile="html",
+                                  language=lang), events)
+
+    print(json.dumps({"part": "driver", **_passes(args.passes, driver)}))
+    print(json.dumps({"part": "extractor",
+                      **_passes(args.passes, extractor)}))
+    try:
+        from rdfa_streaming_parser_js_spark.operators.extract import (
+            _emit_triples)
+    except ImportError:
+        print(json.dumps({"part": "emission", "best_s": None,
+                          "median_s": None}))
+        return
+    urls = [url for _, url, _ in pages]
+
+    def emission() -> None:
+        cols: list[list] = [[] for _ in range(7)]
+        for url, ex in zip(urls, extractors):
+            _emit_triples(cols, url, ex, None)
+
+    print(json.dumps({"part": "emission",
+                      "triples": sum(len(ex.triples) for ex in extractors),
+                      **_passes(args.passes, emission)}))
 
 
 def main() -> None:
@@ -121,6 +239,9 @@ def main() -> None:
     tm.add_argument("--passes", type=int, default=5)
     tm.add_argument("--cpu", type=int, default=1)
     tm.add_argument("--per-page", action="store_true")
+    tm.add_argument("--split", action="store_true",
+                    help="also time the driver, the extractor and the "
+                         "emission loop apart, one JSON line each")
     args = ap.parse_args()
     if args.cmd == "stage":
         stage(args)
